@@ -18,16 +18,16 @@ import __spark_entry__ as entrymod  # noqa: E402
 from graph_importer_spark import contract as C  # noqa: E402
 
 FAST = [
+    "kg_flagship",
     "kg_extract",
-    "pricing_summary",
-    "window_top_orders",
-    "events_sessions",
+    "kg_predicate_stats",
+    "stream_incremental_triples",
     "imp_edge_parse",
+    "imp_smart_keys",
     "gen_clique",
-    "dedup_fingerprint",
-    "sim_cosine_topk",
-    "mm_byte_stats",
-    "skew_salted_count",
+    "cc_star",
+    "pagerank_star",
+    "graph_mincut",
 ]
 
 
@@ -42,8 +42,6 @@ def _canon(v):
 @pytest.fixture(scope="module")
 def duck(sf_dir):
     con = duckdb.connect()
-    for t in C.QUERIES:
-        pass
     for t in [
         "region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "events", "documents", "embeddings",
