@@ -21,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-STATUSES = ("added", "removed", "changed", "unchanged")
-
 
 def dataset_diff(
     old: DataFrame,

@@ -59,15 +59,6 @@ except ImportError:
     HAVE_PIL = False
 
 
-def decode_image(payload: bytes):  # pragma: no cover - stub
-    """Real decode path; requires an image library (not shipped here)."""
-    if not HAVE_PIL:
-        raise NotImplementedError(
-            "image decode requires PIL/pillow; use fake_decode in tests"
-        )
-    raise NotImplementedError("wire PIL.Image.open(io.BytesIO(payload)) here")
-
-
 def fake_decode(payload: bytes) -> tuple[int, int]:
     """Deterministic stand-in: pretend dimensions derived from bytes."""
     if not payload:

@@ -20,7 +20,7 @@ top-k where partitionBy(hot_key) cannot partial-aggregate.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -124,16 +124,6 @@ def salted_topk(
         F.col("r.t").alias(tiebreak),
         *[F.col(f"r.{c}").alias(c) for c in payload],
     )
-
-
-def replicated_broadcast_join(
-    facts: DataFrame, dim: DataFrame, key: str, how: str = "inner"
-) -> DataFrame:
-    """Skew-proof fact-dim join: broadcast the dim.  Zero shuffle on the
-    fact side, so key skew is irrelevant.  This IS the default plan for
-    the gazetteer joins; kept as a named helper so call sites document
-    intent."""
-    return facts.join(F.broadcast(dim), key, how)
 
 
 def salted_join_big_skewed(
