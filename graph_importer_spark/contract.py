@@ -309,30 +309,6 @@ FROM events GROUP BY 1
 """
 
 
-def q_events_json_stats(spark, sf_dir):
-    """JSON scalar-function surface (SURVEY §2.6 absent-row): pull the
-    numeric field out of the props JSON string per event and aggregate
-    per type.  get_json_object is a codegen'd expression — the JSON
-    never leaves the JVM."""
-    ev = T(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("long")
-    return ev.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        F.sum(k).alias("sum_k"),
-        F.min(k).alias("min_k"),
-        F.max(k).alias("max_k"),
-    )
-
-
-ORACLE_EVENTS_JSON = """
-SELECT event_type, COUNT(*) AS n_events,
-  CAST(SUM(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS sum_k,
-  MIN(CAST(props->>'k' AS BIGINT)) AS min_k,
-  MAX(CAST(props->>'k' AS BIGINT)) AS max_k
-FROM events GROUP BY event_type
-"""
-
-
 def q_rollup_pricing(spark, sf_dir):
     """Grouping-set surface (SURVEY §2.4): ROLLUP over
     (l_returnflag, l_linestatus) with subtotal and grand-total rows —
@@ -348,29 +324,6 @@ ORACLE_ROLLUP = """
 SELECT l_returnflag, l_linestatus, COUNT(*) AS n_rows,
   CAST(round(SUM(CAST(l_quantity AS DECIMAL(12,4))), 4) AS DOUBLE) AS sum_qty
 FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-"""
-
-
-def q_events_hourly(spark, sf_dir):
-    """Tumbling-window aggregation (batch form of the streaming op)."""
-    e = T(spark, sf_dir, "events")
-    return (
-        e.groupBy(
-            F.floor(F.unix_timestamp("ts") / 3600).alias("hour_bucket"),
-            "event_type",
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum(_dec("value", 14, 6)), 6).cast("double").alias("sum_value"),
-        )
-    )
-
-
-ORACLE_HOURLY = """
-SELECT CAST(floor(epoch(ts) / 3600) AS BIGINT) AS hour_bucket, event_type,
-  COUNT(*) AS n_events,
-  CAST(round(SUM(CAST(value AS DECIMAL(14,6))), 6) AS DOUBLE) AS sum_value
-FROM events GROUP BY 1, 2
 """
 
 
@@ -4268,33 +4221,6 @@ FROM base
 """
 
 
-def q_events_transitions(spark, sf_dir):
-    """First-order Markov transition matrix of per-user event-type
-    sequences (operators/timeseries.transition_counts): one lag window
-    on the user key + one (prev, next) partial-agg count; probabilities
-    divide by a |types|^2-bounded rollup.  The oracle replays the lag
-    window with the identical (ts, event_id) order."""
-    from graph_importer_spark.operators.timeseries import transition_counts
-
-    return transition_counts(T(spark, sf_dir, "events"))
-
-
-ORACLE_EVENTS_TRANSITIONS = """
-WITH seq AS (
-  SELECT lag(event_type) OVER (PARTITION BY user_id
-           ORDER BY ts, event_id) AS prev_type,
-         event_type AS next_type
-  FROM events),
-counts AS (
-  SELECT prev_type, next_type, COUNT(*) AS n FROM seq
-  WHERE prev_type IS NOT NULL GROUP BY 1, 2),
-tot AS (SELECT prev_type, SUM(n) AS t FROM counts GROUP BY 1)
-SELECT c.prev_type, c.next_type, c.n,
-       round(CAST(c.n AS DOUBLE) / t.t, 6) AS p
-FROM counts c JOIN tot t USING (prev_type)
-"""
-
-
 def q_dedup_prefix_filter(spark, sf_dir):
     """EXACT Jaccard similarity join via prefix filtering
     (dedup.prefix_filter_pairs, Chaudhuri ICDE'06 / PPJoin WWW'08):
@@ -4328,51 +4254,6 @@ v AS (
 SELECT id1, id2,
        round(CAST(i AS DOUBLE) / (la + lb - i), 6) AS jaccard
 FROM v WHERE CAST(i AS DOUBLE) / (la + lb - i) >= 0.2
-"""
-
-
-def q_events_rolling(spark, sf_dir):
-    """Per-user rolling z-score anomaly flags over the event stream
-    (operators/timeseries.rolling_zscore): mean/std of the previous 5
-    values (the current row never sees itself) from explicit window
-    SUM/SUMSQ — the variance identity replays bit-for-bit where a
-    builtin stddev's accumulation order may not.  One shuffle on the
-    user key, bounded ROWS frames."""
-    from graph_importer_spark.operators.timeseries import rolling_zscore
-
-    ev = T(spark, sf_dir, "events")
-    out = rolling_zscore(ev, "user_id", "ts", "event_id", "value", window=5)
-    return out.select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("t_us"),
-        F.round("value", 6).alias("value"),
-        "n_prev",
-        "roll_mean",
-        "roll_std",
-        F.col("is_anomaly").cast("int").alias("is_anomaly"),
-    )
-
-
-ORACLE_EVENTS_ROLLING = """
-WITH w AS (
-  SELECT user_id, event_id, epoch_us(ts) AS t_us, value,
-         COUNT(value) OVER win AS n_prev,
-         SUM(value) OVER win AS s,
-         SUM(value * value) OVER win AS sq
-  FROM events
-  WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN 5 PRECEDING AND 1 PRECEDING)),
-z AS (
-  SELECT user_id, event_id, t_us, value, n_prev,
-         CASE WHEN n_prev >= 1 THEN s / n_prev END AS mean,
-         CASE WHEN n_prev >= 2 THEN
-           sqrt(greatest((sq - s * s / n_prev) / (n_prev - 1), 0.0)) END AS std
-  FROM w)
-SELECT user_id, event_id, t_us, round(value, 6) AS value, n_prev,
-       round(mean, 6) AS roll_mean, round(std, 6) AS roll_std,
-       CAST(n_prev >= 3 AND abs(value - mean) > 2.0 * std AS INT) AS is_anomaly
-FROM z
 """
 
 
@@ -4562,45 +4443,6 @@ WITH t AS (
   FROM orders WHERE o_orderkey < 500)
 SELECT subj, pred, obj, url, {line} AS line, md5({line}) AS line_md5
 FROM t
-"""
-
-
-def q_events_funnel(spark, sf_dir):
-    """Ordered funnel view -> click -> purchase per user
-    (operators/funnel.funnel_steps): step i must occur strictly after
-    step i-1 was reached — K chained filter/min-agg/join passes, no
-    per-user history collection, no windows.  Timestamps out as epoch
-    micros (engine-neutral); abandoned steps coalesce to -1 so the
-    frame stays integer-typed for the driver hash."""
-    from graph_importer_spark.operators.funnel import funnel_steps
-
-    ev = T(spark, sf_dir, "events")
-    f = funnel_steps(ev, ["view", "click", "purchase"])
-    us = lambda c: F.unix_micros(F.col(c).cast("timestamp"))  # noqa: E731
-    return f.select(
-        "user_id",
-        us("step1_ts").alias("t1_us"),
-        F.coalesce(us("step2_ts"), F.lit(-1)).alias("t2_us"),
-        F.coalesce(us("step3_ts"), F.lit(-1)).alias("t3_us"),
-        "steps_reached",
-    )
-
-
-ORACLE_EVENTS_FUNNEL = """
-WITH s1 AS (
-  SELECT user_id, MIN(ts) AS t1 FROM events WHERE event_type = 'view' GROUP BY 1),
-s2 AS (
-  SELECT e.user_id, MIN(e.ts) AS t2 FROM events e JOIN s1 USING (user_id)
-  WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY 1),
-s3 AS (
-  SELECT e.user_id, MIN(e.ts) AS t3 FROM events e JOIN s2 USING (user_id)
-  WHERE e.event_type = 'purchase' AND e.ts > s2.t2 GROUP BY 1)
-SELECT s1.user_id, epoch_us(t1) AS t1_us,
-       COALESCE(epoch_us(t2), -1) AS t2_us,
-       COALESCE(epoch_us(t3), -1) AS t3_us,
-       1 + CAST(t2 IS NOT NULL AS INT) + CAST(t3 IS NOT NULL AS INT)
-         AS steps_reached
-FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)
 """
 
 
@@ -5292,42 +5134,6 @@ SELECT c_custkey,
        CASE WHEN l.op IS NOT NULL THEN l.c_acctbal ELSE s.c_acctbal END AS c_acctbal
 FROM snap s FULL JOIN latest l USING (c_custkey)
 WHERE l.op IS NULL OR l.op <> 'D'
-"""
-
-
-def q_events_resample(spark, sf_dir):
-    """Regular 6-hour grid with forward fill per user
-    (timeseries.resample_ffill, event_id tiebreak for same-second
-    observations).  Oracle replays the grid explode + IGNORE NULLS
-    window carry."""
-    from graph_importer_spark.operators.timeseries import resample_ffill
-
-    ev = T(spark, sf_dir, "events")
-    return resample_ffill(
-        ev, "user_id", "ts", "value", step_seconds=21600, tiebreak_col="event_id"
-    )
-
-
-ORACLE_EVENTS_RESAMPLE = """
-WITH obs AS (
-  SELECT user_id AS k, CAST(floor(epoch(ts)) AS BIGINT) AS t, value AS v,
-         0 AS is_grid, event_id AS tb
-  FROM events),
-spans AS (
-  SELECT k, (min(t) // 21600) * 21600 AS t0, (max(t) // 21600) * 21600 AS t1
-  FROM obs GROUP BY k),
-grid AS (
-  SELECT k, t, CAST(NULL AS DOUBLE) AS v, 1 AS is_grid,
-         CAST(-1 AS BIGINT) AS tb
-  FROM spans, UNNEST(generate_series(t0, t1, 21600)) u(t)),
-u AS (SELECT * FROM obs UNION ALL SELECT * FROM grid),
-f AS (
-  SELECT k, t, is_grid,
-         last_value(v IGNORE NULLS) OVER (
-           PARTITION BY k ORDER BY t, is_grid, tb
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value
-  FROM u)
-SELECT k AS user_id, t AS grid_ts, value FROM f WHERE is_grid = 1
 """
 
 
@@ -7162,31 +6968,6 @@ _LC_LO = 865_123_200   # 1997-06-01T00:00:00Z
 _LC_HI = 873_072_000   # 1997-09-01T00:00:00Z
 
 
-def q_events_ngrams(spark, sf_dir):
-    """Frequent event bigrams (timeseries.event_ngrams) over per-user
-    clickstreams; the oracle replays the ordered sequence build, the
-    n-gram slicing, and the deterministic (count desc, gram) top-20."""
-    from graph_importer_spark.operators.timeseries import event_ngrams
-
-    e = T(spark, sf_dir, "events")
-    return event_ngrams(e, "user_id", "event_type", "ts", "event_id", n=2, top=20)
-
-
-ORACLE_EVENTS_NGRAMS = r"""
-WITH seq AS (
-  SELECT user_id,
-         list(event_type ORDER BY epoch_us(ts), event_id) AS s
-  FROM events GROUP BY user_id),
-g AS (
-  SELECT array_to_string(s[i:i+1], '>') AS gram
-  FROM seq, UNNEST(generate_series(1, len(s) - 1)) AS u(i)
-  WHERE len(s) >= 2)
-SELECT gram, COUNT(*) AS n_occurrences
-FROM g GROUP BY gram
-ORDER BY n_occurrences DESC, gram ASC LIMIT 20
-"""
-
-
 def q_kg_snapshot_diff(spark, sf_dir):
     """Per-predicate snapshot churn (triples.snapshot_diff): the 'old'
     snapshot asserts order facts for orderkeys < 1500, the 'new' one
@@ -7589,35 +7370,6 @@ FROM scored s JOIN w USING (subj, pred)
 # ---------------------------------------------------------------------------
 
 
-def q_events_retention(spark, sf_dir):
-    """Cohort retention matrix (timeseries.cohort_retention) over the
-    clickstream at 3-day periods; the oracle replays the (user,
-    period) collapse, the first-period cohort assignment, and the
-    offset-0 size normalization."""
-    from graph_importer_spark.operators.timeseries import cohort_retention
-
-    e = T(spark, sf_dir, "events")
-    return cohort_retention(e, "user_id", "ts", period_seconds=3 * 86400)
-
-
-ORACLE_EVENTS_RETENTION = r"""
-WITH per AS (
-  SELECT DISTINCT user_id,
-         CAST(floor(epoch(ts) / 259200) AS BIGINT) AS p
-  FROM events),
-first AS (SELECT user_id, MIN(p) AS cohort FROM per GROUP BY user_id),
-cells AS (
-  SELECT cohort, per.p - cohort AS "offset", COUNT(*) AS n_active
-  FROM per JOIN first USING (user_id)
-  GROUP BY cohort, per.p - cohort),
-sizes AS (
-  SELECT cohort, n_active AS cohort_size FROM cells WHERE "offset" = 0)
-SELECT c.cohort, c."offset", c.n_active, s.cohort_size,
-       round(CAST(c.n_active AS DOUBLE) / s.cohort_size, 6) AS retention
-FROM cells c JOIN sizes s USING (cohort)
-"""
-
-
 def q_orders_rfm(spark, sf_dir):
     """RFM customer segmentation (timeseries.rfm_scores): recency /
     frequency / monetary per customer, quartile-scored 1-4 against
@@ -7736,61 +7488,6 @@ FROM n
 # Round-4 session-18b: multi-touch attribution, TransE ranking eval,
 # Porter-lite stem vocabulary, crawl-frontier scheduling
 # ---------------------------------------------------------------------------
-
-
-def q_events_attribution(spark, sf_dir):
-    """Linear multi-touch attribution (timeseries.linear_attribution):
-    purchases are conversions, click/view events the touches, 1-day
-    lookback; the oracle replays the second-truncated interval
-    pairing, the 9dp-DECIMAL credit split, and the (direct) branch."""
-    from graph_importer_spark.operators.timeseries import linear_attribution
-
-    e = T(spark, sf_dir, "events")
-    conv = e.filter(F.col("event_type") == "purchase")
-    tch = e.filter(F.col("event_type").isin("click", "view"))
-    return linear_attribution(
-        tch,
-        conv,
-        key_col="user_id",
-        channel_col="event_type",
-        window_s=86400,
-        conv_id_col="event_id",
-        value_col="value",
-    )
-
-
-ORACLE_EVENTS_ATTRIBUTION = r"""
-WITH conv AS (
-  SELECT user_id AS k, CAST(floor(epoch(ts)) AS BIGINT) AS t,
-         event_id AS cid, CAST(value AS DOUBLE) AS v
-  FROM events WHERE event_type = 'purchase'),
-tch AS (
-  SELECT user_id AS k, CAST(floor(epoch(ts)) AS BIGINT) AS t,
-         event_type AS channel
-  FROM events WHERE event_type IN ('click', 'view')),
-pairs AS (
-  SELECT c.cid, c.v, t.channel
-  FROM conv c JOIN tch t ON c.k = t.k
-   AND t.t >= c.t - 86400 AND t.t <= c.t),
-cnt AS (SELECT cid, COUNT(*) AS n FROM pairs GROUP BY cid),
-cred AS (
-  SELECT p.cid, p.channel,
-         CAST(round(p.v / c.n, 9) AS DECIMAL(28,9)) AS cr
-  FROM pairs p JOIN cnt c USING (cid)),
-att AS (
-  SELECT channel, COUNT(*) AS n_touches,
-         COUNT(DISTINCT cid) AS n_conversions,
-         round(CAST(SUM(cr) AS DOUBLE), 6) AS attributed
-  FROM cred GROUP BY channel),
-direct AS (
-  SELECT '(direct)' AS channel, CAST(0 AS BIGINT) AS n_touches,
-         COUNT(*) AS n_conversions,
-         round(CAST(SUM(CAST(round(v, 9) AS DECIMAL(28,9))) AS DOUBLE), 6)
-           AS attributed
-  FROM conv WHERE cid NOT IN (SELECT cid FROM cnt)
-  HAVING COUNT(*) > 0)
-SELECT * FROM att UNION ALL SELECT * FROM direct
-"""
 
 
 def q_kg_transe_rank(spark, sf_dir):
@@ -9101,132 +8798,10 @@ FROM g GROUP BY group_size
 # ---------------------------------------------------------------------------
 
 
-_CHURN_CUTOFF = 1705708800  # 2024-01-20T00:00:00Z
-
-
-def q_events_churn(spark, sf_dir):
-    """Leakage-safe churn label table (timeseries.churn_labels):
-    features strictly before the 2024-01-20 cutoff, label = silent
-    for the next 10 days; the oracle replays both cutoff aggregates
-    and the anti-presence label."""
-    from graph_importer_spark.operators.timeseries import churn_labels
-
-    e = T(spark, sf_dir, "events")
-    return churn_labels(
-        e, "user_id", "ts", _CHURN_CUTOFF, 10 * 86400, value_col="value"
-    )
-
-
-ORACLE_EVENTS_CHURN = rf"""
-WITH e AS (
-  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS t, value
-  FROM events),
-pre AS (
-  SELECT user_id AS key, COUNT(*) AS n_events,
-         COUNT(DISTINCT t // 86400) AS n_active_days,
-         MAX(t) AS last_t,
-         SUM(CAST(round(value, 9) AS DECIMAL(28,9))) AS tv
-  FROM e WHERE t < {_CHURN_CUTOFF} GROUP BY user_id),
-post AS (
-  SELECT DISTINCT user_id AS key FROM e
-  WHERE t >= {_CHURN_CUTOFF} AND t < {_CHURN_CUTOFF + 10 * 86400})
-SELECT p.key, p.n_events, p.n_active_days,
-       CAST(floor(({_CHURN_CUTOFF} - p.last_t) / 86400.0) AS BIGINT)
-         AS days_since_last,
-       round(CAST(p.tv AS DOUBLE), 6) AS total_value,
-       post.key IS NULL AS churned
-FROM pre p LEFT JOIN post USING (key)
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18j: JSON schema inference, quotient graph,
 # shortest-path trace, Cohen's kappa
 # ---------------------------------------------------------------------------
-
-
-def q_events_json_schema(spark, sf_dir):
-    """Semi-structured schema inference (profiling.
-    json_schema_profile) over four synthesized payload variants with
-    a planted type conflict and a JSON null; the oracle replays the
-    key census and the majority-type election."""
-    from graph_importer_spark.operators.profiling import json_schema_profile
-
-    e = T(spark, sf_dir, "events")
-    m = F.col("event_id") % 4
-    i = F.col("event_id")
-    s = lambda c: c.cast("string")  # noqa: E731
-    j = (
-        F.when(
-            m == 0,
-            F.concat(
-                F.lit('{"a": '), s(i % 50), F.lit(', "b": "s'), s(i % 7),
-                F.lit('", "c": true}'),
-            ),
-        )
-        .when(
-            m == 1,
-            F.concat(
-                F.lit('{"a": '), s(i % 50), F.lit(', "b": "s'), s(i % 7),
-                F.lit('"}'),
-            ),
-        )
-        .when(
-            m == 2,
-            F.concat(F.lit('{"a": "notnum", "d": '), s(i % 9), F.lit("}")),
-        )
-        .otherwise(
-            F.concat(
-                F.lit('{"a": '), s(i % 50), F.lit(', "c": false, "e": null}')
-            )
-        )
-    )
-    return json_schema_profile(e.select(j.alias("payload")), "payload")
-
-
-ORACLE_EVENTS_JSON_SCHEMA = r"""
-WITH e AS (
-  SELECT CASE
-    WHEN event_id % 4 = 0 THEN '{"a": ' || CAST(event_id % 50 AS VARCHAR)
-      || ', "b": "s' || CAST(event_id % 7 AS VARCHAR) || '", "c": true}'
-    WHEN event_id % 4 = 1 THEN '{"a": ' || CAST(event_id % 50 AS VARCHAR)
-      || ', "b": "s' || CAST(event_id % 7 AS VARCHAR) || '"}'
-    WHEN event_id % 4 = 2 THEN '{"a": "notnum", "d": '
-      || CAST(event_id % 9 AS VARCHAR) || '}'
-    ELSE '{"a": ' || CAST(event_id % 50 AS VARCHAR)
-      || ', "c": false, "e": null}' END AS j
-  FROM events),
-tot AS (SELECT COUNT(*) AS n FROM e),
-kv AS (
-  SELECT u.k AS key, json_extract_string(e.j, '$.' || u.k) AS v
-  FROM e, UNNEST(json_keys(e.j)) u(k)),
-per AS (
-  -- BIGINT casts: DuckDB SUM(int) is HUGEINT -> float64 in pandas
-  SELECT key, COUNT(*) AS n_present,
-         CAST(SUM(CASE WHEN regexp_matches(COALESCE(v, ''),
-                   '^-?[0-9]+(\.[0-9]+)?$') THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_number,
-         CAST(SUM(CASE WHEN v IN ('true', 'false') THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_bool,
-         CAST(SUM(CASE WHEN v IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_null,
-         CAST(SUM(CASE WHEN v IS NOT NULL AND v NOT IN ('true', 'false')
-                   AND NOT regexp_matches(v, '^-?[0-9]+(\.[0-9]+)?$')
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_string
-  FROM kv GROUP BY key),
-w AS (
-  SELECT key, n_present, n_number, n_bool, n_null, n_string,
-         GREATEST(n_number, n_bool, n_null, n_string) AS mx
-  FROM per)
-SELECT key, n_present,
-       round(CAST(n_present AS DOUBLE) / tot.n, 6) AS presence,
-       n_number, n_bool, n_null, n_string,
-       CASE WHEN n_bool = mx THEN 'boolean'
-            WHEN n_null = mx THEN 'null'
-            WHEN n_number = mx THEN 'number'
-            ELSE 'string' END AS inferred_type
-FROM w, tot
-"""
 
 
 def q_graph_quotient(spark, sf_dir):
@@ -9660,34 +9235,6 @@ FROM j WHERE cocitation >= 2 OR coupling >= 2
 """
 
 
-def q_events_dau(spark, sf_dir):
-    """DAU / WAU / MAU grid (timeseries.active_user_counts) over the
-    30-day clickstream; the oracle replays the (user, day) collapse
-    and the trailing-window distinct counts."""
-    from graph_importer_spark.operators.timeseries import active_user_counts
-
-    e = T(spark, sf_dir, "events")
-    return active_user_counts(e, "user_id", "ts", wau_days=7, mau_days=28)
-
-
-ORACLE_EVENTS_DAU = r"""
-WITH ud AS (
-  SELECT DISTINCT user_id AS k,
-         CAST(floor(epoch(ts) / 86400) AS BIGINT) AS d
-  FROM events),
-span AS (SELECT MIN(d) AS lo, MAX(d) AS hi FROM ud),
-grid AS (
-  SELECT CAST(u.day AS BIGINT) AS day
-  FROM span, UNNEST(generate_series(span.lo, span.hi)) u(day))
-SELECT g.day,
-       COUNT(DISTINCT CASE WHEN ud.d = g.day THEN ud.k END) AS dau,
-       COUNT(DISTINCT CASE WHEN ud.d > g.day - 7 THEN ud.k END) AS wau,
-       COUNT(DISTINCT ud.k) AS mau
-FROM grid g JOIN ud ON ud.d <= g.day AND ud.d > g.day - 28
-GROUP BY g.day
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18m: maximal matching, A/B test readout, dbt-style
 # table checks, feature hashing
@@ -9767,83 +9314,6 @@ SELECT a, b, 'undecided', CAST(NULL AS INT) FROM live{rounds + 1}"""
     return "".join(parts)
 
 
-def q_events_ab_test(spark, sf_dir):
-    """Two-proportion A/B readout (timeseries.ab_test_summary):
-    user-level arm assignment by md5 coin, conversion = any purchase
-    event, DECIMAL value sums; the oracle replays the user collapse
-    and the pooled z arithmetic."""
-    from graph_importer_spark.operators.timeseries import ab_test_summary
-
-    e = T(spark, sf_dir, "events")
-    arm = F.when(
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.encode(
-                        F.concat(F.lit("ab"), F.col("user_id").cast("string")),
-                        "UTF-8",
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-        == 0,
-        F.lit("A"),
-    ).otherwise(F.lit("B"))
-    users = e.groupBy("user_id").agg(
-        F.max(
-            (F.col("event_type") == "purchase").cast("int")
-        ).alias("converted")
-    ).select("user_id", arm.alias("arm"), "converted")
-    return ab_test_summary(users, "arm", "converted")
-
-
-def _oracle_events_ab_test() -> str:
-    poly = " + ".join(
-        f"CAST(strpos('0123456789abcdef', substring(h8, {j + 1}, 1)) - 1 AS BIGINT)"
-        f" * {16 ** (7 - j)}"
-        for j in range(8)
-    )
-    return f"""
-WITH u AS (
-  SELECT user_id,
-         MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-           AS converted,
-         substring(md5('ab' || CAST(user_id AS VARCHAR)), 1, 8) AS h8
-  FROM events GROUP BY user_id),
-armed AS (
-  SELECT CASE WHEN ({poly}) % 2 = 0 THEN 'A' ELSE 'B' END AS arm,
-         converted
-  FROM u),
-per AS (
-  -- BIGINT cast: DuckDB SUM(int) is HUGEINT -> float64 in pandas
-  SELECT arm, COUNT(*) AS n, CAST(SUM(converted) AS BIGINT) AS conv
-  FROM armed GROUP BY arm),
-j AS (
-  SELECT a.n AS n_a, a.conv AS conv_a, b.n AS n_b, b.conv AS conv_b
-  FROM (SELECT * FROM per WHERE arm = 'A') a,
-       (SELECT * FROM per WHERE arm = 'B') b)
-SELECT n_a, conv_a, round(CAST(conv_a AS DOUBLE) / n_a, 6) AS rate_a,
-       n_b, conv_b, round(CAST(conv_b AS DOUBLE) / n_b, 6) AS rate_b,
-       round(CAST(conv_b AS DOUBLE) / n_b
-             - CAST(conv_a AS DOUBLE) / n_a, 6) AS lift,
-       CASE WHEN sqrt((CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))
-                 * (1 - CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))
-                 * (1.0 / n_a + 1.0 / n_b)) > 0
-            THEN round((CAST(conv_b AS DOUBLE) / n_b
-                        - CAST(conv_a AS DOUBLE) / n_a)
-                 / sqrt((CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))
-                   * (1 - CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))
-                   * (1.0 / n_a + 1.0 / n_b)), 6)
-       END AS z
-FROM j
-"""
-
-
 def q_orders_checks(spark, sf_dir):
     """dbt-style declarative table tests (profiling.table_checks)
     over orders with PLANTED violations (duplicated keys, an
@@ -9907,93 +9377,6 @@ SELECT 'foreign_key', 'o_custkey', v, v = 0 FROM fk
 # ---------------------------------------------------------------------------
 # Round-4 session-18n: autocomplete index, diff-in-diff, KG cycle motifs
 # ---------------------------------------------------------------------------
-
-
-def q_events_did(spark, sf_dir):
-    """Difference-in-differences (timeseries.diff_in_diff): users
-    md5-coined into treat/control, Jan-16 cutoff splits pre/post,
-    outcome = any purchase in the (user, period) cell; the oracle
-    replays the 2x2 collapse and the DiD arithmetic."""
-    from graph_importer_spark.operators.timeseries import diff_in_diff
-
-    e = T(spark, sf_dir, "events")
-    grp = F.when(
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.encode(
-                        F.concat(F.lit("did"), F.col("user_id").cast("string")),
-                        "UTF-8",
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-        == 0,
-        F.lit("treat"),
-    ).otherwise(F.lit("control"))
-    per = F.when(
-        F.col("ts") < F.lit("2024-01-16").cast("timestamp"), F.lit("pre")
-    ).otherwise(F.lit("post"))
-    cells = e.groupBy(
-        F.col("user_id"), grp.alias("grp"), per.alias("per")
-    ).agg(
-        F.max((F.col("event_type") == "purchase").cast("int")).alias(
-            "converted"
-        )
-    )
-    return diff_in_diff(cells, "grp", "per", "converted")
-
-
-def _oracle_events_did() -> str:
-    poly = " + ".join(
-        f"CAST(strpos('0123456789abcdef', substring(h8, {j + 1}, 1)) - 1 AS BIGINT)"
-        f" * {16 ** (7 - j)}"
-        for j in range(8)
-    )
-    return f"""
-WITH u AS (
-  SELECT user_id,
-         substring(md5('did' || CAST(user_id AS VARCHAR)), 1, 8) AS h8,
-         CASE WHEN ts < TIMESTAMP '2024-01-16' THEN 'pre'
-              ELSE 'post' END AS per,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS conv
-  FROM events),
-cells AS (
-  SELECT user_id,
-         CASE WHEN ({poly}) % 2 = 0 THEN 'treat' ELSE 'control' END AS grp,
-         per, MAX(conv) AS converted
-  FROM u GROUP BY user_id, h8, per),
-agg AS (
-  SELECT grp, per, COUNT(*) AS n,
-         SUM(CAST(round(CAST(converted AS DOUBLE), 9)
-                  AS DECIMAL(28,9))) AS s
-  FROM cells GROUP BY grp, per),
-c AS (
-  SELECT
-    (SELECT n FROM agg WHERE grp = 'treat' AND per = 'pre') AS n_treat_pre,
-    (SELECT round(CAST(s AS DOUBLE) / n, 6) FROM agg
-      WHERE grp = 'treat' AND per = 'pre') AS rate_treat_pre,
-    (SELECT n FROM agg WHERE grp = 'treat' AND per = 'post') AS n_treat_post,
-    (SELECT round(CAST(s AS DOUBLE) / n, 6) FROM agg
-      WHERE grp = 'treat' AND per = 'post') AS rate_treat_post,
-    (SELECT n FROM agg WHERE grp = 'control' AND per = 'pre')
-      AS n_control_pre,
-    (SELECT round(CAST(s AS DOUBLE) / n, 6) FROM agg
-      WHERE grp = 'control' AND per = 'pre') AS rate_control_pre,
-    (SELECT n FROM agg WHERE grp = 'control' AND per = 'post')
-      AS n_control_post,
-    (SELECT round(CAST(s AS DOUBLE) / n, 6) FROM agg
-      WHERE grp = 'control' AND per = 'post') AS rate_control_post)
-SELECT *,
-       round((rate_treat_post - rate_treat_pre)
-             - (rate_control_post - rate_control_pre), 6) AS did
-FROM c
-"""
 
 
 def q_kg_motif_cycle(spark, sf_dir):
@@ -10128,104 +9511,6 @@ FROM kk, q, t
 # ---------------------------------------------------------------------------
 
 
-def q_events_seasonality(spark, sf_dir):
-    """Weekly (dow, hour) seasonality profile (timeseries.
-    seasonality_profile); pure integer epoch bucketing, 168-cell
-    aggregate."""
-    from graph_importer_spark.operators.timeseries import seasonality_profile
-
-    return seasonality_profile(T(spark, sf_dir, "events"))
-
-
-ORACLE_EVENTS_SEASONALITY = r"""
-WITH e AS (
-  SELECT CAST(floor(epoch(ts)) AS BIGINT) AS t FROM events),
-per AS (
-  SELECT (t // 86400) % 7 AS dow, (t // 3600) % 24 AS hour,
-         COUNT(*) AS n
-  FROM e GROUP BY 1, 2),
-tot AS (SELECT SUM(n) AS tt FROM per)
-SELECT dow, hour, n,
-       round(CAST(n AS DOUBLE) / tt, 6) AS share,
-       round(n * 168.0 / tt, 6) AS lift
-FROM per, tot
-"""
-
-
-def q_events_ttc(spark, sf_dir):
-    """Time-to-convert distribution (timeseries.time_to_convert):
-    first signup -> first subsequent purchase per user, exact
-    interpolated quartiles of the delay; the oracle replays the
-    conditional firsts and quantile_cont."""
-    from graph_importer_spark.operators.timeseries import time_to_convert
-
-    return time_to_convert(T(spark, sf_dir, "events"))
-
-
-ORACLE_EVENTS_TTC = r"""
-WITH e AS (
-  SELECT user_id AS k, CAST(floor(epoch(ts)) AS BIGINT) AS t, event_type
-  FROM events),
-s AS (
-  SELECT k, MIN(CASE WHEN event_type = 'signup' THEN t END) AS s0
-  FROM e GROUP BY k),
-d AS (
-  SELECT s.k,
-         MIN(CASE WHEN e.event_type = 'purchase' AND e.t >= s.s0
-                  THEN e.t END) - s.s0 AS delay0,
-         MIN(CASE WHEN e.event_type = 'purchase' AND e.t >= s.s0
-                  THEN e.t END) AS c1
-  FROM s JOIN e ON e.k = s.k
-  WHERE s.s0 IS NOT NULL
-  GROUP BY s.k, s.s0),
-dd AS (SELECT k, CASE WHEN c1 IS NULL THEN NULL ELSE delay0 END AS delay
-       FROM d),
-a AS (
-  SELECT COUNT(*) AS n_started,
-         SUM(CASE WHEN delay IS NOT NULL THEN 1 ELSE 0 END) AS n_converted,
-         quantile_cont(CAST(delay AS DOUBLE), [0.25, 0.5, 0.75]) AS q
-  FROM dd)
-SELECT n_started, CAST(n_converted AS BIGINT) AS n_converted,
-       round(CAST(n_converted AS DOUBLE) / n_started, 6) AS conv_rate,
-       round(q[1], 6) AS p25_s, round(q[2], 6) AS p50_s,
-       round(q[3], 6) AS p75_s
-FROM a
-"""
-
-
-def q_events_mad(spark, sf_dir):
-    """Robust median/MAD stats + modified-z outlier counts per event
-    type (timeseries.robust_group_stats); exact interpolated
-    percentiles replayed by quantile_cont."""
-    from graph_importer_spark.operators.timeseries import robust_group_stats
-
-    return robust_group_stats(
-        T(spark, sf_dir, "events"), "event_type", "value"
-    )
-
-
-ORACLE_EVENTS_MAD = r"""
-WITH e AS (
-  SELECT event_type AS g, CAST(value AS DOUBLE) AS v FROM events),
-med AS (
-  SELECT g, COUNT(*) AS n, quantile_cont(v, 0.5) AS median
-  FROM e GROUP BY g),
-mad AS (
-  SELECT e.g, med.n, med.median,
-         quantile_cont(abs(e.v - med.median), 0.5) AS mad
-  FROM e JOIN med USING (g) GROUP BY e.g, med.n, med.median),
-o AS (
-  SELECT e.g, mad.n, mad.median, mad.mad,
-         SUM(CASE WHEN mad.mad > 0
-                   AND 0.6745 * abs(e.v - mad.median) / mad.mad > 3.5
-                  THEN 1 ELSE 0 END) AS n_outliers
-  FROM e JOIN mad USING (g) GROUP BY e.g, mad.n, mad.median, mad.mad)
-SELECT g AS grp, n, round(median, 6) AS median, round(mad, 6) AS mad,
-       CAST(n_outliers AS BIGINT) AS n_outliers
-FROM o
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18q: Benford audit, Kaplan-Meier survival, Pareto
 # concentration
@@ -10278,67 +9563,6 @@ SELECT per.pred, digit, n,
        round((n - ({case}) * t) * (n - ({case}) * t)
              / (({case}) * t), 6) AS chi2
 FROM per JOIN tot ON tot.pred = per.pred
-"""
-
-
-def q_events_km(spark, sf_dir):
-    """Kaplan-Meier survival (timeseries.kaplan_meier): per-user
-    activity spans in days; users whose last event predates Jan 25
-    are churn events, later ones censor; the oracle replays the
-    duration collapse, the at-risk walk, and the 9dp-rounded
-    log-product."""
-    from graph_importer_spark.operators.timeseries import kaplan_meier
-
-    e = T(spark, sf_dir, "events")
-    t = F.unix_timestamp("ts")
-    per = e.groupBy("user_id").agg(
-        F.min(t).alias("_f"), F.max(t).alias("_l")
-    )
-    cutoff = 1706140800  # 2024-01-25T00:00:00Z
-    durations = per.select(
-        F.floor((F.col("_l") - F.col("_f")) / 86400).alias("duration"),
-        (F.col("_l") < cutoff).alias("observed"),
-    )
-    return kaplan_meier(durations)
-
-
-ORACLE_EVENTS_KM = r"""
-WITH per AS (
-  SELECT user_id,
-         MIN(CAST(floor(epoch(ts)) AS BIGINT)) AS f,
-         MAX(CAST(floor(epoch(ts)) AS BIGINT)) AS l
-  FROM events GROUP BY user_id),
-d AS (
-  SELECT CAST((l - f) // 86400 AS BIGINT) AS t,
-         l < 1706140800 AS obs
-  FROM per),
-perd AS (
-  SELECT t, SUM(CASE WHEN obs THEN 1 ELSE 0 END) AS n_events,
-         SUM(CASE WHEN obs THEN 0 ELSE 1 END) AS n_censored
-  FROM d GROUP BY t),
-tot AS (SELECT COUNT(*) AS n FROM d),
-ar AS (
-  SELECT t, n_events, n_censored,
-         tot.n - COALESCE(SUM(n_events + n_censored) OVER (
-           ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING
-           AND 1 PRECEDING), 0) AS n_risk
-  FROM perd, tot),
-f AS (
-  SELECT t, n_risk, n_events, n_censored,
-         round(1.0 - CAST(n_events AS DOUBLE) / n_risk, 9) AS factor
-  FROM ar),
-s AS (
-  SELECT t, n_risk, n_events, n_censored,
-         CASE WHEN MIN(factor) OVER (ORDER BY t
-                ROWS UNBOUNDED PRECEDING) <= 0 THEN 0.0
-              ELSE exp(SUM(CASE WHEN factor > 0 THEN ln(factor) END)
-                       OVER (ORDER BY t ROWS UNBOUNDED PRECEDING)) END
-           AS sv
-  FROM f)
-SELECT t, CAST(n_risk AS BIGINT) AS n_risk,
-       CAST(n_events AS BIGINT) AS n_events,
-       CAST(n_censored AS BIGINT) AS n_censored, round(sv, 6) AS survival
-FROM s
 """
 
 
@@ -10590,87 +9814,9 @@ FROM hl JOIN cond USING (f)
 """
 
 
-def q_events_cusum(spark, sf_dir):
-    """CUSUM changepoint scan (timeseries.cusum_changepoint) over
-    daily event volume; the oracle replays the grid fill, the
-    9dp-DECIMAL deviation walk, and the |S| argmax."""
-    from graph_importer_spark.operators.timeseries import cusum_changepoint
-
-    return cusum_changepoint(T(spark, sf_dir, "events"))
-
-
-ORACLE_EVENTS_CUSUM = r"""
-WITH per AS (
-  SELECT CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day,
-         COUNT(*) AS n
-  FROM events GROUP BY 1),
-span AS (
-  SELECT MIN(day) AS lo, MAX(day) AS hi, SUM(n) AS tot FROM per),
-grid AS (
-  SELECT CAST(u.day AS BIGINT) AS day,
-         CAST(span.tot AS DOUBLE) / (span.hi - span.lo + 1) AS mu
-  FROM span, UNNEST(generate_series(span.lo, span.hi)) u(day)),
-j AS (
-  SELECT g.day, COALESCE(per.n, 0) AS n,
-         CAST(round(COALESCE(per.n, 0) - g.mu, 9)
-              AS DECIMAL(28,9)) AS dev
-  FROM grid g LEFT JOIN per USING (day)),
-cum AS (
-  SELECT day, n, CAST(dev AS DOUBLE) AS dev,
-         CAST(SUM(dev) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
-              AS DOUBLE) AS cusum
-  FROM j),
-peak AS (
-  SELECT day AS pd FROM cum ORDER BY abs(cusum) DESC, day ASC LIMIT 1)
-SELECT day, n, round(dev, 6) AS dev, round(cusum, 6) AS cusum,
-       day = (SELECT pd FROM peak) AS is_peak
-FROM cum
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18t: seasonal anomalies, stratified k-fold
 # ---------------------------------------------------------------------------
-
-
-def q_events_anomaly(spark, sf_dir):
-    """Seasonality-adjusted volume anomalies (timeseries.
-    seasonal_anomalies): per (day, hour) cell vs its own (dow, hour)
-    baseline mean, Poisson z; the oracle replays the grid fill, the
-    baseline rollup, and the flag."""
-    from graph_importer_spark.operators.timeseries import seasonal_anomalies
-
-    return seasonal_anomalies(T(spark, sf_dir, "events"))
-
-
-ORACLE_EVENTS_ANOMALY = r"""
-WITH cell AS (
-  SELECT CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day,
-         CAST(floor(epoch(ts) / 3600) % 24 AS BIGINT) AS hour,
-         COUNT(*) AS n
-  FROM events GROUP BY 1, 2),
-span AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM cell),
-grid AS (
-  SELECT CAST(u.day AS BIGINT) AS day, CAST(h.h AS BIGINT) AS hour
-  FROM span, UNNEST(generate_series(span.lo, span.hi)) u(day),
-       UNNEST(generate_series(0, 23)) h(h)),
-full_ AS (
-  SELECT g.day, g.hour, COALESCE(cell.n, 0) AS n
-  FROM grid g LEFT JOIN cell USING (day, hour)),
-base AS (
-  SELECT day % 7 AS dow, hour, COUNT(*) AS days, SUM(n) AS tot
-  FROM full_ GROUP BY 1, 2),
-j AS (
-  SELECT f.day, f.hour, f.n,
-         CAST(b.tot AS DOUBLE) / b.days AS mu
-  FROM full_ f JOIN base b ON b.dow = f.day % 7 AND b.hour = f.hour)
-SELECT day, hour, n, round(mu, 6) AS mu,
-       CASE WHEN mu > 0 THEN round((n - mu) / sqrt(mu), 6) END AS z,
-       COALESCE(CASE WHEN mu > 0
-                     THEN abs((n - mu) / sqrt(mu)) > 3.0 END,
-                TRUE) AS is_anomaly
-FROM j WHERE n > 0 OR mu > 0
-"""
 
 
 def q_sample_kfold(spark, sf_dir):
@@ -10725,42 +9871,6 @@ common AS (
 SELECT e.a, e.b, COALESCE(common.c, 0) AS embeddedness,
        COALESCE(common.c, 0) = 0 AS is_local_bridge
 FROM e LEFT JOIN common ON common.a = e.a AND common.b = e.b
-"""
-
-
-def q_events_burstiness(spark, sf_dir):
-    """Per-user inter-arrival burstiness (timeseries.burstiness);
-    the oracle replays the lag gaps and the 9dp-DECIMAL moment
-    sums."""
-    from graph_importer_spark.operators.timeseries import burstiness
-
-    return burstiness(T(spark, sf_dir, "events"))
-
-
-ORACLE_EVENTS_BURSTINESS = r"""
-WITH o AS (
-  SELECT user_id AS key, CAST(floor(epoch(ts)) AS BIGINT) AS t, event_id
-  FROM events),
-g AS (
-  SELECT key,
-         t - LAG(t) OVER (PARTITION BY key ORDER BY t, event_id) AS g
-  FROM o),
-gg AS (SELECT key, CAST(g AS DOUBLE) AS g FROM g WHERE g IS NOT NULL),
-a AS (
-  SELECT key, COUNT(*) AS n_gaps,
-         SUM(CAST(round(g, 9) AS DECIMAL(38,9))) AS s,
-         SUM(CAST(round(g * g, 9) AS DECIMAL(38,9))) AS sq
-  FROM gg GROUP BY key HAVING COUNT(*) >= 3),
-m AS (
-  SELECT key, n_gaps, CAST(s AS DOUBLE) / n_gaps AS mu,
-         sqrt(GREATEST((CAST(sq AS DOUBLE)
-               - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / n_gaps)
-               / n_gaps, 0.0)) AS sd
-  FROM a)
-SELECT key, n_gaps, round(mu, 6) AS mean_gap_s, round(sd, 6) AS std_gap_s,
-       CASE WHEN sd + mu > 0 THEN round((sd - mu) / (sd + mu), 6) END
-         AS burstiness
-FROM m
 """
 
 
@@ -11097,53 +10207,6 @@ FROM b GROUP BY media_id, frame_idx
 # Round-4 session-18z: forecast backtest, temporal consistency,
 # Poisson bootstrap
 # ---------------------------------------------------------------------------
-
-
-def q_events_forecast(spark, sf_dir):
-    """Seasonal-naive hourly forecast backtest (timeseries.
-    forecast_eval_seasonal_naive): last 7 days held out; the oracle
-    replays the train-only baseline and every sMAPE contribution."""
-    from graph_importer_spark.operators.timeseries import (
-        forecast_eval_seasonal_naive,
-    )
-
-    return forecast_eval_seasonal_naive(T(spark, sf_dir, "events"))
-
-
-ORACLE_EVENTS_FORECAST = r"""
-WITH cell AS (
-  SELECT CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day,
-         CAST(floor(epoch(ts) / 3600) % 24 AS BIGINT) AS hour,
-         COUNT(*) AS n
-  FROM events GROUP BY 1, 2),
-span AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM cell),
-grid AS (
-  SELECT CAST(u.day AS BIGINT) AS day, CAST(h.h AS BIGINT) AS hour,
-         span.hi
-  FROM span, UNNEST(generate_series(span.lo, span.hi)) u(day),
-       UNNEST(generate_series(0, 23)) h(h)),
-full_ AS (
-  SELECT g.day, g.hour, g.hi, COALESCE(cell.n, 0) AS n
-  FROM grid g LEFT JOIN cell USING (day, hour)),
-train AS (SELECT * FROM full_ WHERE day < hi - 6),
-test AS (SELECT * FROM full_ WHERE day >= hi - 6),
-base AS (
-  SELECT day % 7 AS dow, hour,
-         CAST(SUM(n) AS DOUBLE) / COUNT(*) AS fc
-  FROM train GROUP BY 1, 2),
-j AS (
-  SELECT t.day, t.hour, t.n AS actual,
-         round(COALESCE(b.fc, 0.0), 6) AS forecast
-  FROM test t LEFT JOIN base b
-    ON b.dow = t.day % 7 AND b.hour = t.hour)
-SELECT day, hour, actual, forecast,
-       round(abs(actual - forecast), 6) AS abs_err,
-       CASE WHEN actual + forecast > 0
-            THEN round(2.0 * abs(actual - forecast)
-                       / (actual + forecast), 6)
-            ELSE 0.0 END AS smape_contrib
-FROM j
-"""
 
 
 def q_kg_temporal(spark, sf_dir):
@@ -11632,47 +10695,6 @@ FROM w
 """
 
 
-def q_events_acf(spark, sf_dir):
-    """Daily-count autocorrelation at lags 1-7 (timeseries.
-    daily_acf); the oracle replays the grid fill, the exact-ratio
-    mean, and every 9dp-DECIMAL deviation product."""
-    from graph_importer_spark.operators.timeseries import daily_acf
-
-    return daily_acf(T(spark, sf_dir, "events"))
-
-
-ORACLE_EVENTS_ACF = r"""
-WITH per AS (
-  SELECT CAST(floor(epoch(ts) / 86400) AS BIGINT) AS day,
-         COUNT(*) AS n
-  FROM events GROUP BY 1),
-span AS (
-  SELECT MIN(day) AS lo, MAX(day) AS hi, SUM(n) AS tot FROM per),
-grid AS (
-  SELECT CAST(u.day AS BIGINT) AS day,
-         CAST(span.tot AS DOUBLE) / (span.hi - span.lo + 1) AS mu
-  FROM span, UNNEST(generate_series(span.lo, span.hi)) u(day)),
-full_ AS (
-  SELECT g.day, COALESCE(per.n, 0) - g.mu AS d
-  FROM grid g LEFT JOIN per USING (day)),
-den AS (
-  SELECT CAST(SUM(CAST(round(d * d, 9) AS DECIMAL(38,9)))
-              AS DOUBLE) AS den
-  FROM full_),
-lags AS (SELECT CAST(u.k AS INT) AS lag FROM UNNEST(generate_series(1, 7)) u(k)),
-nums AS (
-  SELECT l.lag, COUNT(*) AS n_pairs,
-         CAST(SUM(CAST(round(a.d * b.d, 9) AS DECIMAL(38,9)))
-              AS DOUBLE) AS num
-  FROM lags l JOIN full_ a ON TRUE
-  JOIN full_ b ON b.day = a.day + l.lag
-  GROUP BY l.lag)
-SELECT lag, n_pairs,
-       CASE WHEN den.den > 0 THEN round(num / den.den, 6) END AS acf
-FROM nums, den
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18dd: lexical diversity, correlation matrix
 # ---------------------------------------------------------------------------
@@ -11771,60 +10793,6 @@ FROM agg
 """
 
 
-def q_events_stationary(spark, sf_dir):
-    """Markov stationary distribution (timeseries.
-    stationary_distribution, 12 power-iteration steps with 9dp
-    renormalization); the oracle unrolls every step over the bounded
-    transition table."""
-    from graph_importer_spark.operators.timeseries import (
-        stationary_distribution,
-    )
-
-    return stationary_distribution(
-        T(spark, sf_dir, "events"), iterations=12
-    )
-
-
-def _oracle_events_stationary(iterations: int = 12) -> str:
-    parts = [
-        """
-WITH seq AS (
-  SELECT prev_type AS s, event_type AS t FROM (
-    SELECT event_type,
-           LAG(event_type) OVER (PARTITION BY user_id
-             ORDER BY epoch_us(ts), event_id) AS prev_type
-    FROM events) WHERE prev_type IS NOT NULL),
-cnt AS MATERIALIZED (SELECT s, t, COUNT(*) AS n FROM seq GROUP BY s, t),
-tr AS MATERIALIZED (
-  SELECT cnt.s, cnt.t,
-         round(CAST(cnt.n AS DOUBLE) / tot.tn, 9) AS p
-  FROM cnt JOIN (SELECT s, SUM(n) AS tn FROM cnt GROUP BY s) tot
-    USING (s)),
-states AS MATERIALIZED (
-  SELECT s AS state FROM tr UNION SELECT t FROM tr),
-ns AS (SELECT COUNT(*) AS n FROM states),
-pi0 AS MATERIALIZED (
-  SELECT state, 1.0 / ns.n AS pi FROM states, ns)"""
-    ]
-    for k in range(1, iterations + 1):
-        parts.append(
-            f""",
-m{k} AS MATERIALIZED (
-  SELECT tr.t AS state, round(SUM(round(pi.pi * tr.p, 9)), 9) AS pi
-  FROM pi{k - 1} pi JOIN tr ON tr.s = pi.state
-  GROUP BY tr.t),
-t{k} AS MATERIALIZED (SELECT SUM(pi) AS tt FROM m{k}),
-pi{k} AS MATERIALIZED (
-  SELECT state, round(pi / t{k}.tt, 9) AS pi FROM m{k}, t{k})"""
-        )
-    parts.append(
-        f"""
-SELECT s.state, round(COALESCE(p.pi, 0.0), 6) AS pi
-FROM states s LEFT JOIN pi{iterations} p USING (state)"""
-    )
-    return "".join(parts)
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18ff: KMV/theta distinct sketch
 # ---------------------------------------------------------------------------
@@ -11916,42 +10884,6 @@ SELECT vol.c AS community, n_nodes, CAST(volume AS BIGINT) AS volume,
                        / LEAST(volume, tot.tv - volume), 6) END
          AS conductance
 FROM vol LEFT JOIN cuts ON cuts.c = vol.c, tot
-"""
-
-
-def q_events_alerts(spark, sf_dir):
-    """Alert-suppression audit (timeseries.alert_suppression, 4 h
-    windows) over per-user event streams; the oracle replays the
-    sequential keep-scan as a recursive kept-chain plus the
-    rn-ordered storm attribution."""
-    from graph_importer_spark.operators.timeseries import alert_suppression
-
-    return alert_suppression(
-        T(spark, sf_dir, "events"), suppress_seconds=4 * 3600
-    )
-
-
-ORACLE_EVENTS_ALERTS = r"""
-WITH RECURSIVE ev AS MATERIALIZED (
-  SELECT user_id AS key, event_id AS i,
-         CAST(floor(epoch(ts)) AS BIGINT) AS t,
-         ROW_NUMBER() OVER (PARTITION BY user_id
-                            ORDER BY floor(epoch(ts)), event_id) AS rn
-  FROM events),
-wk(key, rn, t, storm) AS (
-  SELECT key, rn, t, 0 FROM ev WHERE rn = 1
-  UNION ALL
-  SELECT wk.key, e.rn, e.t, wk.storm + 1
-  FROM wk JOIN ev e ON e.key = wk.key
-   AND e.rn = (SELECT MIN(e2.rn) FROM ev e2
-               WHERE e2.key = wk.key AND e2.t >= wk.t + 14400)),
-kept AS MATERIALIZED (SELECT * FROM wk)
-SELECT ev.key, ev.i AS id, ev.t AS ts_s,
-       EXISTS (SELECT 1 FROM kept k
-               WHERE k.key = ev.key AND k.rn = ev.rn) AS kept,
-       (SELECT MAX(k.storm) FROM kept k
-        WHERE k.key = ev.key AND k.rn <= ev.rn) AS storm_idx
-FROM ev
 """
 
 
@@ -12233,38 +11165,6 @@ FROM a, m
 """
 
 
-def q_events_hhi(spark, sf_dir):
-    """Traffic HHI over the (dow, hour) cells (timeseries.
-    traffic_hhi); exact share ratios, 9dp rounded square sum."""
-    from graph_importer_spark.operators.timeseries import traffic_hhi
-
-    return traffic_hhi(T(spark, sf_dir, "events"))
-
-
-ORACLE_EVENTS_HHI = r"""
-WITH per AS (
-  SELECT (CAST(floor(epoch(ts)) AS BIGINT) // 86400) % 7 AS dow,
-         (CAST(floor(epoch(ts)) AS BIGINT) // 3600) % 24 AS hour,
-         COUNT(*) AS n
-  FROM events GROUP BY 1, 2),
-tot AS (SELECT SUM(n) AS t, COUNT(*) AS n_cells FROM per),
-h AS (
-  -- per-cell share^2 in integer BILLIONTHS (0dp double rounding is
-  -- engine-consistent; fractional-dp rounding is not — the sf0.1
-  -- strict-sweep finding); all later rounds are integer half-up
-  SELECT tot.n_cells,
-         CAST(SUM(CAST(round((CAST(n AS DOUBLE) / tot.t)
-                             * (CAST(n AS DOUBLE) / tot.t)
-                             * 1000000000) AS BIGINT)) AS BIGINT) AS c
-  FROM per, tot GROUP BY tot.n_cells)
-SELECT n_cells,
-       CAST((c + 500) // 1000 AS DOUBLE) / 1000000.0 AS hhi,
-       round(1.0 / n_cells, 6) AS flat_hhi,
-       CAST((c * n_cells + 500) // 1000 AS DOUBLE) / 1000000.0 AS peakiness
-FROM h
-"""
-
-
 def q_graph_mincut(spark, sf_dir):
     """Bounded s-t min-cut (flow.st_mincut — the Spark-native analogue
     of the reference's experimental Pregel3 MinCut spec,
@@ -12451,7 +11351,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_fact_history": q_kg_fact_history,
     # round-4 session-15 additions: event n-grams, snapshot churn,
     # layout shoot-out, per-domain quantile normalization.
-    "events_ngrams": q_events_ngrams,
     "kg_snapshot_diff": q_kg_snapshot_diff,
     "layout_compare": q_layout_compare,
     # round-4 session-16 additions: character entropy, numeric
@@ -12469,13 +11368,11 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # pack_sequences, kg_incremental_entities) are re-verified
     # locally via the full scripts/check_contract.py sweep like
     # every out-of-window row.
-    "events_retention": q_events_retention,
     "orders_rfm": q_orders_rfm,
     "emb_whiten": q_emb_whiten,
     # round-4 session-18b additions: multi-touch attribution, TransE
     # ranking eval, stem vocabulary, crawl-frontier scheduling (four
     # more tail-of-window rows rotate out under the same policy).
-    "events_attribution": q_events_attribution,
     "kg_transe_rank": q_kg_transe_rank,
     "web_frontier": q_web_frontier,
     # round-4 session-18c additions: SimRank, sampled harmonic
@@ -12513,10 +11410,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_savings": q_dedup_savings,
     # round-4 session-18i additions: posting delta compression,
     # extractive summarization, churn label builder.
-    "events_churn": q_events_churn,
     # round-4 session-18j additions: JSON schema inference, quotient
     # graph, shortest-path trace, Cohen's kappa.
-    "events_json_schema": q_events_json_schema,
     "graph_quotient": q_graph_quotient,
     "graph_shortest_path": q_graph_shortest_path,
     "eval_kappa": q_eval_kappa,
@@ -12529,27 +11424,20 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # coupling, DAU/WAU/MAU.
     "dedup_pr": q_dedup_pr,
     "graph_cocitation": q_graph_cocitation,
-    "events_dau": q_events_dau,
     # round-4 session-18m additions: maximal matching, A/B readout,
     # dbt-style checks, feature hashing.
     "graph_matching": q_graph_matching,
-    "events_ab_test": q_events_ab_test,
     "orders_checks": q_orders_checks,
     # round-4 session-18n additions: autocomplete, DiD, cycle motifs.
-    "events_did": q_events_did,
     "kg_motif_cycle": q_kg_motif_cycle,
     # round-4 session-18o additions: topic labeling, deterministic
     # augmentation, conformal calibration.
     "eval_conformal": q_eval_conformal,
     # round-4 session-18p additions: seasonality, time-to-convert,
     # robust MAD stats.
-    "events_seasonality": q_events_seasonality,
-    "events_ttc": q_events_ttc,
-    "events_mad": q_events_mad,
     # round-4 session-18q additions: Benford audit, Kaplan-Meier,
     # Pareto concentration.
     "kg_benford": q_kg_benford,
-    "events_km": q_events_km,
     "orders_pareto": q_orders_pareto,
     # round-4 session-18r additions: grouped OLS, join-cardinality
     # audit, Matryoshka truncation recall.
@@ -12558,14 +11446,11 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "emb_matryoshka": q_emb_matryoshka,
     # round-4 session-18s additions: information gain, CUSUM.
     "orders_infogain": q_orders_infogain,
-    "events_cusum": q_events_cusum,
     # round-4 session-18t additions: seasonal anomalies, k-fold.
-    "events_anomaly": q_events_anomaly,
     "sample_kfold": q_sample_kfold,
     # round-4 session-18u additions: embeddedness, burstiness,
     # chunk-share near-dup pairs.
     "graph_embeddedness": q_graph_embeddedness,
-    "events_burstiness": q_events_burstiness,
     "dedup_chunk_share": q_dedup_chunk_share,
     # round-4 session-18v additions: functional dependencies, signed
     # sentiment.
@@ -12581,7 +11466,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # round-4 session-18y addition: Dirichlet query-likelihood.
     # round-4 session-18z additions: forecast backtest, temporal
     # consistency, Poisson bootstrap.
-    "events_forecast": q_events_forecast,
     "kg_temporal": q_kg_temporal,
     "orders_bootstrap": q_orders_bootstrap,
     # round-4 session-18aa additions: MAP@k, fairness audit.
@@ -12592,19 +11476,16 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_bow": q_dedup_bow,
     # round-4 session-18cc additions: range typing, daily ACF.
     "kg_range_types": q_kg_range_types,
-    "events_acf": q_events_acf,
     # round-4 session-18dd additions: lexical diversity, correlation
     # matrix.
     "orders_corr": q_orders_corr,
     # round-4 session-18ee additions: Gini, stationary distribution.
     "orders_gini": q_orders_gini,
-    "events_stationary": q_events_stationary,
     # round-4 session-18ff addition: KMV/theta sketch.
     "sketch_kmv": q_sketch_kmv,
     # round-4 session-18gg additions: conductance, KWIC, alert
     # suppression.
     "graph_conductance": q_graph_conductance,
-    "events_alerts": q_events_alerts,
     # round-4 session-18hh additions: centroid drift, IPS eval.
     "emb_drift": q_emb_drift,
     "eval_ips": q_eval_ips,
@@ -12612,7 +11493,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "eval_rouge": q_eval_rouge,
     # round-4 session-18jj additions: centralization, traffic HHI.
     "graph_centralization": q_graph_centralization,
-    "events_hhi": q_events_hhi,
     # round-4 session-2 additions: CMS heavy hitters, SCD2 history,
     # Z-order layout, web link graph
     "sketch_cms_topk": q_sketch_cms_topk,
@@ -12666,10 +11546,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "graph_ppr": q_graph_ppr,
     "kg_predicate_stats": q_kg_predicate_stats,
     "kg_nquads": q_kg_nquads,
-    "events_funnel": q_events_funnel,
     "er_fellegi_sunter": q_er_fellegi_sunter,
     "shard_rendezvous": q_shard_rendezvous,
-    "events_rolling": q_events_rolling,
     "dedup_prefix_filter": q_dedup_prefix_filter,
     "eval_auc": q_eval_auc,
     "eval_pr_at_k": q_eval_pr_at_k,
@@ -12708,7 +11586,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "graph_bipartite": q_graph_bipartite,
     "er_golden_record": q_er_golden_record,
     "cdc_apply": q_cdc_apply,
-    "events_resample": q_events_resample,
     "er_edit_pairs": q_er_edit_pairs,
     # round-4 session-8 additions (FIFO behind the session-7 block;
     # all queue at the tail for the r5 window, verified this round by
@@ -12767,7 +11644,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     #   (user_id, ts, event_id) window ordering is in-window via
     #   events_rolling; the lag/count math is pytest-covered and
     #   full-sweep green locally
-    "events_transitions": q_events_transitions,
     # - graph_assortativity (new r4) waits for the r5 window: its
     #   undirected-degree preamble is in-window via graph_clustering
     #   (same _undirected + degree aggregate on the same graph); the
@@ -12819,10 +11695,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "region_volume": q_region_volume,
     "window_top_orders": q_window_top_orders,
     "semi_join_segments": q_semi_join_segments,
-    "events_hourly": q_events_hourly,
     "gen_tournament": q_gen_tournament,
     "imp_unique_insert": q_imp_unique_insert,
-    "events_sessions": q_events_sessions,
     # cc family remains window-covered by cc_star;
     # the dense-id variant (same oracle) rotates out
     "cc_canonical_dense": q_cc_canonical_dense,
@@ -12874,7 +11748,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "slpa_overlap": q_slpa_overlap,
     "tri_copurchase": q_tri_copurchase,
     "kcore_copurchase": q_kcore_copurchase,
-    "events_json_stats": q_events_json_stats,
     "rollup_pricing": q_rollup_pricing,
     # round-5: bounded Pregel3-MinCut analogue (SURVEY §2.9 G7)
     "graph_mincut": q_graph_mincut,
@@ -12904,10 +11777,8 @@ ORACLES: dict[str, str] = {
     "graph_reciprocity": ORACLE_GRAPH_RECIPROCITY,
     "kg_literal_norm": ORACLE_KG_LITERAL_NORM,
     "kg_truthfinder": ORACLE_KG_TRUTHFINDER,
-    "events_retention": ORACLE_EVENTS_RETENTION,
     "orders_rfm": ORACLE_ORDERS_RFM,
     "emb_whiten": ORACLE_EMB_WHITEN,
-    "events_attribution": ORACLE_EVENTS_ATTRIBUTION,
     "kg_transe_rank": _oracle_kg_transe_rank(),
     "web_frontier": _oracle_web_frontier(),
     "graph_simrank": ORACLE_GRAPH_SIMRANK,
@@ -12929,8 +11800,6 @@ ORACLES: dict[str, str] = {
     "drift_psi": ORACLE_DRIFT_PSI,
     "orders_ltv": ORACLE_ORDERS_LTV,
     "dedup_savings": ORACLE_DEDUP_SAVINGS,
-    "events_churn": ORACLE_EVENTS_CHURN,
-    "events_json_schema": ORACLE_EVENTS_JSON_SCHEMA,
     "graph_quotient": ORACLE_GRAPH_QUOTIENT,
     "graph_shortest_path": ORACLE_GRAPH_SHORTEST_PATH,
     "eval_kappa": _oracle_eval_kappa(),
@@ -12939,35 +11808,24 @@ ORACLES: dict[str, str] = {
     "kg_redirects": ORACLE_KG_REDIRECTS,
     "dedup_pr": _oracle_dedup_pr(),
     "graph_cocitation": ORACLE_GRAPH_COCITATION,
-    "events_dau": ORACLE_EVENTS_DAU,
     "graph_matching": _oracle_graph_matching(),
-    "events_ab_test": _oracle_events_ab_test(),
     "orders_checks": ORACLE_ORDERS_CHECKS,
-    "events_did": _oracle_events_did(),
     "kg_motif_cycle": ORACLE_KG_MOTIF_CYCLE,
     "eval_conformal": _oracle_eval_conformal(),
-    "events_seasonality": ORACLE_EVENTS_SEASONALITY,
-    "events_ttc": ORACLE_EVENTS_TTC,
-    "events_mad": ORACLE_EVENTS_MAD,
     "kg_benford": _oracle_kg_benford(),
-    "events_km": ORACLE_EVENTS_KM,
     "orders_pareto": _oracle_orders_pareto(),
     "orders_ols": ORACLE_ORDERS_OLS,
     "join_card_audit": ORACLE_JOIN_CARD_AUDIT,
     "emb_matryoshka": _oracle_emb_matryoshka(),
     "orders_infogain": ORACLE_ORDERS_INFOGAIN,
-    "events_cusum": ORACLE_EVENTS_CUSUM,
-    "events_anomaly": ORACLE_EVENTS_ANOMALY,
     "sample_kfold": _oracle_sample_kfold(),
     "graph_embeddedness": ORACLE_GRAPH_EMBEDDEDNESS,
-    "events_burstiness": ORACLE_EVENTS_BURSTINESS,
     "dedup_chunk_share": _oracle_dedup_chunk_share(),
     "schema_fd": ORACLE_SCHEMA_FD,
     "stream_cdc_apply": ORACLE_STREAM_CDC_APPLY,
     "emb_label_noise": _oracle_emb_label_noise(),
     "orders_woe": ORACLE_ORDERS_WOE,
     "mm_frame_energy": ORACLE_MM_FRAME_ENERGY,
-    "events_forecast": ORACLE_EVENTS_FORECAST,
     "kg_temporal": ORACLE_KG_TEMPORAL,
     "orders_bootstrap": _oracle_orders_bootstrap(),
     "eval_map": _oracle_eval_map(),
@@ -12975,20 +11833,15 @@ ORACLES: dict[str, str] = {
     "graph_katz": _oracle_graph_katz(),
     "dedup_bow": ORACLE_DEDUP_BOW,
     "kg_range_types": ORACLE_KG_RANGE_TYPES,
-    "events_acf": ORACLE_EVENTS_ACF,
     "orders_corr": _oracle_orders_corr(),
     "orders_gini": ORACLE_ORDERS_GINI,
-    "events_stationary": _oracle_events_stationary(),
     "sketch_kmv": _oracle_sketch_kmv(),
     "graph_conductance": ORACLE_GRAPH_CONDUCTANCE,
-    "events_alerts": ORACLE_EVENTS_ALERTS,
     "emb_drift": ORACLE_EMB_DRIFT,
     "eval_ips": _oracle_eval_ips(),
     "eval_rouge": ORACLE_EVAL_ROUGE,
     "graph_centralization": ORACLE_GRAPH_CENTRALIZATION,
-    "events_hhi": ORACLE_EVENTS_HHI,
     "kg_numeric_outliers": ORACLE_KG_NUMERIC_OUTLIERS,
-    "events_ngrams": ORACLE_EVENTS_NGRAMS,
     "kg_snapshot_diff": ORACLE_KG_SNAPSHOT_DIFF,
     "layout_compare": ORACLE_LAYOUT_COMPARE,
     "web_url_templates": ORACLE_WEB_URL_TEMPLATES,
@@ -13028,7 +11881,6 @@ ORACLES: dict[str, str] = {
     "graph_bipartite": ORACLE_GRAPH_BIPARTITE,
     "er_golden_record": ORACLE_ER_GOLDEN,
     "cdc_apply": ORACLE_CDC_APPLY,
-    "events_resample": ORACLE_EVENTS_RESAMPLE,
     "er_edit_pairs": ORACLE_ER_EDIT_PAIRS,
     "graph_sage_sample": ORACLE_GRAPH_SAGE_SAMPLE,
     "kg_fusion": ORACLE_KG_FUSION,
@@ -13068,10 +11920,7 @@ ORACLES: dict[str, str] = {
     "approx_distinct_users": _oracle_fm_distinct(),
     "quantiles_value": ORACLE_QUANTILES,
     "pivot_hourly": ORACLE_PIVOT,
-    "events_json_stats": ORACLE_EVENTS_JSON,
     "rollup_pricing": ORACLE_ROLLUP,
-    "events_hourly": ORACLE_HOURLY,
-    "events_sessions": ORACLE_SESSIONS,
     "asof_last_click": ORACLE_ASOF,
     "asof_bucketed": ORACLE_ASOF,
     "interval_prior_clicks": ORACLE_INTERVAL,
@@ -13102,18 +11951,15 @@ ORACLES: dict[str, str] = {
     "web_meta": ORACLE_WEB_META,
     "graph_clustering": ORACLE_GRAPH_CLUSTERING,
     "graph_ppr": _oracle_graph_ppr(),
-    "events_rolling": ORACLE_EVENTS_ROLLING,
     "dedup_prefix_filter": ORACLE_DEDUP_PREFIX,
     "eval_auc": ORACLE_EVAL_AUC,
     "eval_pr_at_k": _oracle_eval_pr_at_k(),
     "dedup_simhash": _oracle_dedup_simhash(),
     "graph_ktruss": _oracle_ktruss(),
     "eval_ndcg": _oracle_eval_ndcg(),
-    "events_transitions": ORACLE_EVENTS_TRANSITIONS,
     "graph_assortativity": ORACLE_GRAPH_ASSORTATIVITY,
     "kg_predicate_stats": ORACLE_KG_PREDICATE_STATS,
     "kg_nquads": _oracle_kg_nquads(),
-    "events_funnel": ORACLE_EVENTS_FUNNEL,
     "er_fellegi_sunter": _oracle_er_fs(),
     "shard_rendezvous": ORACLE_SHARD_RENDEZVOUS,
     "dedup_incremental": ORACLE_DEDUP_INCREMENTAL,
