@@ -2552,40 +2552,6 @@ FROM j GROUP BY tier
 """
 
 
-def _oracle_bm25(terms: tuple[str, ...], k: int = 20) -> str:
-    """Parameterized DuckDB replay of retrieval.bm25_topk (k1=1.5,
-    b=0.75 — every scoring constant an exact double)."""
-    in_list = ", ".join(f"'{t}'" for t in sorted(terms))
-    return f"""
-WITH d AS (
-  SELECT doc_id,
-         list_filter(string_split({_NF_SQL}, ' '), t -> t <> '') AS toks
-  FROM documents),
-base AS (
-  SELECT doc_id, len(toks) AS dl,
-         list_filter(toks, t -> t IN ({in_list})) AS hits
-  FROM d),
-stats AS (SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM base),
-tfc AS (
-  SELECT doc_id, dl, term, COUNT(*) AS tf
-  FROM (SELECT doc_id, dl, UNNEST(hits) AS term FROM base)
-  GROUP BY doc_id, dl, term),
-dfc AS (SELECT term, COUNT(*) AS df FROM tfc GROUP BY term),
-scored AS (
-  SELECT doc_id, COUNT(*) AS n_terms,
-         round(SUM(
-           ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-           * (tf * 2.5)
-             / (tf + 1.5 * (0.25 + 0.75 * dl / avgdl))
-         ), 4) AS score
-  FROM tfc JOIN dfc USING (term) CROSS JOIN stats
-  GROUP BY doc_id)
-SELECT doc_id, n_terms, score FROM scored
-ORDER BY score DESC, doc_id
-LIMIT {k}
-"""
-
-
 def q_split_by_customer(spark, sf_dir):
     """Leakage-free 80/10/10 split of orders GROUPED BY customer: the
     split label is a pure function of the customer key's md5 coin, so
@@ -3460,170 +3426,6 @@ SELECT n_edges,
              / nullif(m_sq - m_sum * m_sum, 0.0), 6) AS assortativity
 FROM m
 """
-
-
-def q_eval_auc(spark, sf_dir):
-    """Exact ROC AUC (operators/evalmetrics.auc_score) of a
-    deterministic scored+labeled customer set: score = mean of two
-    congruential unit coins, label = coin1 > 0.5 — correlated by
-    construction, so AUC lands well above 0.5 and the pair-counting
-    rollup (per-distinct-score aggregate + bounded window, never an
-    O(P*N) pair join) is actually exercised.  The oracle replays coin
-    synthesis and the Mann-Whitney tie convention."""
-    from graph_importer_spark.operators.evalmetrics import auc_score
-
-    c = T(spark, sf_dir, "customer")
-    scored = c.select(
-        F.round(
-            (_gen._unit(F.col("c_custkey"), 7) + _gen._unit(F.col("c_custkey"), 11))
-            / 2.0,
-            6,
-        ).alias("score"),
-        (_gen._unit(F.col("c_custkey"), 7) > 0.5).alias("label"),
-    )
-    return auc_score(scored, "label", "score")
-
-
-ORACLE_EVAL_AUC = f"""
-WITH scored AS (
-  SELECT round((
-           ((c_custkey % {_M}) * {_A} + 7) % {_M} / {_M}.0
-         + ((c_custkey % {_M}) * {_A} + 11) % {_M} / {_M}.0) / 2.0, 6) AS s,
-         CAST(((c_custkey % {_M}) * {_A} + 7) % {_M} / {_M}.0 > 0.5 AS INT) AS pos
-  FROM customer),
-per_score AS (
-  SELECT s, SUM(pos) AS np, SUM(1 - pos) AS nn FROM scored GROUP BY s),
-won AS (
-  SELECT np, nn,
-         np * COALESCE(SUM(nn) OVER (ORDER BY s ASC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS w,
-         np * nn AS t
-  FROM per_score)
-SELECT CAST(SUM(np) AS BIGINT) AS n_pos, CAST(SUM(nn) AS BIGINT) AS n_neg,
-       round((SUM(w) + 0.5 * SUM(t)) / (SUM(np) * SUM(nn)), 6) AS auc
-FROM won
-"""
-
-
-def q_eval_pr_at_k(spark, sf_dir):
-    """Per-query precision@10 / recall@10
-    (operators/evalmetrics.precision_recall_at_k) of the two BM25
-    top-20 runs against a deterministic relevance rule: a doc is
-    relevant to a query iff its normalized text contains EVERY query
-    term.  One per-query rank window over 20-row lists + a semi-join
-    against the truth set."""
-    from graph_importer_spark.operators import retrieval as _ret
-    from graph_importer_spark.operators.evalmetrics import precision_recall_at_k
-    from graph_importer_spark.operators.textstats import normalize_text
-
-    d = T(spark, sf_dir, "documents")
-    runs = []
-    truths = []
-    toks = F.split(normalize_text(F.col("text")), " ")
-    for name, terms in sorted(_RRF_RUNS.items()):
-        runs.append(
-            _ret.bm25_topk(d, "doc_id", "text", list(terms), k=20, k1=1.5, b=0.75)
-            .withColumn("query", F.lit(name))
-        )
-        cond = None
-        for t in sorted(terms):
-            c = F.array_contains(toks, t)
-            cond = c if cond is None else (cond & c)
-        truths.append(
-            d.filter(cond).select(F.lit(name).alias("query"), "doc_id")
-        )
-    run = runs[0].unionByName(runs[1])
-    truth = truths[0].unionByName(truths[1])
-    return precision_recall_at_k(
-        run, truth, "query", "doc_id", "score", k=10
-    ).orderBy("query")
-
-
-def _oracle_eval_pr_at_k(k: int = 10) -> str:
-    parts = []
-    for name, terms in sorted(_RRF_RUNS.items()):
-        conds = " AND ".join(
-            f"list_contains(string_split({_NF_SQL}, ' '), '{t}')"
-            for t in sorted(terms)
-        )
-        parts.append(f"""
-SELECT '{name}' AS query,
-       (SELECT COUNT(*) FROM (
-          SELECT doc_id, ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rnk
-          FROM ({_oracle_bm25(terms, 20)})) r
-        WHERE r.rnk <= {k}
-          AND r.doc_id IN (SELECT doc_id FROM documents WHERE {conds})) AS n_hits,
-       (SELECT COUNT(*) FROM documents WHERE {conds}) AS n_rel""")
-    union = " UNION ALL ".join(parts)
-    return f"""
-WITH base AS ({union})
-SELECT query, n_hits, n_rel,
-       round(CAST(n_hits AS DOUBLE) / {float(k)!r}, 6) AS precision_at_k,
-       round(CAST(n_hits AS DOUBLE) / n_rel, 6) AS recall_at_k
-FROM base
-"""
-
-
-def q_eval_ndcg(spark, sf_dir):
-    """Per-query nDCG@10 (operators/evalmetrics.ndcg_at_k, binary
-    gains) of the two BM25 runs against the all-terms relevance rule —
-    same runs/truth as eval_pr_at_k, grading rank POSITIONS rather
-    than set overlap.  The oracle computes DCG from the re-ranked run
-    and IDCG from the closed form over min(n_rel, k) ideal slots."""
-    from graph_importer_spark.operators import retrieval as _ret
-    from graph_importer_spark.operators.evalmetrics import ndcg_at_k
-    from graph_importer_spark.operators.textstats import normalize_text
-
-    d = T(spark, sf_dir, "documents")
-    toks = F.split(normalize_text(F.col("text")), " ")
-    runs, truths = [], []
-    for name, terms in sorted(_RRF_RUNS.items()):
-        runs.append(
-            _ret.bm25_topk(d, "doc_id", "text", list(terms), k=20, k1=1.5, b=0.75)
-            .withColumn("query", F.lit(name))
-        )
-        cond = None
-        for t in sorted(terms):
-            c = F.array_contains(toks, t)
-            cond = c if cond is None else (cond & c)
-        truths.append(d.filter(cond).select(F.lit(name).alias("query"), "doc_id"))
-    return ndcg_at_k(
-        runs[0].unionByName(runs[1]),
-        truths[0].unionByName(truths[1]),
-        "query",
-        "doc_id",
-        "score",
-        k=10,
-    ).orderBy("query")
-
-
-def _oracle_eval_ndcg(k: int = 10) -> str:
-    parts = []
-    for name, terms in sorted(_RRF_RUNS.items()):
-        conds = " AND ".join(
-            f"list_contains(string_split({_NF_SQL}, ' '), '{t}')"
-            for t in sorted(terms)
-        )
-        parts.append(f"""
-SELECT '{name}' AS query,
-  (SELECT COALESCE(SUM(1.0 / log2(rnk + 1.0)), 0) FROM (
-     SELECT doc_id, ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rnk
-     FROM ({_oracle_bm25(terms, 20)})) r
-   WHERE r.rnk <= {k}
-     AND r.doc_id IN (SELECT doc_id FROM documents WHERE {conds})) AS dcg,
-  (SELECT SUM(1.0 / log2(i + 1.0)) FROM
-     UNNEST(generate_series(1, LEAST(
-       (SELECT COUNT(*) FROM documents WHERE {conds}), {k}))) AS u(i)) AS idcg""")
-    union = " UNION ALL ".join(parts)
-    return f"""
-WITH base AS ({union})
-SELECT query, round(dcg, 6) AS dcg, round(idcg, 6) AS idcg,
-       round(dcg / idcg, 6) AS ndcg
-FROM base
-"""
-
-
-_RRF_RUNS = {"lex_a": ("merge", "spark", "window"), "lex_b": ("hash", "join", "scan")}
 
 
 _PPR_SEEDS = [5, 10, 15]
@@ -5252,52 +5054,6 @@ SELECT cnt.domain, line, n_pages, domain_pages,
 FROM cnt JOIN dp USING (domain)
 WHERE domain_pages >= 5
   AND CAST(n_pages AS DOUBLE) / domain_pages >= 0.4
-"""
-
-
-def q_eval_mrr(spark, sf_dir):
-    """KG link-prediction ranking eval (evalmetrics.mrr_hits): each
-    customer 'query' scores every nation with the deterministic
-    congruential coin; the true nation is the positive.  The oracle
-    replays the per-query rank window and the hit indicators."""
-    from graph_importer_spark.operators.evalmetrics import mrr_hits
-
-    c = T(spark, sf_dir, "customer").filter(F.col("c_custkey") < 120)
-    n = T(spark, sf_dir, "nation")
-    scored = c.crossJoin(n.select("n_nationkey")).select(
-        F.col("c_custkey").alias("q"),
-        F.col("n_nationkey").alias("cand"),
-        (
-            (
-                (F.col("c_custkey") * 31 + F.col("n_nationkey")) % 1000003
-            ) * 2654435761
-            % 1000003
-        ).cast("double").alias("score"),
-        (F.col("n_nationkey") == F.col("c_nationkey")).cast("int").alias("label"),
-    )
-    return mrr_hits(scored, "q", "cand", "score", "label")
-
-
-ORACLE_EVAL_MRR = r"""
-WITH scored AS (
-  SELECT c_custkey AS q, n_nationkey AS cand,
-         CAST(((c_custkey * 31 + n_nationkey) % 1000003) * 2654435761
-              % 1000003 AS DOUBLE) AS score,
-         CASE WHEN n_nationkey = c_nationkey THEN 1 ELSE 0 END AS label
-  FROM customer, nation WHERE c_custkey < 120),
-ranked AS (
-  SELECT q, label,
-         ROW_NUMBER() OVER (PARTITION BY q ORDER BY score DESC, cand ASC)
-           AS rnk
-  FROM scored),
-best AS (
-  SELECT q AS query, MIN(rnk) AS first_rank FROM ranked
-  WHERE label = 1 GROUP BY q)
-SELECT query, first_rank, round(1.0 / first_rank, 6) AS rr,
-       CAST(first_rank <= 1 AS INT) AS hit_1,
-       CAST(first_rank <= 3 AS INT) AS hit_3,
-       CAST(first_rank <= 10 AS INT) AS hit_10
-FROM best
 """
 
 
@@ -7437,145 +7193,6 @@ FROM s1, far
 """
 
 
-def q_eval_ece(spark, sf_dir):
-    """Calibration bins + ECE contributions (evalmetrics.
-    calibration_bins) over a deterministic Bernoulli(score) prediction
-    table (integer md5 coins — perfectly calibrated up to sampling
-    noise, so contribs are small but nonzero); the oracle replays the
-    clamped binning and the 9dp DECIMAL sums."""
-    from graph_importer_spark.operators.evalmetrics import calibration_bins
-
-    o = T(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 8000)
-
-    def u32(prefix):
-        return F.conv(
-            F.substring(
-                F.md5(
-                    F.encode(
-                        F.concat(F.lit(prefix), F.col("o_orderkey").cast("string")),
-                        "UTF-8",
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-
-    k = u32("s") % 1000001
-    preds = o.select(
-        (k / F.lit(1000000.0)).alias("score"),
-        ((u32("l") % 1000000) < k).cast("int").alias("label"),
-    )
-    return calibration_bins(preds, n_bins=10)
-
-
-def _oracle_eval_ece() -> str:
-    def poly(var):
-        return " + ".join(
-            f"CAST(strpos('0123456789abcdef', substring({var}, {j + 1}, 1)) - 1 AS BIGINT)"
-            f" * {16 ** (7 - j)}"
-            for j in range(8)
-        )
-
-    return f"""
-WITH h AS (
-  SELECT substring(md5('s' || CAST(o_orderkey AS VARCHAR)), 1, 8) AS hs,
-         substring(md5('l' || CAST(o_orderkey AS VARCHAR)), 1, 8) AS hl
-  FROM orders WHERE o_orderkey < 8000),
-k AS (
-  SELECT ({poly('hs')}) % 1000001 AS ks, ({poly('hl')}) % 1000000 AS kl
-  FROM h),
-p AS (
-  SELECT ks / 1000000.0 AS score,
-         CASE WHEN kl < ks THEN 1 ELSE 0 END AS label
-  FROM k),
-b AS (
-  SELECT LEAST(CAST(floor(score * 10) AS INT), 9) AS bin,
-         CAST(round(score, 9) AS DECIMAL(28,9)) AS s, label
-  FROM p),
-per AS (
-  SELECT bin, COUNT(*) AS n, SUM(s) AS ss, SUM(label) AS sy
-  FROM b GROUP BY bin),
-tot AS (SELECT SUM(n) AS nn FROM per)
-SELECT bin, n,
-       round(CAST(ss AS DOUBLE) / n, 6) AS avg_conf,
-       round(CAST(sy AS DOUBLE) / n, 6) AS frac_pos,
-       round(abs(CAST(sy AS DOUBLE) / n - CAST(ss AS DOUBLE) / n)
-             * n / nn, 6) AS contrib
-FROM per, tot
-"""
-
-
-def q_eval_regression(spark, sf_dir):
-    """Scalar regression eval (evalmetrics.regression_metrics) over
-    deterministically-perturbed order totals; the oracle replays the
-    9dp DECIMAL error sums and the sumsq R² identity."""
-    from graph_importer_spark.operators.evalmetrics import regression_metrics
-
-    o = T(spark, sf_dir, "orders")
-    u32 = F.conv(
-        F.substring(
-            F.md5(
-                F.encode(
-                    F.concat(F.lit("r"), F.col("o_orderkey").cast("string")),
-                    "UTF-8",
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("bigint")
-    noise = (u32 % 2001 - 1000) / F.lit(10000.0)
-    preds = o.select(
-        (F.col("o_totalprice") * (F.lit(1.0) + noise)).alias("pred"),
-        F.col("o_totalprice").alias("actual"),
-    )
-    return regression_metrics(preds)
-
-
-def _oracle_eval_regression() -> str:
-    poly = " + ".join(
-        f"CAST(strpos('0123456789abcdef', substring(h8, {j + 1}, 1)) - 1 AS BIGINT)"
-        f" * {16 ** (7 - j)}"
-        for j in range(8)
-    )
-    return f"""
-WITH h AS (
-  SELECT o_totalprice,
-         substring(md5('r' || CAST(o_orderkey AS VARCHAR)), 1, 8) AS h8
-  FROM orders),
-p AS (
-  SELECT CAST(o_totalprice AS DOUBLE)
-           * (1.0 + (({poly}) % 2001 - 1000) / 10000.0) AS pred,
-         CAST(o_totalprice AS DOUBLE) AS actual
-  FROM h),
-a AS (
-  SELECT COUNT(*) AS n,
-         SUM(CAST(round((pred - actual) * (pred - actual), 9)
-                  AS DECIMAL(38,9))) AS sse,
-         SUM(CAST(round(abs(pred - actual), 9) AS DECIMAL(38,9))) AS sae,
-         SUM(CAST(round(pred - actual, 9) AS DECIMAL(38,9))) AS sbias,
-         SUM(CAST(round(actual, 9) AS DECIMAL(38,9))) AS sa,
-         SUM(CAST(round(actual * actual, 9) AS DECIMAL(38,9))) AS saa
-  FROM p)
-SELECT n,
-       round(sqrt(CAST(sse AS DOUBLE) / n), 6) AS rmse,
-       round(CAST(sae AS DOUBLE) / n, 6) AS mae,
-       round(CAST(sbias AS DOUBLE) / n, 6) AS bias,
-       CASE WHEN CAST(saa AS DOUBLE)
-                 - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE) / n > 0
-            THEN round(1.0 - CAST(sse AS DOUBLE)
-                 / (CAST(saa AS DOUBLE)
-                    - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE) / n), 6)
-       END AS r2
-FROM a
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18g: soundex blocking, SPARQL alternation chains,
 # multi-probe LSH, content-defined chunking
@@ -8040,170 +7657,10 @@ WHERE EXISTS (SELECT 1 FROM m, sd WHERE m.id = sd.t)
 """
 
 
-def q_eval_kappa(spark, sf_dir):
-    """Cohen's kappa (evalmetrics.cohen_kappa) over two md5-coined
-    annotator columns with planted 70% agreement; exact integer
-    count ratios, rounded kappa."""
-    from graph_importer_spark.operators.evalmetrics import cohen_kappa
-
-    o = T(spark, sf_dir, "orders")
-
-    def u32(prefix):
-        return F.conv(
-            F.substring(
-                F.md5(
-                    F.encode(
-                        F.concat(
-                            F.lit(prefix), F.col("o_orderkey").cast("string")
-                        ),
-                        "UTF-8",
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-
-    la = u32("x") % 3
-    lb = F.when(u32("y") % 10 < 7, la).otherwise((la + 1) % 3)
-    preds = o.select(
-        F.concat(F.lit("L"), la.cast("string")).alias("a"),
-        F.concat(F.lit("L"), lb.cast("string")).alias("b"),
-    )
-    return cohen_kappa(preds, "a", "b")
-
-
-def _oracle_eval_kappa() -> str:
-    def poly(var):
-        return " + ".join(
-            f"CAST(strpos('0123456789abcdef', substring({var}, {j + 1}, 1)) - 1 AS BIGINT)"
-            f" * {16 ** (7 - j)}"
-            for j in range(8)
-        )
-
-    return f"""
-WITH h AS (
-  SELECT substring(md5('x' || CAST(o_orderkey AS VARCHAR)), 1, 8) AS hx,
-         substring(md5('y' || CAST(o_orderkey AS VARCHAR)), 1, 8) AS hy
-  FROM orders),
-l AS (
-  SELECT ({poly('hx')}) % 3 AS la0, ({poly('hy')}) % 10 AS coin
-  FROM h),
-p AS (
-  SELECT 'L' || CAST(la0 AS VARCHAR) AS a,
-         'L' || CAST(CASE WHEN coin < 7 THEN la0
-                          ELSE (la0 + 1) % 3 END AS VARCHAR) AS b
-  FROM l),
-pc AS (SELECT a, b, COUNT(*) AS n FROM p GROUP BY a, b),
-tot AS (
-  SELECT SUM(n) AS n,
-         SUM(CASE WHEN a = b THEN n ELSE 0 END) AS agree
-  FROM pc),
-ma AS (SELECT a AS lbl, SUM(n) AS na FROM pc GROUP BY a),
-mb AS (SELECT b AS lbl, SUM(n) AS nb FROM pc GROUP BY b),
-pe AS (
-  SELECT SUM(COALESCE(na, 0) * COALESCE(nb, 0)) AS pp
-  FROM ma FULL JOIN mb USING (lbl))
-SELECT CAST(tot.n AS BIGINT) AS n,
-       round(CAST(agree AS DOUBLE) / tot.n, 6) AS po,
-       round(CAST(pp AS DOUBLE) / (tot.n * tot.n), 6) AS pe,
-       CASE WHEN CAST(pp AS DOUBLE) / (tot.n * tot.n) < 1.0
-            THEN round((CAST(agree AS DOUBLE) / tot.n
-                        - CAST(pp AS DOUBLE) / (tot.n * tot.n))
-                       / (1.0 - CAST(pp AS DOUBLE) / (tot.n * tot.n)), 6)
-       END AS kappa
-FROM tot, pe
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18k: confusion metrics, hard-negative mining,
 # component size distribution, redirect resolution
 # ---------------------------------------------------------------------------
-
-
-def q_eval_confusion(spark, sf_dir):
-    """Per-class confusion metrics (evalmetrics.confusion_metrics)
-    over md5-coined 3-class labels with 70% agreement; exact counts,
-    NULL-not-zero undefined ratios."""
-    from graph_importer_spark.operators.evalmetrics import confusion_metrics
-
-    o = T(spark, sf_dir, "orders")
-
-    def u32(prefix):
-        return F.conv(
-            F.substring(
-                F.md5(
-                    F.encode(
-                        F.concat(
-                            F.lit(prefix), F.col("o_orderkey").cast("string")
-                        ),
-                        "UTF-8",
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-
-    la = u32("cx") % 3
-    lb = F.when(u32("cy") % 10 < 7, la).otherwise((la + 1) % 3)
-    preds = o.select(
-        F.concat(F.lit("L"), la.cast("string")).alias("label"),
-        F.concat(F.lit("L"), lb.cast("string")).alias("pred"),
-    )
-    return confusion_metrics(preds, "label", "pred")
-
-
-def _oracle_eval_confusion() -> str:
-    def poly(var):
-        return " + ".join(
-            f"CAST(strpos('0123456789abcdef', substring({var}, {j + 1}, 1)) - 1 AS BIGINT)"
-            f" * {16 ** (7 - j)}"
-            for j in range(8)
-        )
-
-    return f"""
-WITH h AS (
-  SELECT substring(md5('cx' || CAST(o_orderkey AS VARCHAR)), 1, 8) AS hx,
-         substring(md5('cy' || CAST(o_orderkey AS VARCHAR)), 1, 8) AS hy
-  FROM orders),
-l AS (SELECT ({poly('hx')}) % 3 AS la0, ({poly('hy')}) % 10 AS coin FROM h),
-p AS (
-  SELECT 'L' || CAST(la0 AS VARCHAR) AS lbl,
-         'L' || CAST(CASE WHEN coin < 7 THEN la0
-                          ELSE (la0 + 1) % 3 END AS VARCHAR) AS prd
-  FROM l),
-m AS (SELECT lbl, prd, COUNT(*) AS n FROM p GROUP BY lbl, prd),
-diag AS (SELECT lbl AS cls, n AS tp FROM m WHERE lbl = prd),
-rows_ AS (SELECT lbl AS cls, SUM(n) AS support FROM m GROUP BY lbl),
-cols_ AS (SELECT prd AS cls, SUM(n) AS predicted FROM m GROUP BY prd),
-j AS (
-  SELECT COALESCE(rows_.cls, cols_.cls) AS cls,
-         COALESCE(tp, 0) AS tp,
-         COALESCE(predicted, 0) - COALESCE(tp, 0) AS fp,
-         COALESCE(support, 0) - COALESCE(tp, 0) AS fn,
-         COALESCE(support, 0) AS support
-  FROM rows_ FULL JOIN cols_ USING (cls) LEFT JOIN diag USING (cls))
-SELECT cls, tp, CAST(fp AS BIGINT) AS fp, CAST(fn AS BIGINT) AS fn,
-       CAST(support AS BIGINT) AS support,
-       CASE WHEN tp + fp > 0
-            THEN round(CAST(tp AS DOUBLE) / (tp + fp), 6) END AS precision,
-       CASE WHEN support > 0
-            THEN round(CAST(tp AS DOUBLE) / support, 6) END AS recall,
-       CASE WHEN tp + fp > 0 AND support > 0
-             AND CAST(tp AS DOUBLE) / (tp + fp)
-                 + CAST(tp AS DOUBLE) / support > 0
-            THEN round(2 * (CAST(tp AS DOUBLE) / (tp + fp))
-                         * (CAST(tp AS DOUBLE) / support)
-                       / (CAST(tp AS DOUBLE) / (tp + fp)
-                          + CAST(tp AS DOUBLE) / support), 6) END AS f1
-FROM j
-"""
 
 
 def q_graph_cc_sizes(spark, sf_dir):
@@ -8522,78 +7979,6 @@ WHERE h1.a = h3.a2
 # Round-4 session-18o: topic labeling, deterministic augmentation,
 # conformal calibration
 # ---------------------------------------------------------------------------
-
-
-def q_eval_conformal(spark, sf_dir):
-    """Split conformal calibration (evalmetrics.conformal_threshold,
-    alpha=0.1): md5-coined nonconformity scores, even keys calibrate,
-    odd keys test; the oracle replays the rounded-score order
-    statistic and the coverage count."""
-    from graph_importer_spark.operators.evalmetrics import conformal_threshold
-
-    o = T(spark, sf_dir, "orders")
-    u32 = F.conv(
-        F.substring(
-            F.md5(
-                F.encode(
-                    F.concat(F.lit("cf"), F.col("o_orderkey").cast("string")),
-                    "UTF-8",
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("bigint")
-    scored = o.select(
-        "o_orderkey", ((u32 % 1000001) / F.lit(1000000.0)).alias("score")
-    )
-    cal = scored.filter(F.col("o_orderkey") % 2 == 0)
-    test = scored.filter(F.col("o_orderkey") % 2 == 1)
-    ct = conformal_threshold(cal, test, "score", alpha=0.1, decimals=4)
-    # int64 like the oracle's BIGINT (same pandas dtype on the driver)
-    return ct.withColumn("k", F.col("k").cast("bigint"))
-
-
-def _oracle_eval_conformal(alpha: float = 0.1) -> str:
-    poly = " + ".join(
-        f"CAST(strpos('0123456789abcdef', substring(h8, {j + 1}, 1)) - 1 AS BIGINT)"
-        f" * {16 ** (7 - j)}"
-        for j in range(8)
-    )
-    return f"""
-WITH s AS (
-  SELECT o_orderkey,
-         substring(md5('cf' || CAST(o_orderkey AS VARCHAR)), 1, 8) AS h8
-  FROM orders),
-sc AS (
-  SELECT o_orderkey,
-         round((({poly}) % 1000001) / 1000000.0, 4) AS sc
-  FROM s),
-cal AS (SELECT sc FROM sc WHERE o_orderkey % 2 = 0),
-test AS (SELECT sc FROM sc WHERE o_orderkey % 2 = 1),
-nc AS (SELECT COUNT(*) AS n_cal FROM cal),
-kk AS (
-  SELECT n_cal,
-         LEAST(CAST(ceil((n_cal + 1) * {1 - alpha}) AS BIGINT), n_cal) AS k
-  FROM nc),
-summ AS (SELECT sc, COUNT(*) AS n FROM cal GROUP BY sc),
-cum AS (
-  SELECT sc, SUM(n) OVER (ORDER BY sc
-                          ROWS UNBOUNDED PRECEDING) AS c
-  FROM summ),
-q AS (SELECT MIN(sc) AS q_hat FROM cum, kk WHERE c >= kk.k),
-t AS (
-  SELECT COUNT(*) AS n_test,
-         SUM(CASE WHEN sc <= (SELECT q_hat FROM q)
-                  THEN 1 ELSE 0 END) AS n_covered
-  FROM test)
-SELECT kk.n_cal, kk.k, q.q_hat, t.n_test,
-       CAST(t.n_covered AS BIGINT) AS n_covered,
-       round(CAST(t.n_covered AS DOUBLE) / t.n_test, 6) AS coverage
-FROM kk, q, t
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -9351,163 +8736,6 @@ FROM base, q
 # ---------------------------------------------------------------------------
 
 
-def q_eval_map(spark, sf_dir):
-    """Per-query AP@10 (evalmetrics.map_at_k) of the two BM25 runs
-    against the all-terms relevance rule — the eval_ndcg fixture
-    graded by average precision; the oracle replays the cumulative
-    precision walk over the top-k lists."""
-    from graph_importer_spark.operators import retrieval as _ret
-    from graph_importer_spark.operators.evalmetrics import map_at_k
-    from graph_importer_spark.operators.textstats import normalize_text
-
-    d = T(spark, sf_dir, "documents")
-    toks = F.split(normalize_text(F.col("text")), " ")
-    runs, truths = [], []
-    for name, terms in sorted(_RRF_RUNS.items()):
-        runs.append(
-            _ret.bm25_topk(
-                d, "doc_id", "text", list(terms), k=20, k1=1.5, b=0.75
-            ).withColumn("query", F.lit(name))
-        )
-        cond = None
-        for t in sorted(terms):
-            c = F.array_contains(toks, t)
-            cond = c if cond is None else (cond & c)
-        truths.append(
-            d.filter(cond).select(F.lit(name).alias("query"), "doc_id")
-        )
-    return map_at_k(
-        runs[0].unionByName(runs[1]),
-        truths[0].unionByName(truths[1]),
-        "query",
-        "doc_id",
-        "score",
-        k=10,
-    ).orderBy("query")
-
-
-def _oracle_eval_map(k: int = 10) -> str:
-    parts = []
-    for name, terms in sorted(_RRF_RUNS.items()):
-        conds = " AND ".join(
-            f"list_contains(string_split({_NF_SQL}, ' '), '{t}')"
-            for t in sorted(terms)
-        )
-        parts.append(f"""
-SELECT '{name}' AS query,
-  (SELECT COUNT(*) FROM documents WHERE {conds}) AS n_rel,
-  (SELECT COALESCE(SUM(rel), 0) FROM (
-     SELECT CASE WHEN doc_id IN (SELECT doc_id FROM documents
-                                 WHERE {conds}) THEN 1 ELSE 0 END AS rel,
-            ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rnk
-     FROM ({_oracle_bm25(terms, 20)})) r WHERE rnk <= {k})
-    AS n_retrieved_rel,
-  (SELECT COALESCE(SUM(CASE WHEN rel = 1 THEN cum * 1.0 / rnk
-                            ELSE 0 END), 0) FROM (
-     SELECT rel, rnk,
-            SUM(rel) OVER (ORDER BY rnk ROWS UNBOUNDED PRECEDING) AS cum
-     FROM (
-       SELECT CASE WHEN doc_id IN (SELECT doc_id FROM documents
-                                   WHERE {conds}) THEN 1 ELSE 0 END AS rel,
-              ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rnk
-       FROM ({_oracle_bm25(terms, 20)})) q WHERE rnk <= {k}) z)
-    AS sc""")
-    union = " UNION ALL ".join(parts)
-    return f"""
-WITH base AS ({union})
-SELECT query, CAST(n_rel AS BIGINT) AS n_rel,
-       CAST(n_retrieved_rel AS BIGINT) AS n_retrieved_rel,
-       CASE WHEN LEAST(n_rel, {k}) > 0
-            THEN round(sc / LEAST(n_rel, {k}), 6) END AS ap
-FROM base ORDER BY query
-"""
-
-
-def q_eval_fairness(spark, sf_dir):
-    """Group-fairness audit (evalmetrics.fairness_metrics): md5-
-    coined labels/preds with a PLANTED selection-rate disadvantage
-    for one group (its positives flip to negative predictions 40% of
-    the time), reference group g0; the oracle replays every rate and
-    ratio."""
-    from graph_importer_spark.operators.evalmetrics import fairness_metrics
-
-    o = T(spark, sf_dir, "orders")
-
-    def u32(prefix):
-        return F.conv(
-            F.substring(
-                F.md5(
-                    F.encode(
-                        F.concat(
-                            F.lit(prefix), F.col("o_orderkey").cast("string")
-                        ),
-                        "UTF-8",
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-
-    grp = F.concat(F.lit("g"), (u32("fg") % 3).cast("string"))
-    y = (u32("fy") % 2).cast("int")
-    fair_pred = F.when(u32("fp") % 10 < 8, y).otherwise(1 - y)
-    biased = (grp == "g2") & (y == 1) & (u32("fb") % 10 < 4)
-    pred = F.when(biased, F.lit(0)).otherwise(fair_pred)
-    d = o.select(grp.alias("grp"), y.alias("label"), pred.alias("pred"))
-    return fairness_metrics(d, "grp", "label", "pred", "g0")
-
-
-def _oracle_eval_fairness() -> str:
-    def poly(var):
-        return " + ".join(
-            f"CAST(strpos('0123456789abcdef', substring({var}, {j + 1}, 1)) - 1 AS BIGINT)"
-            f" * {16 ** (7 - j)}"
-            for j in range(8)
-        )
-
-    return f"""
-WITH h AS (
-  SELECT substring(md5('fg' || CAST(o_orderkey AS VARCHAR)), 1, 8) AS hg,
-         substring(md5('fy' || CAST(o_orderkey AS VARCHAR)), 1, 8) AS hy,
-         substring(md5('fp' || CAST(o_orderkey AS VARCHAR)), 1, 8) AS hp,
-         substring(md5('fb' || CAST(o_orderkey AS VARCHAR)), 1, 8) AS hb
-  FROM orders),
-l AS (
-  SELECT 'g' || CAST(({poly('hg')}) % 3 AS VARCHAR) AS grp,
-         CAST(({poly('hy')}) % 2 AS INT) AS y,
-         ({poly('hp')}) % 10 AS cp, ({poly('hb')}) % 10 AS cb
-  FROM h),
-p AS (
-  SELECT grp, y,
-         CASE WHEN grp = 'g2' AND y = 1 AND cb < 4 THEN 0
-              WHEN cp < 8 THEN y ELSE 1 - y END AS pred
-  FROM l),
-per AS (
-  SELECT grp, COUNT(*) AS n, SUM(pred) AS np,
-         SUM(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS pos,
-         SUM(CASE WHEN y = 1 AND pred = 1 THEN 1 ELSE 0 END) AS tp,
-         SUM(CASE WHEN y = 0 AND pred = 1 THEN 1 ELSE 0 END) AS fp
-  FROM p GROUP BY grp),
-ref AS (
-  SELECT CAST(np AS DOUBLE) / n AS rsel,
-         CAST(tp AS DOUBLE) / pos AS rtpr
-  FROM per WHERE grp = 'g0')
-SELECT grp, n,
-       round(CAST(np AS DOUBLE) / n, 6) AS sel_rate,
-       CASE WHEN pos > 0
-            THEN round(CAST(tp AS DOUBLE) / pos, 6) END AS tpr,
-       CASE WHEN n - pos > 0
-            THEN round(CAST(fp AS DOUBLE) / (n - pos), 6) END AS fpr,
-       CASE WHEN rsel > 0
-            THEN round((CAST(np AS DOUBLE) / n) / rsel, 6) END AS di_ratio,
-       round(CAST(tp AS DOUBLE) / pos - rtpr, 6) AS eo_gap
-FROM per, ref
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18bb: Katz centrality, bag-of-words dedup
 # ---------------------------------------------------------------------------
@@ -9925,187 +9153,9 @@ FROM m
 """
 
 
-def q_eval_ips(spark, sf_dir):
-    """Off-policy IPS/SNIPS evaluation (evalmetrics.ips_policy_value):
-    md5-logged arms under known propensities, md5 rewards biased
-    toward arm 1, target policy = always arm 1; the oracle replays
-    the clipped weights and the 9dp DECIMAL sums."""
-    from graph_importer_spark.operators.evalmetrics import ips_policy_value
-
-    o = T(spark, sf_dir, "orders")
-
-    def u32(prefix):
-        return F.conv(
-            F.substring(
-                F.md5(
-                    F.encode(
-                        F.concat(
-                            F.lit(prefix), F.col("o_orderkey").cast("string")
-                        ),
-                        "UTF-8",
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-
-    u = u32("arm") % 10
-    arm = (
-        F.when(u < 5, F.lit(0)).when(u < 8, F.lit(1)).otherwise(F.lit(2))
-    )
-    prob = (
-        F.when(arm == 0, F.lit(0.5))
-        .when(arm == 1, F.lit(0.3))
-        .otherwise(F.lit(0.2))
-    )
-    # reward Bernoulli, higher for arm 1 (the policy being evaluated)
-    r_coin = u32("rew") % 100
-    reward = F.when(
-        (arm == 1) & (r_coin < 60), F.lit(1.0)
-    ).when((arm != 1) & (r_coin < 30), F.lit(1.0)).otherwise(F.lit(0.0))
-    logs = o.select(
-        arm.alias("arm"),
-        prob.alias("prob"),
-        reward.alias("reward"),
-        F.lit(1).alias("target_arm"),
-    )
-    return ips_policy_value(logs, "arm", "reward", "prob", "target_arm")
-
-
-def _oracle_eval_ips(clip: float = 10.0) -> str:
-    def poly(var):
-        return " + ".join(
-            f"CAST(strpos('0123456789abcdef', substring({var}, {j + 1}, 1)) - 1 AS BIGINT)"
-            f" * {16 ** (7 - j)}"
-            for j in range(8)
-        )
-
-    return f"""
-WITH h AS (
-  SELECT substring(md5('arm' || CAST(o_orderkey AS VARCHAR)), 1, 8) AS ha,
-         substring(md5('rew' || CAST(o_orderkey AS VARCHAR)), 1, 8) AS hr
-  FROM orders),
-l AS (
-  SELECT ({poly('ha')}) % 10 AS u, ({poly('hr')}) % 100 AS rc FROM h),
-p AS (
-  SELECT CASE WHEN u < 5 THEN 0 WHEN u < 8 THEN 1 ELSE 2 END AS arm,
-         rc
-  FROM l),
-q AS (
-  SELECT arm,
-         CASE arm WHEN 0 THEN 0.5 WHEN 1 THEN 0.3 ELSE 0.2 END AS prob,
-         CASE WHEN arm = 1 AND rc < 60 THEN 1.0
-              WHEN arm <> 1 AND rc < 30 THEN 1.0 ELSE 0.0 END AS reward
-  FROM p),
-w AS (
-  SELECT *,
-         LEAST(CASE WHEN arm = 1 THEN 1.0 / prob ELSE 0.0 END, {clip})
-           AS wt
-  FROM q),
-a AS (
-  SELECT COUNT(*) AS n,
-         SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS n_matched,
-         SUM(CAST(round(wt * reward, 9) AS DECIMAL(38,9))) AS swr,
-         SUM(CAST(round(wt, 9) AS DECIMAL(38,9))) AS sw,
-         SUM(CAST(round(reward, 9) AS DECIMAL(38,9))) AS sr
-  FROM w)
-SELECT n, CAST(n_matched AS BIGINT) AS n_matched,
-       round(CAST(swr AS DOUBLE) / n, 6) AS ips,
-       CASE WHEN CAST(sw AS DOUBLE) > 0
-            THEN round(CAST(swr AS DOUBLE) / CAST(sw AS DOUBLE), 6) END
-         AS snips,
-       round(CAST(sr AS DOUBLE) / n, 6) AS avg_logged_reward
-FROM a
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18ii: ROUGE-N overlap metric
 # ---------------------------------------------------------------------------
-
-
-def q_eval_rouge(spark, sf_dir):
-    """ROUGE-2 (evalmetrics.rouge_n) between each document's first-
-    and last-30-token windows (a deterministic candidate/reference
-    stand-in exercising clipped multiset matching); the oracle
-    replays the bigram census and the clipped intersection."""
-    from graph_importer_spark.operators.evalmetrics import rouge_n
-    from graph_importer_spark.operators.textstats import normalize_text
-
-    d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    toks = F.filter(
-        F.split(normalize_text(F.col("text")), " "), lambda t: t != ""
-    )
-    pairs = d.select(
-        "doc_id",
-        F.array_join(F.slice(toks, 1, 30), " ").alias("cand"),
-        F.array_join(
-            F.when(
-                F.size(toks) > 30,
-                F.slice(toks, -30, 30),
-            ).otherwise(toks),
-            " ",
-        ).alias("ref"),
-    )
-    r = rouge_n(pairs, "doc_id", "cand", "ref", n=2)
-    # int64 like the oracle's BIGINT (same pandas dtype on the driver)
-    return r.withColumn(
-        "n_cand_grams", F.col("n_cand_grams").cast("bigint")
-    ).withColumn("n_ref_grams", F.col("n_ref_grams").cast("bigint"))
-
-
-ORACLE_EVAL_ROUGE = rf"""
-WITH d AS (
-  SELECT doc_id AS id,
-         list_filter(string_split({_NF_SQL}, ' '), x -> x <> '') AS t
-  FROM documents WHERE doc_id < 200),
-p AS (
-  SELECT id, list_slice(t, 1, LEAST(30, len(t))) AS ct,
-         CASE WHEN len(t) > 30
-              THEN list_slice(t, len(t) - 29, len(t)) ELSE t END AS rt
-  FROM d),
-cg AS (
-  SELECT id, array_to_string(list_slice(ct, i, i + 1), ' ') AS g,
-         COUNT(*) AS nc
-  FROM p, UNNEST(generate_series(1, len(ct) - 1)) u(i)
-  WHERE len(ct) >= 2 GROUP BY id, g),
-rg AS (
-  SELECT id, array_to_string(list_slice(rt, i, i + 1), ' ') AS g,
-         COUNT(*) AS nr
-  FROM p, UNNEST(generate_series(1, len(rt) - 1)) u(i)
-  WHERE len(rt) >= 2 GROUP BY id, g),
-m AS (
-  SELECT cg.id, SUM(LEAST(nc, nr)) AS n_match
-  FROM cg JOIN rg ON rg.id = cg.id AND rg.g = cg.g GROUP BY cg.id),
-sz AS (
-  SELECT id,
-         CASE WHEN len(ct) >= 2 THEN len(ct) - 1 ELSE 0 END AS n_cand,
-         CASE WHEN len(rt) >= 2 THEN len(rt) - 1 ELSE 0 END AS n_ref
-  FROM p),
-j AS (
-  SELECT sz.id, n_ref AS n_ref_grams, n_cand AS n_cand_grams,
-         COALESCE(m.n_match, 0) AS n_match
-  FROM sz LEFT JOIN m ON m.id = sz.id)
-SELECT id, n_ref_grams, n_cand_grams, CAST(n_match AS BIGINT) AS n_match,
-       CASE WHEN n_ref_grams > 0
-            THEN round(CAST(n_match AS DOUBLE) / n_ref_grams, 6) END
-         AS rouge_recall,
-       CASE WHEN n_cand_grams > 0
-            THEN round(CAST(n_match AS DOUBLE) / n_cand_grams, 6) END
-         AS rouge_precision,
-       CASE WHEN n_ref_grams > 0 AND n_cand_grams > 0
-             AND CAST(n_match AS DOUBLE) / n_ref_grams
-                 + CAST(n_match AS DOUBLE) / n_cand_grams > 0
-            THEN round(2 * (CAST(n_match AS DOUBLE) / n_ref_grams)
-                         * (CAST(n_match AS DOUBLE) / n_cand_grams)
-                       / (CAST(n_match AS DOUBLE) / n_ref_grams
-                          + CAST(n_match AS DOUBLE) / n_cand_grams), 6)
-       END AS rouge_f1
-FROM j
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -10301,7 +9351,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # rows rotate out; all out-of-window rows are re-verified locally
     # via the full scripts/check_contract.py sweep.
     "web_boilerplate": q_web_boilerplate,
-    "eval_mrr": q_eval_mrr,
     "graph_butterfly": q_graph_butterfly,
     "graph_wl": q_graph_wl,
     "er_block_metrics": q_er_block_metrics,
@@ -10369,8 +9418,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "orders_rules": q_orders_rules,
     "er_fs_em": q_er_fs_em,
     "graph_diameter": q_graph_diameter,
-    "eval_ece": q_eval_ece,
-    "eval_regression": q_eval_regression,
     # round-4 session-18g additions: soundex blocking, predicate
     # alternation chains, multi-probe LSH, content-defined chunking.
     "er_soundex": q_er_soundex,
@@ -10387,10 +9434,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # graph, shortest-path trace, Cohen's kappa.
     "graph_quotient": q_graph_quotient,
     "graph_shortest_path": q_graph_shortest_path,
-    "eval_kappa": q_eval_kappa,
     # round-4 session-18k additions: confusion metrics, hard-negative
     # mining, component sizes, redirect resolution.
-    "eval_confusion": q_eval_confusion,
     "graph_cc_sizes": q_graph_cc_sizes,
     "kg_redirects": q_kg_redirects,
     # round-4 session-18l additions: measured dedup P/R, co-citation/
@@ -10404,7 +9449,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_motif_cycle": q_kg_motif_cycle,
     # round-4 session-18o additions: topic labeling, deterministic
     # augmentation, conformal calibration.
-    "eval_conformal": q_eval_conformal,
     # round-4 session-18p additions: seasonality, time-to-convert,
     # robust MAD stats.
     # round-4 session-18q additions: Benford audit, Kaplan-Meier,
@@ -10440,8 +9484,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_temporal": q_kg_temporal,
     "orders_bootstrap": q_orders_bootstrap,
     # round-4 session-18aa additions: MAP@k, fairness audit.
-    "eval_map": q_eval_map,
-    "eval_fairness": q_eval_fairness,
     # round-4 session-18bb additions: Katz centrality, BoW dedup.
     "graph_katz": q_graph_katz,
     # round-4 session-18cc additions: range typing, daily ACF.
@@ -10458,9 +9500,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "graph_conductance": q_graph_conductance,
     # round-4 session-18hh additions: centroid drift, IPS eval.
     "emb_drift": q_emb_drift,
-    "eval_ips": q_eval_ips,
     # round-4 session-18ii addition: ROUGE-N.
-    "eval_rouge": q_eval_rouge,
     # round-4 session-18jj additions: centralization, traffic HHI.
     "graph_centralization": q_graph_centralization,
     # round-4 session-2 additions: CMS heavy hitters, SCD2 history,
@@ -10515,8 +9555,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_nquads": q_kg_nquads,
     "er_fellegi_sunter": q_er_fellegi_sunter,
     "shard_rendezvous": q_shard_rendezvous,
-    "eval_auc": q_eval_auc,
-    "eval_pr_at_k": q_eval_pr_at_k,
     "graph_ktruss": q_graph_ktruss,
     # round-4 session-3 additions: BM25 retrieval, grouped
     # train/holdout split, snapshot diff.  New entries take window
@@ -10602,7 +9640,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     #   run/truth construction verbatim with the in-window
     #   eval_pr_at_k (same BM25 runs, same all-terms relevance rule);
     #   the DCG math is pytest-covered and full-sweep green locally
-    "eval_ndcg": q_eval_ndcg,
     # - events_transitions (new r4) waits for the r5 window: its
     #   (user_id, ts, event_id) window ordering is in-window via
     #   events_rolling; the lag/count math is pytest-covered and
@@ -10747,8 +9784,6 @@ ORACLES: dict[str, str] = {
     "orders_rules": ORACLE_ORDERS_RULES,
     "er_fs_em": _oracle_er_fs_em(),
     "graph_diameter": ORACLE_GRAPH_DIAMETER,
-    "eval_ece": _oracle_eval_ece(),
-    "eval_regression": _oracle_eval_regression(),
     "er_soundex": _oracle_er_soundex(),
     "kg_path_alt": ORACLE_KG_PATH_ALT,
     "sim_ann_multiprobe": _oracle_sim_ann_multiprobe(),
@@ -10757,15 +9792,12 @@ ORACLES: dict[str, str] = {
     "orders_ltv": ORACLE_ORDERS_LTV,
     "graph_quotient": ORACLE_GRAPH_QUOTIENT,
     "graph_shortest_path": ORACLE_GRAPH_SHORTEST_PATH,
-    "eval_kappa": _oracle_eval_kappa(),
-    "eval_confusion": _oracle_eval_confusion(),
     "graph_cc_sizes": ORACLE_GRAPH_CC_SIZES,
     "kg_redirects": ORACLE_KG_REDIRECTS,
     "graph_cocitation": ORACLE_GRAPH_COCITATION,
     "graph_matching": _oracle_graph_matching(),
     "orders_checks": ORACLE_ORDERS_CHECKS,
     "kg_motif_cycle": ORACLE_KG_MOTIF_CYCLE,
-    "eval_conformal": _oracle_eval_conformal(),
     "kg_benford": _oracle_kg_benford(),
     "orders_pareto": _oracle_orders_pareto(),
     "orders_ols": ORACLE_ORDERS_OLS,
@@ -10781,8 +9813,6 @@ ORACLES: dict[str, str] = {
     "mm_frame_energy": ORACLE_MM_FRAME_ENERGY,
     "kg_temporal": ORACLE_KG_TEMPORAL,
     "orders_bootstrap": _oracle_orders_bootstrap(),
-    "eval_map": _oracle_eval_map(),
-    "eval_fairness": _oracle_eval_fairness(),
     "graph_katz": _oracle_graph_katz(),
     "kg_range_types": ORACLE_KG_RANGE_TYPES,
     "orders_corr": _oracle_orders_corr(),
@@ -10790,8 +9820,6 @@ ORACLES: dict[str, str] = {
     "sketch_kmv": _oracle_sketch_kmv(),
     "graph_conductance": ORACLE_GRAPH_CONDUCTANCE,
     "emb_drift": ORACLE_EMB_DRIFT,
-    "eval_ips": _oracle_eval_ips(),
-    "eval_rouge": ORACLE_EVAL_ROUGE,
     "graph_centralization": ORACLE_GRAPH_CENTRALIZATION,
     "kg_numeric_outliers": ORACLE_KG_NUMERIC_OUTLIERS,
     "kg_snapshot_diff": ORACLE_KG_SNAPSHOT_DIFF,
@@ -10808,7 +9836,6 @@ ORACLES: dict[str, str] = {
     "kg_webtables": ORACLE_KG_WEBTABLES,
     "graph_ks": ORACLE_GRAPH_KS,
     "web_boilerplate": ORACLE_WEB_BOILERPLATE,
-    "eval_mrr": ORACLE_EVAL_MRR,
     "graph_butterfly": ORACLE_GRAPH_BUTTERFLY,
     "graph_wl": ORACLE_GRAPH_WL,
     "er_block_metrics": ORACLE_ER_BLOCK_METRICS,
@@ -10891,10 +9918,7 @@ ORACLES: dict[str, str] = {
     "web_meta": ORACLE_WEB_META,
     "graph_clustering": ORACLE_GRAPH_CLUSTERING,
     "graph_ppr": _oracle_graph_ppr(),
-    "eval_auc": ORACLE_EVAL_AUC,
-    "eval_pr_at_k": _oracle_eval_pr_at_k(),
     "graph_ktruss": _oracle_ktruss(),
-    "eval_ndcg": _oracle_eval_ndcg(),
     "graph_assortativity": ORACLE_GRAPH_ASSORTATIVITY,
     "kg_predicate_stats": ORACLE_KG_PREDICATE_STATS,
     "kg_nquads": _oracle_kg_nquads(),
