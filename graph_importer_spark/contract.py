@@ -45,7 +45,6 @@ from graph_importer_spark.operators import generators as _gen
 from graph_importer_spark.operators import similarity as _sim
 from graph_importer_spark.operators import skew as _skew
 from graph_importer_spark.operators import textstats as _ts
-from graph_importer_spark.operators import urls as _urls
 from graph_importer_spark.operators.analytics import (
     effective_closeness,
     modularity,
@@ -1381,149 +1380,6 @@ SELECT src, dst FROM intra UNION ALL SELECT src, dst FROM inter
 # ---------------------------------------------------------------------------
 
 
-def q_web_hosts(spark, sf_dir):
-    """URL canonicalization + registered-domain rollup: synthesize a
-    messy URL per doc (mixed case, userinfo-free, default port,
-    tracking params, fragment), normalize, then count pages and
-    distinct canonical URLs per registered domain."""
-    d = T(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    s = lambda c: c.cast("string")  # noqa: E731
-    url = F.concat(
-        F.lit("HTTPS://WWW.Site"), s(i % 41),
-        F.when(i % 4 == 0, F.lit(".co.uk")).otherwise(F.lit(".com")),
-        F.lit(":443/p/"), s(i % 10),
-        F.lit("?id="), s(i % 5),
-        F.lit("&utm_source=x&fbclid="), s(i), F.lit("#sec"),
-    )
-    canon = d.select(_urls.normalize_url(url).alias("curl"))
-    return (
-        canon.withColumn(
-            "domain", _urls.registered_domain(_urls.host_of(F.col("curl")))
-        )
-        .groupBy("domain")
-        .agg(
-            F.count("*").alias("n_pages"),
-            F.countDistinct("curl").alias("n_urls"),
-        )
-    )
-
-
-_WEB_URL_SQL = (
-    "'HTTPS://WWW.Site' || CAST(doc_id % 41 AS VARCHAR)"
-    " || CASE WHEN doc_id % 4 = 0 THEN '.co.uk' ELSE '.com' END"
-    " || ':443/p/' || CAST(doc_id % 10 AS VARCHAR)"
-    " || '?id=' || CAST(doc_id % 5 AS VARCHAR)"
-    " || '&utm_source=x&fbclid=' || CAST(doc_id AS VARCHAR) || '#sec'"
-)
-
-ORACLE_WEB_HOSTS = rf"""
-WITH u0 AS (SELECT {_WEB_URL_SQL} AS u FROM documents),
-s0 AS (SELECT regexp_replace(u, '^([A-Za-z][A-Za-z0-9+.-]*://)[^/?#@]*@', '\1', 'g') AS u FROM u0),
-s1 AS (SELECT regexp_replace(u, '#.*', '', 'g') AS u FROM s0),
-s2 AS (SELECT regexp_replace(u,
-        '([?&])(utm_[A-Za-z0-9_]+|fbclid|gclid|msclkid|mc_eid)=[^&]*', '\1', 'g') AS u FROM s1),
-s3 AS (SELECT regexp_replace(regexp_replace(regexp_replace(u,
-        '\?[?&]+', '?', 'g'), '&&+', '&', 'g'), '[?&]+$', '', 'g') AS u FROM s2),
-s4 AS (SELECT lower(regexp_extract(u, '^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)', 1))
-        || regexp_replace(u, '^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)', '', 'g') AS curl FROM s3),
-s5 AS (SELECT regexp_replace(regexp_replace(curl,
-        '^(http://[^/?#]*):80([/?]|$)', '\1\2', 'g'),
-        '^(https://[^/?#]*):443([/?]|$)', '\1\2', 'g') AS curl FROM s4),
-h AS (
-  SELECT curl,
-    regexp_replace(regexp_replace(regexp_replace(lower(
-      regexp_extract(curl, '^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)', 1)),
-      '^[a-z][a-z0-9+.-]*://', '', 'g'), '^[^@]*@', '', 'g'),
-      ':[0-9]+$', '', 'g') AS host
-  FROM s5),
-d AS (
-  SELECT curl,
-    CASE WHEN regexp_extract(host,
-           '([^.]+\.(co\.uk|com\.au|co\.jp|com\.br|co\.in|co\.nz|org\.uk|ac\.uk))$', 1) <> ''
-         THEN regexp_extract(host,
-           '([^.]+\.(co\.uk|com\.au|co\.jp|com\.br|co\.in|co\.nz|org\.uk|ac\.uk))$', 1)
-         WHEN regexp_extract(host, '([^.]+\.[^.]+)$', 1) <> ''
-         THEN regexp_extract(host, '([^.]+\.[^.]+)$', 1)
-         ELSE host END AS domain
-  FROM h)
-SELECT domain, COUNT(*) AS n_pages, COUNT(DISTINCT curl) AS n_urls
-FROM d GROUP BY domain
-"""
-
-
-_PSL_SUBSET = [
-    "com", "uk", "co.uk", "sg", "com.sg", "br", "gov.br", "us", "k12.ma.us",
-]
-
-
-def q_web_hosts_psl(spark, sf_dir):
-    """Registered-domain rollup via a broadcast public-suffix TABLE
-    (urls.registered_domain_psl) — the full-PSL path the regex subset
-    documents as its cut.  The synthesized hosts cycle through
-    multi-label suffixes OUTSIDE the inlined regex subset ('com.sg',
-    'gov.br', the 3-label 'k12.ma.us') plus an unlisted TLD
-    ('internal') that must take the implicit-'*' fallback."""
-    d = T(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    s = lambda c: c.cast("string")  # noqa: E731
-    suffix = (
-        F.when(i % 5 == 0, F.lit(".com"))
-        .when(i % 5 == 1, F.lit(".co.uk"))
-        .when(i % 5 == 2, F.lit(".com.sg"))
-        .when(i % 5 == 3, F.lit(".gov.br"))
-        .otherwise(F.lit(".sub.k12.ma.us"))
-    )
-    tld_fallback = F.when(i % 7 == 0, F.lit("edge.internal"))
-    host = F.coalesce(
-        tld_fallback, F.concat(F.lit("www.site"), s(i % 23), suffix)
-    )
-    hosts = d.select(F.col("doc_id"), host.alias("host"))
-    psl = spark.createDataFrame([(x,) for x in _PSL_SUBSET], "suffix string")
-    out = _urls.registered_domain_psl(hosts, "host", psl)
-    return out.groupBy("registered_domain").agg(
-        F.count("*").alias("n_pages"),
-        F.countDistinct("host").alias("n_hosts"),
-    )
-
-
-_PSL_HOST_SQL = (
-    "CASE WHEN doc_id % 7 = 0 THEN 'edge.internal' ELSE"
-    " 'www.site' || CAST(doc_id % 23 AS VARCHAR) ||"
-    " CASE doc_id % 5 WHEN 0 THEN '.com' WHEN 1 THEN '.co.uk'"
-    " WHEN 2 THEN '.com.sg' WHEN 3 THEN '.gov.br'"
-    " ELSE '.sub.k12.ma.us' END END"
-)
-
-ORACLE_WEB_HOSTS_PSL = rf"""
-WITH rows0 AS (SELECT doc_id, {_PSL_HOST_SQL} AS host FROM documents),
-psl(suffix) AS (
-  SELECT * FROM (VALUES {", ".join(f"('{s}')" for s in _PSL_SUBSET)})),
-hosts AS (SELECT DISTINCT host FROM rows0),
-lab AS (SELECT host, string_split(host, '.') AS l FROM hosts),
-cand AS (
-  SELECT host, array_to_string(l[i:], '.') AS c
-  FROM lab, UNNEST(generate_series(2, len(l))) AS u(i)),
-hit AS (
-  SELECT host, max_by(c, length(c)) AS suffix
-  FROM cand JOIN psl ON c = psl.suffix GROUP BY host),
-reg AS (
-  SELECT h.host,
-    CASE WHEN hit.suffix IS NOT NULL THEN
-      array_to_string(
-        (string_split(h.host, '.'))[
-          len(string_split(h.host, '.')) - len(string_split(hit.suffix, '.')):],
-        '.')
-    WHEN regexp_extract(h.host, '([^.]+\.[^.]+)$', 1) <> ''
-    THEN regexp_extract(h.host, '([^.]+\.[^.]+)$', 1)
-    ELSE h.host END AS registered_domain
-  FROM hosts h LEFT JOIN hit ON h.host = hit.host)
-SELECT registered_domain, COUNT(*) AS n_pages, COUNT(DISTINCT rows0.host) AS n_hosts
-FROM rows0 JOIN reg ON rows0.host = reg.host
-GROUP BY registered_domain
-"""
-
-
 # -- similarity -------------------------------------------------------------
 
 _DOT = (
@@ -2088,63 +1944,6 @@ FROM rates r LEFT JOIN kept k USING (domain)
 """
 
 
-def q_web_blocklist(spark, sf_dir):
-    """UT1-style domain blocklist filter over the synthetic messy URLs
-    (same URL recipe as web_hosts): registered-domain match against a
-    broadcast (domain, category) list."""
-    d = T(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    s = lambda c: c.cast("string")  # noqa: E731
-    url = F.concat(
-        F.lit("HTTPS://WWW.Site"), s(i % 41),
-        F.when(i % 4 == 0, F.lit(".co.uk")).otherwise(F.lit(".com")),
-        F.lit(":443/p/"), s(i % 10),
-        F.lit("?id="), s(i % 5),
-        F.lit("&utm_source=x&fbclid="), s(i), F.lit("#sec"),
-    )
-    bl = spark.createDataFrame(
-        [
-            ("site3.com", "ads"),
-            ("site7.com", "adult"),
-            ("site0.co.uk", "malware"),
-            ("site12.co.uk", "ads"),
-        ],
-        "domain string, category string",
-    )
-    pages = d.select("doc_id", url.alias("url"))
-    out = _urls.blocklist_filter(pages, "url", bl)
-    return out.select("doc_id", "domain", "blocked", "block_category")
-
-
-ORACLE_WEB_BLOCKLIST = rf"""
-WITH u0 AS (SELECT doc_id, {_WEB_URL_SQL} AS u FROM documents),
-h AS (
-  SELECT doc_id,
-    lower(regexp_replace(regexp_replace(regexp_replace(
-      regexp_extract(u, '^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)', 1),
-      '^[A-Za-z][A-Za-z0-9+.-]*://', '', 'g'), '^[^@]*@', '', 'g'),
-      ':[0-9]+$', '', 'g')) AS host
-  FROM u0),
-d AS (
-  SELECT doc_id,
-    CASE WHEN regexp_extract(host,
-           '([^.]+\.(co\.uk|com\.au|co\.jp|com\.br|co\.in|co\.nz|org\.uk|ac\.uk))$', 1) <> ''
-         THEN regexp_extract(host,
-           '([^.]+\.(co\.uk|com\.au|co\.jp|com\.br|co\.in|co\.nz|org\.uk|ac\.uk))$', 1)
-         WHEN regexp_extract(host, '([^.]+\.[^.]+)$', 1) <> ''
-         THEN regexp_extract(host, '([^.]+\.[^.]+)$', 1)
-         ELSE host END AS domain
-  FROM h),
-bl(domain, category) AS (VALUES
-  ('site3.com', 'ads'), ('site7.com', 'adult'),
-  ('site0.co.uk', 'malware'), ('site12.co.uk', 'ads'))
-SELECT d.doc_id, d.domain,
-       bl.category IS NOT NULL AS blocked,
-       bl.category AS block_category
-FROM d LEFT JOIN bl USING (domain)
-"""
-
-
 def q_pack_sequences(spark, sf_dir):
     """Next-fit sequence packing into 256-token windows across 16 hash
     shards (the applyInPandas stateful surface; the oracle replays the
@@ -2363,81 +2162,6 @@ SELECT file_id, COUNT(*) AS n_rows,
        MIN(o_custkey) AS cust_min, MAX(o_custkey) AS cust_max,
        MIN(od) AS od_min, MAX(od) AS od_max
 FROM f GROUP BY file_id
-"""
-
-
-def q_web_link_graph(spark, sf_dir):
-    """Hyperlink extraction -> host graph: plant deterministic anchors
-    (two absolute cross-site links in a 37-host universe, plus relative
-    and mailto hrefs the extractor must DROP) in each document's html,
-    parse them back out with regexp codegen, and aggregate the
-    (src_host, dst_host) edge list.  The oracle builds the identical
-    html in SQL and replays the parse + host extraction + rollup."""
-    d = T(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    s = lambda c: c.cast("string")  # noqa: E731
-    a1 = F.concat(
-        F.lit('<a href="https://site'), s((i * 7 + 13) % 37),
-        F.lit(".example/p/"), s(i % 97), F.lit('"></a>'),
-    )
-    a2 = F.when(
-        i % 2 == 0,
-        F.concat(
-            F.lit('<a href="https://site'), s((i * 11 + 5) % 37),
-            F.lit(".example/q/"), s(i % 89), F.lit('"></a>'),
-        ),
-    ).otherwise(F.lit('<a href="/rel/path"></a>'))
-    html = F.concat(
-        F.lit("<html><body><script>var x=1;</script>"),
-        a1,
-        a2,
-        F.lit('<a href="mailto:x@example.com"></a><p>'),
-        F.col("text"),
-        F.lit("</p></body></html>"),
-    )
-    pages = d.select(
-        F.concat(
-            F.lit("https://src"), s(i % 20), F.lit(".example/d/"), s(i)
-        ).alias("url"),
-        html.cast("binary").alias("html"),
-    )
-    links = _urls.extract_links(pages, "html", "url")
-    return _urls.host_link_graph(links)
-
-
-_LG_HOST_SQL = (
-    "regexp_replace(regexp_replace(regexp_replace(lower("
-    "regexp_extract({u}, '^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)', 1)),"
-    " '^[a-z][a-z0-9+.-]*://', '', 'g'), '^[^@]*@', '', 'g'),"
-    " ':[0-9]+$', '', 'g')"
-)
-
-ORACLE_WEB_LINK_GRAPH = f"""
-WITH h AS (
-  SELECT
-    'https://src' || CAST(doc_id % 20 AS VARCHAR) || '.example/d/'
-      || CAST(doc_id AS VARCHAR) AS url,
-    '<html><body><script>var x=1;</script>'
-    || '<a href="https://site' || CAST((doc_id * 7 + 13) % 37 AS VARCHAR)
-      || '.example/p/' || CAST(doc_id % 97 AS VARCHAR) || '"></a>'
-    || CASE WHEN doc_id % 2 = 0 THEN
-         '<a href="https://site' || CAST((doc_id * 11 + 5) % 37 AS VARCHAR)
-           || '.example/q/' || CAST(doc_id % 89 AS VARCHAR) || '"></a>'
-       ELSE '<a href="/rel/path"></a>' END
-    || '<a href="mailto:x@example.com"></a><p>' || text || '</p></body></html>'
-      AS html
-  FROM documents),
-l AS (
-  SELECT url, unnest(regexp_extract_all(html, 'href="([^"]*)"', 1)) AS link
-  FROM h),
-a AS (SELECT url, link FROM l WHERE regexp_matches(link, '^https?://')),
-e AS (
-  SELECT {_LG_HOST_SQL.format(u='url')} AS src_host,
-         {_LG_HOST_SQL.format(u='link')} AS dst_host
-  FROM a)
-SELECT src_host, dst_host, COUNT(*) AS n_links
-FROM e WHERE src_host <> dst_host
-GROUP BY src_host, dst_host
 """
 
 
@@ -2680,50 +2404,6 @@ lab AS (
          ELSE '' END AS cols
   FROM j)
 SELECT status, cols, COUNT(*) AS n FROM lab GROUP BY status, cols
-"""
-
-
-def _u32_coin_sql(key_sql: str, seed: int = 42) -> str:
-    """DuckDB replay of sampling.string_unit: uint32 of the first 8
-    md5 hex chars (no conv() in DuckDB -> positional polynomial, the
-    simhash-oracle idiom) over 2^32.  Exact: the numerator is an
-    integer < 2^32 and the divisor a power of two, so both engines
-    produce the identical double."""
-    poly = " + ".join(
-        f"CAST(strpos('0123456789abcdef', substring(h8, {j + 1}, 1)) - 1 AS BIGINT)"
-        f" * {16 ** (7 - j)}"
-        for j in range(8)
-    )
-    return (
-        f"(SELECT CAST(({poly}) AS DOUBLE) / 4294967296.0 FROM "
-        f"(SELECT substring(md5({key_sql} || '|{seed}'), 1, 8) AS h8))"
-    )
-
-
-def q_web_domain_quota(spark, sf_dir):
-    """C4-style per-domain cap: keep at most 10 documents per source,
-    membership a pure function of (doc_id, seed), selection routed
-    through the two-phase salted top-k (no per-domain window sort).
-    Returns (source, doc_id, coin) — coin is an exact dyadic rational
-    (uint32 / 2^32), identical IEEE doubles on both engines."""
-    from graph_importer_spark.operators import sampling as _samp
-
-    d = T(spark, sf_dir, "documents")
-    kept = _samp.domain_quota_sample(d, "source", "doc_id", quota=10, seed=42)
-    return kept.select("source", "doc_id", F.col("_coin").alias("coin"))
-
-
-def _oracle_web_domain_quota(seed: int = 42) -> str:
-    coin = _u32_coin_sql("CAST(doc_id AS VARCHAR)", seed)
-    return f"""
-WITH u AS (
-  SELECT source, doc_id, {coin} AS coin FROM documents),
-r AS (
-  SELECT source, doc_id, coin,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY coin DESC, doc_id) AS rn
-  FROM u)
-SELECT source, doc_id, coin FROM r WHERE rn <= 10
 """
 
 
@@ -3199,140 +2879,6 @@ def q_stream_fuzzy_dedup(spark, sf_dir):
     )
     q.awaitTermination()
     return cat.read("near_dups")
-
-
-def q_web_meta(spark, sf_dir):
-    """Head-metadata extraction: plant titles, descriptions (both
-    attribute orders), canonical links, and robots directives
-    (noindex on every 7th page, a plain 'index,follow' on every 3rd,
-    absent otherwise; description/canonical absent on every 5th/11th)
-    and parse them back out."""
-    from graph_importer_spark.operators import urls as _urls
-
-    d = T(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    s = lambda c: c.cast("string")  # noqa: E731
-    desc = F.when(
-        i % 5 == 0, F.lit("")
-    ).when(
-        i % 2 == 0,
-        F.concat(F.lit('<meta name="description" content="about topic '), s(i % 13), F.lit('">')),
-    ).otherwise(
-        F.concat(F.lit('<meta content="rev about topic '), s(i % 13), F.lit('" name="description">')),
-    )
-    canon = F.when(i % 11 == 0, F.lit("")).otherwise(
-        F.concat(F.lit('<link rel="canonical" href="https://c.example/p/'), s(i % 97), F.lit('">'))
-    )
-    robots = F.when(
-        i % 7 == 0, F.lit('<meta name="robots" content="noindex,nofollow">')
-    ).when(
-        i % 3 == 0, F.lit('<meta name="robots" content="index,follow">')
-    ).otherwise(F.lit(""))
-    html = F.concat(
-        F.lit("<html><head><title>Doc "), s(i), F.lit(" title</title>"),
-        desc, canon, robots,
-        F.lit("</head><body><p>"), F.col("text"), F.lit("</p></body></html>"),
-    )
-    pages = d.select(
-        F.concat(F.lit("https://m.example/d/"), s(i)).alias("url"),
-        html.cast("binary").alias("html"),
-    )
-    return _urls.extract_meta(pages)
-
-
-ORACLE_WEB_META = """
-WITH d AS (
-  SELECT doc_id,
-         CAST(doc_id AS VARCHAR) AS ds,
-         CAST(doc_id % 13 AS VARCHAR) AS topic,
-         CAST(doc_id % 97 AS VARCHAR) AS cp
-  FROM documents)
-SELECT 'https://m.example/d/' || ds AS url,
-       'Doc ' || ds || ' title' AS title,
-       CASE WHEN doc_id % 5 = 0 THEN ''
-            WHEN doc_id % 2 = 0 THEN 'about topic ' || topic
-            ELSE 'rev about topic ' || topic END AS meta_description,
-       CASE WHEN doc_id % 11 = 0 THEN ''
-            ELSE 'https://c.example/p/' || cp END AS canonical_url,
-       doc_id % 7 = 0 AS noindex
-FROM d
-"""
-
-
-def q_web_anchor_alias(spark, sf_dir):
-    """Anchor-text alias dictionary (Crosswikis-style): plant
-    deterministic ``<a href>text</a>`` anchors over a 23-entity
-    universe — a canonical 'Entity k' name (every 5th doc pointing at
-    an -alt host so P(dst|alias) < 1), a case/whitespace variant that
-    must NORMALIZE to the same alias, a second 'Ek Corp' alias, plus
-    relative-href and empty-text anchors the extractor must drop —
-    then mine (alias, dst_host, n, prob) with min_count=2."""
-    from graph_importer_spark.operators import urls as _urls
-
-    d = T(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    s = lambda c: c.cast("string")  # noqa: E731
-    k1, k2 = s((i * 7 + 13) % 23), s((i * 5 + 3) % 23)
-    a1 = F.concat(
-        F.lit('<a href="https://e'), k1,
-        F.when(i % 5 == 0, F.lit("-alt")).otherwise(F.lit("")),
-        F.lit('.wiki/p">Entity '), k1, F.lit("</a>"),
-    )
-    a2 = F.concat(
-        F.lit('<a href="https://e'), k2, F.lit('.wiki/p">'),
-        F.when(i % 3 == 0, F.concat(F.lit("  ENTITY   "), k2, F.lit(" ")))
-        .otherwise(F.concat(F.lit("E"), k2, F.lit(" Corp"))),
-        F.lit("</a>"),
-    )
-    html = F.concat(
-        F.lit("<html><body>"), a1,
-        F.lit('<a href="/rel">here</a><a href="https://noise.example/x"></a>'),
-        a2, F.lit("</body></html>"),
-    )
-    pages = d.select(
-        F.concat(F.lit("https://src.example/d/"), s(i)).alias("url"),
-        html.cast("binary").alias("html"),
-    )
-    anchors = _urls.extract_anchors(pages, "html", "url")
-    return _urls.anchor_alias_candidates(anchors, min_count=2)
-
-
-ORACLE_WEB_ANCHOR_ALIAS = f"""
-WITH d AS (
-  SELECT doc_id,
-         CAST((doc_id * 7 + 13) % 23 AS VARCHAR) AS k1,
-         CAST((doc_id * 5 + 3) % 23 AS VARCHAR) AS k2
-  FROM documents),
-h AS (
-  SELECT '<html><body><a href="https://e' || k1
-         || CASE WHEN doc_id % 5 = 0 THEN '-alt' ELSE '' END
-         || '.wiki/p">Entity ' || k1 || '</a>'
-         || '<a href="/rel">here</a><a href="https://noise.example/x"></a>'
-         || '<a href="https://e' || k2 || '.wiki/p">'
-         || CASE WHEN doc_id % 3 = 0 THEN '  ENTITY   ' || k2 || ' '
-                 ELSE 'E' || k2 || ' Corp' END
-         || '</a></body></html>' AS html
-  FROM d),
-x AS (
-  SELECT UNNEST(regexp_extract_all(html,
-           '<a [^>]*href="([^"]*)"[^>]*>([^<]*)</a>', 1)) AS link,
-         UNNEST(regexp_extract_all(html,
-           '<a [^>]*href="([^"]*)"[^>]*>([^<]*)</a>', 2)) AS anchor
-  FROM h),
-f AS (
-  SELECT {_LG_HOST_SQL.format(u='link')} AS dst,
-         trim(regexp_replace(lower(anchor), '\\s+', ' ', 'g')) AS alias
-  FROM x
-  WHERE anchor <> '' AND regexp_matches(link, '^https?://')),
-p AS (
-  SELECT alias, dst, CAST(COUNT(*) AS BIGINT) AS n
-  FROM f WHERE alias <> '' GROUP BY alias, dst),
-t AS (SELECT alias, SUM(n) AS total FROM p GROUP BY alias)
-SELECT alias, dst, n,
-       round(CAST(n AS DOUBLE) / total, 6) AS prob
-FROM p JOIN t USING (alias)
-WHERE n >= 2
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -4640,54 +4186,6 @@ FROM n JOIN s ON n.subj = s.subj LEFT JOIN p ON n.subj = p.subj
 """
 
 
-def q_web_url_dedup(spark, sf_dir):
-    """Canonical-URL exact dedup (urls.url_dedup): the web_hosts messy
-    URL synth (case/port/tracking/fragment variants) collapses to one
-    kept doc per canonical form — highest n_chars, ties to smallest
-    doc_id."""
-    from graph_importer_spark.operators.urls import url_dedup
-
-    d = T(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    s = lambda c: c.cast("string")  # noqa: E731
-    url = F.concat(
-        F.lit("HTTPS://WWW.Site"), s(i % 41),
-        F.when(i % 4 == 0, F.lit(".co.uk")).otherwise(F.lit(".com")),
-        F.lit(":443/p/"), s(i % 10),
-        F.lit("?id="), s(i % 5),
-        F.lit("&utm_source=x&fbclid="), s(i), F.lit("#sec"),
-    )
-    pages = d.select("doc_id", url.alias("url"), "n_chars")
-    return url_dedup(pages, "url", "doc_id", "n_chars")
-
-
-ORACLE_WEB_URL_DEDUP = rf"""
-WITH u0 AS (SELECT doc_id, n_chars, {_WEB_URL_SQL} AS u FROM documents),
-s0 AS (SELECT doc_id, n_chars, regexp_replace(u,
-        '^([A-Za-z][A-Za-z0-9+.-]*://)[^/?#@]*@', '\1', 'g') AS u FROM u0),
-s1 AS (SELECT doc_id, n_chars, regexp_replace(u, '#.*', '', 'g') AS u FROM s0),
-s2 AS (SELECT doc_id, n_chars, regexp_replace(u,
-        '([?&])(utm_[A-Za-z0-9_]+|fbclid|gclid|msclkid|mc_eid)=[^&]*', '\1', 'g')
-        AS u FROM s1),
-s3 AS (SELECT doc_id, n_chars, regexp_replace(regexp_replace(regexp_replace(u,
-        '\?[?&]+', '?', 'g'), '&&+', '&', 'g'), '[?&]+$', '', 'g') AS u FROM s2),
-s4 AS (SELECT doc_id, n_chars,
-        lower(regexp_extract(u, '^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)', 1))
-        || regexp_replace(u, '^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)', '', 'g')
-        AS curl FROM s3),
-s5 AS (SELECT doc_id, n_chars, regexp_replace(regexp_replace(curl,
-        '^(http://[^/?#]*):80([/?]|$)', '\1\2', 'g'),
-        '^(https://[^/?#]*):443([/?]|$)', '\1\2', 'g') AS curl FROM s4),
-r AS (
-  SELECT curl AS canonical_url, doc_id, n_chars,
-         COUNT(*) OVER (PARTITION BY curl) AS n_dups,
-         ROW_NUMBER() OVER (PARTITION BY curl
-                            ORDER BY n_chars DESC, doc_id ASC) AS rn
-  FROM s5)
-SELECT canonical_url, n_dups, doc_id, n_chars FROM r WHERE rn = 1
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-10: KG constraint audit, modularity, meta-blocking,
 # exact cosine similarity join, compaction planning, split-leakage audit
@@ -4995,66 +4493,6 @@ SELECT * FROM g WHERE n_splits >= 2
 # Round-4 session-11: containment join, boilerplate detection, MRR/Hits@k,
 # butterfly counting, WL relabeling, blocking quality metrics
 # ---------------------------------------------------------------------------
-
-
-def q_web_boilerplate(spark, sf_dir):
-    """Per-domain boilerplate-line detection (textstats.
-    boilerplate_lines): docs are chunked into 8-word lines, assigned
-    round-robin to 7 domains, and every page gets a nav line (always)
-    plus a cookie line (even doc_ids only) prepended — the detector
-    must flag both template lines per domain and none of the content
-    chunks; frac=0.4 keeps the ~0.5-rate cookie line safely in."""
-    d = T(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(F.lit("site"), (F.col("doc_id") % 7).cast("string")).alias(
-            "domain"
-        ),
-        F.concat(
-            F.when(
-                F.col("doc_id") % 2 == 0,
-                F.array(
-                    F.concat(F.lit("nav home site"), (F.col("doc_id") % 7).cast("string")),
-                    F.lit("accept all cookies"),
-                ),
-            ).otherwise(
-                F.array(
-                    F.concat(F.lit("nav home site"), (F.col("doc_id") % 7).cast("string"))
-                )
-            ),
-            _ts.word_chunks(F.col("text"), 8),
-        ).alias("lines"),
-    )
-    return _ts.boilerplate_lines(
-        d, "domain", "doc_id", "lines", min_pages=5, frac=0.4
-    )
-
-
-ORACLE_WEB_BOILERPLATE = rf"""
-WITH docs AS (
-  SELECT doc_id, 'site' || CAST(doc_id % 7 AS VARCHAR) AS domain,
-         string_split({_NF_SQL}, ' ') AS t
-  FROM documents),
-content AS (
-  SELECT doc_id, domain,
-         array_to_string(t[(i-1)*8+1:(i-1)*8+8], ' ') AS line
-  FROM docs, UNNEST(generate_series(1, (len(t) + 7) // 8)) AS u(i)),
-template AS (
-  SELECT doc_id, domain,
-         'nav home site' || CAST(doc_id % 7 AS VARCHAR) AS line FROM docs
-  UNION ALL
-  SELECT doc_id, domain, 'accept all cookies' FROM docs WHERE doc_id % 2 = 0),
-pl AS (SELECT DISTINCT doc_id, domain, line FROM (
-         SELECT * FROM content UNION ALL SELECT * FROM template)),
-dp AS (SELECT domain, COUNT(DISTINCT doc_id) AS domain_pages
-       FROM docs GROUP BY domain),
-cnt AS (SELECT domain, line, COUNT(DISTINCT doc_id) AS n_pages
-        FROM pl GROUP BY domain, line)
-SELECT cnt.domain, line, n_pages, domain_pages,
-       round(CAST(n_pages AS DOUBLE) / domain_pages, 6) AS line_frac
-FROM cnt JOIN dp USING (domain)
-WHERE domain_pages >= 5
-  AND CAST(n_pages AS DOUBLE) / domain_pages >= 0.4
-"""
 
 
 def q_graph_butterfly(spark, sf_dir):
@@ -5701,61 +5139,6 @@ UNION ALL SELECT * FROM dang
 # Round-4 session-14: URL template mining, diversity sampling, inverse
 # predicates, rich club, fact history
 # ---------------------------------------------------------------------------
-
-
-def q_web_url_templates(spark, sf_dir):
-    """Crawl path-template mining (urls.url_templates): item pages
-    share the /item/{n} family per host, and every 4th doc carries an
-    md5 session segment that must generalize to /cache/{h}/view; the
-    oracle replays the hex-then-digit generalization and the rollup."""
-    from graph_importer_spark.operators.urls import url_templates
-
-    d = T(spark, sf_dir, "documents")
-    i = F.col("doc_id")
-    url = F.when(
-        i % 4 == 0,
-        F.concat(
-            F.lit("https://site"), (i % 13).cast("string"),
-            F.lit(".example/cache/"), F.md5(i.cast("string")), F.lit("/view"),
-        ),
-    ).otherwise(
-        F.concat(
-            F.lit("https://site"), (i % 13).cast("string"),
-            F.lit(".example/item/"), (i % 50).cast("string"),
-        )
-    )
-    pages = d.select("doc_id", url.alias("url"))
-    return url_templates(pages, "url", min_count=2, k=3)
-
-
-ORACLE_WEB_URL_TEMPLATES = r"""
-WITH pages AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 4 = 0
-              THEN 'https://site' || CAST(doc_id % 13 AS VARCHAR)
-                   || '.example/cache/' || md5(CAST(doc_id AS VARCHAR))
-                   || '/view'
-              ELSE 'https://site' || CAST(doc_id % 13 AS VARCHAR)
-                   || '.example/item/' || CAST(doc_id % 50 AS VARCHAR)
-         END AS url
-  FROM documents),
-px AS (
-  SELECT regexp_extract(url, '^[a-z][a-z0-9+.-]*://([^/?#]*)', 1) AS host,
-         regexp_extract(url, '^[a-z][a-z0-9+.-]*://[^/?#]*(/[^?#]*)?', 1)
-           AS p
-  FROM pages),
-t AS (
-  SELECT host,
-         regexp_replace(
-           regexp_replace(p, '[0-9a-f]{8,}', '{h}', 'g'),
-           '[0-9]+', '{n}', 'g') AS template,
-         p AS path
-  FROM px)
-SELECT host, template, COUNT(*) AS n_urls,
-       array_to_string(
-         list_slice(list_sort(list(DISTINCT path)), 1, 3), ',') AS sample
-FROM t GROUP BY host, template HAVING COUNT(*) >= 2
-"""
 
 
 def q_sample_diverse(spark, sf_dir):
@@ -6569,53 +5952,6 @@ SELECT t.subj, t.pred, t.obj, round(st.s_true, 6) AS score_true,
        COALESCE(a.nb + 1, 1) <= 10 AS hit10
 FROM t JOIN st USING (subj, pred, obj)
 LEFT JOIN agg a USING (subj, pred, obj)
-"""
-
-
-def q_web_frontier(spark, sf_dir):
-    """Polite crawl-frontier scheduling (urls.crawl_frontier) over
-    synthesized clean URLs (23 hosts, priority = n_chars, ties by
-    URL); the oracle replays the per-host queue rank, the cap, and
-    the md5 slot assignment."""
-    from graph_importer_spark.operators.urls import crawl_frontier
-
-    d = T(spark, sf_dir, "documents").select(
-        F.concat(
-            F.lit("https://site"),
-            (F.col("doc_id") % 23).cast("string"),
-            F.lit(".com/p/"),
-            F.col("doc_id").cast("string"),
-        ).alias("url"),
-        F.col("n_chars").cast("bigint").alias("priority"),
-    )
-    return crawl_frontier(d, "url", "priority", max_per_host=15)
-
-
-def _oracle_web_frontier(seed: int = 42) -> str:
-    poly = " + ".join(
-        f"CAST(strpos('0123456789abcdef', substring(h8, {j + 1}, 1)) - 1 AS BIGINT)"
-        f" * {16 ** (7 - j)}"
-        for j in range(8)
-    )
-    return f"""
-WITH u AS (
-  SELECT 'https://site' || CAST(doc_id % 23 AS VARCHAR) || '.com/p/'
-           || CAST(doc_id AS VARCHAR) AS url,
-         'site' || CAST(doc_id % 23 AS VARCHAR) || '.com' AS host,
-         CAST(n_chars AS BIGINT) AS priority
-  FROM documents),
-q AS (
-  SELECT url, host, priority,
-         row_number() OVER (PARTITION BY host
-                            ORDER BY priority DESC, url ASC) - 1 AS wave
-  FROM u),
-c AS (SELECT * FROM q WHERE wave < 15),
-h AS (
-  SELECT url, host, priority, wave,
-         substring(md5(host || '@' || CAST(wave AS VARCHAR) || '@{seed}'),
-                   1, 8) AS h8
-  FROM c)
-SELECT url, host, priority, wave, ({poly}) AS slot FROM h
 """
 
 
@@ -9350,7 +8686,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # WL relabeling, blocking quality metrics.  Six more tail-of-window
     # rows rotate out; all out-of-window rows are re-verified locally
     # via the full scripts/check_contract.py sweep.
-    "web_boilerplate": q_web_boilerplate,
     "graph_butterfly": q_graph_butterfly,
     "graph_wl": q_graph_wl,
     "er_block_metrics": q_er_block_metrics,
@@ -9368,7 +8703,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_quality": q_kg_quality,
     # round-4 session-14 additions: URL template mining, diversity
     # sampling, inverse predicates, rich club, temporal fact history.
-    "web_url_templates": q_web_url_templates,
     "sample_diverse": q_sample_diverse,
     "kg_inverse_preds": q_kg_inverse_preds,
     "graph_richclub": q_graph_richclub,
@@ -9398,7 +8732,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # ranking eval, stem vocabulary, crawl-frontier scheduling (four
     # more tail-of-window rows rotate out under the same policy).
     "kg_transe_rank": q_kg_transe_rank,
-    "web_frontier": q_web_frontier,
     # round-4 session-18c additions: SimRank, sampled harmonic
     # centrality, tokenizer fertility, transductive KG split (four
     # more tail-of-window rows rotate out under the same policy).
@@ -9508,7 +8841,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "sketch_cms_topk": q_sketch_cms_topk,
     "scd2_user_type": q_scd2_user_type,
     "layout_zorder": q_layout_zorder,
-    "web_link_graph": q_web_link_graph,
     "sample_weighted": q_sample_weighted,
     "sketch_hist_quantiles": q_sketch_hist_quantiles,
     "range_lookup_tiers": q_range_lookup_tiers,
@@ -9520,7 +8852,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # vocab top-k
     "sketch_bloom": q_sketch_bloom,
     "sample_mixture": q_sample_mixture,
-    "web_blocklist": q_web_blocklist,
     "pack_sequences": q_pack_sequences,
     "kg_incremental_entities": q_kg_incremental_entities,
     "kg_negative_samples": q_kg_negative_samples,
@@ -9532,7 +8863,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "graph_ppmi": q_graph_ppmi,
     "kg_triple_confidence": q_kg_triple_confidence,
     "emb_pq": q_emb_pq,
-    "web_hosts_psl": q_web_hosts_psl,
     # dedup_exact / anti_join stay in-window: their de-vacuization
     # (planted clones / planted unordered parts) changed the compared
     # row sets, and the round-3 verdict explicitly asks for non-empty
@@ -9564,14 +8894,11 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # and re-verified locally via scripts/check_contract.py.
     "split_by_customer": q_split_by_customer,
     "diff_orders": q_diff_orders,
-    "web_anchor_alias": q_web_anchor_alias,
-    "web_domain_quota": q_web_domain_quota,
     # web_meta is the last never-driver-green entry; it takes the
     # final window slot over sim_ann_lsh (r3 driver-green), whose
     # session-3 lsh_band_keys refactor is already driver-covered
     # in-window by dedup_minhash_lsh / dedup_incremental /
     # stream_fuzzy_dedup.
-    "web_meta": q_web_meta,
     # ---- tail (51+): verified by the local full sweep + judge re-check ----
     # round-4 session-7 additions queue at the tail head for the r5
     # window behind the earlier never-driver-green session-2..6 rows
@@ -9603,7 +8930,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # canonical-URL dedup, per-fact provenance, star BGP + OPTIONAL
     "sample_epochs": q_sample_epochs,
     "pack_fim": q_pack_fim,
-    "web_url_dedup": q_web_url_dedup,
     "kg_provenance": q_kg_provenance,
     "kg_star_optional": q_kg_star_optional,
     # - text_bm25 (new r4) waits at the tail head for the r5 window:
@@ -9698,7 +9024,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # cc family remains window-covered by cc_star;
     # the dense-id variant (same oracle) rotates out
     "cc_canonical_dense": q_cc_canonical_dense,
-    "web_hosts": q_web_hosts,
     # gen_clique: r2-green, judge-verified r3; its generator module is
     # exercised in-window via the r03-green gen_cliques_graph
     "gen_clique": q_gen_clique,
@@ -9774,7 +9099,6 @@ ORACLES: dict[str, str] = {
     "orders_rfm": ORACLE_ORDERS_RFM,
     "emb_whiten": ORACLE_EMB_WHITEN,
     "kg_transe_rank": _oracle_kg_transe_rank(),
-    "web_frontier": _oracle_web_frontier(),
     "graph_simrank": ORACLE_GRAPH_SIMRANK,
     "graph_harmonic": ORACLE_GRAPH_HARMONIC,
     "kg_split_transductive": _oracle_kg_split_transductive(),
@@ -9824,7 +9148,6 @@ ORACLES: dict[str, str] = {
     "kg_numeric_outliers": ORACLE_KG_NUMERIC_OUTLIERS,
     "kg_snapshot_diff": ORACLE_KG_SNAPSHOT_DIFF,
     "layout_compare": ORACLE_LAYOUT_COMPARE,
-    "web_url_templates": ORACLE_WEB_URL_TEMPLATES,
     "sample_diverse": ORACLE_SAMPLE_DIVERSE,
     "kg_inverse_preds": ORACLE_KG_INVERSE_PREDS,
     "graph_richclub": ORACLE_GRAPH_RICHCLUB,
@@ -9835,7 +9158,6 @@ ORACLES: dict[str, str] = {
     "schema_match": ORACLE_SCHEMA_MATCH,
     "kg_webtables": ORACLE_KG_WEBTABLES,
     "graph_ks": ORACLE_GRAPH_KS,
-    "web_boilerplate": ORACLE_WEB_BOILERPLATE,
     "graph_butterfly": ORACLE_GRAPH_BUTTERFLY,
     "graph_wl": ORACLE_GRAPH_WL,
     "er_block_metrics": ORACLE_ER_BLOCK_METRICS,
@@ -9863,7 +9185,6 @@ ORACLES: dict[str, str] = {
     "kg_types": ORACLE_KG_TYPES,
     "sample_epochs": ORACLE_SAMPLE_EPOCHS,
     "pack_fim": ORACLE_PACK_FIM,
-    "web_url_dedup": ORACLE_WEB_URL_DEDUP,
     "kg_provenance": ORACLE_KG_PROVENANCE,
     "kg_star_optional": ORACLE_KG_STAR_OPTIONAL,
     "kg_flagship": ORACLE_KG_FLAGSHIP,
@@ -9871,7 +9192,6 @@ ORACLES: dict[str, str] = {
     "sketch_cms_topk": _oracle_sketch_cms(),
     "scd2_user_type": ORACLE_SCD2,
     "layout_zorder": _oracle_layout_zorder(),
-    "web_link_graph": ORACLE_WEB_LINK_GRAPH,
     "sample_weighted": ORACLE_SAMPLE_WEIGHTED,
     "sketch_hist_quantiles": ORACLE_HIST_QUANTILES,
     "range_lookup_tiers": ORACLE_RANGE_LOOKUP,
@@ -9913,9 +9233,6 @@ ORACLES: dict[str, str] = {
     "gen_edge_attrs": ORACLE_GEN_EDGE_ATTRS,
     "split_by_customer": _oracle_split_by_customer(),
     "diff_orders": ORACLE_DIFF_ORDERS,
-    "web_anchor_alias": ORACLE_WEB_ANCHOR_ALIAS,
-    "web_domain_quota": _oracle_web_domain_quota(),
-    "web_meta": ORACLE_WEB_META,
     "graph_clustering": ORACLE_GRAPH_CLUSTERING,
     "graph_ppr": _oracle_graph_ppr(),
     "graph_ktruss": _oracle_ktruss(),
@@ -9937,8 +9254,6 @@ ORACLES: dict[str, str] = {
     "graph_ppmi": _oracle_graph_ppmi(),
     "kg_triple_confidence": ORACLE_KG_TRIPLE_CONFIDENCE,
     "emb_pq": _oracle_emb_pq(),
-    "web_hosts": ORACLE_WEB_HOSTS,
-    "web_hosts_psl": ORACLE_WEB_HOSTS_PSL,
     "sim_cosine_topk": ORACLE_SIM_TOPK,
     "sim_ann_lsh": _oracle_sim_ann(),
     "sim_ann_ivf": _oracle_sim_ivf(),
@@ -9955,7 +9270,6 @@ ORACLES: dict[str, str] = {
     "skew_salted_topk": ORACLE_SALTED_TOPK,
     "sketch_bloom": _oracle_sketch_bloom(),
     "sample_mixture": ORACLE_SAMPLE_MIXTURE,
-    "web_blocklist": ORACLE_WEB_BLOCKLIST,
     "pack_sequences": ORACLE_PACK_SEQUENCES,
     "kg_incremental_entities": ORACLE_KG_INCREMENTAL,
     # every registered query is oracle-checked: the iterative ones replay

@@ -440,24 +440,6 @@ def let_bind(value: Column, body) -> Column:
     return F.transform(F.array(value), body).getItem(0)
 
 
-def word_chunks(text: Column, n: int) -> Column:
-    """Consecutive n-word chunks of the normalized text (the last chunk
-    may be shorter) — the span unit for line-level dedup on corpora
-    without newline structure.  Pure array expression, zero shuffle;
-    the token array is let-bound so the normalize+split runs once per
-    document, not once per chunk."""
-    return let_bind(
-        F.split(normalize_text(text), " "),
-        lambda toks: F.transform(
-            F.sequence(
-                F.lit(1),
-                F.floor((F.size(toks) + F.lit(n - 1)) / F.lit(n)).cast("int"),
-            ),
-            lambda i: F.array_join(F.slice(toks, (i - 1) * n + 1, n), " "),
-        ),
-    )
-
-
 def duplicated_gram_stats(
     df: DataFrame, id_col: str, text_col: str, k: int = 5
 ) -> DataFrame:
