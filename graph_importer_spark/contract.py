@@ -5731,53 +5731,6 @@ FROM scored s JOIN w USING (subj, pred)
 # ---------------------------------------------------------------------------
 
 
-def q_orders_rfm(spark, sf_dir):
-    """RFM customer segmentation (timeseries.rfm_scores): recency /
-    frequency / monetary per customer, quartile-scored 1-4 against
-    exact interpolated percentile cutoffs; the oracle replays the
-    DECIMAL monetary sum, quantile_cont cutoffs, and the strict
-    >-comparison scoring."""
-    from graph_importer_spark.operators.timeseries import rfm_scores
-
-    o = T(spark, sf_dir, "orders")
-    return rfm_scores(o, "o_custkey", "o_orderdate", "o_totalprice")
-
-
-ORACLE_ORDERS_RFM = r"""
-WITH per0 AS (
-  SELECT o_custkey AS key,
-         MAX(CAST(floor(epoch(o_orderdate)) AS BIGINT)) AS last_ts,
-         COUNT(*) AS frequency,
-         SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS m
-  FROM orders GROUP BY o_custkey),
-ref AS (SELECT MAX(last_ts) AS r FROM per0),
-per AS (
-  SELECT key,
-         CAST(floor((ref.r - last_ts) / 86400.0) AS BIGINT) AS recency_days,
-         frequency, CAST(m AS DOUBLE) AS monetary
-  FROM per0, ref),
-cuts AS (
-  SELECT quantile_cont(CAST(recency_days AS DOUBLE), [0.25, 0.5, 0.75]) AS rc,
-         quantile_cont(CAST(frequency AS DOUBLE), [0.25, 0.5, 0.75]) AS fc,
-         quantile_cont(monetary, [0.25, 0.5, 0.75]) AS mc
-  FROM per)
-SELECT key, recency_days, frequency, round(monetary, 2) AS monetary,
-       CAST(5 - (1 + (recency_days > rc[1])::INT + (recency_days > rc[2])::INT
-                   + (recency_days > rc[3])::INT) AS INT) AS r_score,
-       CAST(1 + (frequency > fc[1])::INT + (frequency > fc[2])::INT
-              + (frequency > fc[3])::INT AS INT) AS f_score,
-       CAST(1 + (monetary > mc[1])::INT + (monetary > mc[2])::INT
-              + (monetary > mc[3])::INT AS INT) AS m_score,
-       CAST((5 - (1 + (recency_days > rc[1])::INT + (recency_days > rc[2])::INT
-                    + (recency_days > rc[3])::INT)) * 100
-            + (1 + (frequency > fc[1])::INT + (frequency > fc[2])::INT
-                 + (frequency > fc[3])::INT) * 10
-            + (1 + (monetary > mc[1])::INT + (monetary > mc[2])::INT
-                 + (monetary > mc[3])::INT) AS INT) AS rfm
-FROM per, cuts
-"""
-
-
 def q_emb_whiten(spark, sf_dir):
     """Embedding whitening (quantize.whiten): mean-center + L2
     renormalize; the oracle replays the 6dp per-dim mean, the ordered
@@ -6376,48 +6329,6 @@ GROUP BY k.id
 # ---------------------------------------------------------------------------
 
 
-def q_orders_rules(spark, sf_dir):
-    """A-priori 2-itemset association rules (itemsets.pair_rules) over
-    lineitem baskets (items = l_partkey % 250 so pairs repeat), with
-    the max_item_freq ubiquity guard exercised; the oracle replays the
-    distinct basket-item collapse, the cap, the pair counting, and
-    every ratio."""
-    from graph_importer_spark.operators.itemsets import pair_rules
-
-    li = T(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 2000)
-    b = li.select(
-        F.col("l_orderkey").alias("basket"),
-        (F.col("l_partkey") % 250).alias("item"),
-    )
-    return pair_rules(
-        b, "basket", "item", min_support=4, max_item_freq=60
-    )
-
-
-ORACLE_ORDERS_RULES = r"""
-WITH bi0 AS (
-  SELECT DISTINCT l_orderkey AS bk, l_partkey % 250 AS it
-  FROM lineitem WHERE l_orderkey < 2000),
-freq0 AS (SELECT it, COUNT(*) AS n FROM bi0 GROUP BY it),
-bi AS (
-  SELECT bk, it FROM bi0
-  WHERE it NOT IN (SELECT it FROM freq0 WHERE n > 60)),
-freq AS (SELECT it, n FROM freq0 WHERE n <= 60),
-tot AS (SELECT COUNT(DISTINCT bk) AS n_baskets FROM bi),
-pairs AS (
-  SELECT x.it AS a, y.it AS b, COUNT(*) AS n_ab
-  FROM bi x JOIN bi y ON x.bk = y.bk AND x.it < y.it
-  GROUP BY x.it, y.it HAVING COUNT(*) >= 4)
-SELECT p.a, p.b, p.n_ab, fa.n AS n_a, fb.n AS n_b, tot.n_baskets,
-       round(CAST(p.n_ab AS DOUBLE) / tot.n_baskets, 6) AS support,
-       round(CAST(p.n_ab AS DOUBLE) / fa.n, 6) AS conf_a_b,
-       round(CAST(p.n_ab AS DOUBLE) / fb.n, 6) AS conf_b_a,
-       round(CAST(p.n_ab AS DOUBLE) * tot.n_baskets / (fa.n * fb.n), 6)
-         AS lift
-FROM pairs p JOIN freq fa ON fa.it = p.a JOIN freq fb ON fb.it = p.b, tot
-"""
-
-
 _FS_EM_M = {"a1": 0.9, "a2": 0.8, "a3": 0.7}
 _FS_EM_U = {"a1": 0.1, "a2": 0.2, "a3": 0.3}
 
@@ -6847,46 +6758,6 @@ FROM j, tot
 """
 
 
-def q_orders_ltv(spark, sf_dir):
-    """Cohort lifetime-value curves (timeseries.cohort_ltv) at 90-day
-    periods over the order stream; the oracle replays the DECIMAL
-    spend matrix and the bounded cumulative window."""
-    from graph_importer_spark.operators.timeseries import cohort_ltv
-
-    o = T(spark, sf_dir, "orders")
-    return cohort_ltv(
-        o, "o_custkey", "o_orderdate", "o_totalprice",
-        period_seconds=90 * 86400,
-    )
-
-
-ORACLE_ORDERS_LTV = r"""
-WITH per AS (
-  SELECT o_custkey AS k,
-         CAST(floor(epoch(o_orderdate) / 7776000) AS BIGINT) AS p,
-         SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS spend
-  FROM orders GROUP BY 1, 2),
-first AS (SELECT k, MIN(p) AS cohort FROM per GROUP BY k),
-cells AS (
-  SELECT cohort, per.p - cohort AS "offset", COUNT(*) AS n_buyers,
-         SUM(spend) AS ps
-  FROM per JOIN first USING (k) GROUP BY cohort, per.p - cohort),
-sizes AS (
-  SELECT cohort, n_buyers AS cohort_size FROM cells WHERE "offset" = 0),
-cum AS (
-  SELECT cohort, "offset", n_buyers, ps,
-         SUM(ps) OVER (PARTITION BY cohort ORDER BY "offset"
-                       ROWS UNBOUNDED PRECEDING) AS cs
-  FROM cells)
-SELECT c.cohort, c."offset", c.n_buyers,
-       round(CAST(c.ps AS DOUBLE), 2) AS period_spend,
-       round(CAST(c.cs AS DOUBLE), 2) AS cum_spend,
-       s.cohort_size,
-       round(CAST(c.cs AS DOUBLE) / s.cohort_size, 6) AS ltv
-FROM cum c JOIN sizes s USING (cohort)
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18i: posting-list delta compression, extractive
 # summarization, churn label builder
@@ -7197,66 +7068,6 @@ SELECT a, b, 'undecided', CAST(NULL AS INT) FROM live{rounds + 1}"""
     return "".join(parts)
 
 
-def q_orders_checks(spark, sf_dir):
-    """dbt-style declarative table tests (profiling.table_checks)
-    over orders with PLANTED violations (duplicated keys, an
-    over-restricted accepted-values list, dangling FK rows) so every
-    check class reports non-vacuously; the oracle replays each
-    count."""
-    from graph_importer_spark.operators.profiling import table_checks
-
-    o = T(spark, sf_dir, "orders")
-    bad_fk = o.filter(F.col("o_orderkey") % 500 == 0).withColumn(
-        "o_custkey", F.col("o_custkey") + 1000000
-    )
-    dups = o.filter(F.col("o_orderkey") % 100 == 0)
-    fixture = o.unionByName(dups).unionByName(bad_fk)
-    cust = T(spark, sf_dir, "customer")
-    return table_checks(
-        fixture,
-        unique_cols=["o_orderkey"],
-        not_null_cols=["o_custkey", "o_orderdate"],
-        accepted_values={"o_orderstatus": ["O", "F"]},
-        fk=[("o_custkey", cust, "c_custkey")],
-    )
-
-
-ORACLE_ORDERS_CHECKS = """
-WITH fixture AS (
-  SELECT o_orderkey, o_custkey, o_orderstatus, o_orderdate FROM orders
-  UNION ALL
-  SELECT o_orderkey, o_custkey, o_orderstatus, o_orderdate
-  FROM orders WHERE o_orderkey % 100 = 0
-  UNION ALL
-  SELECT o_orderkey, o_custkey + 1000000, o_orderstatus, o_orderdate
-  FROM orders WHERE o_orderkey % 500 = 0),
-uq AS (
-  SELECT COALESCE(SUM(n - 1), 0) AS v FROM (
-    SELECT COUNT(*) AS n FROM fixture GROUP BY o_orderkey HAVING COUNT(*) > 1)),
-nn1 AS (SELECT COUNT(*) AS v FROM fixture WHERE o_custkey IS NULL),
-nn2 AS (SELECT COUNT(*) AS v FROM fixture WHERE o_orderdate IS NULL),
-av AS (
-  -- dbt semantics: accepted_values ignores NULLs (not_null is the
-  -- separate check)
-  SELECT COUNT(*) AS v FROM fixture
-  WHERE o_orderstatus NOT IN ('O', 'F')),
-fk AS (
-  SELECT COUNT(*) AS v FROM fixture
-  WHERE o_custkey IS NOT NULL
-    AND o_custkey NOT IN (SELECT DISTINCT c_custkey FROM customer))
-SELECT 'unique' AS check, 'o_orderkey' AS column,
-       CAST(v AS BIGINT) AS n_violations, v = 0 AS passed FROM uq
-UNION ALL
-SELECT 'not_null', 'o_custkey', v, v = 0 FROM nn1
-UNION ALL
-SELECT 'not_null', 'o_orderdate', v, v = 0 FROM nn2
-UNION ALL
-SELECT 'accepted_values', 'o_orderstatus', v, v = 0 FROM av
-UNION ALL
-SELECT 'foreign_key', 'o_custkey', v, v = 0 FROM fk
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18n: autocomplete index, diff-in-diff, KG cycle motifs
 # ---------------------------------------------------------------------------
@@ -7377,107 +7188,10 @@ FROM per JOIN tot ON tot.pred = per.pred
 """
 
 
-def q_orders_pareto(spark, sf_dir):
-    """Revenue concentration curve (profiling.concentration_curve)
-    over customer order totals at 50/80/90% targets; the oracle
-    replays the value-summary cumulative walk and the tie-group
-    ceil."""
-    from graph_importer_spark.operators.profiling import concentration_curve
-
-    o = T(spark, sf_dir, "orders")
-    return concentration_curve(o, "o_custkey", "o_totalprice")
-
-
-def _oracle_orders_pareto(fracs=(0.5, 0.8, 0.9)) -> str:
-    sels = []
-    for f in fracs:
-        sels.append(
-            f"""
-(SELECT CAST({f} AS DOUBLE) AS frac,
-        CAST(ck - nk + ceil((tv * {f} - (cv - v * nk)) / v) AS BIGINT)
-          AS n_keys,
-        tk, tv, v, cv, nk, ck
- FROM cum, tot WHERE cv >= tv * {f} ORDER BY v DESC LIMIT 1)"""
-        )
-    u = "\nUNION ALL\n".join(sels)
-    return f"""
-WITH per AS (
-  SELECT o_custkey AS k,
-         round(CAST(SUM(CAST(round(CAST(o_totalprice AS DOUBLE), 9)
-                             AS DECIMAL(28,9))) AS DOUBLE), 2) AS v
-  FROM orders GROUP BY o_custkey),
-summ AS (SELECT v, COUNT(*) AS nk FROM per GROUP BY v),
-cum AS (
-  SELECT v, nk,
-         SUM(v * nk) OVER (ORDER BY v DESC ROWS UNBOUNDED PRECEDING) AS cv,
-         SUM(nk) OVER (ORDER BY v DESC ROWS UNBOUNDED PRECEDING) AS ck
-  FROM summ),
-tot AS (
-  SELECT CAST(SUM(CAST(round(v, 9) AS DECIMAL(28,9))) AS DOUBLE) AS tv,
-         COUNT(*) AS tk
-  FROM per),
-sel AS ({u})
-SELECT frac, n_keys,
-       round(CAST(n_keys AS DOUBLE) / tk, 6) AS key_share,
-       round(LEAST((cv - v * nk + (n_keys - (ck - nk)) * v) / tv, 1.0), 6)
-         AS value_share
-FROM sel
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18r: grouped OLS, join-cardinality audit, Matryoshka
 # truncation recall
 # ---------------------------------------------------------------------------
-
-
-def q_orders_ols(spark, sf_dir):
-    """Closed-form grouped OLS (profiling.grouped_ols): extended
-    price regressed on quantity per return flag; the oracle replays
-    the 9dp-DECIMAL moment sums and the slope/intercept/r2 algebra."""
-    from graph_importer_spark.operators.profiling import grouped_ols
-
-    li = T(spark, sf_dir, "lineitem")
-    return grouped_ols(li, "l_returnflag", "l_quantity", "l_extendedprice")
-
-
-ORACLE_ORDERS_OLS = r"""
-WITH a AS (
-  SELECT l_returnflag AS grp, COUNT(*) AS n,
-         SUM(CAST(round(CAST(l_quantity AS DOUBLE), 9)
-                  AS DECIMAL(38,9))) AS sx,
-         SUM(CAST(round(CAST(l_extendedprice AS DOUBLE), 9)
-                  AS DECIMAL(38,9))) AS sy,
-         SUM(CAST(round(CAST(l_quantity AS DOUBLE)
-                        * CAST(l_quantity AS DOUBLE), 9)
-                  AS DECIMAL(38,9))) AS sxx,
-         SUM(CAST(round(CAST(l_extendedprice AS DOUBLE)
-                        * CAST(l_extendedprice AS DOUBLE), 9)
-                  AS DECIMAL(38,9))) AS syy,
-         SUM(CAST(round(CAST(l_quantity AS DOUBLE)
-                        * CAST(l_extendedprice AS DOUBLE), 9)
-                  AS DECIMAL(38,9))) AS sxy
-  FROM lineitem GROUP BY l_returnflag),
-m AS (
-  SELECT grp, n,
-         CAST(sx AS DOUBLE) AS sx, CAST(sy AS DOUBLE) AS sy,
-         CAST(sxx AS DOUBLE) AS sxx, CAST(syy AS DOUBLE) AS syy,
-         CAST(sxy AS DOUBLE) AS sxy
-  FROM a)
-SELECT grp, n,
-       CASE WHEN sxx - sx * sx / n > 0
-            THEN round((sxy - sx * sy / n) / (sxx - sx * sx / n), 6)
-       END AS slope,
-       CASE WHEN sxx - sx * sx / n > 0
-            THEN round((sy - ((sxy - sx * sy / n)
-                              / (sxx - sx * sx / n)) * sx) / n, 6)
-       END AS intercept,
-       CASE WHEN sxx - sx * sx / n > 0 AND syy - sy * sy / n > 0
-            THEN round((sxy - sx * sy / n) * (sxy - sx * sy / n)
-                       / ((sxx - sx * sx / n) * (syy - sy * sy / n)), 6)
-       END AS r2
-FROM m
-"""
 
 
 def q_join_card_audit(spark, sf_dir):
@@ -7573,56 +7287,6 @@ FROM base b LEFT JOIN hit h USING (query_id)
 # ---------------------------------------------------------------------------
 # Round-4 session-18s: information gain, CUSUM changepoint
 # ---------------------------------------------------------------------------
-
-
-def q_orders_infogain(spark, sf_dir):
-    """Information-gain feature ranking (profiling.information_gain):
-    order priority and order month scored against the order-status
-    label; the oracle replays the unpivot census and every entropy
-    term."""
-    from graph_importer_spark.operators.profiling import information_gain
-
-    o = T(spark, sf_dir, "orders").select(
-        "o_orderstatus",
-        "o_orderpriority",
-        F.month("o_orderdate").cast("string").alias("omonth"),
-    )
-    return information_gain(o, "o_orderstatus", ["o_orderpriority", "omonth"])
-
-
-ORACLE_ORDERS_INFOGAIN = r"""
-WITH base AS (
-  SELECT o_orderstatus AS y, o_orderpriority AS p,
-         CAST(month(o_orderdate) AS VARCHAR) AS m
-  FROM orders),
-pairs AS (
-  SELECT y, 'o_orderpriority' AS f, p AS v FROM base
-  UNION ALL SELECT y, 'omonth', m FROM base),
-cell AS (SELECT f, v, y, COUNT(*) AS n FROM pairs GROUP BY f, v, y),
-perv AS (SELECT f, v, SUM(n) AS nv FROM cell GROUP BY f, v),
-entv AS (
-  SELECT cell.f, cell.v, perv.nv,
-         round(-SUM((CAST(cell.n AS DOUBLE) / perv.nv)
-                    * log2(CAST(cell.n AS DOUBLE) / perv.nv)), 9) AS hv
-  FROM cell JOIN perv ON perv.f = cell.f AND perv.v = cell.v
-  GROUP BY cell.f, cell.v, perv.nv),
-tot AS (SELECT f, COUNT(*) AS nt FROM pairs GROUP BY f),
-lab AS (SELECT f, y, COUNT(*) AS n FROM pairs GROUP BY f, y),
-hl AS (
-  SELECT lab.f, tot.nt,
-         round(-SUM((CAST(lab.n AS DOUBLE) / tot.nt)
-                    * log2(CAST(lab.n AS DOUBLE) / tot.nt)), 9) AS hl
-  FROM lab JOIN tot USING (f) GROUP BY lab.f, tot.nt),
-cond AS (
-  SELECT entv.f,
-         round(SUM((CAST(entv.nv AS DOUBLE) / tot.nt) * entv.hv), 9) AS hc,
-         COUNT(*) AS n_values
-  FROM entv JOIN tot USING (f) GROUP BY entv.f, tot.nt)
-SELECT hl.f AS feature, cond.n_values,
-       round(hl.hl, 6) AS h_label, round(cond.hc, 6) AS h_cond,
-       round(hl.hl - cond.hc, 6) AS info_gain
-FROM hl JOIN cond USING (f)
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -7857,43 +7521,6 @@ FROM p
 """
 
 
-def q_orders_woe(spark, sf_dir):
-    """Weight-of-evidence / IV encoding (profiling.woe_iv): order
-    priority against the status='F' event label; smoothed cells; the
-    oracle replays every ratio."""
-    from graph_importer_spark.operators.profiling import woe_iv
-
-    o = T(spark, sf_dir, "orders").select(
-        "o_orderpriority",
-        (F.col("o_orderstatus") == "F").cast("int").alias("bad"),
-    )
-    return woe_iv(o, "o_orderpriority", "bad")
-
-
-ORACLE_ORDERS_WOE = r"""
-WITH base AS (
-  SELECT o_orderpriority AS value,
-         CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y
-  FROM orders),
-per AS (
-  SELECT value, COUNT(*) AS n,
-         SUM(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS n_good,
-         SUM(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS n_bad
-  FROM base GROUP BY value),
-tot AS (
-  SELECT SUM(n_good) AS tg, SUM(n_bad) AS tb, COUNT(*) AS nc FROM per)
-SELECT value, n, CAST(n_good AS BIGINT) AS n_good,
-       CAST(n_bad AS BIGINT) AS n_bad,
-       round(ln(((n_good + 0.5) / (tg + 0.5 * nc))
-                / ((n_bad + 0.5) / (tb + 0.5 * nc))), 6) AS woe,
-       round((((n_good + 0.5) / (tg + 0.5 * nc))
-              - ((n_bad + 0.5) / (tb + 0.5 * nc)))
-             * ln(((n_good + 0.5) / (tg + 0.5 * nc))
-                  / ((n_bad + 0.5) / (tb + 0.5 * nc))), 6) AS iv_contrib
-FROM per, tot
-"""
-
-
 def q_mm_frame_energy(spark, sf_dir):
     """Per-frame energy stats (multimodal.frame_energy): exact
     integer byte sums per 4-frame split; the oracle replays the
@@ -8003,67 +7630,6 @@ SELECT b.subj, round(before_val, 6) AS before_val,
        round(after_val - before_val, 6) AS gap,
        after_val < before_val AS is_violation
 FROM b JOIN a USING (subj)
-"""
-
-
-def q_orders_bootstrap(spark, sf_dir):
-    """Poisson-bootstrap CI for mean order value (evalmetrics.
-    poisson_bootstrap_ci, Chamandy et al. 2012): 40 replicates,
-    90% interval; the oracle replays the inverse-CDF weights and the
-    replicate-mean quantiles."""
-    from graph_importer_spark.operators.evalmetrics import (
-        poisson_bootstrap_ci,
-    )
-
-    o = T(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 4000)
-    return poisson_bootstrap_ci(
-        o, "o_orderkey", "o_totalprice", n_replicates=40, alpha=0.1
-    )
-
-
-def _oracle_orders_bootstrap(
-    n_rep: int = 40, alpha: float = 0.1, seed: int = 42
-) -> str:
-    from graph_importer_spark.operators.evalmetrics import _POISSON_CUM
-
-    poly = " + ".join(
-        f"CAST(strpos('0123456789abcdef', substring(h8, {j + 1}, 1)) - 1 AS BIGINT)"
-        f" * {16 ** (7 - j)}"
-        for j in range(8)
-    )
-    w = str(len(_POISSON_CUM))
-    for k in range(len(_POISSON_CUM) - 1, -1, -1):
-        w = f"CASE WHEN u < {_POISSON_CUM[k]} THEN {k} ELSE {w} END"
-    return f"""
-WITH o AS (
-  SELECT CAST(o_orderkey AS VARCHAR) AS id,
-         CAST(round(CAST(o_totalprice AS DOUBLE), 9)
-              AS DECIMAL(28,9)) AS v
-  FROM orders WHERE o_orderkey < 4000),
-fan AS (
-  SELECT id, v, CAST(u.b AS BIGINT) AS b,
-         substring(md5(id || '#' || CAST(u.b AS VARCHAR) || '#{seed}'),
-                   1, 8) AS h8
-  FROM o, UNNEST(generate_series(0, {n_rep - 1})) u(b)),
-wt AS (
-  SELECT b, v, ({w}) AS w
-  FROM (SELECT b, v, ({poly}) % 1000000 AS u, h8 FROM fan)),
-per AS (
-  SELECT b, SUM(w) AS n, SUM(v * w) AS s
-  FROM wt GROUP BY b HAVING SUM(w) > 0),
-means AS (SELECT CAST(s AS DOUBLE) / n AS m FROM per),
-q AS (
-  SELECT quantile_cont(m, [{alpha / 2}, {1 - alpha / 2}]) AS qq,
-         COUNT(*) AS nb
-  FROM means),
-base AS (
-  SELECT COUNT(*) AS n,
-         CAST(SUM(v) AS DOUBLE) / COUNT(*) AS m
-  FROM o)
-SELECT base.n, round(base.m, 6) AS mean,
-       round(qq[1], 6) AS ci_lo, round(qq[2], 6) AS ci_hi,
-       nb AS n_replicates
-FROM base, q
 """
 
 
@@ -8242,97 +7808,9 @@ FROM w
 # ---------------------------------------------------------------------------
 
 
-_CORR_COLS = ["l_discount", "l_extendedprice", "l_quantity", "l_tax"]
-
-
-def q_orders_corr(spark, sf_dir):
-    """One-pass pairwise Pearson matrix (profiling.
-    correlation_matrix) over four lineitem measures; the oracle
-    replays the 9dp-DECIMAL moment sums and the r algebra."""
-    from graph_importer_spark.operators.profiling import correlation_matrix
-
-    li = T(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 4000)
-    return correlation_matrix(li, _CORR_COLS)
-
-
-def _oracle_orders_corr() -> str:
-    cols = sorted(_CORR_COLS)
-    sums = []
-    for c in cols:
-        sums.append(
-            f"SUM(CAST(round(CAST({c} AS DOUBLE), 9) AS DECIMAL(38,9)))"
-            f" AS s_{c}"
-        )
-        sums.append(
-            f"SUM(CAST(round(CAST({c} AS DOUBLE) * CAST({c} AS DOUBLE), 9)"
-            f" AS DECIMAL(38,9))) AS q_{c}"
-        )
-    pair_rows = []
-    for i, a in enumerate(cols):
-        for b in cols[i + 1:]:
-            sums.append(
-                f"SUM(CAST(round(CAST({a} AS DOUBLE) * CAST({b} AS DOUBLE), 9)"
-                f" AS DECIMAL(38,9))) AS p_{a}_{b}"
-            )
-            va = f"(CAST(q_{a} AS DOUBLE) - CAST(s_{a} AS DOUBLE) * CAST(s_{a} AS DOUBLE) / n)"
-            vb = f"(CAST(q_{b} AS DOUBLE) - CAST(s_{b} AS DOUBLE) * CAST(s_{b} AS DOUBLE) / n)"
-            cov = f"(CAST(p_{a}_{b} AS DOUBLE) - CAST(s_{a} AS DOUBLE) * CAST(s_{b} AS DOUBLE) / n)"
-            pair_rows.append(
-                f"SELECT '{a}' AS col_a, '{b}' AS col_b, n,\n"
-                f"  CASE WHEN {va} > 0 AND {vb} > 0\n"
-                f"       THEN round({cov} / sqrt({va} * {vb}), 6) END AS r\n"
-                f"FROM summ"
-            )
-    return f"""
-WITH summ AS (
-  SELECT COUNT(*) AS n, {', '.join(sums)}
-  FROM lineitem WHERE l_orderkey < 4000)
-{' UNION ALL '.join(pair_rows)}
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18ee: Gini coefficient, Markov stationary distribution
 # ---------------------------------------------------------------------------
-
-
-def q_orders_gini(spark, sf_dir):
-    """Exact Gini over customer revenue (profiling.gini_coefficient)
-    via the distinct-value tie-group walk; the oracle replays the
-    integer rank algebra."""
-    from graph_importer_spark.operators.profiling import gini_coefficient
-
-    o = T(spark, sf_dir, "orders")
-    return gini_coefficient(o, "o_custkey", "o_totalprice")
-
-
-ORACLE_ORDERS_GINI = r"""
-WITH per AS (
-  SELECT o_custkey AS k,
-         round(CAST(SUM(CAST(round(CAST(o_totalprice AS DOUBLE), 9)
-                             AS DECIMAL(28,9))) AS DOUBLE), 2) AS v
-  FROM orders GROUP BY o_custkey),
-summ AS (SELECT v, COUNT(*) AS m FROM per GROUP BY v),
-walk AS (
-  SELECT v, m,
-         COALESCE(SUM(m) OVER (ORDER BY v
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS r
-  FROM summ),
-tot AS (
-  SELECT COUNT(*) AS n,
-         SUM(CAST(round(v, 9) AS DECIMAL(28,9))) AS t
-  FROM per),
-agg AS (
-  SELECT SUM(CAST(round(v * (m * (2 * r + m) - m * tot.n), 9)
-                  AS DECIMAL(38,9))) AS num,
-         MAX(tot.n) AS n_keys, MAX(tot.t) AS t
-  FROM walk, tot)
-SELECT n_keys, round(CAST(t AS DOUBLE), 2) AS total,
-       CASE WHEN CAST(t AS DOUBLE) > 0
-            THEN round(CAST(num AS DOUBLE)
-                       / (n_keys * CAST(t AS DOUBLE)), 6) END AS gini
-FROM agg
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -8726,7 +8204,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # pack_sequences, kg_incremental_entities) are re-verified
     # locally via the full scripts/check_contract.py sweep like
     # every out-of-window row.
-    "orders_rfm": q_orders_rfm,
     "emb_whiten": q_emb_whiten,
     # round-4 session-18b additions: multi-touch attribution, TransE
     # ranking eval, stem vocabulary, crawl-frontier scheduling (four
@@ -8748,7 +8225,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # round-4 session-18f additions: association rules, FS-EM
     # parameter training, double-sweep diameter, calibration +
     # regression eval (five more tail-of-window rows rotate out).
-    "orders_rules": q_orders_rules,
     "er_fs_em": q_er_fs_em,
     "graph_diameter": q_graph_diameter,
     # round-4 session-18g additions: soundex blocking, predicate
@@ -8760,7 +8236,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # PSI drift monitor, cohort LTV curves, dedup storage savings.
     "imp_quarantine": q_imp_quarantine,
     "drift_psi": q_drift_psi,
-    "orders_ltv": q_orders_ltv,
     # round-4 session-18i additions: posting delta compression,
     # extractive summarization, churn label builder.
     # round-4 session-18j additions: JSON schema inference, quotient
@@ -8777,7 +8252,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # round-4 session-18m additions: maximal matching, A/B readout,
     # dbt-style checks, feature hashing.
     "graph_matching": q_graph_matching,
-    "orders_checks": q_orders_checks,
     # round-4 session-18n additions: autocomplete, DiD, cycle motifs.
     "kg_motif_cycle": q_kg_motif_cycle,
     # round-4 session-18o additions: topic labeling, deterministic
@@ -8787,14 +8261,11 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # round-4 session-18q additions: Benford audit, Kaplan-Meier,
     # Pareto concentration.
     "kg_benford": q_kg_benford,
-    "orders_pareto": q_orders_pareto,
     # round-4 session-18r additions: grouped OLS, join-cardinality
     # audit, Matryoshka truncation recall.
-    "orders_ols": q_orders_ols,
     "join_card_audit": q_join_card_audit,
     "emb_matryoshka": q_emb_matryoshka,
     # round-4 session-18s additions: information gain, CUSUM.
-    "orders_infogain": q_orders_infogain,
     # round-4 session-18t additions: seasonal anomalies, k-fold.
     "sample_kfold": q_sample_kfold,
     # round-4 session-18u additions: embeddedness, burstiness,
@@ -8809,13 +8280,11 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # round-4 session-18x additions: label-noise audit, WoE/IV,
     # frame energy.
     "emb_label_noise": q_emb_label_noise,
-    "orders_woe": q_orders_woe,
     "mm_frame_energy": q_mm_frame_energy,
     # round-4 session-18y addition: Dirichlet query-likelihood.
     # round-4 session-18z additions: forecast backtest, temporal
     # consistency, Poisson bootstrap.
     "kg_temporal": q_kg_temporal,
-    "orders_bootstrap": q_orders_bootstrap,
     # round-4 session-18aa additions: MAP@k, fairness audit.
     # round-4 session-18bb additions: Katz centrality, BoW dedup.
     "graph_katz": q_graph_katz,
@@ -8823,9 +8292,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_range_types": q_kg_range_types,
     # round-4 session-18dd additions: lexical diversity, correlation
     # matrix.
-    "orders_corr": q_orders_corr,
     # round-4 session-18ee additions: Gini, stationary distribution.
-    "orders_gini": q_orders_gini,
     # round-4 session-18ff addition: KMV/theta sketch.
     "sketch_kmv": q_sketch_kmv,
     # round-4 session-18gg additions: conductance, KWIC, alert
@@ -9096,7 +8563,6 @@ ORACLES: dict[str, str] = {
     "graph_reciprocity": ORACLE_GRAPH_RECIPROCITY,
     "kg_literal_norm": ORACLE_KG_LITERAL_NORM,
     "kg_truthfinder": ORACLE_KG_TRUTHFINDER,
-    "orders_rfm": ORACLE_ORDERS_RFM,
     "emb_whiten": ORACLE_EMB_WHITEN,
     "kg_transe_rank": _oracle_kg_transe_rank(),
     "graph_simrank": ORACLE_GRAPH_SIMRANK,
@@ -9105,7 +8571,6 @@ ORACLES: dict[str, str] = {
     "mm_phash_pairs": ORACLE_MM_PHASH_PAIRS,
     "graph_mis": _oracle_graph_mis(),
     "emb_decontam": _oracle_emb_decontam(),
-    "orders_rules": ORACLE_ORDERS_RULES,
     "er_fs_em": _oracle_er_fs_em(),
     "graph_diameter": ORACLE_GRAPH_DIAMETER,
     "er_soundex": _oracle_er_soundex(),
@@ -9113,34 +8578,25 @@ ORACLES: dict[str, str] = {
     "sim_ann_multiprobe": _oracle_sim_ann_multiprobe(),
     "imp_quarantine": ORACLE_IMP_QUARANTINE,
     "drift_psi": ORACLE_DRIFT_PSI,
-    "orders_ltv": ORACLE_ORDERS_LTV,
     "graph_quotient": ORACLE_GRAPH_QUOTIENT,
     "graph_shortest_path": ORACLE_GRAPH_SHORTEST_PATH,
     "graph_cc_sizes": ORACLE_GRAPH_CC_SIZES,
     "kg_redirects": ORACLE_KG_REDIRECTS,
     "graph_cocitation": ORACLE_GRAPH_COCITATION,
     "graph_matching": _oracle_graph_matching(),
-    "orders_checks": ORACLE_ORDERS_CHECKS,
     "kg_motif_cycle": ORACLE_KG_MOTIF_CYCLE,
     "kg_benford": _oracle_kg_benford(),
-    "orders_pareto": _oracle_orders_pareto(),
-    "orders_ols": ORACLE_ORDERS_OLS,
     "join_card_audit": ORACLE_JOIN_CARD_AUDIT,
     "emb_matryoshka": _oracle_emb_matryoshka(),
-    "orders_infogain": ORACLE_ORDERS_INFOGAIN,
     "sample_kfold": _oracle_sample_kfold(),
     "graph_embeddedness": ORACLE_GRAPH_EMBEDDEDNESS,
     "schema_fd": ORACLE_SCHEMA_FD,
     "stream_cdc_apply": ORACLE_STREAM_CDC_APPLY,
     "emb_label_noise": _oracle_emb_label_noise(),
-    "orders_woe": ORACLE_ORDERS_WOE,
     "mm_frame_energy": ORACLE_MM_FRAME_ENERGY,
     "kg_temporal": ORACLE_KG_TEMPORAL,
-    "orders_bootstrap": _oracle_orders_bootstrap(),
     "graph_katz": _oracle_graph_katz(),
     "kg_range_types": ORACLE_KG_RANGE_TYPES,
-    "orders_corr": _oracle_orders_corr(),
-    "orders_gini": ORACLE_ORDERS_GINI,
     "sketch_kmv": _oracle_sketch_kmv(),
     "graph_conductance": ORACLE_GRAPH_CONDUCTANCE,
     "emb_drift": ORACLE_EMB_DRIFT,
