@@ -2560,30 +2560,6 @@ FROM nw JOIN deg da ON da.u = nw.a JOIN deg db ON db.u = nw.b
 """
 
 
-def q_er_blocking(spark, sf_dir):
-    """Sorted-neighborhood ER blocking over part names
-    (operators/blocking.py): exact global rank by (p_name, p_partkey)
-    via the two-phase bucket-offset rank (order-preserving first-letter
-    bucket; NO single-partition window), then one rank equi-join pairs
-    each record with the next 2 in sort order.  The oracle is the
-    textbook ROW_NUMBER formulation the distributed plan must equal."""
-    from graph_importer_spark.operators.blocking import sorted_neighborhood_pairs
-
-    p = T(spark, sf_dir, "part").select("p_partkey", "p_name")
-    return sorted_neighborhood_pairs(
-        p, "p_partkey", "p_name", bucket=F.substring("p_name", 1, 1), window=3
-    )
-
-
-ORACLE_ER_BLOCKING = """
-WITH r AS (
-  SELECT p_partkey, ROW_NUMBER() OVER (ORDER BY p_name, p_partkey) AS rnk
-  FROM part)
-SELECT a.p_partkey AS a, b.p_partkey AS b, CAST(b.rnk - a.rnk AS INT) AS dist
-FROM r a JOIN r b ON b.rnk > a.rnk AND b.rnk <= a.rnk + 2
-"""
-
-
 def q_emb_quantize(spark, sf_dir):
     """Symmetric int8 scalar quantization + reconstruction-error audit
     over the embeddings table (operators/quantize.py) — pure codegen
@@ -3160,107 +3136,6 @@ FROM t
 """
 
 
-_FS_WEIGHTS = {
-    "same_nation": (0.95, 0.04),
-    "same_segment": (0.9, 0.2),
-    "near_balance": (0.8, 0.1),
-}
-
-
-def q_er_fellegi_sunter(spark, sf_dir):
-    """Fellegi-Sunter record-linkage scoring (operators/linkage.fs_score)
-    over sorted-neighborhood candidate pairs of customers: three field
-    agreements (nation, segment, |acctbal| gap < 500) fold into the
-    log-likelihood-ratio weight; decisions at lower=-2 / upper=2.
-    The oracle replays the ROW_NUMBER pairing and the CASE sum with the
-    identical IEEE log constants inlined."""
-    from graph_importer_spark.operators.blocking import sorted_neighborhood_pairs
-    from graph_importer_spark.operators.linkage import fs_score
-
-    c = T(spark, sf_dir, "customer")
-    pairs = sorted_neighborhood_pairs(
-        c.select("c_custkey", "c_name"),
-        "c_custkey",
-        "c_name",
-        bucket=F.substring("c_name", 1, 15),
-        window=3,
-    )
-    attrs = c.select("c_custkey", "c_nationkey", "c_mktsegment", "c_acctbal")
-    j = (
-        pairs.join(
-            attrs.select(
-                F.col("c_custkey").alias("a"),
-                F.col("c_nationkey").alias("na"),
-                F.col("c_mktsegment").alias("sa"),
-                F.col("c_acctbal").alias("ba"),
-            ),
-            "a",
-        )
-        .join(
-            attrs.select(
-                F.col("c_custkey").alias("b"),
-                F.col("c_nationkey").alias("nb"),
-                F.col("c_mktsegment").alias("sb"),
-                F.col("c_acctbal").alias("bb"),
-            ),
-            "b",
-        )
-        .select(
-            "a",
-            "b",
-            (F.col("na") == F.col("nb")).alias("same_nation"),
-            (F.col("sa") == F.col("sb")).alias("same_segment"),
-            (F.abs(F.col("ba") - F.col("bb")) < 500.0).alias("near_balance"),
-        )
-    )
-    out = fs_score(j, _FS_WEIGHTS, lower=-2.0, upper=2.0)
-    return out.select(
-        "a",
-        "b",
-        F.col("same_nation").cast("int").alias("same_nation"),
-        F.col("same_segment").cast("int").alias("same_segment"),
-        F.col("near_balance").cast("int").alias("near_balance"),
-        "fs_weight",
-        "fs_decision",
-    )
-
-
-def _oracle_er_fs() -> str:
-    import math
-
-    cases = []
-    for field, (m, u) in sorted(_FS_WEIGHTS.items()):
-        cases.append(
-            f"CASE WHEN {field} THEN CAST({math.log(m / u)!r} AS DOUBLE)"
-            f" ELSE CAST({math.log((1.0 - m) / (1.0 - u))!r} AS DOUBLE) END"
-        )
-    total = " + ".join(cases)
-    return f"""
-WITH r AS (
-  SELECT c_custkey, ROW_NUMBER() OVER (ORDER BY c_name, c_custkey) AS rnk
-  FROM customer),
-p AS (
-  SELECT a.c_custkey AS a, b.c_custkey AS b
-  FROM r a JOIN r b ON b.rnk > a.rnk AND b.rnk <= a.rnk + 2),
-j AS (
-  SELECT p.a, p.b,
-         ca.c_nationkey = cb.c_nationkey AS same_nation,
-         ca.c_mktsegment = cb.c_mktsegment AS same_segment,
-         abs(ca.c_acctbal - cb.c_acctbal) < 500.0 AS near_balance
-  FROM p JOIN customer ca ON ca.c_custkey = p.a
-         JOIN customer cb ON cb.c_custkey = p.b),
-s AS (SELECT a, b, same_nation, same_segment, near_balance,
-             round({total}, 6) AS fs_weight FROM j)
-SELECT a, b, CAST(same_nation AS INT) AS same_nation,
-       CAST(same_segment AS INT) AS same_segment,
-       CAST(near_balance AS INT) AS near_balance, fs_weight,
-       CASE WHEN fs_weight >= 2.0 THEN 'match'
-            WHEN fs_weight <= -2.0 THEN 'non_match'
-            ELSE 'possible' END AS fs_decision
-FROM s
-"""
-
-
 def q_shard_rendezvous(spark, sf_dir):
     """Rendezvous (highest-random-weight) shard assignment of the
     documents table onto 8 buckets (operators/layout.rendezvous_shard):
@@ -3743,47 +3618,6 @@ GROUP BY 1, 2 HAVING COUNT(*) >= 2
 """
 
 
-def q_er_golden_record(spark, sf_dir):
-    """Survivorship merge (linkage.golden_record): customers clustered
-    by custkey % 40 collapse to one golden row — max acctbal, min
-    name, MODE mktsegment (ties to the larger string, the profiling
-    convention).  Oracle replays base aggregates + the mode pass."""
-    from graph_importer_spark.operators.linkage import golden_record
-
-    c = T(spark, sf_dir, "customer")
-    g = c.select(
-        (F.col("c_custkey") % 40).alias("cluster"),
-        "c_name",
-        "c_acctbal",
-        "c_mktsegment",
-    )
-    return golden_record(
-        g,
-        "cluster",
-        {"c_acctbal": "max", "c_name": "min", "c_mktsegment": "mode"},
-    )
-
-
-ORACLE_ER_GOLDEN = """
-WITH g AS (
-  SELECT c_custkey % 40 AS cluster, c_name, c_acctbal, c_mktsegment
-  FROM customer),
-base AS (
-  SELECT cluster, COUNT(*) AS n_members, MAX(c_acctbal) AS c_acctbal,
-         MIN(c_name) AS c_name
-  FROM g GROUP BY cluster),
-cnt AS (
-  SELECT cluster, c_mktsegment AS value, COUNT(*) AS cnt FROM g
-  WHERE c_mktsegment IS NOT NULL GROUP BY 1, 2),
-m AS (
-  SELECT cluster,
-         arg_max(value, printf('%012d', cnt) || '|' || value) AS c_mktsegment
-  FROM cnt GROUP BY cluster)
-SELECT b.cluster, b.n_members, b.c_acctbal, b.c_name, m.c_mktsegment
-FROM base b LEFT JOIN m USING (cluster)
-"""
-
-
 def q_cdc_apply(spark, sf_dir):
     """CDC MERGE (scd2.apply_cdc): a synthesized change log over the
     customer snapshot — two competing updates per %10==0 key (v2 must
@@ -3848,28 +3682,6 @@ SELECT c_custkey,
        CASE WHEN l.op IS NOT NULL THEN l.c_acctbal ELSE s.c_acctbal END AS c_acctbal
 FROM snap s FULL JOIN latest l USING (c_custkey)
 WHERE l.op IS NULL OR l.op <> 'D'
-"""
-
-
-def q_er_edit_pairs(spark, sf_dir):
-    """Complete edit-distance-1 similarity self-join over 400 customer
-    names (dedup.edit_distance_pairs, PassJoin k=1 segment blocking).
-    The oracle is the BRUTE all-pairs levenshtein join — matching it
-    proves the blocking found every qualifying pair, not a recall
-    sample."""
-    from graph_importer_spark.operators.dedup import edit_distance_pairs
-
-    c = T(spark, sf_dir, "customer").filter(F.col("c_custkey") < 400)
-    return edit_distance_pairs(c, "c_custkey", "c_name", k=1)
-
-
-ORACLE_ER_EDIT_PAIRS = """
-WITH s AS (
-  SELECT c_custkey AS id, c_name AS name FROM customer
-  WHERE c_custkey < 400 AND length(c_name) >= 2)
-SELECT a.id AS id1, b.id AS id2, levenshtein(a.name, b.name) AS dist
-FROM s a JOIN s b ON a.id < b.id
-WHERE levenshtein(a.name, b.name) <= 1
 """
 
 
@@ -4323,44 +4135,6 @@ LEFT JOIN intra USING (community), m
 """
 
 
-def q_er_meta_blocking(spark, sf_dir):
-    """Meta-blocking with weighted edge pruning (Papadakis TKDE'13;
-    blocking.meta_blocking_pairs): token blocking over part
-    name+type+brand strings, CBS pair weights, keep at-or-above-mean
-    edges (the paper's WEP threshold).  The oracle replays blocking, the cap, the weights, and the
-    mean gate."""
-    from graph_importer_spark.operators.blocking import meta_blocking_pairs
-
-    p = T(spark, sf_dir, "part").filter(F.col("p_partkey") < 400)
-    recs = p.select(
-        F.col("p_partkey").alias("id"),
-        F.concat_ws(" ", "p_name", "p_type", "p_brand").alias("name"),
-    )
-    return meta_blocking_pairs(recs, "id", "name", max_block=60)
-
-
-ORACLE_ER_META_BLOCKING = r"""
-WITH recs AS (
-  SELECT p_partkey AS id,
-         p_name || ' ' || p_type || ' ' || p_brand AS name
-  FROM part WHERE p_partkey < 400),
-tok AS (
-  SELECT DISTINCT id, u.t AS token
-  FROM recs, unnest(string_split_regex(
-         trim(regexp_replace(lower(regexp_replace(name, '[^A-Za-z0-9]+', ' ', 'g')),
-              '\s+', ' ', 'g')), '\s+')) AS u(t)
-  WHERE u.t <> ''),
-sz AS (SELECT token, COUNT(*) AS n FROM tok GROUP BY token),
-keep AS (SELECT tok.id, tok.token FROM tok JOIN sz USING (token) WHERE sz.n <= 60),
-pairs AS (
-  SELECT x.id AS a, y.id AS b, COUNT(*) AS w
-  FROM keep x JOIN keep y USING (token)
-  WHERE x.id < y.id GROUP BY x.id, y.id),
-mw AS (SELECT AVG(w) AS mean FROM pairs)
-SELECT a, b, w FROM pairs, mw WHERE w >= mean
-"""
-
-
 def q_sim_cosine_join(spark, sf_dir):
     """EXACT TF-IDF cosine similarity join >= 0.8 via symmetric prefix
     filtering (similarity.cosine_prefix_pairs, Bayardo WWW'07); the
@@ -4551,68 +4325,6 @@ n2 AS (
   FROM adj JOIN l1 ON l1.id = adj.nb GROUP BY adj.id)
 SELECT l1.id, md5(l1.label || '|' || n2.nbs) AS wl_label
 FROM l1 JOIN n2 USING (id)
-"""
-
-
-def q_er_block_metrics(spark, sf_dir):
-    """Blocking quality metrics (blocking.blocking_quality): pair
-    completeness and reduction ratio of the meta-blocking candidate
-    set against the identical-name gold pairs over the same 400 part
-    records; the oracle replays blocking, gold, and both ratios."""
-    from graph_importer_spark.operators.blocking import (
-        blocking_quality,
-        meta_blocking_pairs,
-    )
-
-    p = T(spark, sf_dir, "part").filter(F.col("p_partkey") < 400)
-    recs = p.select(
-        F.col("p_partkey").alias("id"),
-        F.concat_ws(" ", "p_name", "p_type", "p_brand").alias("name"),
-    )
-    cand = meta_blocking_pairs(recs, "id", "name", max_block=60)
-    x, y = p.alias("x"), p.alias("y")
-    gold = (
-        x.join(y, F.col("x.p_name") == F.col("y.p_name"))
-        .filter(F.col("x.p_partkey") < F.col("y.p_partkey"))
-        .select(
-            F.col("x.p_partkey").alias("a"), F.col("y.p_partkey").alias("b")
-        )
-    )
-    return blocking_quality(cand, gold, n_records=400)
-
-
-ORACLE_ER_BLOCK_METRICS = r"""
-WITH recs AS (
-  SELECT p_partkey AS id,
-         p_name || ' ' || p_type || ' ' || p_brand AS name
-  FROM part WHERE p_partkey < 400),
-tok AS (
-  SELECT DISTINCT id, u.t AS token
-  FROM recs, unnest(string_split_regex(
-         trim(regexp_replace(lower(regexp_replace(name, '[^A-Za-z0-9]+', ' ', 'g')),
-              '\s+', ' ', 'g')), '\s+')) AS u(t)
-  WHERE u.t <> ''),
-sz AS (SELECT token, COUNT(*) AS n FROM tok GROUP BY token),
-keep AS (SELECT tok.id, tok.token FROM tok JOIN sz USING (token) WHERE sz.n <= 60),
-pairs AS (
-  SELECT x.id AS a, y.id AS b, COUNT(*) AS w
-  FROM keep x JOIN keep y USING (token)
-  WHERE x.id < y.id GROUP BY x.id, y.id),
-mw AS (SELECT AVG(w) AS mean FROM pairs),
-cand AS (SELECT a, b FROM pairs, mw WHERE w >= mean),
-gold AS (
-  SELECT x.p_partkey AS a, y.p_partkey AS b
-  FROM part x JOIN part y ON x.p_name = y.p_name
-  WHERE x.p_partkey < y.p_partkey
-    AND x.p_partkey < 400 AND y.p_partkey < 400),
-tp AS (SELECT * FROM cand INTERSECT SELECT * FROM gold)
-SELECT (SELECT COUNT(*) FROM cand) AS n_cand,
-       (SELECT COUNT(*) FROM gold) AS n_gold,
-       (SELECT COUNT(*) FROM tp) AS n_true,
-       round((SELECT COUNT(*) FROM tp) * 1.0 / (SELECT COUNT(*) FROM gold), 6)
-         AS pair_completeness,
-       round(1.0 - (SELECT COUNT(*) FROM cand) / CAST(79800 AS DOUBLE), 6)
-         AS reduction_ratio
 """
 
 
@@ -4895,144 +4607,6 @@ FROM st, tot GROUP BY tot.ta, tot.tb
 # Round-4 session-13: composed ER pipeline, composed KG quality report,
 # readability scores
 # ---------------------------------------------------------------------------
-
-
-def q_er_pipeline(spark, sf_dir):
-    """END-TO-END entity resolution (the ER counterpart of
-    corpus_hygiene): meta-blocking candidates -> field-agreement
-    features -> Fellegi-Sunter scoring -> match pairs -> transitive
-    dup clusters -> golden-record survivorship.  Every stage is an
-    already-oracle-verified operator; this row verifies the
-    COMPOSITION (schema handoffs, decision thresholds, keeper
-    election) end to end."""
-    from graph_importer_spark.operators.blocking import meta_blocking_pairs
-    from graph_importer_spark.operators.linkage import fs_score, golden_record
-
-    p = T(spark, sf_dir, "part").filter(F.col("p_partkey") < 400)
-    recs = p.select(
-        F.col("p_partkey").alias("id"),
-        F.concat_ws(" ", "p_name", "p_type", "p_brand").alias("name"),
-    )
-    cand = meta_blocking_pairs(recs, "id", "name", max_block=60)
-    attrs = p.select("p_partkey", "p_name", "p_brand", "p_type")
-    feats = (
-        cand.join(
-            attrs.select(
-                F.col("p_partkey").alias("a"),
-                F.col("p_name").alias("_na"),
-                F.col("p_brand").alias("_ba"),
-                F.col("p_type").alias("_ta"),
-            ),
-            "a",
-        )
-        .join(
-            attrs.select(
-                F.col("p_partkey").alias("b"),
-                F.col("p_name").alias("_nb"),
-                F.col("p_brand").alias("_bb"),
-                F.col("p_type").alias("_tb"),
-            ),
-            "b",
-        )
-        .select(
-            "a",
-            "b",
-            (F.col("_na") == F.col("_nb")).alias("same_name"),
-            (F.col("_ba") == F.col("_bb")).alias("same_brand"),
-            (F.col("_ta") == F.col("_tb")).alias("same_type"),
-        )
-    )
-    scored = fs_score(
-        feats,
-        {"same_name": (0.95, 0.05), "same_brand": (0.8, 0.2),
-         "same_type": (0.7, 0.3)},
-        lower=0.0,
-        upper=3.0,
-    )
-    matches = scored.filter(F.col("fs_decision") == "match").select(
-        F.col("a").alias("id1"), F.col("b").alias("id2")
-    )
-    clusters = _dedup.dup_clusters(matches)
-    members = clusters.join(
-        attrs.withColumnRenamed("p_partkey", "doc_id"), "doc_id"
-    ).select("keeper", "p_name", "p_brand", "p_type")
-    return golden_record(
-        members, "keeper", {"p_name": "mode", "p_brand": "min", "p_type": "max"}
-    )
-
-
-def _oracle_er_pipeline() -> str:
-    import math
-
-    wn_a, wn_d = math.log(0.95 / 0.05), math.log(0.05 / 0.95)
-    wb_a, wb_d = math.log(0.8 / 0.2), math.log(0.2 / 0.8)
-    wt_a, wt_d = math.log(0.7 / 0.3), math.log(0.3 / 0.7)
-    return rf"""
-WITH RECURSIVE recs AS (
-  SELECT p_partkey AS id,
-         p_name || ' ' || p_type || ' ' || p_brand AS name
-  FROM part WHERE p_partkey < 400),
-tok AS (
-  SELECT DISTINCT id, u.t AS token
-  FROM recs, unnest(string_split_regex(
-         trim(regexp_replace(lower(regexp_replace(name, '[^A-Za-z0-9]+', ' ', 'g')),
-              '\s+', ' ', 'g')), '\s+')) AS u(t)
-  WHERE u.t <> ''),
-szt AS (SELECT token, COUNT(*) AS n FROM tok GROUP BY token),
-keep AS (SELECT tok.id, tok.token FROM tok JOIN szt USING (token)
-         WHERE szt.n <= 60),
-bpairs AS (
-  SELECT x.id AS a, y.id AS b, COUNT(*) AS w
-  FROM keep x JOIN keep y USING (token)
-  WHERE x.id < y.id GROUP BY x.id, y.id),
-mw AS (SELECT AVG(w) AS mean FROM bpairs),
-cand AS (SELECT a, b FROM bpairs, mw WHERE w >= mean),
-feats AS (
-  SELECT a, b,
-         (pa.p_name = pb.p_name) AS same_name,
-         (pa.p_brand = pb.p_brand) AS same_brand,
-         (pa.p_type = pb.p_type) AS same_type
-  FROM cand
-  JOIN part pa ON pa.p_partkey = a
-  JOIN part pb ON pb.p_partkey = b),
-scored AS (
-  SELECT a, b,
-         round((0.0
-           + CASE WHEN same_brand THEN {wb_a!r} ELSE {wb_d!r} END)
-           + CASE WHEN same_name THEN {wn_a!r} ELSE {wn_d!r} END
-           + CASE WHEN same_type THEN {wt_a!r} ELSE {wt_d!r} END, 6) AS w
-  FROM feats),
-m AS (SELECT a AS id1, b AS id2 FROM scored WHERE w >= 3.0),
-e AS (
-  SELECT id1 AS a, id2 AS b FROM m
-  UNION SELECT id2, id1 FROM m
-  UNION SELECT id1, id1 FROM m
-  UNION SELECT id2, id2 FROM m),
-reach(a, b) AS (
-  SELECT a, b FROM e
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a),
-cl AS (SELECT a AS doc_id, MIN(b) AS keeper FROM reach GROUP BY a),
-mem AS (
-  SELECT cl.keeper, p.p_name, p.p_brand, p.p_type
-  FROM cl JOIN part p ON p.p_partkey = cl.doc_id),
-base AS (
-  SELECT keeper, COUNT(*) AS n_members,
-         MIN(p_brand) AS p_brand, MAX(p_type) AS p_type
-  FROM mem GROUP BY keeper),
-cnt AS (
-  SELECT keeper, p_name AS value, COUNT(*) AS cnt FROM mem
-  WHERE p_name IS NOT NULL GROUP BY 1, 2),
-md AS (
-  SELECT keeper,
-         arg_max(value, printf('%012d', cnt) || '|' || value) AS p_name
-  FROM cnt GROUP BY keeper)
-SELECT b.keeper, b.n_members, md.p_name, b.p_brand, b.p_type
-FROM base b LEFT JOIN md USING (keeper)
-"""
-
-
-ORACLE_ER_PIPELINE = _oracle_er_pipeline()
 
 
 def q_kg_quality(spark, sf_dir):
@@ -6329,62 +5903,6 @@ GROUP BY k.id
 # ---------------------------------------------------------------------------
 
 
-_FS_EM_M = {"a1": 0.9, "a2": 0.8, "a3": 0.7}
-_FS_EM_U = {"a1": 0.1, "a2": 0.2, "a3": 0.3}
-
-
-def q_er_fs_em(spark, sf_dir):
-    """One Fellegi-Sunter EM iteration (linkage.fs_em_step) over a
-    deterministic comparison-vector table built from orders; the
-    oracle replays the <=8-pattern collapse, the 9dp-DECIMAL
-    posteriors, and each field's weighted re-estimate."""
-    from graph_importer_spark.operators.linkage import fs_em_step
-
-    o = T(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 3000)
-    pairs = o.select(
-        (F.col("o_orderkey") % 3 == 0).alias("a1"),
-        (F.col("o_orderkey") % 5 == 0).alias("a2"),
-        (F.col("o_custkey") % 2 == 0).alias("a3"),
-    )
-    return fs_em_step(pairs, ["a1", "a2", "a3"], _FS_EM_M, _FS_EM_U, p=0.2)
-
-
-def _oracle_er_fs_em() -> str:
-    wm = "0.2"
-    wu = "0.8"
-    for c, mc in _FS_EM_M.items():
-        uc = _FS_EM_U[c]
-        wm += f" * (CASE WHEN {c} THEN {mc} ELSE {round(1 - mc, 10)} END)"
-        wu += f" * (CASE WHEN {c} THEN {uc} ELSE {round(1 - uc, 10)} END)"
-    fields = "\nUNION ALL\n".join(
-        f"""SELECT '{c}' AS field,
-       round(CAST(SUM(CASE WHEN {c} THEN g * n ELSE 0 END) AS DOUBLE)
-             / CAST(SUM(g * n) AS DOUBLE), 6) AS m_new,
-       round(CAST(SUM(CASE WHEN {c} THEN (1 - g) * n ELSE 0 END) AS DOUBLE)
-             / CAST(SUM((1 - g) * n) AS DOUBLE), 6) AS u_new
-FROM pat"""
-        for c in _FS_EM_M
-    )
-    return f"""
-WITH pv AS (
-  SELECT o_orderkey % 3 = 0 AS a1, o_orderkey % 5 = 0 AS a2,
-         o_custkey % 2 = 0 AS a3
-  FROM orders WHERE o_orderkey < 3000),
-pat0 AS (
-  SELECT a1, a2, a3, COUNT(*) AS n FROM pv GROUP BY a1, a2, a3),
-pat AS (
-  SELECT a1, a2, a3, n,
-         CAST(round(({wm}) / (({wm}) + ({wu})), 9) AS DECIMAL(28,9)) AS g
-  FROM pat0)
-{fields}
-UNION ALL
-SELECT '__prior__',
-       round(CAST(SUM(g * n) AS DOUBLE) / SUM(n), 6),
-       round(CAST(SUM(g * n) AS DOUBLE) / SUM(n), 6)
-FROM pat
-"""
-
-
 def q_graph_diameter(spark, sf_dir):
     """Double-sweep diameter lower bound (analytics.
     double_sweep_diameter) on the l_orderkey<600 co-purchase subgraph;
@@ -6444,56 +5962,6 @@ FROM s1, far
 # Round-4 session-18g: soundex blocking, SPARQL alternation chains,
 # multi-probe LSH, content-defined chunking
 # ---------------------------------------------------------------------------
-
-
-_SDX_NAMES = [
-    "robert", "rupert", "smith", "smyth", "johnson", "jonson", "tymczak",
-    "pfister", "ashcraft", "ashcroft", "jackson", "jaxon", "miller",
-    "muller", "honeyman", "hanman",
-]
-
-
-def q_er_soundex(spark, sf_dir):
-    """Simplified-Soundex blocking keys (blocking.soundex_key) over a
-    deterministic name column (16 classic confusable surnames indexed
-    by custkey); the oracle replays the translate + collapse + strip
-    chain clause for clause."""
-    from graph_importer_spark.operators.blocking import soundex_key
-
-    c = T(spark, sf_dir, "customer")
-    name = F.element_at(
-        F.array(*[F.lit(n) for n in _SDX_NAMES]),
-        (F.col("c_custkey") % 16 + 1).cast("int"),
-    )
-    return c.select(
-        "c_custkey", name.alias("name"), soundex_key(name).alias("sdx")
-    )
-
-
-def _oracle_er_soundex() -> str:
-    names_arr = "[" + ", ".join(f"'{n}'" for n in _SDX_NAMES) + "]"
-    collapsed = "translate(u, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', '01230120022455012623010202')"
-    for _ in range(5):
-        for d in "123456":
-            collapsed = f"replace({collapsed}, '{d}{d}', '{d}')"
-    return f"""
-WITH c AS (
-  SELECT c_custkey, ({names_arr})[CAST(c_custkey % 16 + 1 AS INT)] AS name
-  FROM customer),
-u0 AS (
-  SELECT c_custkey, name,
-         upper(regexp_replace(name, '[^A-Za-z]', '', 'g')) AS u
-  FROM c),
-t AS (
-  SELECT c_custkey, name, u,
-         replace(substring({collapsed}, 2), '0', '') AS tail
-  FROM u0)
-SELECT c_custkey, name,
-       CASE WHEN u = '' THEN NULL
-            ELSE substring(u, 1, 1) || rpad(substring(tail, 1, 3), 3, '0')
-       END AS sdx
-FROM t
-"""
 
 
 def q_kg_path_alt(spark, sf_dir):
@@ -8155,7 +7623,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # sweep, like every out-of-window row.
     "kg_constraints": q_kg_constraints,
     "graph_modularity": q_graph_modularity,
-    "er_meta_blocking": q_er_meta_blocking,
     "sim_cosine_join": q_sim_cosine_join,
     "layout_compaction": q_layout_compaction,
     "split_leakage": q_split_leakage,
@@ -8166,7 +7633,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # via the full scripts/check_contract.py sweep.
     "graph_butterfly": q_graph_butterfly,
     "graph_wl": q_graph_wl,
-    "er_block_metrics": q_er_block_metrics,
     # round-4 session-12 additions (same window rule): dangling-edge
     # audit, instance schema matching, web-table lifting, containment
     # keeper, degree-distribution KS, LSH parameter planning.
@@ -8177,7 +7643,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # round-4 session-13 additions: the composed end-to-end ER
     # pipeline (blocking -> FS scoring -> clusters -> golden record),
     # the composed KG health report, and readability scoring.
-    "er_pipeline": q_er_pipeline,
     "kg_quality": q_kg_quality,
     # round-4 session-14 additions: URL template mining, diversity
     # sampling, inverse predicates, rich club, temporal fact history.
@@ -8225,11 +7690,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # round-4 session-18f additions: association rules, FS-EM
     # parameter training, double-sweep diameter, calibration +
     # regression eval (five more tail-of-window rows rotate out).
-    "er_fs_em": q_er_fs_em,
     "graph_diameter": q_graph_diameter,
     # round-4 session-18g additions: soundex blocking, predicate
     # alternation chains, multi-probe LSH, content-defined chunking.
-    "er_soundex": q_er_soundex,
     "kg_path_alt": q_kg_path_alt,
     "sim_ann_multiprobe": q_sim_ann_multiprobe,
     # round-4 session-18h additions: importer dead-letter routing,
@@ -8350,7 +7813,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "graph_ppr": q_graph_ppr,
     "kg_predicate_stats": q_kg_predicate_stats,
     "kg_nquads": q_kg_nquads,
-    "er_fellegi_sunter": q_er_fellegi_sunter,
     "shard_rendezvous": q_shard_rendezvous,
     "graph_ktruss": q_graph_ktruss,
     # round-4 session-3 additions: BM25 retrieval, grouped
@@ -8380,9 +7842,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "sketch_hll": q_sketch_hll,
     "graph_anf": q_graph_anf,
     "graph_bipartite": q_graph_bipartite,
-    "er_golden_record": q_er_golden_record,
     "cdc_apply": q_cdc_apply,
-    "er_edit_pairs": q_er_edit_pairs,
     # round-4 session-8 additions (FIFO behind the session-7 block;
     # all queue at the tail for the r5 window, verified this round by
     # the local full sweep): GraphSAGE neighbor sampling, mojibake
@@ -8416,7 +7876,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     #   global_rank/sorted-neighborhood path is in-window via
     #   er_fellegi_sunter, which builds its pairs with the same
     #   operator on a different table; full-sweep green locally
-    "er_blocking": q_er_blocking,
     # - graph_walks (new r4) waits for the r5 window: the
     #   random_walks corpus is in-window via graph_ppmi, which
     #   consumes it; full-sweep green locally
@@ -8571,9 +8030,7 @@ ORACLES: dict[str, str] = {
     "mm_phash_pairs": ORACLE_MM_PHASH_PAIRS,
     "graph_mis": _oracle_graph_mis(),
     "emb_decontam": _oracle_emb_decontam(),
-    "er_fs_em": _oracle_er_fs_em(),
     "graph_diameter": ORACLE_GRAPH_DIAMETER,
-    "er_soundex": _oracle_er_soundex(),
     "kg_path_alt": ORACLE_KG_PATH_ALT,
     "sim_ann_multiprobe": _oracle_sim_ann_multiprobe(),
     "imp_quarantine": ORACLE_IMP_QUARANTINE,
@@ -8608,7 +8065,6 @@ ORACLES: dict[str, str] = {
     "kg_inverse_preds": ORACLE_KG_INVERSE_PREDS,
     "graph_richclub": ORACLE_GRAPH_RICHCLUB,
     "kg_fact_history": ORACLE_KG_FACT_HISTORY,
-    "er_pipeline": ORACLE_ER_PIPELINE,
     "kg_quality": ORACLE_KG_QUALITY,
     "kg_dangling": ORACLE_KG_DANGLING,
     "schema_match": ORACLE_SCHEMA_MATCH,
@@ -8616,10 +8072,8 @@ ORACLES: dict[str, str] = {
     "graph_ks": ORACLE_GRAPH_KS,
     "graph_butterfly": ORACLE_GRAPH_BUTTERFLY,
     "graph_wl": ORACLE_GRAPH_WL,
-    "er_block_metrics": ORACLE_ER_BLOCK_METRICS,
     "kg_constraints": ORACLE_KG_CONSTRAINTS,
     "graph_modularity": ORACLE_GRAPH_MODULARITY,
-    "er_meta_blocking": ORACLE_ER_META_BLOCKING,
     "sim_cosine_join": ORACLE_SIM_COSINE_JOIN,
     "layout_compaction": ORACLE_LAYOUT_COMPACTION,
     "split_leakage": ORACLE_SPLIT_LEAKAGE,
@@ -8633,9 +8087,7 @@ ORACLES: dict[str, str] = {
     "sketch_hll": ORACLE_SKETCH_HLL,
     "graph_anf": ORACLE_GRAPH_ANF,
     "graph_bipartite": ORACLE_GRAPH_BIPARTITE,
-    "er_golden_record": ORACLE_ER_GOLDEN,
     "cdc_apply": ORACLE_CDC_APPLY,
-    "er_edit_pairs": ORACLE_ER_EDIT_PAIRS,
     "graph_sage_sample": ORACLE_GRAPH_SAGE_SAMPLE,
     "kg_fusion": ORACLE_KG_FUSION,
     "kg_types": ORACLE_KG_TYPES,
@@ -8695,7 +8147,6 @@ ORACLES: dict[str, str] = {
     "graph_assortativity": ORACLE_GRAPH_ASSORTATIVITY,
     "kg_predicate_stats": ORACLE_KG_PREDICATE_STATS,
     "kg_nquads": _oracle_kg_nquads(),
-    "er_fellegi_sunter": _oracle_er_fs(),
     "shard_rendezvous": ORACLE_SHARD_RENDEZVOUS,
     # the stream accumulates exactly the batch probe's links (batch 0
     # has no priors), so the oracle is shared
@@ -8704,7 +8155,6 @@ ORACLES: dict[str, str] = {
     "graph_khop": ORACLE_GRAPH_KHOP,
     "graph_walks": _oracle_graph_walks(),
     "graph_linkpred": ORACLE_GRAPH_LINKPRED,
-    "er_blocking": ORACLE_ER_BLOCKING,
     "emb_quantize": ORACLE_EMB_QUANTIZE,
     "graph_skipgram": _oracle_graph_skipgram(),
     "graph_ppmi": _oracle_graph_ppmi(),
