@@ -1503,42 +1503,6 @@ SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {k}
 """
 
 
-def q_emb_near_dup(spark, sf_dir):
-    """Brute-force near-dup baseline.  The synthetic embeddings have no
-    natural near-dups (max pairwise cosine < 0.7), so clones are planted
-    the same way as in q_dedup_semantic — this baseline must find ALL
-    of them (no cluster-split misses), which is exactly what makes it
-    the correctness reference for the SemDeDup scale path."""
-    emb = T(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 300)
-    v = F.col("embedding").cast("array<double>")
-    base = emb.select("vec_id", v.alias("embedding"))
-    clones = emb.filter(F.col("vec_id") % 5 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.concat(
-            F.array(F.element_at(v, 1) + F.lit(0.3)),
-            F.slice(v, 2, F.size(v) - 1),
-        ).alias("embedding"),
-    )
-    return _dedup.embedding_near_dup_pairs(
-        base.unionAll(clones), threshold=0.95
-    )
-
-
-ORACLE_EMB_NEAR_DUP = f"""
-WITH b0 AS (SELECT vec_id, embedding::DOUBLE[] AS cv FROM embeddings WHERE vec_id < 300),
-clones AS (
-  SELECT vec_id + 100000 AS vec_id, list_concat([cv[1] + 0.3], cv[2:]) AS cv
-  FROM b0 WHERE vec_id % 5 = 0),
-e AS (SELECT vec_id, cv FROM b0 UNION ALL SELECT vec_id, cv FROM clones),
-pairs AS (
-  SELECT a.vec_id AS id1, b.vec_id AS id2,
-    round({_DOT.format(a='a.cv', b='b.cv')} /
-          ({_NORM.format(v='a.cv')} * {_NORM.format(v='b.cv')}), 6) AS cosine
-  FROM e a JOIN e b ON a.vec_id < b.vec_id)
-SELECT id1, id2, cosine FROM pairs WHERE cosine >= 0.95
-"""
-
-
 # -- multimodal -------------------------------------------------------------
 
 def _docs_media(spark, sf_dir):
@@ -2560,46 +2524,6 @@ FROM nw JOIN deg da ON da.u = nw.a JOIN deg db ON db.u = nw.b
 """
 
 
-def q_emb_quantize(spark, sf_dir):
-    """Symmetric int8 scalar quantization + reconstruction-error audit
-    over the embeddings table (operators/quantize.py) — pure codegen
-    array expressions, zero shuffle.  The rounding rule is pinned to
-    floor(x/scale + 0.5) so both engines agree on .5 boundaries; the
-    code vector itself is hash-checked through its integer sum
-    (``q_sum``), the float stats through round-to-9."""
-    from graph_importer_spark.operators.quantize import quantize_int8
-
-    e = T(spark, sf_dir, "embeddings")
-    return quantize_int8(e, "vec_id", "embedding").drop("codes")
-
-
-ORACLE_EMB_QUANTIZE = """
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-  FROM embeddings),
-s AS (
-  SELECT vec_id, len(cv) AS n_dims, cv,
-         list_max(list_transform(cv, x -> abs(x))) / 127.0 AS sc
-  FROM v),
-c AS (
-  SELECT vec_id, n_dims, cv, sc,
-         list_transform(cv, x -> CASE WHEN sc = 0 THEN CAST(0 AS BIGINT)
-           ELSE CAST(floor(x / sc + 0.5) AS BIGINT) END) AS codes
-  FROM s),
-e2 AS (
-  SELECT vec_id, n_dims, sc, codes,
-         list_transform(generate_series(1, CAST(n_dims AS INT)),
-                        i -> cv[i] - codes[i] * sc) AS err
-  FROM c)
-SELECT vec_id, n_dims, round(sc, 6) AS scale,
-       list_reduce(codes, (a, b) -> a + b) AS q_sum,
-       round(list_reduce(list_transform(err, x -> x * x), (a, b) -> a + b)
-             / n_dims, 9) AS mse,
-       round(list_max(list_transform(err, x -> abs(x))), 9) AS max_abs_err
-FROM e2
-"""
-
-
 def q_graph_skipgram(spark, sf_dir):
     """Skip-gram co-occurrence counts (window=2) over the SAME
     deterministic random-walk corpus as `graph_walks` — the
@@ -2710,52 +2634,6 @@ SELECT subj, pred, obj,
        round(1.0 - exp(SUM(ln(1.0 - score))), 6) AS noisy_or
 FROM scored
 GROUP BY subj, pred, obj
-"""
-
-
-def q_emb_pq(spark, sf_dir):
-    """Product-quantization codes over the embeddings table
-    (quantize.pq_codes, dim=64 -> 4 blocks x 16-dim, k=16 codes/block):
-    the fine half of the IVF-PQ ANN layout.  Codebook = the 16
-    smallest-congruential-hash corpus vectors (the ivf_centroids
-    sampling rule — SQL-replayable), assignment = broadcast-join +
-    per-(vec, block) min_by on rounded squared L2 with code-id
-    tie-break.  The oracle replays sampling, slicing, and argmin."""
-    from graph_importer_spark.operators.quantize import pq_codes
-
-    e = T(spark, sf_dir, "embeddings")
-    return pq_codes(e, dim=64, m_blocks=4, k=16)
-
-
-def _oracle_emb_pq(dim: int = 64, m: int = 4, k: int = 16, seed: int = 42) -> str:
-    db = dim // m
-    return f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv,
-         ((vec_id % 1000003) * 2654435761 + {seed}) % 1000003 AS h
-  FROM embeddings),
-samp AS (
-  SELECT cv, ROW_NUMBER() OVER (ORDER BY h, vec_id) - 1 AS code
-  FROM v ORDER BY h, vec_id LIMIT {k}),
-blocks AS (SELECT unnest(generate_series(0, {m - 1})) AS block),
-book AS (
-  SELECT blocks.block, samp.code,
-         samp.cv[blocks.block * {db} + 1 : blocks.block * {db} + {db}] AS cvec
-  FROM samp, blocks),
-sub AS (
-  SELECT v.vec_id, blocks.block,
-         v.cv[blocks.block * {db} + 1 : blocks.block * {db} + {db}] AS sub
-  FROM v, blocks),
-d AS (
-  SELECT s.vec_id, s.block, b.code,
-         round(list_reduce(list_transform(generate_series(1, {db}),
-               i -> (s.sub[i] - b.cvec[i]) * (s.sub[i] - b.cvec[i])),
-               (a, b) -> a + b), 6) AS d2
-  FROM sub s JOIN book b ON b.block = s.block),
-m AS (SELECT vec_id, block, MIN(d2) AS d2 FROM d GROUP BY 1, 2)
-SELECT m.vec_id, m.block, MIN(d.code) AS code, m.d2
-FROM m JOIN d ON d.vec_id = m.vec_id AND d.block = m.block AND d.d2 = m.d2
-GROUP BY m.vec_id, m.block, m.d2
 """
 
 
@@ -3403,70 +3281,6 @@ s AS (
 SELECT subj, pred, obj, score FROM s
 QUALIFY row_number() OVER (PARTITION BY subj ORDER BY score DESC, tb) <= 3
 """
-
-
-def q_emb_kmeans(spark, sf_dir):
-    """Trained IVF coarse quantizer: 2 Lloyd iterations from the
-    deterministic hash-sampled init, k = 4, over the embeddings table
-    (similarity.kmeans_train) — assignment replays the ivf_assign rule
-    (6dp cosine, centroid-id tie-break), update is the rounded
-    per-(cluster, dim) mean, empty clusters keep their centroid.
-    Output is the exploded (centroid_id, pos, val) dim rows; the
-    oracle unrolls both iterations."""
-    from graph_importer_spark.operators.similarity import (
-        kmeans_centroid_dims,
-        kmeans_train,
-    )
-
-    emb = T(spark, sf_dir, "embeddings")
-    cents = kmeans_train(emb, "vec_id", "embedding", k=4, iters=2)
-    return kmeans_centroid_dims(cents)
-
-
-def _oracle_emb_kmeans(k: int = 4, iters: int = 2, seed: int = 42) -> str:
-    cos = (
-        "round({d} / ({na} * {nb}), 6)".format(
-            d=_DOT.format(a="{a}", b="{b}"),
-            na=_NORM.format(v="{a}"),
-            nb=_NORM.format(v="{b}"),
-        )
-    )
-    parts = [
-        "c AS (SELECT vec_id AS neighbor_id,"
-        " list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv FROM embeddings)",
-        f"""c0 AS (
-  SELECT neighbor_id AS centroid_id, cv AS pv FROM c
-  ORDER BY ((neighbor_id % {_sim._M}) * {_sim._A} + {seed}) % {_sim._M}, neighbor_id
-  LIMIT {k})""",
-    ]
-    for i in range(1, iters + 1):
-        parts.append(
-            f"""a{i} AS (
-  SELECT neighbor_id, cv, centroid_id AS list_id FROM (
-    SELECT c.neighbor_id, c.cv, p.centroid_id,
-      ROW_NUMBER() OVER (PARTITION BY c.neighbor_id
-        ORDER BY {cos.format(a='c.cv', b='p.pv')} DESC, p.centroid_id ASC) AS rn
-    FROM c, c{i - 1} p) WHERE rn = 1),
-m{i} AS (
-  SELECT list_id AS centroid_id, j - 1 AS pos, round(AVG(cv[j]), 6) AS m
-  FROM a{i}, UNNEST(generate_series(1, len(cv))) u(j)
-  GROUP BY 1, 2),
-c{i} AS (
-  SELECT p.centroid_id, COALESCE(mm.newv, p.pv) AS pv
-  FROM c{i - 1} p LEFT JOIN (
-    SELECT centroid_id, list(m ORDER BY pos) AS newv FROM m{i} GROUP BY 1
-  ) mm USING (centroid_id))"""
-        )
-    return (
-        "WITH "
-        + ",\n".join(parts)
-        + f"""
-SELECT centroid_id, CAST(j - 1 AS INT) AS pos, pv[j] AS val
-FROM c{iters}, UNNEST(generate_series(1, len(pv))) u(j)"""
-    )
-
-
-ORACLE_EMB_KMEANS = _oracle_emb_kmeans()
 
 
 def q_sketch_hll(spark, sf_dir):
@@ -5305,73 +5119,6 @@ FROM scored s JOIN w USING (subj, pred)
 # ---------------------------------------------------------------------------
 
 
-def q_emb_whiten(spark, sf_dir):
-    """Embedding whitening (quantize.whiten): mean-center + L2
-    renormalize; the oracle replays the 6dp per-dim mean, the ordered
-    left-fold norms, and the unit division.  The whitened vector is
-    emitted as a comma-joined DECIMAL(18,6) string — the driver's
-    comparator cannot hash array-typed cells (CORRECTNESS_r04)."""
-    from graph_importer_spark.operators.quantize import whiten
-
-    e = T(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
-    w = whiten(e, "vec_id", "embedding")
-    return w.select(
-        "vec_id",
-        F.array_join(
-            F.transform(
-                "centered",
-                lambda x: (x + F.lit(0.0))
-                .cast("decimal(18,6)")
-                .cast("string"),
-            ),
-            ",",
-        ).alias("centered"),
-        "norm_before",
-        "norm_after",
-    )
-
-
-ORACLE_EMB_WHITEN = r"""
-WITH e AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings WHERE vec_id < 200),
-dims AS (
-  SELECT u.i AS d, v[u.i] AS x
-  FROM e, UNNEST(generate_series(1, len(v))) AS u(i)),
-mu AS (
-  SELECT d, round(AVG(x), 6) AS m FROM dims GROUP BY d),
-mean_arr AS (SELECT list(m ORDER BY d) AS mean FROM mu),
-c AS (
-  SELECT vec_id, v,
-         list_transform(generate_series(1, len(v)),
-                        i -> v[i] - mean[i]) AS cen
-  FROM e, mean_arr),
-n AS (
-  SELECT vec_id, cen,
-         sqrt(list_reduce(list_prepend(0.0,
-              list_transform(v, x -> x * x)), (a, b) -> a + b)) AS nb,
-         sqrt(list_reduce(list_prepend(0.0,
-              list_transform(cen, x -> x * x)), (a, b) -> a + b)) AS na
-  FROM c)
-SELECT vec_id,
-       -- comma-joined DECIMAL(18,6) string (driver-hashable scalar);
-       -- + 0.0 normalizes IEEE -0.0 before the decimal cast, matching
-       -- the Spark side
-       array_to_string(
-         CASE WHEN na = 0
-              THEN list_transform(cen, x ->
-                     CAST(CAST(round(x * 0.0, 6) + 0.0 AS DECIMAL(18,6))
-                          AS VARCHAR))
-              ELSE list_transform(cen, x ->
-                     CAST(CAST(round(x / na, 6) + 0.0 AS DECIMAL(18,6))
-                          AS VARCHAR)) END, ',') AS centered,
-       round(nb, 6) AS norm_before,
-       round(na, 6) AS norm_after
-FROM n
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18b: multi-touch attribution, TransE ranking eval,
 # Porter-lite stem vocabulary, crawl-frontier scheduling
@@ -5811,90 +5558,6 @@ SELECT id, 'undecided', CAST(NULL AS INT) FROM act{rounds + 1}"""
 # ---------------------------------------------------------------------------
 # Round-4 session-18e: semantic benchmark decontamination
 # ---------------------------------------------------------------------------
-
-
-def q_emb_decontam(spark, sf_dir):
-    """Semantic decontamination (decontam.semantic_overlap): corpus =
-    embeddings vec_id<400, benchmark = vec_id>=400 plus planted
-    0.9-scaled copies of every 7th corpus vector (cosine 1.0 with
-    their source — the paraphrase-leak stand-in); IVF-bucketed
-    corpus x benchmark probe with the benchmark side broadcast.  The
-    oracle replays the quantizer, both assignments, the bucketed
-    pairs, and the per-doc argmax."""
-    from graph_importer_spark.operators.decontam import semantic_overlap
-
-    emb = T(spark, sf_dir, "embeddings")
-    v = F.col("embedding").cast("array<double>")
-    corpus = emb.filter(F.col("vec_id") < 400).select(
-        "vec_id", v.alias("embedding")
-    )
-    bench = (
-        emb.filter(F.col("vec_id") >= 400)
-        .select("vec_id", v.alias("embedding"))
-        .unionAll(
-            emb.filter((F.col("vec_id") < 400) & (F.col("vec_id") % 7 == 0))
-            .select(
-                (F.col("vec_id") + 5000).alias("vec_id"),
-                F.transform(v, lambda x: x * F.lit(0.9)).alias("embedding"),
-            )
-        )
-    )
-    return semantic_overlap(
-        corpus, bench, threshold=0.95, n_centroids=20
-    )
-
-
-def _oracle_emb_decontam(
-    threshold: float = 0.95, n_centroids: int = 20, seed: int = 42
-) -> str:
-    cos = "round({d} / ({na} * {nb}), 6)".format(
-        d=_DOT.format(a="{a}", b="{b}"),
-        na=_NORM.format(v="{a}"),
-        nb=_NORM.format(v="{b}"),
-    )
-    return f"""
-WITH c AS (
-  SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv
-  FROM embeddings WHERE vec_id < 400),
-b AS (
-  SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv
-  FROM embeddings WHERE vec_id >= 400
-  UNION ALL
-  SELECT vec_id + 5000, list_transform(embedding::DOUBLE[], x -> x * 0.9)
-  FROM embeddings WHERE vec_id < 400 AND vec_id % 7 = 0),
-cents AS (
-  SELECT neighbor_id AS centroid_id, cv AS pv FROM c
-  ORDER BY ((neighbor_id % {_sim._M}) * {_sim._A} + {seed}) % {_sim._M},
-           neighbor_id
-  LIMIT {n_centroids}),
-ca AS (
-  SELECT neighbor_id, cv, centroid_id AS list_id FROM (
-    SELECT c.neighbor_id, c.cv, cents.centroid_id,
-      ROW_NUMBER() OVER (PARTITION BY c.neighbor_id
-        ORDER BY {cos.format(a='c.cv', b='cents.pv')} DESC,
-                 cents.centroid_id ASC) AS rn
-    FROM c, cents) WHERE rn = 1),
-ba AS (
-  SELECT neighbor_id, cv, centroid_id AS list_id FROM (
-    SELECT b.neighbor_id, b.cv, cents.centroid_id,
-      ROW_NUMBER() OVER (PARTITION BY b.neighbor_id
-        ORDER BY {cos.format(a='b.cv', b='cents.pv')} DESC,
-                 cents.centroid_id ASC) AS rn
-    FROM b, cents) WHERE rn = 1),
-hits AS (
-  SELECT ca.neighbor_id AS id, ba.neighbor_id AS bid,
-         {cos.format(a='ca.cv', b='ba.cv')} AS cos
-  FROM ca JOIN ba USING (list_id)),
-kept AS (SELECT * FROM hits WHERE cos >= {threshold}),
-pick AS (
-  SELECT id, bid, ROW_NUMBER() OVER (PARTITION BY id
-           ORDER BY cos DESC, bid ASC) AS rn
-  FROM kept)
-SELECT k.id, COUNT(*) AS n_bench_hits, MAX(k.cos) AS max_cosine,
-       MAX(p.bid) AS bench_id
-FROM kept k JOIN pick p ON p.id = k.id AND p.rn = 1
-GROUP BY k.id
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -6695,63 +6358,6 @@ FROM sa, sb, act
 """
 
 
-def q_emb_matryoshka(spark, sf_dir):
-    """Matryoshka truncation audit (similarity.truncation_recall):
-    16-of-64-dim cosine top-5 recall vs the full-dimension truth; the
-    oracle replays both brute top-k runs and the per-query hit
-    count."""
-    from graph_importer_spark.operators.similarity import truncation_recall
-
-    emb = T(spark, sf_dir, "embeddings")
-    v = F.col("embedding").cast("array<double>")
-    corpus = emb.select("vec_id", v.alias("embedding"))
-    queries = corpus.filter(F.col("vec_id") < 8)
-    return truncation_recall(corpus, queries, trunc_dims=16, k=5)
-
-
-def _oracle_emb_matryoshka(trunc: int = 16, k: int = 5) -> str:
-    cos = "round({d} / ({na} * {nb}), 6)".format(
-        d=_DOT.format(a="{a}", b="{b}"),
-        na=_NORM.format(v="{a}"),
-        nb=_NORM.format(v="{b}"),
-    )
-    return f"""
-WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-q AS (SELECT vec_id, v FROM c WHERE vec_id < 8),
-full_s AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {cos.format(a='q.v', b='c.v')} AS cosine
-  FROM q, c WHERE c.vec_id <> q.vec_id),
-full_r AS (
-  SELECT query_id, neighbor_id,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id) AS rn
-  FROM full_s),
-full_k AS (SELECT query_id, neighbor_id FROM full_r WHERE rn <= {k}),
-ct AS (SELECT vec_id, v[1:{trunc}] AS v FROM c),
-qt AS (SELECT vec_id, v FROM ct WHERE vec_id < 8),
-tr_s AS (
-  SELECT qt.vec_id AS query_id, ct.vec_id AS neighbor_id,
-         {cos.format(a='qt.v', b='ct.v')} AS cosine
-  FROM qt, ct WHERE ct.vec_id <> qt.vec_id),
-tr_r AS (
-  SELECT query_id, neighbor_id,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id) AS rn
-  FROM tr_s),
-tr_k AS (SELECT query_id, neighbor_id FROM tr_r WHERE rn <= {k}),
-hit AS (
-  SELECT t.query_id, COUNT(*) AS n_hit
-  FROM tr_k t SEMI JOIN full_k f
-    ON f.query_id = t.query_id AND f.neighbor_id = t.neighbor_id
-  GROUP BY t.query_id),
-base AS (SELECT query_id, COUNT(*) AS nk FROM full_k GROUP BY query_id)
-SELECT b.query_id, b.nk AS k, COALESCE(h.n_hit, 0) AS n_hit,
-       round(CAST(COALESCE(h.n_hit, 0) AS DOUBLE) / b.nk, 6) AS recall
-FROM base b LEFT JOIN hit h USING (query_id)
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18s: information gain, CUSUM changepoint
 # ---------------------------------------------------------------------------
@@ -6942,51 +6548,6 @@ SELECT k, val FROM w WHERE op <> 'D'
 # ---------------------------------------------------------------------------
 # Round-4 session-18x: k-NN label noise, WoE/IV, frame energy
 # ---------------------------------------------------------------------------
-
-
-def q_emb_label_noise(spark, sf_dir):
-    """k-NN label-agreement audit (similarity.knn_label_agreement)
-    over the labeled embeddings; the oracle replays the brute top-5
-    and the neighborhood vote."""
-    from graph_importer_spark.operators.similarity import knn_label_agreement
-
-    emb = T(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
-    v = F.col("embedding").cast("array<double>")
-    return knn_label_agreement(
-        emb.select("vec_id", v.alias("embedding"), "label"), k=5
-    )
-
-
-def _oracle_emb_label_noise(k: int = 5) -> str:
-    cos = "round({d} / ({na} * {nb}), 6)".format(
-        d=_DOT.format(a="{a}", b="{b}"),
-        na=_NORM.format(v="{a}"),
-        nb=_NORM.format(v="{b}"),
-    )
-    return f"""
-WITH c AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v, label
-  FROM embeddings WHERE vec_id < 200),
-s AS (
-  SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-         q.label AS ql, n.label AS nl,
-         {cos.format(a='q.v', b='n.v')} AS cosine
-  FROM c q JOIN c n ON n.vec_id <> q.vec_id),
-r AS (
-  SELECT query_id, ql, nl,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id) AS rn
-  FROM s),
-p AS (
-  SELECT query_id, ql, COUNT(*) AS n_neighbors,
-         SUM(CASE WHEN nl = ql THEN 1 ELSE 0 END) AS n_agree
-  FROM r WHERE rn <= {k} GROUP BY query_id, ql)
-SELECT query_id AS id, ql AS label, n_neighbors,
-       CAST(n_agree AS BIGINT) AS n_agree,
-       round(CAST(n_agree AS DOUBLE) / n_neighbors, 6) AS agreement,
-       round(CAST(n_agree AS DOUBLE) / n_neighbors, 6) < 0.5 AS is_suspect
-FROM p
-"""
 
 
 def q_mm_frame_energy(spark, sf_dir):
@@ -7380,61 +6941,6 @@ FROM vol LEFT JOIN cuts ON cuts.c = vol.c, tot
 # ---------------------------------------------------------------------------
 
 
-def q_emb_drift(spark, sf_dir):
-    """Per-label centroid drift (quantize.centroid_drift): even-id
-    vectors as snapshot A, odd-id as B; the oracle replays both
-    dim-wise 6dp means and the cosine/L2 comparison."""
-    from graph_importer_spark.operators.quantize import centroid_drift
-
-    emb = T(spark, sf_dir, "embeddings")
-    v = F.col("embedding").cast("array<double>")
-    base = emb.select("vec_id", v.alias("embedding"), "label")
-    a = base.filter(F.col("vec_id") % 2 == 0)
-    b = base.filter(F.col("vec_id") % 2 == 1)
-    return centroid_drift(a, b)
-
-
-ORACLE_EMB_DRIFT = r"""
-WITH e AS (
-  SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-dims AS (
-  SELECT vec_id % 2 AS side, label, u.i AS d, v[u.i] AS x
-  FROM e, UNNEST(generate_series(1, len(v))) u(i)),
-mu AS (
-  SELECT side, label, d, round(AVG(x), 6) AS m, COUNT(*) AS c
-  FROM dims GROUP BY side, label, d),
-vecs AS (
-  SELECT side, label, list(m ORDER BY d) AS mv, MAX(c) AS n
-  FROM mu GROUP BY side, label),
-a AS (SELECT label, mv AS va, n AS n_a FROM vecs WHERE side = 0),
-b AS (SELECT label, mv AS vb, n AS n_b FROM vecs WHERE side = 1),
-j AS (
-  SELECT COALESCE(a.label, b.label) AS label,
-         COALESCE(n_a, 0) AS n_a, COALESCE(n_b, 0) AS n_b, va, vb
-  FROM a FULL JOIN b USING (label)),
-m AS (
-  SELECT label, n_a, n_b,
-         list_reduce(list_prepend(0.0,
-           list_transform(generate_series(1, len(va)),
-                          i -> va[i] * vb[i])), (x, y) -> x + y) AS dot,
-         sqrt(list_reduce(list_prepend(0.0,
-           list_transform(va, x -> x * x)), (x, y) -> x + y)) AS na,
-         sqrt(list_reduce(list_prepend(0.0,
-           list_transform(vb, x -> x * x)), (x, y) -> x + y)) AS nb,
-         sqrt(list_reduce(list_prepend(0.0,
-           list_transform(generate_series(1, len(va)),
-                          i -> (va[i] - vb[i]) * (va[i] - vb[i]))),
-           (x, y) -> x + y)) AS l2,
-         va IS NOT NULL AND vb IS NOT NULL AS ok
-  FROM j)
-SELECT label, n_a, n_b,
-       CASE WHEN ok AND na > 0 AND nb > 0
-            THEN round(dot / (na * nb), 6) END AS cosine,
-       CASE WHEN ok THEN round(l2, 6) END AS l2
-FROM m
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18ii: ROUGE-N overlap metric
 # ---------------------------------------------------------------------------
@@ -7669,7 +7175,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # pack_sequences, kg_incremental_entities) are re-verified
     # locally via the full scripts/check_contract.py sweep like
     # every out-of-window row.
-    "emb_whiten": q_emb_whiten,
     # round-4 session-18b additions: multi-touch attribution, TransE
     # ranking eval, stem vocabulary, crawl-frontier scheduling (four
     # more tail-of-window rows rotate out under the same policy).
@@ -7686,7 +7191,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "mm_phash_pairs": q_mm_phash_pairs,
     "graph_mis": q_graph_mis,
     # round-4 session-18e addition: semantic benchmark decontamination
-    "emb_decontam": q_emb_decontam,
     # round-4 session-18f additions: association rules, FS-EM
     # parameter training, double-sweep diameter, calibration +
     # regression eval (five more tail-of-window rows rotate out).
@@ -7727,7 +7231,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # round-4 session-18r additions: grouped OLS, join-cardinality
     # audit, Matryoshka truncation recall.
     "join_card_audit": q_join_card_audit,
-    "emb_matryoshka": q_emb_matryoshka,
     # round-4 session-18s additions: information gain, CUSUM.
     # round-4 session-18t additions: seasonal anomalies, k-fold.
     "sample_kfold": q_sample_kfold,
@@ -7742,7 +7245,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "stream_cdc_apply": q_stream_cdc_apply,
     # round-4 session-18x additions: label-noise audit, WoE/IV,
     # frame energy.
-    "emb_label_noise": q_emb_label_noise,
     "mm_frame_energy": q_mm_frame_energy,
     # round-4 session-18y addition: Dirichlet query-likelihood.
     # round-4 session-18z additions: forecast backtest, temporal
@@ -7762,7 +7264,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # suppression.
     "graph_conductance": q_graph_conductance,
     # round-4 session-18hh additions: centroid drift, IPS eval.
-    "emb_drift": q_emb_drift,
     # round-4 session-18ii addition: ROUGE-N.
     # round-4 session-18jj additions: centralization, traffic HHI.
     "graph_centralization": q_graph_centralization,
@@ -7789,10 +7290,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # round-4 session-4 additions: link prediction, sorted-neighborhood
     # ER blocking, int8 embedding quantization
     "graph_linkpred": q_graph_linkpred,
-    "emb_quantize": q_emb_quantize,
     "graph_ppmi": q_graph_ppmi,
     "kg_triple_confidence": q_kg_triple_confidence,
-    "emb_pq": q_emb_pq,
     # dedup_exact / anti_join stay in-window: their de-vacuization
     # (planted clones / planted unordered parts) changed the compared
     # row sets, and the round-3 verdict explicitly asks for non-empty
@@ -7838,7 +7337,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "profile_orders": q_profile_orders,
     "stream_interval_join": q_stream_join,
     "kg_entity_summary": q_kg_entity_summary,
-    "emb_kmeans": q_emb_kmeans,
     "sketch_hll": q_sketch_hll,
     "graph_anf": q_graph_anf,
     "graph_bipartite": q_graph_bipartite,
@@ -7957,7 +7455,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # window-covered (gopher/dsir/perplexity/classifier/keywords)
     "sample_hash": q_sample_hash,
     "sample_stratified": q_sample_stratified,
-    "emb_near_dup": q_emb_near_dup,
     # displaced for stream_fuzzy_dedup: the md5 fingerprint formula
     # stays window-exercised via stream_dedup's oracle and the dedup
     # family's 7 in-window rows
@@ -8022,14 +7519,12 @@ ORACLES: dict[str, str] = {
     "graph_reciprocity": ORACLE_GRAPH_RECIPROCITY,
     "kg_literal_norm": ORACLE_KG_LITERAL_NORM,
     "kg_truthfinder": ORACLE_KG_TRUTHFINDER,
-    "emb_whiten": ORACLE_EMB_WHITEN,
     "kg_transe_rank": _oracle_kg_transe_rank(),
     "graph_simrank": ORACLE_GRAPH_SIMRANK,
     "graph_harmonic": ORACLE_GRAPH_HARMONIC,
     "kg_split_transductive": _oracle_kg_split_transductive(),
     "mm_phash_pairs": ORACLE_MM_PHASH_PAIRS,
     "graph_mis": _oracle_graph_mis(),
-    "emb_decontam": _oracle_emb_decontam(),
     "graph_diameter": ORACLE_GRAPH_DIAMETER,
     "kg_path_alt": ORACLE_KG_PATH_ALT,
     "sim_ann_multiprobe": _oracle_sim_ann_multiprobe(),
@@ -8044,19 +7539,16 @@ ORACLES: dict[str, str] = {
     "kg_motif_cycle": ORACLE_KG_MOTIF_CYCLE,
     "kg_benford": _oracle_kg_benford(),
     "join_card_audit": ORACLE_JOIN_CARD_AUDIT,
-    "emb_matryoshka": _oracle_emb_matryoshka(),
     "sample_kfold": _oracle_sample_kfold(),
     "graph_embeddedness": ORACLE_GRAPH_EMBEDDEDNESS,
     "schema_fd": ORACLE_SCHEMA_FD,
     "stream_cdc_apply": ORACLE_STREAM_CDC_APPLY,
-    "emb_label_noise": _oracle_emb_label_noise(),
     "mm_frame_energy": ORACLE_MM_FRAME_ENERGY,
     "kg_temporal": ORACLE_KG_TEMPORAL,
     "graph_katz": _oracle_graph_katz(),
     "kg_range_types": ORACLE_KG_RANGE_TYPES,
     "sketch_kmv": _oracle_sketch_kmv(),
     "graph_conductance": ORACLE_GRAPH_CONDUCTANCE,
-    "emb_drift": ORACLE_EMB_DRIFT,
     "graph_centralization": ORACLE_GRAPH_CENTRALIZATION,
     "kg_numeric_outliers": ORACLE_KG_NUMERIC_OUTLIERS,
     "kg_snapshot_diff": ORACLE_KG_SNAPSHOT_DIFF,
@@ -8083,7 +7575,6 @@ ORACLES: dict[str, str] = {
     "profile_orders": ORACLE_PROFILE_ORDERS,
     "stream_interval_join": ORACLE_STREAM_JOIN,
     "kg_entity_summary": ORACLE_KG_ENTITY_SUMMARY,
-    "emb_kmeans": ORACLE_EMB_KMEANS,
     "sketch_hll": ORACLE_SKETCH_HLL,
     "graph_anf": ORACLE_GRAPH_ANF,
     "graph_bipartite": ORACLE_GRAPH_BIPARTITE,
@@ -8155,15 +7646,12 @@ ORACLES: dict[str, str] = {
     "graph_khop": ORACLE_GRAPH_KHOP,
     "graph_walks": _oracle_graph_walks(),
     "graph_linkpred": ORACLE_GRAPH_LINKPRED,
-    "emb_quantize": ORACLE_EMB_QUANTIZE,
     "graph_skipgram": _oracle_graph_skipgram(),
     "graph_ppmi": _oracle_graph_ppmi(),
     "kg_triple_confidence": ORACLE_KG_TRIPLE_CONFIDENCE,
-    "emb_pq": _oracle_emb_pq(),
     "sim_cosine_topk": ORACLE_SIM_TOPK,
     "sim_ann_lsh": _oracle_sim_ann(),
     "sim_ann_ivf": _oracle_sim_ivf(),
-    "emb_near_dup": ORACLE_EMB_NEAR_DUP,
     "mm_byte_stats": ORACLE_MM_STATS,
     "mm_byte_histogram": _oracle_mm_hist(),
     "mm_frame_sample": ORACLE_MM_FRAMES,
