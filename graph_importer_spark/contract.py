@@ -42,7 +42,6 @@ from graph_importer_spark.importer.keys import (
 )
 from graph_importer_spark.operators import dedup as _dedup
 from graph_importer_spark.operators import generators as _gen
-from graph_importer_spark.operators import similarity as _sim
 from graph_importer_spark.operators import skew as _skew
 from graph_importer_spark.operators import textstats as _ts
 from graph_importer_spark.operators.analytics import (
@@ -1381,126 +1380,6 @@ SELECT src, dst FROM intra UNION ALL SELECT src, dst FROM inter
 
 
 # -- similarity -------------------------------------------------------------
-
-_DOT = (
-    "list_reduce(list_transform(list_zip({a}, {b}),"
-    " x -> CAST(x[1] * x[2] AS DOUBLE)), (p, q) -> p + q)"
-)
-_NORM = "sqrt(list_reduce(list_transform({v}, x -> CAST(x * x AS DOUBLE)), (p, q) -> p + q))"
-
-
-def q_sim_cosine_topk(spark, sf_dir):
-    emb = T(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    return _sim.cosine_topk(emb, queries, k=3)
-
-
-ORACLE_SIM_TOPK = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
-c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-scored AS (
-  SELECT query_id, neighbor_id,
-    round({_DOT.format(a='qv', b='cv')} /
-          ({_NORM.format(v='qv')} * {_NORM.format(v='cv')}), 6) AS cosine
-  FROM c, q WHERE neighbor_id <> query_id),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= 3
-"""
-
-
-def _dk_lsh_bucket(vec: str, n_bits: int = 8, seed: int = 42) -> str:
-    """DuckDB replay of similarity.lsh_signature (hyperplane signs)."""
-    terms = []
-    for b in range(n_bits):
-        h = (
-            f"(CASE WHEN (((i - 1 + {b * 7919}) % {_sim._M}) * {_sim._A} + {seed})"
-            f" % {_sim._M} < {_sim._M // 2} THEN -1.0 ELSE 1.0 END)"
-        )
-        proj = (
-            f"list_reduce(list_transform(range(1, len({vec}) + 1),"
-            f" i -> CAST({vec}[i] AS DOUBLE) * {h}), (p, q) -> p + q)"
-        )
-        terms.append(f"(CASE WHEN {proj} > 0 THEN {1 << b} ELSE 0 END)")
-    return " + ".join(terms)
-
-
-def q_sim_ann_lsh(spark, sf_dir):
-    emb = T(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    return _sim.ann_topk_lsh(emb, queries, k=3, n_bits=8)
-
-
-def _oracle_sim_ann() -> str:
-    return f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv,
-             {_dk_lsh_bucket('embedding')} AS bucket
-           FROM embeddings WHERE vec_id < 5),
-c AS (SELECT vec_id AS neighbor_id, embedding AS cv,
-        {_dk_lsh_bucket('embedding')} AS bucket
-      FROM embeddings),
-scored AS (
-  SELECT query_id, neighbor_id,
-    round({_DOT.format(a='qv', b='cv')} /
-          ({_NORM.format(v='qv')} * {_NORM.format(v='cv')}), 6) AS cosine
-  FROM c JOIN q USING (bucket) WHERE neighbor_id <> query_id),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= 3
-"""
-
-
-def q_sim_ann_ivf(spark, sf_dir):
-    """IVF-Flat ANN (coarse-quantizer inverted lists): deterministic
-    hash-sampled centroids, one-pass nearest-centroid assignment,
-    nprobe=3 of 8 lists probed, exact cosine re-rank.  The oracle
-    replays centroid sampling, assignment (6dp round + centroid-id
-    tie-break) and probing."""
-    emb = T(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    return _sim.ann_topk_ivf(emb, queries, k=3, n_centroids=8, nprobe=3)
-
-
-def _oracle_sim_ivf(k: int = 3, n_centroids: int = 8, nprobe: int = 3, seed: int = 42) -> str:
-    cos = (
-        "round({d} / ({na} * {nb}), 6)".format(
-            d=_DOT.format(a="{a}", b="{b}"),
-            na=_NORM.format(v="{a}"),
-            nb=_NORM.format(v="{b}"),
-        )
-    )
-    return f"""
-WITH c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-cents AS (
-  SELECT neighbor_id AS centroid_id, cv AS pv FROM c
-  ORDER BY ((neighbor_id % {_sim._M}) * {_sim._A} + {seed}) % {_sim._M}, neighbor_id
-  LIMIT {n_centroids}),
-assign AS (
-  SELECT neighbor_id, cv, centroid_id AS list_id FROM (
-    SELECT c.neighbor_id, c.cv, cents.centroid_id,
-      ROW_NUMBER() OVER (PARTITION BY c.neighbor_id
-        ORDER BY {cos.format(a='c.cv', b='cents.pv')} DESC, cents.centroid_id ASC) AS rn
-    FROM c, cents) WHERE rn = 1),
-q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
-probe AS (
-  SELECT query_id, qv, centroid_id AS list_id FROM (
-    SELECT q.query_id, q.qv, cents.centroid_id,
-      ROW_NUMBER() OVER (PARTITION BY q.query_id
-        ORDER BY {cos.format(a='q.qv', b='cents.pv')} DESC, cents.centroid_id ASC) AS rn
-    FROM q, cents) WHERE rn <= {nprobe}),
-scored AS (
-  SELECT query_id, neighbor_id, {cos.format(a='qv', b='cv')} AS cosine
-  FROM assign JOIN probe USING (list_id) WHERE neighbor_id <> query_id),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {k}
-"""
 
 
 # -- multimodal -------------------------------------------------------------
@@ -3949,50 +3828,6 @@ LEFT JOIN intra USING (community), m
 """
 
 
-def q_sim_cosine_join(spark, sf_dir):
-    """EXACT TF-IDF cosine similarity join >= 0.8 via symmetric prefix
-    filtering (similarity.cosine_prefix_pairs, Bayardo WWW'07); the
-    oracle is the brute-force all-shared-token join folding the dot
-    product in the same canonical (df, token) order."""
-    d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 250)
-    return _sim.cosine_prefix_pairs(d, "doc_id", "text", threshold=0.8)
-
-
-ORACLE_SIM_COSINE_JOIN = r"""
-WITH d AS (
-  SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-  FROM documents WHERE doc_id < 250),
-tok AS (
-  SELECT doc_id, u.t AS token
-  FROM d, unnest(string_split(t, ' ')) AS u(t) WHERE u.t <> ''),
-tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY doc_id, token),
-dfr AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
-n AS (SELECT COUNT(DISTINCT doc_id) AS n FROM d),
-w AS (
-  SELECT doc_id, token, df,
-         CAST(tf AS DOUBLE) * ln(1.0 + CAST(n.n AS DOUBLE) / df) AS w
-  FROM tf JOIN dfr USING (token), n),
-nrm AS (
-  SELECT doc_id,
-         sqrt(list_reduce(list_prepend(0.0, list(w * w ORDER BY df, token)),
-                          (a, b) -> a + b)) AS nrm
-  FROM w GROUP BY doc_id),
-wn AS MATERIALIZED (
-  SELECT w.doc_id, token, df, w.w / nrm.nrm AS wn
-  FROM w JOIN nrm USING (doc_id)),
-p AS (
-  SELECT a.doc_id AS id1, b.doc_id AS id2, a.df AS df, a.token AS token,
-         a.wn * b.wn AS prod
-  FROM wn a JOIN wn b USING (token) WHERE a.doc_id < b.doc_id),
-dot AS (
-  SELECT id1, id2,
-         list_reduce(list_prepend(0.0, list(prod ORDER BY df, token)),
-                     (a, b) -> a + b) AS c
-  FROM p GROUP BY id1, id2)
-SELECT id1, id2, round(c, 6) AS cosine FROM dot WHERE c >= 0.8
-"""
-
-
 def q_layout_compaction(spark, sf_dir):
     """Small-file compaction planner (layout.compaction_plan):
     first-fit-by-sorted-order binning of 800 part 'files' into
@@ -5687,81 +5522,6 @@ SELECT v0, p1, v1, p2, v2 FROM h1 JOIN h2 USING (v1)
 """
 
 
-def q_sim_ann_multiprobe(spark, sf_dir):
-    """Multi-probe LSH ANN (similarity.ann_topk_lsh_multiprobe):
-    sim_ann_lsh's fixture with each query additionally probing the
-    buckets of its 2 least-confident signature bits; the oracle
-    replays the margin ranking (printf keys), the xor flips, and the
-    re-rank."""
-    from graph_importer_spark.operators.similarity import (
-        ann_topk_lsh_multiprobe,
-    )
-
-    emb = T(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    return ann_topk_lsh_multiprobe(emb, queries, k=3, n_bits=8, n_probes=3)
-
-
-def _oracle_sim_ann_multiprobe(
-    n_bits: int = 8, n_probes: int = 3, seed: int = 42
-) -> str:
-    projs = []
-    for b in range(n_bits):
-        h = (
-            f"(CASE WHEN (((i - 1 + {b * 7919}) % {_sim._M}) * {_sim._A} + {seed})"
-            f" % {_sim._M} < {_sim._M // 2} THEN -1.0 ELSE 1.0 END)"
-        )
-        projs.append(
-            f"list_reduce(list_transform(range(1, len(qv) + 1),"
-            f" i -> CAST(qv[i] AS DOUBLE) * {h}), (p, q) -> p + q)"
-        )
-    keys = ", ".join(
-        f"printf('%012.6f', round(abs(p{b}), 6)) || '|' || lpad('{b}', 2, '0')"
-        for b in range(n_bits)
-    )
-    sig = " + ".join(
-        f"(CASE WHEN p{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(n_bits)
-    )
-    pcols = ", ".join(f"{e} AS p{b}" for b, e in enumerate(projs))
-    return f"""
-WITH q0 AS (
-  SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-  WHERE vec_id < 5),
-qp AS (SELECT query_id, qv, {pcols} FROM q0),
-qk AS (
-  SELECT query_id, qv, ({sig}) AS sig,
-         list_sort([{keys}]) AS keys
-  FROM qp),
-qf AS (
-  SELECT query_id, qv, sig,
-         list_transform(list_slice(keys, 1, {n_probes - 1}),
-                        s -> CAST(right(s, 2) AS INT)) AS flips
-  FROM qk),
-qb AS (
-  SELECT query_id, qv, u.bucket
-  FROM qf, UNNEST(list_prepend(sig,
-         list_transform(flips,
-                        b -> xor(sig, CAST(power(2, b) AS BIGINT))))) u(bucket)),
-c AS (
-  SELECT vec_id AS neighbor_id, embedding AS cv,
-         {_dk_lsh_bucket('embedding')} AS bucket
-  FROM embeddings),
-scored AS (
-  SELECT DISTINCT qb.query_id, c.neighbor_id,
-    round({_DOT.format(a='qb.qv', b='c.cv')} /
-          ({_NORM.format(v='qb.qv')} * {_NORM.format(v='c.cv')}), 6) AS cosine
-  FROM qb JOIN c USING (bucket)
-  WHERE c.neighbor_id <> qb.query_id),
-r AS (
-  SELECT query_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, cosine, CAST(rank AS INT) AS rank
-FROM r WHERE rank <= 3
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18h: importer quarantine, PSI drift, cohort LTV,
 # dedup storage savings
@@ -7129,7 +6889,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # sweep, like every out-of-window row.
     "kg_constraints": q_kg_constraints,
     "graph_modularity": q_graph_modularity,
-    "sim_cosine_join": q_sim_cosine_join,
     "layout_compaction": q_layout_compaction,
     "split_leakage": q_split_leakage,
     # round-4 session-11 additions (same window rule): containment
@@ -7198,7 +6957,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # round-4 session-18g additions: soundex blocking, predicate
     # alternation chains, multi-probe LSH, content-defined chunking.
     "kg_path_alt": q_kg_path_alt,
-    "sim_ann_multiprobe": q_sim_ann_multiprobe,
     # round-4 session-18h additions: importer dead-letter routing,
     # PSI drift monitor, cohort LTV curves, dedup storage savings.
     "imp_quarantine": q_imp_quarantine,
@@ -7407,11 +7165,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # - sim_ann_lsh: r3 driver-green; displaced to the tail by
     #   web_meta (see above) — its touched path has three in-window
     #   proxies and it passes the local full sweep this session
-    "sim_ann_lsh": q_sim_ann_lsh,
     # - displaced by the session-6 additions (see the window comment
     #   for the proxy rationale); all r3 driver-green and locally
     #   full-sweep green this session:
-    "sim_ann_ivf": q_sim_ann_ivf,
     "cc_star": q_cc_star,
     # - kg_extract: r1-green every round, untouched; its extract path
     #   is a strict subset of the in-window kg_flagship composition
@@ -7420,7 +7176,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # - sim_cosine_topk: r2-green, judge-r3; similarity.py only had
     #   functions APPENDED (similarity_recall, LSH/IVF variants are
     #   in-window)
-    "sim_cosine_topk": q_sim_cosine_topk,
     # - cc_canonical_names: r2-green, judge-r3; both CC code paths
     #   (iterative star, single-task union-find) are in-window via
     #   cc_star and dedup_clusters/kg_incremental_entities
@@ -7527,7 +7282,6 @@ ORACLES: dict[str, str] = {
     "graph_mis": _oracle_graph_mis(),
     "graph_diameter": ORACLE_GRAPH_DIAMETER,
     "kg_path_alt": ORACLE_KG_PATH_ALT,
-    "sim_ann_multiprobe": _oracle_sim_ann_multiprobe(),
     "imp_quarantine": ORACLE_IMP_QUARANTINE,
     "drift_psi": ORACLE_DRIFT_PSI,
     "graph_quotient": ORACLE_GRAPH_QUOTIENT,
@@ -7566,7 +7320,6 @@ ORACLES: dict[str, str] = {
     "graph_wl": ORACLE_GRAPH_WL,
     "kg_constraints": ORACLE_KG_CONSTRAINTS,
     "graph_modularity": ORACLE_GRAPH_MODULARITY,
-    "sim_cosine_join": ORACLE_SIM_COSINE_JOIN,
     "layout_compaction": ORACLE_LAYOUT_COMPACTION,
     "split_leakage": ORACLE_SPLIT_LEAKAGE,
     "kg_closure": ORACLE_KG_CLOSURE,
@@ -7649,9 +7402,6 @@ ORACLES: dict[str, str] = {
     "graph_skipgram": _oracle_graph_skipgram(),
     "graph_ppmi": _oracle_graph_ppmi(),
     "kg_triple_confidence": ORACLE_KG_TRIPLE_CONFIDENCE,
-    "sim_cosine_topk": ORACLE_SIM_TOPK,
-    "sim_ann_lsh": _oracle_sim_ann(),
-    "sim_ann_ivf": _oracle_sim_ivf(),
     "mm_byte_stats": ORACLE_MM_STATS,
     "mm_byte_histogram": _oracle_mm_hist(),
     "mm_frame_sample": ORACLE_MM_FRAMES,
