@@ -57,7 +57,6 @@ from graph_importer_spark.operators.analytics import (
     strongly_connected_components,
     triangle_count,
 )
-from graph_importer_spark.operators.multimodal import byte_histogram, byte_stats
 from graph_importer_spark.cc import connected_components, connected_components_str
 
 _M = _gen._M
@@ -1383,87 +1382,6 @@ SELECT src, dst FROM intra UNION ALL SELECT src, dst FROM inter
 
 
 # -- multimodal -------------------------------------------------------------
-
-def _docs_media(spark, sf_dir):
-    d = T(spark, sf_dir, "documents")
-    return d.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "UTF-8").cast("binary").alias("payload"),
-    )
-
-
-def q_mm_byte_stats(spark, sf_dir):
-    return byte_stats(_docs_media(spark, sf_dir))
-
-
-ORACLE_MM_STATS = """
-SELECT doc_id AS media_id, octet_length(encode(text)) AS n_bytes, md5(text) AS payload_md5
-FROM documents
-"""
-
-
-def q_mm_byte_histogram(spark, sf_dir):
-    """mapInPandas decode-and-featurize shape; all 16 buckets verified.
-    Rounding happens HERE with F.round (HALF_UP, matching DuckDB) —
-    the operator emits exact IEEE fractions (see byte_histogram)."""
-    m = _docs_media(spark, sf_dir).filter(F.col("media_id") < 100)
-    h = byte_histogram(m, bins=16)
-    cols = [F.round(F.element_at("hist", i + 1), 6).alias(f"h{i}") for i in range(16)]
-    return h.select("media_id", "n_bytes", *cols)
-
-
-def _oracle_mm_hist() -> str:
-    """Byte extraction via hex(): char 2*i-1 of the hex string is byte
-    i's HIGH nibble == bucket index for 16 equal-width bins."""
-    hcols = ",\n  ".join(
-        f"round(CAST(SUM(CASE WHEN bucket = {i} THEN 1 ELSE 0 END) AS DOUBLE)"
-        f" / n_bytes, 6) AS h{i}"
-        for i in range(16)
-    )
-    return f"""
-WITH m AS (SELECT doc_id AS media_id, encode(text) AS p FROM documents WHERE doc_id < 100),
-b AS (SELECT media_id, octet_length(p) AS n_bytes,
-        strpos('0123456789ABCDEF', substring(hex(p), 2*i - 1, 1)) - 1 AS bucket
-      FROM m, UNNEST(generate_series(1, octet_length(p))) AS u(i))
-SELECT media_id, n_bytes,
-  {hcols}
-FROM b GROUP BY media_id, n_bytes
-"""
-
-
-def q_mm_frame_sample(spark, sf_dir):
-    """1->N frame-sampling plumbing (operators/multimodal.frame_sample):
-    each payload split into 4 contiguous chunks through mapInPandas,
-    frames fingerprinted JVM-side (md5).  ORACLE PRECONDITION: the
-    oracle slices the text as VARCHAR, which equals byte slicing iff the
-    corpus is pure ASCII — true for the driver's testdata (asserted in
-    tests/test_contract.py::test_frame_oracle_ascii_precondition)."""
-    from graph_importer_spark.operators.multimodal import frame_sample
-
-    m = _docs_media(spark, sf_dir).filter(F.col("media_id") < 100)
-    return frame_sample(m, n_frames=4).select(
-        "media_id",
-        "frame_idx",
-        F.length("frame").alias("n_bytes"),
-        F.md5("frame").alias("frame_md5"),
-    )
-
-
-ORACLE_MM_FRAMES = """
-WITH m AS (
-  SELECT doc_id AS media_id, text AS p, length(text) AS b
-  FROM documents WHERE doc_id < 100),
-sz AS (SELECT media_id, p, b, b // 4 AS size FROM m),
-f AS (
-  SELECT media_id, CAST(k AS BIGINT) AS frame_idx,
-         CASE WHEN k < 3 THEN substring(p, k * size + 1, size)
-              ELSE substring(p, 3 * size + 1, b - 3 * size) END AS frame
-  FROM sz, UNNEST(generate_series(0, 3)) AS t(k) WHERE b >= 4
-  UNION ALL
-  SELECT media_id, CAST(0 AS BIGINT), p FROM sz WHERE b < 4)
-SELECT media_id, frame_idx, length(frame) AS n_bytes, md5(frame) AS frame_md5
-FROM f
-"""
 
 
 # -- streaming (SURVEY §2.7 — the graft's Structured Streaming surface) -----
@@ -5246,76 +5164,6 @@ FROM raw
 # ---------------------------------------------------------------------------
 
 
-def q_mm_phash_pairs(spark, sf_dir):
-    """Perceptual-hash media dedup (multimodal.phash64 +
-    phash_near_dup_pairs): doc payloads plus planted one-byte-mutated
-    clones; pigeonhole block join, xor+bit_count verify.  The oracle
-    recomputes every hash from the ASCII text (all-integer bit rule)
-    and brute-forces all pairs — matching it proves the block join
-    COMPLETE for Hamming <= 6, not just plausible."""
-    from graph_importer_spark.operators.multimodal import (
-        phash64,
-        phash_near_dup_pairs,
-    )
-
-    d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
-    base = d.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "UTF-8").cast("binary").alias("payload"),
-    )
-    clones = d.filter(F.col("doc_id") % 9 == 0).select(
-        (F.col("doc_id") + 1000).alias("media_id"),
-        F.encode(
-            F.concat(
-                F.lit("Z"),
-                F.col("text").substr(F.lit(2), F.length("text")),
-            ),
-            "UTF-8",
-        )
-        .cast("binary")
-        .alias("payload"),
-    )
-    hashes = phash64(base.unionByName(clones))
-    return phash_near_dup_pairs(hashes, max_hamming=6)
-
-
-ORACLE_MM_PHASH_PAIRS = r"""
-WITH m AS (
-  SELECT doc_id AS media_id, text AS tx FROM documents WHERE doc_id < 120
-  UNION ALL
-  SELECT doc_id + 1000, 'Z' || substring(text, 2)
-  FROM documents WHERE doc_id < 120 AND doc_id % 9 = 0),
-par AS (SELECT media_id, tx, strlen(tx) // 64 AS s FROM m),
-b AS (
-  SELECT media_id, (i - 1) // s AS cell, ascii(substring(tx, i, 1)) AS v
-  FROM par, UNNEST(generate_series(1, 64 * s)) u(i) WHERE s > 0),
-cs AS (SELECT media_id, cell, SUM(v) AS cv FROM b GROUP BY media_id, cell),
-tot AS (SELECT media_id, SUM(cv) AS t FROM cs GROUP BY media_id),
-bits AS (
-  SELECT cs.media_id, cell,
-         CASE WHEN 64 * cv > t THEN 1 ELSE 0 END AS bit
-  FROM cs JOIN tot USING (media_id)),
-hl AS (
-  SELECT media_id,
-         CAST(SUM(CASE WHEN cell < 32
-                       THEN bit * CAST(power(2, 31 - cell) AS BIGINT)
-                       ELSE 0 END) AS BIGINT) AS hi,
-         CAST(SUM(CASE WHEN cell >= 32
-                       THEN bit * CAST(power(2, 63 - cell) AS BIGINT)
-                       ELSE 0 END) AS BIGINT) AS lo
-  FROM bits GROUP BY media_id),
-hl_all AS (
-  SELECT * FROM hl
-  UNION ALL
-  SELECT media_id, CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-  FROM par WHERE s = 0)
-SELECT a.media_id AS id1, c.media_id AS id2,
-       bit_count(xor(a.hi, c.hi)) + bit_count(xor(a.lo, c.lo)) AS hamming
-FROM hl_all a JOIN hl_all c ON a.media_id < c.media_id
-WHERE bit_count(xor(a.hi, c.hi)) + bit_count(xor(a.lo, c.lo)) <= 6
-"""
-
-
 def q_graph_mis(spark, sf_dir):
     """Luby's maximal independent set (analytics.luby_mis) on the
     l_orderkey<600 co-purchase subgraph, md5 priorities, 5 unrolled
@@ -6310,46 +6158,6 @@ SELECT k, val FROM w WHERE op <> 'D'
 # ---------------------------------------------------------------------------
 
 
-def q_mm_frame_energy(spark, sf_dir):
-    """Per-frame energy stats (multimodal.frame_energy): exact
-    integer byte sums per 4-frame split; the oracle replays the
-    VARCHAR slicing under the asserted ASCII precondition (the
-    mm_frame_sample contract)."""
-    from graph_importer_spark.operators.multimodal import frame_energy
-
-    m = _docs_media(spark, sf_dir).filter(F.col("media_id") < 100)
-    return frame_energy(m, n_frames=4)
-
-
-ORACLE_MM_FRAME_ENERGY = r"""
-WITH m AS (
-  SELECT doc_id AS media_id, text AS tx FROM documents WHERE doc_id < 100),
-par AS (
-  SELECT media_id, tx, strlen(tx) AS len, strlen(tx) // 4 AS size
-  FROM m),
-fr AS (
-  SELECT media_id, CAST(f.f AS BIGINT) AS frame_idx,
-         substring(tx, f.f * size + 1,
-                   CASE WHEN f.f = 3 THEN len - 3 * size
-                        ELSE size END) AS chunk
-  FROM par, UNNEST(generate_series(0, 3)) f(f)
-  WHERE len >= 4),
-small AS (
-  SELECT media_id, CAST(0 AS BIGINT) AS frame_idx, tx AS chunk
-  FROM par WHERE len < 4),
-allf AS (SELECT * FROM fr UNION ALL SELECT * FROM small),
-b AS (
-  SELECT media_id, frame_idx,
-         ascii(substring(chunk, i, 1)) AS v
-  FROM allf, UNNEST(generate_series(1, strlen(chunk))) u(i))
-SELECT media_id, frame_idx,
-       COUNT(*) AS n_bytes,
-       CAST(SUM(v) AS BIGINT) AS sum_b,
-       CAST(SUM(v * v) AS BIGINT) AS sumsq_b
-FROM b GROUP BY media_id, frame_idx
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18y: Dirichlet query-likelihood ranking
 # ---------------------------------------------------------------------------
@@ -6947,7 +6755,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # round-4 session-18d additions: perceptual-hash media near-dup,
     # Luby's maximal independent set (two more tail-of-window rows
     # rotate out under the same policy).
-    "mm_phash_pairs": q_mm_phash_pairs,
     "graph_mis": q_graph_mis,
     # round-4 session-18e addition: semantic benchmark decontamination
     # round-4 session-18f additions: association rules, FS-EM
@@ -7003,7 +6810,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "stream_cdc_apply": q_stream_cdc_apply,
     # round-4 session-18x additions: label-noise audit, WoE/IV,
     # frame energy.
-    "mm_frame_energy": q_mm_frame_energy,
     # round-4 session-18y addition: Dirichlet query-likelihood.
     # round-4 session-18z additions: forecast backtest, temporal
     # consistency, Poisson bootstrap.
@@ -7221,9 +7027,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "gen_cliques_graph": q_gen_cliques_graph,
     "quantiles_value": q_quantiles_value,
     "pivot_hourly": q_pivot_hourly,
-    "mm_byte_stats": q_mm_byte_stats,
-    "mm_byte_histogram": q_mm_byte_histogram,
-    "mm_frame_sample": q_mm_frame_sample,
     "stream_windowed_counts": q_stream_windowed_counts,
     "stream_dedup": q_stream_dedup,
     "stream_sessions": q_stream_sessions,
@@ -7278,7 +7081,6 @@ ORACLES: dict[str, str] = {
     "graph_simrank": ORACLE_GRAPH_SIMRANK,
     "graph_harmonic": ORACLE_GRAPH_HARMONIC,
     "kg_split_transductive": _oracle_kg_split_transductive(),
-    "mm_phash_pairs": ORACLE_MM_PHASH_PAIRS,
     "graph_mis": _oracle_graph_mis(),
     "graph_diameter": ORACLE_GRAPH_DIAMETER,
     "kg_path_alt": ORACLE_KG_PATH_ALT,
@@ -7297,7 +7099,6 @@ ORACLES: dict[str, str] = {
     "graph_embeddedness": ORACLE_GRAPH_EMBEDDEDNESS,
     "schema_fd": ORACLE_SCHEMA_FD,
     "stream_cdc_apply": ORACLE_STREAM_CDC_APPLY,
-    "mm_frame_energy": ORACLE_MM_FRAME_ENERGY,
     "kg_temporal": ORACLE_KG_TEMPORAL,
     "graph_katz": _oracle_graph_katz(),
     "kg_range_types": ORACLE_KG_RANGE_TYPES,
@@ -7402,9 +7203,6 @@ ORACLES: dict[str, str] = {
     "graph_skipgram": _oracle_graph_skipgram(),
     "graph_ppmi": _oracle_graph_ppmi(),
     "kg_triple_confidence": ORACLE_KG_TRIPLE_CONFIDENCE,
-    "mm_byte_stats": ORACLE_MM_STATS,
-    "mm_byte_histogram": _oracle_mm_hist(),
-    "mm_frame_sample": ORACLE_MM_FRAMES,
     "stream_windowed_counts": ORACLE_STREAM_WINDOWED,
     "stream_dedup": ORACLE_STREAM_DEDUP,
     "stream_sessions": ORACLE_SESSIONS,

@@ -104,18 +104,3 @@ def test_flagship_oracle_precondition(duck):
 @pytest.mark.parametrize("name", sorted(set(C.ORACLES) - set(FAST)))
 def test_oracle_parity_full(spark, sf_dir, duck, name):
     _oracle_parity(spark, sf_dir, duck, name)
-
-
-def test_frame_oracle_ascii_precondition(duck):
-    """ORACLE_MM_FRAMES slices text as VARCHAR; that equals the
-    operator's byte slicing iff the corpus is pure ASCII.  Assert it on
-    the actual testdata so a refresh breaks here, not as a silent
-    oracle mismatch."""
-    n = duck.sql(
-        "SELECT COUNT(*) FROM documents"
-        " WHERE octet_length(encode(text)) <> length(text)"
-    ).fetchone()[0]
-    assert n == 0, (
-        "documents corpus now contains non-ASCII text; ORACLE_MM_FRAMES "
-        "must switch to byte-level slicing before trusting it"
-    )
