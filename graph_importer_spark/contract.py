@@ -201,57 +201,6 @@ WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey)
 """
 
 
-def q_approx_distinct_users(spark, sf_dir):
-    """Mergeable FM cardinality sketch (operators/sketches.fm_distinct):
-    approximate distinct users per event_type.  Unlike
-    approx_count_distinct's engine-internal HLL++ bytes, every bit of
-    this sketch is replayable in SQL — the oracle recomputes the
-    identical masks/bit_or/estimate, so the 'approximate' operator
-    still gets an EXACT correctness gate."""
-    from graph_importer_spark.operators.sketches import fm_distinct
-
-    ev = T(spark, sf_dir, "events")
-    est = fm_distinct(ev, ["event_type"], "user_id", registers=16, seed=9)
-    return est.select(
-        "event_type", F.round("approx_distinct", 4).alias("approx_users")
-    )
-
-
-def _oracle_fm_distinct(registers: int = 16, seed: int = 9) -> str:
-    def mask(r: int) -> str:
-        # mirror sketches._mask: pmod-reduced key, two rounds over two
-        # coprime primes chained to ~2^40 (a single mod-M round caps
-        # trailing zeros ~19 AND collapses the key space to M residues)
-        k1 = f"(((user_id % {_gen._M}) + {_gen._M}) % {_gen._M})"
-        k2 = f"(((user_id % {_gen._M2}) + {_gen._M2}) % {_gen._M2})"
-        h1 = f"(({k1} * {_gen._A} + {r * 131 + seed}) % {_gen._M})"
-        h2 = f"(({k2} * {_gen._A2} + {r * 131 + seed + 71}) % {_gen._M2})"
-        hraw = f"({h1} * {_gen._M2} + {h2})"
-        h = (
-            f"GREATEST(xor(xor({hraw}, {hraw} >> 13), {hraw} >> 27),"
-            " CAST(1 AS BIGINT))"
-        )
-        return (
-            f"bit_or((CAST(1 AS BIGINT) <<"
-            f" LEAST(bit_count((({h}) & -({h})) - 1), 40))) AS m{r}"
-        )
-
-    masks = ",\n    ".join(mask(r) for r in range(registers))
-    zsum = " + ".join(
-        f"CAST(bit_count(((~m{r}) & (m{r} + 1)) - 1) AS DOUBLE)"
-        for r in range(registers)
-    )
-    return f"""
-WITH s AS (
-  SELECT event_type,
-    {masks}
-  FROM events GROUP BY event_type)
-SELECT event_type,
-  round(pow(2.0, ({zsum}) / {registers}.0) / 0.77351, 4) AS approx_users
-FROM s
-"""
-
-
 def q_quantiles_value(spark, sf_dir):
     """Exact distributed quantiles (SURVEY §2.4): percentile_disc picks
     an actual data value (no interpolation arithmetic to diverge
@@ -1607,57 +1556,6 @@ WHERE rn <= 5
 _NF_SQL = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
 
 
-def q_sketch_bloom(spark, sf_dir):
-    """Bloom-filter membership: the bitmap is built over the normalized
-    fingerprints of docs with doc_id % 3 = 0 ("yesterday's corpus") and
-    every distinct fingerprint is probed.  All hash math is md5-derived
-    and replayed bit-for-bit by the oracle; by construction there are no
-    false negatives, and any false positive is IDENTICAL in both engines
-    (same positions, same bitmap)."""
-    from graph_importer_spark.operators import sketches as _sk
-
-    d = T(spark, sf_dir, "documents").select(
-        "doc_id", _ts.fingerprint(F.col("text")).alias("fp")
-    )
-    built = _sk.bloom_build(d.filter(F.col("doc_id") % 3 == 0), "fp")
-    probes = d.select("fp").distinct()
-    return _sk.bloom_probe(probes, "fp", built)
-
-
-def _bloom_pos_sql(i: int, key_expr: str, m_bits: int = 1024) -> str:
-    """DuckDB replay of sketches._bloom_pos: positional polynomial over
-    the first 8 md5 hex chars (DuckDB has no conv()), mod m."""
-    md5 = f"md5('{i}' || '|' || {key_expr})"
-    poly = " + ".join(
-        f"CAST(strpos('0123456789abcdef', substring({md5}, {j + 1}, 1)) - 1 AS BIGINT)"
-        f" * {16 ** (7 - j)}"
-        for j in range(8)
-    )
-    return f"(({poly}) % {m_bits})"
-
-
-def _oracle_sketch_bloom() -> str:
-    build_pos = " UNION ALL ".join(
-        f"SELECT {_bloom_pos_sql(i, 'fp')} AS pos FROM fps WHERE doc_id % 3 = 0"
-        for i in range(3)
-    )
-    probe_pos = " UNION ALL ".join(
-        f"SELECT fp, {i} AS i, {_bloom_pos_sql(i, 'fp')} AS pos FROM probes"
-        for i in range(3)
-    )
-    return rf"""
-WITH fps AS (SELECT doc_id, md5({_NF_SQL}) AS fp FROM documents),
-probes AS (SELECT DISTINCT fp FROM fps),
-bits AS (SELECT DISTINCT pos FROM ({build_pos})),
-pp AS ({probe_pos})
-SELECT pp.fp AS fp,
-       SUM(CASE WHEN bits.pos IS NOT NULL THEN 1 ELSE 0 END) = 3
-         AS maybe_present
-FROM pp LEFT JOIN bits ON pp.pos = bits.pos
-GROUP BY pp.fp
-"""
-
-
 def q_sample_mixture(spark, sf_dir):
     """Temperature-scaled mixture sampling (alpha=0.5, target 50% of
     the corpus) over the 20 sources; per-domain summary row so the
@@ -1788,39 +1686,6 @@ SELECT 'y' || j, 'x' || j FROM range(5) t(j)
 # Round-4 additions (session 2): CMS heavy hitters, SCD2 history,
 # Z-order layout, web link graph
 # ---------------------------------------------------------------------------
-
-
-def q_sketch_cms_topk(spark, sf_dir):
-    """Count-Min heavy hitters over events.user_id with a deliberately
-    narrow sketch (width=64 -> real collisions at sf0.01's key count):
-    the oracle replays the counter matrix AND the min-over-depth
-    estimates bit-for-bit, so the row pins overcount behavior, not just
-    the happy path."""
-    from graph_importer_spark.operators import sketches as _sk
-
-    e = T(spark, sf_dir, "events")
-    cands = e.select("user_id").distinct()
-    return _sk.cms_topk(e, "user_id", cands, k=15, depth=3, width=64)
-
-
-def _oracle_sketch_cms() -> str:
-    key = "CAST(user_id AS VARCHAR)"
-    pos_union = " UNION ALL ".join(
-        f"SELECT user_id, {d} AS d, {_bloom_pos_sql(d, key, 64)} AS pos FROM events"
-        for d in range(3)
-    )
-    return f"""
-WITH pos AS ({pos_union}),
-cnt AS (SELECT d, pos, COUNT(*) AS cnt FROM pos GROUP BY d, pos),
-probe AS (SELECT DISTINCT user_id, d, pos FROM pos),
-est AS (SELECT probe.user_id AS user_id, MIN(cnt.cnt) AS est
-        FROM probe JOIN cnt ON probe.d = cnt.d AND probe.pos = cnt.pos
-        GROUP BY probe.user_id)
-SELECT user_id, est, rk FROM (
-  SELECT user_id, est,
-         ROW_NUMBER() OVER (ORDER BY est DESC, user_id ASC) AS rk
-  FROM est) WHERE rk <= 15
-"""
 
 
 def q_scd2_user_type(spark, sf_dir):
@@ -1967,41 +1832,6 @@ SELECT o_orderpriority, o_orderkey, o_totalprice, es_score, rk FROM (
     PARTITION BY o_orderpriority ORDER BY es_score DESC, o_orderkey ASC
   ) AS rk FROM s)
 WHERE rk <= 10
-"""
-
-
-def q_sketch_hist_quantiles(spark, sf_dir):
-    """Mergeable fixed-bin histogram sketch -> per-event-type p50/p90/
-    p99 estimates (bin upper edges).  The oracle replays the binning,
-    the SUM-mergeable counts, and the cumulative pick bit-for-bit."""
-    from graph_importer_spark.operators import sketches as _sk
-
-    e = T(spark, sf_dir, "events")
-    h = _sk.hist_sketch(e, ["event_type"], "value", lo=0.0, hi=500.0, bins=50)
-    return _sk.hist_quantiles(
-        h, ["event_type"], [0.5, 0.9, 0.99], lo=0.0, hi=500.0, bins=50
-    )
-
-
-ORACLE_HIST_QUANTILES = """
-WITH b AS (
-  SELECT event_type,
-         LEAST(GREATEST(
-           CAST(floor((CAST(value AS DOUBLE) - 0.0) * 50.0 / 500.0) AS BIGINT),
-           0), 49) AS bin
-  FROM events),
-h AS (SELECT event_type, bin, COUNT(*) AS cnt FROM b GROUP BY event_type, bin),
-t AS (SELECT event_type, SUM(cnt) AS total FROM h GROUP BY event_type),
-c AS (SELECT event_type, bin,
-             SUM(cnt) OVER (PARTITION BY event_type ORDER BY bin) AS cum
-      FROM h),
-qs AS (SELECT CAST(q AS DOUBLE) AS q FROM (VALUES (0.5), (0.9), (0.99)) AS v(q)),
-pick AS (
-  SELECT c.event_type, qs.q, MIN(c.bin) AS bin
-  FROM c JOIN t ON c.event_type = t.event_type CROSS JOIN qs
-  WHERE c.cum >= CEIL(qs.q * t.total)
-  GROUP BY c.event_type, qs.q)
-SELECT event_type, q, CAST((bin + 1) * 10.0 AS DOUBLE) AS est FROM pick
 """
 
 
@@ -3078,60 +2908,6 @@ s AS (
 SELECT subj, pred, obj, score FROM s
 QUALIFY row_number() OVER (PARTITION BY subj ORDER BY score DESC, tb) <= 3
 """
-
-
-def q_sketch_hll(spark, sf_dir):
-    """HyperLogLog distinct users per event_type (sketches.hll_build +
-    hll_estimate, p = 6): registers are MAX aggregates of the repo's
-    replayable 40-bit hash, the estimator is the published alpha_m
-    formula with linear-counting small-range correction.  The oracle
-    replays registers AND estimate exactly."""
-    from graph_importer_spark.operators.sketches import hll_build, hll_estimate
-
-    ev = T(spark, sf_dir, "events")
-    built = hll_build(ev, ["event_type"], "user_id", p=6)
-    return hll_estimate(built, ["event_type"], p=6).withColumnRenamed(
-        "approx_distinct", "approx_users"
-    )
-
-
-def _oracle_sketch_hll(p: int = 6, seed: int = 9) -> str:
-    from graph_importer_spark.operators.sketches import _hll_alpha
-
-    m = 1 << p
-    alpha = _hll_alpha(m)
-    k1 = f"(((user_id % {_gen._M}) + {_gen._M}) % {_gen._M})"
-    k2 = f"(((user_id % {_gen._M2}) + {_gen._M2}) % {_gen._M2})"
-    h1 = f"(({k1} * {_gen._A} + {seed}) % {_gen._M})"
-    h2 = f"(({k2} * {_gen._A2} + {seed + 71}) % {_gen._M2})"
-    hraw = f"({h1} * {_gen._M2} + {h2})"
-    h = (
-        f"GREATEST(xor(xor({hraw}, {hraw} >> 13), {hraw} >> 27),"
-        " CAST(1 AS BIGINT))"
-    )
-    w = f"(({h}) >> {p})"
-    rho = (
-        f"CASE WHEN {w} = 0 THEN {41 - p} "
-        f"ELSE bit_count((({w}) & -({w})) - 1) + 1 END"
-    )
-    return f"""
-WITH r AS (
-  SELECT event_type, ({h}) & {m - 1} AS bucket, MAX({rho}) AS register
-  FROM events GROUP BY 1, 2),
-s AS (
-  SELECT event_type,
-         SUM(pow(2.0, -register)) + ({m} - COUNT(*)) AS suminv,
-         {m} - COUNT(*) AS zeros
-  FROM r GROUP BY event_type)
-SELECT event_type,
-  round(CASE WHEN {alpha * m * m} / suminv <= {2.5 * m} AND zeros > 0
-             THEN {float(m)} * ln({float(m)} / zeros)
-             ELSE {alpha * m * m} / suminv END, 4) AS approx_users
-FROM s
-"""
-
-
-ORACLE_SKETCH_HLL = _oracle_sketch_hll()
 
 
 def q_graph_anf(spark, sf_dir):
@@ -6415,48 +6191,6 @@ FROM w
 # ---------------------------------------------------------------------------
 
 
-def q_sketch_kmv(spark, sf_dir):
-    """KMV/theta distinct sketch (sketches.theta_sketch_lite, k=64):
-    per-event-type distinct users — small enough that both the exact
-    (<k) and estimator (>=k) paths can fire; the oracle replays the
-    48-bit md5 hashes, the k-smallest selection, and the (k-1)/theta
-    estimate."""
-    from graph_importer_spark.operators.sketches import theta_sketch_lite
-
-    e = T(spark, sf_dir, "events")
-    return theta_sketch_lite(e, "event_type", "user_id", k=64)
-
-
-def _oracle_sketch_kmv(k: int = 64, seed: int = 9) -> str:
-    poly = " + ".join(
-        f"CAST(strpos('0123456789abcdef', substring(h12, {j + 1}, 1)) - 1 AS BIGINT)"
-        f" * {16 ** (11 - j)}"
-        for j in range(12)
-    )
-    m = 1 << 48
-    return f"""
-WITH dv AS (
-  SELECT DISTINCT event_type AS key,
-         ({poly}) AS h
-  FROM (SELECT DISTINCT event_type,
-               substring(md5(CAST(user_id AS VARCHAR) || '|{seed}'),
-                         1, 12) AS h12
-        FROM events)),
-per AS (
-  SELECT key, list_sort(list(DISTINCT h)) AS hs, COUNT(DISTINCT h) AS nd
-  FROM dv GROUP BY key),
-c AS (
-  SELECT key, nd,
-         CASE WHEN nd >= {k}
-              THEN round(hs[{k}] / {float(m)}, 9) END AS theta
-  FROM per)
-SELECT key, LEAST(nd, {k}) AS n_kept, theta,
-       CASE WHEN nd < {k} THEN round(CAST(nd AS DOUBLE), 2)
-            ELSE round({float(k - 1)} / theta, 2) END AS estimate
-FROM c
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18gg: conductance, KWIC, alert suppression
 # ---------------------------------------------------------------------------
@@ -6823,7 +6557,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # matrix.
     # round-4 session-18ee additions: Gini, stationary distribution.
     # round-4 session-18ff addition: KMV/theta sketch.
-    "sketch_kmv": q_sketch_kmv,
     # round-4 session-18gg additions: conductance, KWIC, alert
     # suppression.
     "graph_conductance": q_graph_conductance,
@@ -6833,11 +6566,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "graph_centralization": q_graph_centralization,
     # round-4 session-2 additions: CMS heavy hitters, SCD2 history,
     # Z-order layout, web link graph
-    "sketch_cms_topk": q_sketch_cms_topk,
     "scd2_user_type": q_scd2_user_type,
     "layout_zorder": q_layout_zorder,
     "sample_weighted": q_sample_weighted,
-    "sketch_hist_quantiles": q_sketch_hist_quantiles,
     "range_lookup_tiers": q_range_lookup_tiers,
     # new or code-touched since the r3 driver ran (ff72a00 + round 4):
     # composed hygiene recipe, PSL domains, de-vacuized oracles,
@@ -6845,7 +6576,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # round-4 additions: line-level dedup, duplicated-span stats, bloom
     # membership, mixture sampling, URL blocklist, sequence packing,
     # vocab top-k
-    "sketch_bloom": q_sketch_bloom,
     "sample_mixture": q_sample_mixture,
     "pack_sequences": q_pack_sequences,
     "kg_incremental_entities": q_kg_incremental_entities,
@@ -6901,7 +6631,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "profile_orders": q_profile_orders,
     "stream_interval_join": q_stream_join,
     "kg_entity_summary": q_kg_entity_summary,
-    "sketch_hll": q_sketch_hll,
     "graph_anf": q_graph_anf,
     "graph_bipartite": q_graph_bipartite,
     "cdc_apply": q_cdc_apply,
@@ -7037,7 +6766,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "asof_bucketed": q_asof_bucketed,
     "asof_last_click": q_asof_last_click,
     "interval_prior_clicks": q_interval_prior_clicks,
-    "approx_distinct_users": q_approx_distinct_users,
     "effective_closeness_tree": q_effective_closeness_tree,
     "pagerank_star": q_pagerank_star,
     "sssp_tree": q_sssp_tree,
@@ -7102,7 +6830,6 @@ ORACLES: dict[str, str] = {
     "kg_temporal": ORACLE_KG_TEMPORAL,
     "graph_katz": _oracle_graph_katz(),
     "kg_range_types": ORACLE_KG_RANGE_TYPES,
-    "sketch_kmv": _oracle_sketch_kmv(),
     "graph_conductance": ORACLE_GRAPH_CONDUCTANCE,
     "graph_centralization": ORACLE_GRAPH_CENTRALIZATION,
     "kg_numeric_outliers": ORACLE_KG_NUMERIC_OUTLIERS,
@@ -7129,7 +6856,6 @@ ORACLES: dict[str, str] = {
     "profile_orders": ORACLE_PROFILE_ORDERS,
     "stream_interval_join": ORACLE_STREAM_JOIN,
     "kg_entity_summary": ORACLE_KG_ENTITY_SUMMARY,
-    "sketch_hll": ORACLE_SKETCH_HLL,
     "graph_anf": ORACLE_GRAPH_ANF,
     "graph_bipartite": ORACLE_GRAPH_BIPARTITE,
     "cdc_apply": ORACLE_CDC_APPLY,
@@ -7142,11 +6868,9 @@ ORACLES: dict[str, str] = {
     "kg_star_optional": ORACLE_KG_STAR_OPTIONAL,
     "kg_flagship": ORACLE_KG_FLAGSHIP,
     "kg_extract": ORACLE_KG_EXTRACT,
-    "sketch_cms_topk": _oracle_sketch_cms(),
     "scd2_user_type": ORACLE_SCD2,
     "layout_zorder": _oracle_layout_zorder(),
     "sample_weighted": ORACLE_SAMPLE_WEIGHTED,
-    "sketch_hist_quantiles": ORACLE_HIST_QUANTILES,
     "range_lookup_tiers": ORACLE_RANGE_LOOKUP,
     "cc_star": ORACLE_CC_STAR,
     "cc_canonical_names": ORACLE_CC_NAMES,
@@ -7166,7 +6890,6 @@ ORACLES: dict[str, str] = {
     "window_top_orders": ORACLE_TOP_ORDERS,
     "semi_join_segments": ORACLE_SEMI,
     "anti_join_unordered_parts": ORACLE_ANTI,
-    "approx_distinct_users": _oracle_fm_distinct(),
     "quantiles_value": ORACLE_QUANTILES,
     "pivot_hourly": ORACLE_PIVOT,
     "rollup_pricing": ORACLE_ROLLUP,
@@ -7210,7 +6933,6 @@ ORACLES: dict[str, str] = {
     "skew_salted_count": ORACLE_SALTED_COUNT,
     "skew_salted_join": ORACLE_SALTED_JOIN,
     "skew_salted_topk": ORACLE_SALTED_TOPK,
-    "sketch_bloom": _oracle_sketch_bloom(),
     "sample_mixture": ORACLE_SAMPLE_MIXTURE,
     "pack_sequences": ORACLE_PACK_SEQUENCES,
     "kg_incremental_entities": ORACLE_KG_INCREMENTAL,
