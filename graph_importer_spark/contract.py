@@ -40,7 +40,6 @@ from graph_importer_spark.importer.keys import (
     idx_to_smart_vertex,
     idx_to_vertex,
 )
-from graph_importer_spark.operators import dedup as _dedup
 from graph_importer_spark.operators import generators as _gen
 from graph_importer_spark.operators import skew as _skew
 from graph_importer_spark.operators import textstats as _ts
@@ -421,48 +420,6 @@ FROM l LEFT JOIN r
   ON r.user_id = l.user_id AND r.rt >= l.lt - 600 AND r.rt <= l.lt
 GROUP BY l.event_id, l.user_id
 """
-
-
-def q_sample_stratified(spark, sf_dir):
-    """Deterministic stratified sampling (operators/sampling): keep all
-    errors, half the clicks, a quarter of the views — the congruential
-    coin is partition-invariant and the CASE-rate predicate reaches the
-    scan (no join, no shuffle)."""
-    from graph_importer_spark.operators.sampling import stratified_sample
-
-    ev = T(spark, sf_dir, "events")
-    keep = stratified_sample(
-        ev, "event_type", "event_id", {"click": 0.5, "view": 0.25, "error": 1.0}
-    )
-    return keep.select("event_id", "event_type")
-
-
-def _oracle_sample_stratified(seed: int = 42) -> str:
-    from graph_importer_spark.operators.generators import _A, _M
-
-    coin = f"CAST(((event_id % {_M}) * {_A} + {seed}) % {_M} AS DOUBLE) / {_M}.0"
-    return f"""
-SELECT event_id, event_type FROM events
-WHERE {coin} < CASE event_type WHEN 'click' THEN 0.5 WHEN 'error' THEN 1.0
-                               WHEN 'view' THEN 0.25 ELSE 0.0 END
-"""
-
-
-def q_sample_hash(spark, sf_dir):
-    """Plain deterministic Bernoulli sample of the documents corpus at
-    1/8 — membership is a pure function of doc_id (reproducible across
-    partitionings, cluster sizes and reruns, unlike df.sample)."""
-    from graph_importer_spark.operators.sampling import hash_sample
-
-    docs = T(spark, sf_dir, "documents")
-    return hash_sample(docs, "doc_id", 0.125).select("doc_id", "lang", "n_chars")
-
-
-def _oracle_sample_hash(seed: int = 42) -> str:
-    from graph_importer_spark.operators.generators import _A, _M
-
-    coin = f"CAST(((doc_id % {_M}) * {_A} + {seed}) % {_M} AS DOUBLE) / {_M}.0"
-    return f"SELECT doc_id, lang, n_chars FROM documents WHERE {coin} < 0.125"
 
 
 # ---------------------------------------------------------------------------
@@ -1552,56 +1509,6 @@ WHERE rn <= 5
 # vocabulary top-k
 # ---------------------------------------------------------------------------
 
-# the dedup normal form, as SQL (mirrors textstats.normalize_text)
-_NF_SQL = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
-
-
-def q_sample_mixture(spark, sf_dir):
-    """Temperature-scaled mixture sampling (alpha=0.5, target 50% of
-    the corpus) over the 20 sources; per-domain summary row so the
-    oracle checks BOTH the computed rates and the realized membership."""
-    from graph_importer_spark.operators import sampling as _samp
-
-    d = T(spark, sf_dir, "documents")
-    rates = _samp.temperature_mixture_rates(d, "source", alpha=0.5, target_frac=0.5)
-    kept = _samp.temperature_mixture_sample(
-        d, "source", "doc_id", alpha=0.5, target_frac=0.5, seed=17
-    )
-    kc = kept.groupBy(F.col("source").alias("domain")).agg(
-        F.count("*").alias("n_kept")
-    )
-    return rates.join(kc, "domain", "left").select(
-        "domain",
-        "n_docs",
-        F.round("rate", 6).alias("rate"),
-        F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
-    )
-
-
-ORACLE_SAMPLE_MIXTURE = f"""
-WITH counts AS (
-  SELECT source AS domain, COUNT(*) AS n_docs FROM documents GROUP BY 1),
-w AS (SELECT domain, n_docs, sqrt(CAST(n_docs AS DOUBLE)) AS w FROM counts),
-tot AS (
-  SELECT SUM(n_docs) AS n_total,
-         list_reduce(list_prepend(0.0, list(w ORDER BY domain)),
-                     (acc, x) -> acc + x) AS w_total
-  FROM w),
-rates AS (
-  SELECT domain, n_docs,
-         least(1.0, (0.5 * w * CAST(n_total AS DOUBLE))
-                    / (w_total * CAST(n_docs AS DOUBLE))) AS rate
-  FROM w, tot),
-kept AS (
-  SELECT d.source AS domain, COUNT(*) AS n_kept
-  FROM documents d JOIN rates r ON r.domain = d.source
-  WHERE ((d.doc_id % {_M}) * {_A} + 17) % {_M} / {_M}.0 < r.rate
-  GROUP BY 1)
-SELECT r.domain, r.n_docs, round(r.rate, 6) AS rate,
-       COALESCE(k.n_kept, 0) AS n_kept
-FROM rates r LEFT JOIN kept k USING (domain)
-"""
-
 
 def q_pack_sequences(spark, sf_dir):
     """Next-fit sequence packing into 256-token windows across 16 hash
@@ -1788,50 +1695,6 @@ SELECT file_id, COUNT(*) AS n_rows,
        MIN(o_custkey) AS cust_min, MAX(o_custkey) AS cust_max,
        MIN(od) AS od_min, MAX(od) AS od_max
 FROM f GROUP BY file_id
-"""
-
-
-def q_sample_weighted(spark, sf_dir):
-    """Efraimidis-Spirakis weighted sampling without replacement:
-    top-10 orders per priority class, inclusion odds proportional to
-    o_totalprice.  score_decimals=6 is the documented cross-engine
-    hatch (pow is not correctly rounded; rounding before ranking makes
-    the order — and the tie-breaks — engine-identical)."""
-    from graph_importer_spark.operators import sampling as _samp
-
-    o = T(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority", "o_totalprice"
-    )
-    s = _samp.weighted_sample_topk(
-        o,
-        "o_orderkey",
-        "o_totalprice",
-        k=10,
-        group_cols=["o_orderpriority"],
-        seed=42,
-        score_decimals=6,
-    )
-    return s.select(
-        "o_orderpriority",
-        "o_orderkey",
-        "o_totalprice",
-        "es_score",
-        F.col("es_rank").alias("rk"),
-    )
-
-
-ORACLE_SAMPLE_WEIGHTED = f"""
-WITH s AS (
-  SELECT o_orderpriority, o_orderkey, o_totalprice,
-         round(pow(
-           CAST(((o_orderkey % {_M}) * {_A} + 42) % {_M} AS DOUBLE) / {_M}.0,
-           1.0 / o_totalprice), 6) AS es_score
-  FROM orders)
-SELECT o_orderpriority, o_orderkey, o_totalprice, es_score, rk FROM (
-  SELECT s.*, ROW_NUMBER() OVER (
-    PARTITION BY o_orderpriority ORDER BY es_score DESC, o_orderkey ASC
-  ) AS rk FROM s)
-WHERE rk <= 10
 """
 
 
@@ -3234,37 +3097,6 @@ SELECT DISTINCT entity, type FROM (
 # provenance, SPARQL star+OPTIONAL
 # ---------------------------------------------------------------------------
 
-def q_sample_epochs(spark, sf_dir):
-    """Per-source epoch repetition (sampling.epoch_repeat): en 2.5
-    epochs, zh 1.0, es 0.25, de 1.75, fr absent (dropped) — the GPT-3
-    Table-2.2 mixing primitive.  Every copy is replayed by the oracle:
-    floor(w) guaranteed copies plus a congruential-coin extra."""
-    from graph_importer_spark.operators.sampling import epoch_repeat
-
-    d = T(spark, sf_dir, "documents").select("doc_id", "lang")
-    w = spark.createDataFrame(
-        [("en", 2.5), ("zh", 1.0), ("es", 0.25), ("de", 1.75)],
-        "lang string, epochs double",
-    )
-    return epoch_repeat(d, "doc_id", "lang", w)
-
-
-ORACLE_SAMPLE_EPOCHS = r"""
-WITH w(lang, epochs) AS (
-  VALUES ('en', 2.5), ('zh', 1.0), ('es', 0.25), ('de', 1.75)),
-j AS (
-  SELECT d.doc_id, d.lang,
-         CAST(FLOOR(epochs) AS INT)
-         + CASE WHEN CAST(((doc_id % 1000003) * 2654435761 + 42) % 1000003
-                         AS DOUBLE) / 1000003.0 < epochs - FLOOR(epochs)
-                THEN 1 ELSE 0 END AS copies
-  FROM documents d JOIN w USING (lang)),
-e AS (
-  SELECT doc_id, lang, UNNEST(range(1, copies + 1)) AS copy_no
-  FROM j WHERE copies >= 1)
-SELECT doc_id, lang, CAST(copy_no AS INT) AS copy_no FROM e
-"""
-
 
 def q_pack_fim(spark, sf_dir):
     """Fill-in-the-middle split (packing.fim_split) over docs < 200:
@@ -4056,47 +3888,6 @@ UNION ALL SELECT * FROM dang
 # Round-4 session-14: URL template mining, diversity sampling, inverse
 # predicates, rich club, fact history
 # ---------------------------------------------------------------------------
-
-
-def q_sample_diverse(spark, sf_dir):
-    """Coverage-max diversity sample (dedup.diverse_sample): byte
-    clones of every 9th doc are planted so MinHash buckets genuinely
-    collapse; the oracle replays the md5 signature chain, the bucket
-    key, and the min-id keeper."""
-    d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 400).select(
-        "doc_id", "text"
-    )
-    clones = d.filter(F.col("doc_id") % 9 == 0).select(
-        (F.col("doc_id") + 300000).alias("doc_id"), "text"
-    )
-    corpus = d.unionAll(clones)
-    return _dedup.diverse_sample(corpus, "doc_id", "text", k=3, n_hashes=4)
-
-
-ORACLE_SAMPLE_DIVERSE = rf"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents WHERE doc_id < 400
-  UNION ALL
-  SELECT doc_id + 300000, text FROM documents
-  WHERE doc_id < 400 AND doc_id % 9 = 0),
-docs AS (
-  SELECT doc_id, string_split({_NF_SQL}, ' ') AS t FROM corpus),
-sh AS (
-  SELECT DISTINCT doc_id,
-         CASE WHEN len(t) >= 3
-              THEN array_to_string(t[i:i+2], ' ')
-              ELSE array_to_string(t, ' ') END AS shingle
-  FROM docs, UNNEST(generate_series(1, greatest(len(t) - 2, 1))) AS u(i)),
-sigs AS (
-  SELECT doc_id, seed, MIN(md5(seed || '|' || shingle)) AS minhash
-  FROM sh, UNNEST(generate_series(0, 3)) AS s(seed)
-  GROUP BY doc_id, seed),
-keys AS (
-  SELECT doc_id, md5(string_agg(minhash, '|' ORDER BY seed)) AS bucket
-  FROM sigs GROUP BY doc_id)
-SELECT bucket, MIN(doc_id) AS keeper, COUNT(*) AS n_docs
-FROM keys GROUP BY bucket
-"""
 
 
 def q_kg_inverse_preds(spark, sf_dir):
@@ -5752,34 +5543,6 @@ FROM sa, sb, act
 # ---------------------------------------------------------------------------
 
 
-def q_sample_kfold(spark, sf_dir):
-    """Stratified k-fold assignment (sampling.stratified_kfold) over
-    orders stratified by status; the oracle replays the md5 fold
-    coin; balance is a property test, determinism the contract."""
-    from graph_importer_spark.operators.sampling import stratified_kfold
-
-    o = T(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-    return stratified_kfold(o, "o_orderkey", "o_orderstatus", k=5)
-
-
-def _oracle_sample_kfold(k: int = 5, seed: int = 42) -> str:
-    poly = " + ".join(
-        f"CAST(strpos('0123456789abcdef', substring(h8, {j + 1}, 1)) - 1 AS BIGINT)"
-        f" * {16 ** (7 - j)}"
-        for j in range(8)
-    )
-    return f"""
-WITH h AS (
-  SELECT o_orderkey, o_orderstatus,
-         substring(md5(o_orderstatus || '|' || CAST(o_orderkey AS VARCHAR)
-                       || '|{seed}'), 1, 8) AS h8
-  FROM orders)
-SELECT o_orderkey, o_orderstatus,
-       CAST(({poly}) % {k} AS INT) AS fold
-FROM h
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18u: edge embeddedness, burstiness, chunk-share pairs
 # ---------------------------------------------------------------------------
@@ -6453,7 +6216,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_quality": q_kg_quality,
     # round-4 session-14 additions: URL template mining, diversity
     # sampling, inverse predicates, rich club, temporal fact history.
-    "sample_diverse": q_sample_diverse,
     "kg_inverse_preds": q_kg_inverse_preds,
     "graph_richclub": q_graph_richclub,
     "kg_fact_history": q_kg_fact_history,
@@ -6532,7 +6294,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "join_card_audit": q_join_card_audit,
     # round-4 session-18s additions: information gain, CUSUM.
     # round-4 session-18t additions: seasonal anomalies, k-fold.
-    "sample_kfold": q_sample_kfold,
     # round-4 session-18u additions: embeddedness, burstiness,
     # chunk-share near-dup pairs.
     "graph_embeddedness": q_graph_embeddedness,
@@ -6568,7 +6329,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # Z-order layout, web link graph
     "scd2_user_type": q_scd2_user_type,
     "layout_zorder": q_layout_zorder,
-    "sample_weighted": q_sample_weighted,
     "range_lookup_tiers": q_range_lookup_tiers,
     # new or code-touched since the r3 driver ran (ff72a00 + round 4):
     # composed hygiene recipe, PSL domains, de-vacuized oracles,
@@ -6576,7 +6336,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # round-4 additions: line-level dedup, duplicated-span stats, bloom
     # membership, mixture sampling, URL blocklist, sequence packing,
     # vocab top-k
-    "sample_mixture": q_sample_mixture,
     "pack_sequences": q_pack_sequences,
     "kg_incremental_entities": q_kg_incremental_entities,
     "kg_negative_samples": q_kg_negative_samples,
@@ -6646,7 +6405,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # all queue at the tail for the r5 window, verified this round by
     # the local full sweep): epoch-weight dataset mixing, FIM split,
     # canonical-URL dedup, per-fact provenance, star BGP + OPTIONAL
-    "sample_epochs": q_sample_epochs,
     "pack_fim": q_pack_fim,
     "kg_provenance": q_kg_provenance,
     "kg_star_optional": q_kg_star_optional,
@@ -6743,8 +6501,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "gen_clique": q_gen_clique,
     # displaced for graph_khop/graph_walks: textstats family stays
     # window-covered (gopher/dsir/perplexity/classifier/keywords)
-    "sample_hash": q_sample_hash,
-    "sample_stratified": q_sample_stratified,
     # displaced for stream_fuzzy_dedup: the md5 fingerprint formula
     # stays window-exercised via stream_dedup's oracle and the dedup
     # family's 7 in-window rows
@@ -6823,7 +6579,6 @@ ORACLES: dict[str, str] = {
     "kg_motif_cycle": ORACLE_KG_MOTIF_CYCLE,
     "kg_benford": _oracle_kg_benford(),
     "join_card_audit": ORACLE_JOIN_CARD_AUDIT,
-    "sample_kfold": _oracle_sample_kfold(),
     "graph_embeddedness": ORACLE_GRAPH_EMBEDDEDNESS,
     "schema_fd": ORACLE_SCHEMA_FD,
     "stream_cdc_apply": ORACLE_STREAM_CDC_APPLY,
@@ -6835,7 +6590,6 @@ ORACLES: dict[str, str] = {
     "kg_numeric_outliers": ORACLE_KG_NUMERIC_OUTLIERS,
     "kg_snapshot_diff": ORACLE_KG_SNAPSHOT_DIFF,
     "layout_compare": ORACLE_LAYOUT_COMPARE,
-    "sample_diverse": ORACLE_SAMPLE_DIVERSE,
     "kg_inverse_preds": ORACLE_KG_INVERSE_PREDS,
     "graph_richclub": ORACLE_GRAPH_RICHCLUB,
     "kg_fact_history": ORACLE_KG_FACT_HISTORY,
@@ -6862,7 +6616,6 @@ ORACLES: dict[str, str] = {
     "graph_sage_sample": ORACLE_GRAPH_SAGE_SAMPLE,
     "kg_fusion": ORACLE_KG_FUSION,
     "kg_types": ORACLE_KG_TYPES,
-    "sample_epochs": ORACLE_SAMPLE_EPOCHS,
     "pack_fim": ORACLE_PACK_FIM,
     "kg_provenance": ORACLE_KG_PROVENANCE,
     "kg_star_optional": ORACLE_KG_STAR_OPTIONAL,
@@ -6870,7 +6623,6 @@ ORACLES: dict[str, str] = {
     "kg_extract": ORACLE_KG_EXTRACT,
     "scd2_user_type": ORACLE_SCD2,
     "layout_zorder": _oracle_layout_zorder(),
-    "sample_weighted": ORACLE_SAMPLE_WEIGHTED,
     "range_lookup_tiers": ORACLE_RANGE_LOOKUP,
     "cc_star": ORACLE_CC_STAR,
     "cc_canonical_names": ORACLE_CC_NAMES,
@@ -6896,8 +6648,6 @@ ORACLES: dict[str, str] = {
     "asof_last_click": ORACLE_ASOF,
     "asof_bucketed": ORACLE_ASOF,
     "interval_prior_clicks": ORACLE_INTERVAL,
-    "sample_stratified": _oracle_sample_stratified(),
-    "sample_hash": _oracle_sample_hash(),
     "imp_edge_parse": ORACLE_EDGE_PARSE,
     "imp_smart_keys": ORACLE_SMART_KEYS,
     "imp_unique_insert": ORACLE_UNIQUE_INSERT,
@@ -6933,7 +6683,6 @@ ORACLES: dict[str, str] = {
     "skew_salted_count": ORACLE_SALTED_COUNT,
     "skew_salted_join": ORACLE_SALTED_JOIN,
     "skew_salted_topk": ORACLE_SALTED_TOPK,
-    "sample_mixture": ORACLE_SAMPLE_MIXTURE,
     "pack_sequences": ORACLE_PACK_SEQUENCES,
     "kg_incremental_entities": ORACLE_KG_INCREMENTAL,
     # every registered query is oracle-checked: the iterative ones replay
