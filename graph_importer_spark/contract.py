@@ -77,197 +77,6 @@ def _dec(col, p=12, s=4):
 # §2.5 windows — the built-in surface the graft adds over the reference)
 # ---------------------------------------------------------------------------
 
-def q_pricing_summary(spark, sf_dir):
-    li = T(spark, sf_dir, "lineitem")
-    # precision budget: 10,2 x 7,6 = p17 fits DuckDB's int64 decimal
-    # kernel; the second multiply goes int128 in both engines, far below
-    # either engine's 38-digit cap => no re-scaling anywhere.
-    disc = (F.lit(1.0) - F.col("l_discount")).cast("decimal(7,6)")
-    tax = (F.lit(1.0) + F.col("l_tax")).cast("decimal(7,6)")
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum(_dec("l_quantity")), 4).cast("double").alias("sum_qty"),
-            F.round(F.sum(_dec("l_extendedprice", 10, 2)), 2).cast("double").alias("sum_base_price"),
-            # round the exact decimal sum to <=4 dp BEFORE the double
-            # cast: the rounded integer mantissa fits a double exactly,
-            # so both engines' decimal->double conversions agree (at
-            # scale 14 they can differ by a few ulps).
-            F.round(F.sum(_dec("l_extendedprice", 10, 2) * disc), 4).cast("double").alias("sum_disc_price"),
-            F.round(
-                F.sum((_dec("l_extendedprice", 10, 2) * disc).cast("decimal(22,8)") * tax), 4
-            ).cast("double").alias("sum_charge"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-ORACLE_PRICING = """
-SELECT l_returnflag, l_linestatus,
-  CAST(round(SUM(CAST(l_quantity AS DECIMAL(12,4))), 4) AS DOUBLE) AS sum_qty,
-  CAST(round(SUM(CAST(l_extendedprice AS DECIMAL(10,2))), 2) AS DOUBLE) AS sum_base_price,
-  CAST(round(SUM(CAST(l_extendedprice AS DECIMAL(10,2)) * CAST(1.0 - l_discount AS DECIMAL(7,6))), 4) AS DOUBLE) AS sum_disc_price,
-  CAST(round(SUM(CAST(CAST(l_extendedprice AS DECIMAL(10,2)) * CAST(1.0 - l_discount AS DECIMAL(7,6)) AS DECIMAL(22,8)) * CAST(1.0 + l_tax AS DECIMAL(7,6))), 4) AS DOUBLE) AS sum_charge,
-  COUNT(*) AS count_order
-FROM lineitem GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_region_volume(spark, sf_dir):
-    """Fact-side scan + broadcast dim chain (customer->nation->region) —
-    the canonical small-dim broadcast plan (no shuffle on orders)."""
-    o, c = T(spark, sf_dir, "orders"), T(spark, sf_dir, "customer")
-    n, r = T(spark, sf_dir, "nation"), T(spark, sf_dir, "region")
-    return (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("r_name")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum(_dec("o_totalprice", 14, 2)), 2).cast("double").alias("revenue"),
-        )
-    )
-
-
-ORACLE_REGION = """
-SELECT r_name, COUNT(*) AS n_orders,
-  CAST(round(SUM(CAST(o_totalprice AS DECIMAL(14,2))), 2) AS DOUBLE) AS revenue
-FROM orders JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name
-"""
-
-
-def q_window_top_orders(spark, sf_dir):
-    o = T(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-    return (
-        o.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rank")
-    )
-
-
-ORACLE_TOP_ORDERS = """
-SELECT o_custkey, o_orderkey, o_totalprice, rank FROM (
-  SELECT o_custkey, o_orderkey, o_totalprice,
-    ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rank
-  FROM orders) WHERE rank <= 3
-"""
-
-
-def q_semi_join_segments(spark, sf_dir):
-    c, o = T(spark, sf_dir, "customer"), T(spark, sf_dir, "orders")
-    active = c.join(o, c.c_custkey == o.o_custkey, "left_semi")
-    return active.groupBy("c_mktsegment").agg(F.count("*").alias("n_customers"))
-
-
-ORACLE_SEMI = """
-SELECT c_mktsegment, COUNT(*) AS n_customers FROM customer
-WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-GROUP BY c_mktsegment
-"""
-
-
-def q_anti_join_unordered_parts(spark, sf_dir):
-    """Left-anti join (never-ordered parts).  The TPC-H generator orders
-    every part at these SFs, so the natural query matches its oracle
-    with 0 rows — a vacuous gate.  Deterministic unordered parts are
-    planted (every 10th partkey shifted by 1_000_000, a key range no
-    lineitem references) so the row set compared is non-empty and a
-    regression that empties the anti-join is caught."""
-    p, li = T(spark, sf_dir, "part"), T(spark, sf_dir, "lineitem")
-    base = p.select("p_partkey", "p_brand")
-    planted = p.filter(F.col("p_partkey") % 10 == 0).select(
-        (F.col("p_partkey") + 1000000).alias("p_partkey"),
-        F.concat(F.lit("UN#"), F.col("p_brand")).alias("p_brand"),
-    )
-    parts = base.unionAll(planted)
-    return parts.join(li, parts.p_partkey == li.l_partkey, "left_anti").select(
-        "p_partkey", "p_brand"
-    )
-
-
-ORACLE_ANTI = """
-WITH parts AS (
-  SELECT p_partkey, p_brand FROM part
-  UNION ALL
-  SELECT p_partkey + 1000000, 'UN#' || p_brand FROM part WHERE p_partkey % 10 = 0)
-SELECT p_partkey, p_brand FROM parts
-WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey)
-"""
-
-
-def q_quantiles_value(spark, sf_dir):
-    """Exact distributed quantiles (SURVEY §2.4): percentile_disc picks
-    an actual data value (no interpolation arithmetic to diverge
-    cross-engine) per event_type.  Spark computes it as a single-pass
-    sort-based aggregate per group."""
-    ev = T(spark, sf_dir, "events")
-    qd = lambda p: F.expr(  # noqa: E731
-        f"percentile_disc({p}) WITHIN GROUP (ORDER BY value)"
-    )
-    return ev.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        qd(0.25).alias("p25"),
-        qd(0.5).alias("p50"),
-        qd(0.9).alias("p90"),
-    )
-
-
-ORACLE_QUANTILES = """
-SELECT event_type, COUNT(*) AS n_events,
-  quantile_disc(value, 0.25) AS p25,
-  quantile_disc(value, 0.5) AS p50,
-  quantile_disc(value, 0.9) AS p90
-FROM events GROUP BY event_type
-"""
-
-
-def q_pivot_hourly(spark, sf_dir):
-    """Pivot surface (SURVEY §2.4): hour-of-day x event_type count
-    matrix — groupBy().pivot() with an explicit value list (at scale the
-    list must be pinned; letting Spark scan for distinct pivot values is
-    an extra pass over the data)."""
-    ev = T(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.hour(F.col("ts").cast("timestamp")).alias("hour_of_day"))
-        .pivot("event_type", ["click", "view", "purchase", "error", "signup"])
-        .agg(F.count(F.lit(1)))
-        .na.fill(0)
-    )
-
-
-ORACLE_PIVOT = """
-SELECT EXTRACT(hour FROM ts) AS hour_of_day,
-  COUNT(*) FILTER (event_type = 'click') AS click,
-  COUNT(*) FILTER (event_type = 'view') AS view,
-  COUNT(*) FILTER (event_type = 'purchase') AS purchase,
-  COUNT(*) FILTER (event_type = 'error') AS error,
-  COUNT(*) FILTER (event_type = 'signup') AS signup
-FROM events GROUP BY 1
-"""
-
-
-def q_rollup_pricing(spark, sf_dir):
-    """Grouping-set surface (SURVEY §2.4): ROLLUP over
-    (l_returnflag, l_linestatus) with subtotal and grand-total rows —
-    one pass, partial aggregation at every grouping level."""
-    li = T(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        F.count("*").alias("n_rows"),
-        F.round(F.sum(_dec("l_quantity")), 4).cast("double").alias("sum_qty"),
-    )
-
-
-ORACLE_ROLLUP = """
-SELECT l_returnflag, l_linestatus, COUNT(*) AS n_rows,
-  CAST(round(SUM(CAST(l_quantity AS DECIMAL(12,4))), 4) AS DOUBLE) AS sum_qty
-FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-"""
-
 
 def q_events_sessions(spark, sf_dir, gap_us: int = 1800 * 1_000_000):
     """Gap-based sessionization via lag window (streaming session-window
@@ -1595,46 +1404,6 @@ SELECT 'y' || j, 'x' || j FROM range(5) t(j)
 # ---------------------------------------------------------------------------
 
 
-def q_scd2_user_type(spark, sf_dir):
-    """SCD2 history build over the events change log: per-user
-    event_type intervals with consecutive re-assertions collapsed,
-    validity bounds as epoch micros (engine-neutral)."""
-    from graph_importer_spark.operators import scd2 as _scd2
-
-    e = T(spark, sf_dir, "events").select(
-        "user_id", "event_type", "ts", "event_id"
-    )
-    h = _scd2.scd2_history(e, "user_id", ["event_type"], "ts", "event_id")
-    return h.select(
-        "user_id",
-        "event_type",
-        F.unix_micros(F.col("valid_from").cast("timestamp")).alias("valid_from_us"),
-        F.unix_micros(F.col("valid_to").cast("timestamp")).alias("valid_to_us"),
-        "is_current",
-        "version",
-    )
-
-
-ORACLE_SCD2 = """
-WITH o AS (
-  SELECT user_id, event_type, event_id, epoch_us(ts) AS t,
-         LAG(event_type) OVER w AS prev,
-         LAG(ts) OVER w IS NULL AS first
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)),
-c AS (
-  SELECT user_id, event_type, event_id, t FROM o
-  WHERE first OR prev IS DISTINCT FROM event_type)
-SELECT user_id, event_type,
-       t AS valid_from_us,
-       LEAD(t) OVER w2 AS valid_to_us,
-       LEAD(t) OVER w2 IS NULL AS is_current,
-       ROW_NUMBER() OVER w2 AS version
-FROM c
-WINDOW w2 AS (PARTITION BY user_id ORDER BY t, event_id)
-"""
-
-
 def q_layout_zorder(spark, sf_dir):
     """Z-order layout measurement on orders over (o_custkey,
     o_orderdate): quantize both dims to 8 bits against the global
@@ -1698,38 +1467,6 @@ FROM f GROUP BY file_id
 """
 
 
-def q_range_lookup_tiers(spark, sf_dir):
-    """Broadcast range-dim lookup: bucket-exploded equi-join (no
-    broadcast nested loop) mapping each event value into a price-tier
-    interval table with a deliberate gap (tier 5 missing -> NULL tier
-    rows prove the left-join semantics).  Rolled up per tier so the
-    oracle pins counts and value bounds."""
-    from graph_importer_spark.operators import joins as _joins
-
-    e = T(spark, sf_dir, "events").select(
-        "event_id", F.col("value").cast("long").alias("v")
-    )
-    rows = [(i * 37, (i + 1) * 37, f"tier{i:02d}") for i in range(14) if i != 5]
-    ranges = spark.createDataFrame(rows, "lo long, hi long, tier string")
-    out = _joins.range_lookup(e, ranges, "v", bucket_bits=5)
-    return out.groupBy("tier").agg(
-        F.count("*").alias("n"),
-        F.min("v").alias("v_min"),
-        F.max("v").alias("v_max"),
-    )
-
-
-ORACLE_RANGE_LOOKUP = """
-WITH f AS (SELECT event_id, CAST(floor(value) AS BIGINT) AS v FROM events),
-r AS (SELECT i * 37 AS lo, (i + 1) * 37 AS hi,
-             'tier' || lpad(CAST(i AS VARCHAR), 2, '0') AS tier
-      FROM range(14) t(i) WHERE i <> 5),
-j AS (SELECT f.v, r.tier FROM f LEFT JOIN r ON r.lo <= f.v AND f.v < r.hi)
-SELECT tier, COUNT(*) AS n, MIN(v) AS v_min, MAX(v) AS v_max
-FROM j GROUP BY tier
-"""
-
-
 def q_split_by_customer(spark, sf_dir):
     """Leakage-free 80/10/10 split of orders GROUPED BY customer: the
     split label is a pure function of the customer key's md5 coin, so
@@ -1783,81 +1520,6 @@ SELECT split, COUNT(*) AS n_orders,
        COUNT(DISTINCT o_custkey) AS n_customers,
        CAST(round(SUM(CAST(o_totalprice AS DECIMAL(14,2))), 2) AS DOUBLE) AS revenue
 FROM lab GROUP BY split
-"""
-
-
-def q_diff_orders(spark, sf_dir):
-    """Snapshot diff: orders vs a deterministically mutated copy
-    (drop key%97 rows, +1.0 the price on key%89, re-prioritize key%83,
-    append key%101 rows under shifted keys), summarized as
-    (status, changed column set, count)."""
-    from graph_importer_spark.operators import diffing as _diff
-
-    o = T(spark, sf_dir, "orders")
-    k = F.col("o_orderkey")
-    mutated = (
-        o.filter(k % 97 != 0)
-        .withColumn(
-            "o_totalprice",
-            F.when(k % 89 == 0, F.col("o_totalprice") + F.lit(1.0)).otherwise(
-                F.col("o_totalprice")
-            ),
-        )
-        .withColumn(
-            "o_orderpriority",
-            F.when(k % 83 == 0, F.lit("9-RUSH")).otherwise(
-                F.col("o_orderpriority")
-            ),
-        )
-    )
-    added = o.filter(k % 101 == 0).withColumn(
-        "o_orderkey", k + F.lit(100_000_000)
-    )
-    new = mutated.unionByName(added)
-    d = _diff.dataset_diff(
-        o, new, ["o_orderkey"],
-        ["o_totalprice", "o_orderstatus", "o_orderpriority"],
-    )
-    return d.groupBy(
-        "status", F.array_join("changed_cols", ",").alias("cols")
-    ).agg(F.count("*").alias("n"))
-
-
-ORACLE_DIFF_ORDERS = """
-WITH o AS (
-  SELECT o_orderkey, o_totalprice, o_orderstatus, o_orderpriority FROM orders),
-n AS (
-  SELECT o_orderkey,
-         CASE WHEN o_orderkey % 89 = 0 THEN o_totalprice + 1.0
-              ELSE o_totalprice END AS o_totalprice,
-         o_orderstatus,
-         CASE WHEN o_orderkey % 83 = 0 THEN '9-RUSH'
-              ELSE o_orderpriority END AS o_orderpriority
-  FROM orders WHERE o_orderkey % 97 <> 0
-  UNION ALL
-  SELECT o_orderkey + 100000000, o_totalprice, o_orderstatus, o_orderpriority
-  FROM orders WHERE o_orderkey % 101 = 0),
-j AS (
-  SELECT o.o_orderkey IS NOT NULL AS in_old,
-         n.o_orderkey IS NOT NULL AS in_new,
-         o.o_totalprice IS DISTINCT FROM n.o_totalprice AS d_price,
-         o.o_orderstatus IS DISTINCT FROM n.o_orderstatus AS d_status,
-         o.o_orderpriority IS DISTINCT FROM n.o_orderpriority AS d_prio
-  FROM o FULL OUTER JOIN n ON o.o_orderkey = n.o_orderkey),
-lab AS (
-  SELECT CASE WHEN NOT in_old THEN 'added'
-              WHEN NOT in_new THEN 'removed'
-              WHEN d_price OR d_status OR d_prio THEN 'changed'
-              ELSE 'unchanged' END AS status,
-         CASE WHEN in_old AND in_new THEN COALESCE(array_to_string(
-           list_sort(list_filter([
-             CASE WHEN d_price THEN 'o_totalprice' END,
-             CASE WHEN d_status THEN 'o_orderstatus' END,
-             CASE WHEN d_prio THEN 'o_orderpriority' END
-           ], x -> x IS NOT NULL)), ','), '')
-         ELSE '' END AS cols
-  FROM j)
-SELECT status, cols, COUNT(*) AS n FROM lab GROUP BY status, cols
 """
 
 
@@ -2624,53 +2286,6 @@ FROM d WHERE deg >= 1
 """
 
 
-def q_profile_orders(spark, sf_dir):
-    """Column profiling (operators/profiling.profile_table) over three
-    orders-derived columns, one with planted NULLs (orderkey % 7) —
-    null fraction, exact distinct, string min/max, deterministic top
-    value (ties toward the larger value string).  The oracle replays
-    each column's roll-up and unions the rows."""
-    from graph_importer_spark.operators.profiling import profile_table
-
-    o = T(spark, sf_dir, "orders")
-    frame = o.select(
-        "o_orderstatus",
-        "o_orderpriority",
-        F.when(F.col("o_orderkey") % 7 != 0, F.col("o_custkey") % 50).alias(
-            "cust_bucket"
-        ),
-    )
-    return profile_table(frame)
-
-
-def _oracle_profile_orders() -> str:
-    cols = {
-        "o_orderstatus": "o_orderstatus",
-        "o_orderpriority": "o_orderpriority",
-        "cust_bucket": "CASE WHEN o_orderkey % 7 <> 0 THEN o_custkey % 50 END",
-    }
-    parts = []
-    for name, expr in cols.items():
-        parts.append(
-            f"""
-SELECT '{name}' AS "column", CAST(SUM(cnt) AS BIGINT) AS n_rows,
-       CAST(COALESCE(SUM(cnt) FILTER (WHERE value IS NULL), 0) AS BIGINT) AS n_null,
-       round(COALESCE(SUM(cnt) FILTER (WHERE value IS NULL), 0) * 1.0
-             / SUM(cnt), 6) AS null_frac,
-       COUNT(*) FILTER (WHERE value IS NOT NULL) AS n_distinct,
-       MIN(value) AS min_value, MAX(value) AS max_value,
-       arg_max(value, printf('%012d', cnt) || '|' || value)
-         FILTER (WHERE value IS NOT NULL) AS top_value,
-       MAX(cnt) FILTER (WHERE value IS NOT NULL) AS top_count
-FROM (SELECT CAST({expr} AS VARCHAR) AS value, COUNT(*) AS cnt
-      FROM orders GROUP BY 1)"""
-        )
-    return "\nUNION ALL\n".join(parts)
-
-
-ORACLE_PROFILE_ORDERS = _oracle_profile_orders()
-
-
 def q_stream_join(spark, sf_dir):
     """stream_interval_join executed AS A STREAM: view->click
     attribution within 1 h on the same user, both sides file streams
@@ -2865,73 +2480,6 @@ FROM (SELECT * FROM e JOIN ok USING (r)) x
 JOIN (SELECT * FROM e JOIN ok USING (r)) y USING (r)
 WHERE x.l < y.l
 GROUP BY 1, 2 HAVING COUNT(*) >= 2
-"""
-
-
-def q_cdc_apply(spark, sf_dir):
-    """CDC MERGE (scd2.apply_cdc): a synthesized change log over the
-    customer snapshot — two competing updates per %10==0 key (v2 must
-    win), deletes for %10==1, inserts of brand-new keys — applied with
-    last-writer-wins.  Oracle replays via QUALIFY max-version pick +
-    full-outer merge."""
-    from graph_importer_spark.operators.scd2 import apply_cdc
-
-    c = T(spark, sf_dir, "customer")
-    snap = c.select("c_custkey", "c_name", "c_acctbal")
-    base = c.select("c_custkey", "c_name", "c_acctbal")
-    u1 = base.filter(F.col("c_custkey") % 10 == 0).select(
-        "c_custkey",
-        F.concat(F.lit("u1_"), "c_name").alias("c_name"),
-        (F.col("c_acctbal") + 1).alias("c_acctbal"),
-        F.lit("U").alias("op"),
-        F.lit(1).alias("version"),
-    )
-    u2 = base.filter(F.col("c_custkey") % 10 == 0).select(
-        "c_custkey",
-        F.concat(F.lit("u2_"), "c_name").alias("c_name"),
-        (F.col("c_acctbal") + 2).alias("c_acctbal"),
-        F.lit("U").alias("op"),
-        F.lit(2).alias("version"),
-    )
-    d = base.filter(F.col("c_custkey") % 10 == 1).select(
-        "c_custkey",
-        F.lit(None).cast("string").alias("c_name"),
-        F.lit(None).cast("double").alias("c_acctbal"),
-        F.lit("D").alias("op"),
-        F.lit(1).alias("version"),
-    )
-    ins = base.filter(F.col("c_custkey") % 10 == 2).select(
-        (F.col("c_custkey") + 1000000).alias("c_custkey"),
-        F.concat(F.lit("new_"), "c_name").alias("c_name"),
-        F.lit(0.0).alias("c_acctbal"),
-        F.lit("I").alias("op"),
-        F.lit(1).alias("version"),
-    )
-    changes = u1.unionByName(u2).unionByName(d).unionByName(ins)
-    return apply_cdc(snap, changes, "c_custkey")
-
-
-ORACLE_CDC_APPLY = """
-WITH snap AS (SELECT c_custkey, c_name, c_acctbal FROM customer),
-ch AS (
-  SELECT c_custkey, 'u1_' || c_name AS c_name, c_acctbal + 1 AS c_acctbal,
-         'U' AS op, 1 AS version FROM customer WHERE c_custkey % 10 = 0
-  UNION ALL
-  SELECT c_custkey, 'u2_' || c_name, c_acctbal + 2, 'U', 2
-  FROM customer WHERE c_custkey % 10 = 0
-  UNION ALL
-  SELECT c_custkey, NULL, NULL, 'D', 1 FROM customer WHERE c_custkey % 10 = 1
-  UNION ALL
-  SELECT c_custkey + 1000000, 'new_' || c_name, 0.0, 'I', 1
-  FROM customer WHERE c_custkey % 10 = 2),
-latest AS (
-  SELECT * FROM ch
-  QUALIFY row_number() OVER (PARTITION BY c_custkey ORDER BY version DESC) = 1)
-SELECT c_custkey,
-       CASE WHEN l.op IS NOT NULL THEN l.c_name ELSE s.c_name END AS c_name,
-       CASE WHEN l.op IS NOT NULL THEN l.c_acctbal ELSE s.c_acctbal END AS c_acctbal
-FROM snap s FULL JOIN latest l USING (c_custkey)
-WHERE l.op IS NULL OR l.op <> 'D'
 """
 
 
@@ -5016,54 +4564,6 @@ FROM c
 """
 
 
-def q_drift_psi(spark, sf_dir):
-    """PSI drift monitor (profiling.psi_drift): order totals before
-    1998 as reference vs 1.15x-inflated totals from 1998 on as the
-    drifted current snapshot; fixed [0, 600000] cutpoints; the oracle
-    replays the clamped binning and the smoothed log terms."""
-    from graph_importer_spark.operators.profiling import psi_drift
-
-    o = T(spark, sf_dir, "orders")
-    ref = o.filter(F.col("o_orderdate") < "1998-01-01").select(
-        F.col("o_totalprice").alias("v")
-    )
-    cur = o.filter(F.col("o_orderdate") >= "1998-01-01").select(
-        (F.col("o_totalprice") * 1.15).alias("v")
-    )
-    return psi_drift(ref, cur, "v", lo=0.0, hi=600000.0, n_bins=10)
-
-
-ORACLE_DRIFT_PSI = r"""
-WITH ref AS (
-  SELECT CAST(o_totalprice AS DOUBLE) AS v FROM orders
-  WHERE o_orderdate < TIMESTAMP '1998-01-01'),
-cur AS (
-  SELECT CAST(o_totalprice AS DOUBLE) * 1.15 AS v FROM orders
-  WHERE o_orderdate >= TIMESTAMP '1998-01-01'),
-rb AS (
-  SELECT LEAST(GREATEST(CAST(floor(v / 60000.0) AS INT), 0), 9) AS bin,
-         COUNT(*) AS n_ref
-  FROM ref GROUP BY 1),
-cb AS (
-  SELECT LEAST(GREATEST(CAST(floor(v / 60000.0) AS INT), 0), 9) AS bin,
-         COUNT(*) AS n_cur
-  FROM cur GROUP BY 1),
-bins AS (SELECT CAST(u.b AS INT) AS bin FROM UNNEST(generate_series(0, 9)) u(b)),
-j AS (
-  SELECT bins.bin, COALESCE(rb.n_ref, 0) AS n_ref,
-         COALESCE(cb.n_cur, 0) AS n_cur
-  FROM bins LEFT JOIN rb USING (bin) LEFT JOIN cb USING (bin)),
-tot AS (SELECT SUM(n_ref) AS tr, SUM(n_cur) AS tc FROM j)
-SELECT bin, n_ref, n_cur,
-       round((n_ref + 0.5) / (tr + 5.0), 6) AS p_ref,
-       round((n_cur + 0.5) / (tc + 5.0), 6) AS p_cur,
-       round(((n_ref + 0.5) / (tr + 5.0) - (n_cur + 0.5) / (tc + 5.0))
-             * ln(((n_ref + 0.5) / (tr + 5.0))
-                  / ((n_cur + 0.5) / (tc + 5.0))), 6) AS contrib
-FROM j, tot
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18i: posting-list delta compression, extractive
 # summarization, churn label builder
@@ -5498,39 +4998,6 @@ FROM per JOIN tot ON tot.pred = per.pred
 # Round-4 session-18r: grouped OLS, join-cardinality audit, Matryoshka
 # truncation recall
 # ---------------------------------------------------------------------------
-
-
-def q_join_card_audit(spark, sf_dir):
-    """Join-cardinality estimator audit (profiling.
-    join_cardinality_audit): lineitem x part on 50-valued folded keys
-    — the uniform-key estimate vs the skewed actual; the oracle
-    replays both statistics and the real join count."""
-    from graph_importer_spark.operators.profiling import (
-        join_cardinality_audit,
-    )
-
-    li = T(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 2000).select(
-        (F.col("l_partkey") % 50).alias("k")
-    )
-    p = T(spark, sf_dir, "part").select((F.col("p_partkey") % 50).alias("k"))
-    return join_cardinality_audit(li, p, "k", "k")
-
-
-ORACLE_JOIN_CARD_AUDIT = r"""
-WITH a AS (
-  SELECT l_partkey % 50 AS k FROM lineitem WHERE l_orderkey < 2000),
-b AS (SELECT p_partkey % 50 AS k FROM part),
-sa AS (SELECT COUNT(*) AS n_a, COUNT(DISTINCT k) AS ndv_a FROM a),
-sb AS (SELECT COUNT(*) AS n_b, COUNT(DISTINCT k) AS ndv_b FROM b),
-act AS (SELECT COUNT(*) AS actual FROM a JOIN b USING (k))
-SELECT n_a, n_b, ndv_a, ndv_b,
-       round(CAST(n_a AS DOUBLE) * n_b / GREATEST(ndv_a, ndv_b), 6) AS est,
-       actual,
-       round(actual
-             / (CAST(n_a AS DOUBLE) * n_b / GREATEST(ndv_a, ndv_b)), 6)
-         AS ratio
-FROM sa, sb, act
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -6263,7 +5730,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # round-4 session-18h additions: importer dead-letter routing,
     # PSI drift monitor, cohort LTV curves, dedup storage savings.
     "imp_quarantine": q_imp_quarantine,
-    "drift_psi": q_drift_psi,
     # round-4 session-18i additions: posting delta compression,
     # extractive summarization, churn label builder.
     # round-4 session-18j additions: JSON schema inference, quotient
@@ -6291,7 +5757,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_benford": q_kg_benford,
     # round-4 session-18r additions: grouped OLS, join-cardinality
     # audit, Matryoshka truncation recall.
-    "join_card_audit": q_join_card_audit,
     # round-4 session-18s additions: information gain, CUSUM.
     # round-4 session-18t additions: seasonal anomalies, k-fold.
     # round-4 session-18u additions: embeddedness, burstiness,
@@ -6327,9 +5792,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "graph_centralization": q_graph_centralization,
     # round-4 session-2 additions: CMS heavy hitters, SCD2 history,
     # Z-order layout, web link graph
-    "scd2_user_type": q_scd2_user_type,
     "layout_zorder": q_layout_zorder,
-    "range_lookup_tiers": q_range_lookup_tiers,
     # new or code-touched since the r3 driver ran (ff72a00 + round 4):
     # composed hygiene recipe, PSL domains, de-vacuized oracles,
     # IVF sqrt(n) defaults + hot-list cap, Gopher exact stop set
@@ -6349,7 +5812,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # (planted clones / planted unordered parts) changed the compared
     # row sets, and the round-3 verdict explicitly asks for non-empty
     # driver-green rows in CORRECTNESS_r04
-    "anti_join_unordered_parts": q_anti_join_unordered_parts,
     # round-4 session-6 additions: local clustering coefficient,
     # PARIS predicate stats, N-Quads serialization, funnel analysis,
     # Fellegi-Sunter linkage scoring, rendezvous sharding.  They take
@@ -6374,7 +5836,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # r1+r2 driver-green, judge-verified r3, untouched this round,
     # and re-verified locally via scripts/check_contract.py.
     "split_by_customer": q_split_by_customer,
-    "diff_orders": q_diff_orders,
     # web_meta is the last never-driver-green entry; it takes the
     # final window slot over sim_ann_lsh (r3 driver-green), whose
     # session-3 lsh_band_keys refactor is already driver-covered
@@ -6387,12 +5848,10 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_closure": q_kg_closure,
     "kg_path_2hop": q_kg_path_2hop,
     "graph_powerlaw": q_graph_powerlaw,
-    "profile_orders": q_profile_orders,
     "stream_interval_join": q_stream_join,
     "kg_entity_summary": q_kg_entity_summary,
     "graph_anf": q_graph_anf,
     "graph_bipartite": q_graph_bipartite,
-    "cdc_apply": q_cdc_apply,
     # round-4 session-8 additions (FIFO behind the session-7 block;
     # all queue at the tail for the r5 window, verified this round by
     # the local full sweep): GraphSAGE neighbor sampling, mojibake
@@ -6487,10 +5946,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # displaced by the session-3 additions (see window note above):
     # r1+r2 driver-green, r3 judge-verified, untouched, locally
     # re-verified this session
-    "pricing_summary": q_pricing_summary,
-    "region_volume": q_region_volume,
-    "window_top_orders": q_window_top_orders,
-    "semi_join_segments": q_semi_join_segments,
     "gen_tournament": q_gen_tournament,
     "imp_unique_insert": q_imp_unique_insert,
     # cc family remains window-covered by cc_star;
@@ -6510,8 +5965,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # round; rotated per the policy ----
     "gen_edge_attrs": q_gen_edge_attrs,
     "gen_cliques_graph": q_gen_cliques_graph,
-    "quantiles_value": q_quantiles_value,
-    "pivot_hourly": q_pivot_hourly,
     "stream_windowed_counts": q_stream_windowed_counts,
     "stream_dedup": q_stream_dedup,
     "stream_sessions": q_stream_sessions,
@@ -6532,7 +5985,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "slpa_overlap": q_slpa_overlap,
     "tri_copurchase": q_tri_copurchase,
     "kcore_copurchase": q_kcore_copurchase,
-    "rollup_pricing": q_rollup_pricing,
     # round-5: bounded Pregel3-MinCut analogue (SURVEY §2.9 G7)
     "graph_mincut": q_graph_mincut,
 }
@@ -6569,7 +6021,6 @@ ORACLES: dict[str, str] = {
     "graph_diameter": ORACLE_GRAPH_DIAMETER,
     "kg_path_alt": ORACLE_KG_PATH_ALT,
     "imp_quarantine": ORACLE_IMP_QUARANTINE,
-    "drift_psi": ORACLE_DRIFT_PSI,
     "graph_quotient": ORACLE_GRAPH_QUOTIENT,
     "graph_shortest_path": ORACLE_GRAPH_SHORTEST_PATH,
     "graph_cc_sizes": ORACLE_GRAPH_CC_SIZES,
@@ -6578,7 +6029,6 @@ ORACLES: dict[str, str] = {
     "graph_matching": _oracle_graph_matching(),
     "kg_motif_cycle": ORACLE_KG_MOTIF_CYCLE,
     "kg_benford": _oracle_kg_benford(),
-    "join_card_audit": ORACLE_JOIN_CARD_AUDIT,
     "graph_embeddedness": ORACLE_GRAPH_EMBEDDEDNESS,
     "schema_fd": ORACLE_SCHEMA_FD,
     "stream_cdc_apply": ORACLE_STREAM_CDC_APPLY,
@@ -6607,12 +6057,10 @@ ORACLES: dict[str, str] = {
     "kg_closure": ORACLE_KG_CLOSURE,
     "kg_path_2hop": ORACLE_KG_PATH_2HOP,
     "graph_powerlaw": ORACLE_GRAPH_POWERLAW,
-    "profile_orders": ORACLE_PROFILE_ORDERS,
     "stream_interval_join": ORACLE_STREAM_JOIN,
     "kg_entity_summary": ORACLE_KG_ENTITY_SUMMARY,
     "graph_anf": ORACLE_GRAPH_ANF,
     "graph_bipartite": ORACLE_GRAPH_BIPARTITE,
-    "cdc_apply": ORACLE_CDC_APPLY,
     "graph_sage_sample": ORACLE_GRAPH_SAGE_SAMPLE,
     "kg_fusion": ORACLE_KG_FUSION,
     "kg_types": ORACLE_KG_TYPES,
@@ -6621,9 +6069,7 @@ ORACLES: dict[str, str] = {
     "kg_star_optional": ORACLE_KG_STAR_OPTIONAL,
     "kg_flagship": ORACLE_KG_FLAGSHIP,
     "kg_extract": ORACLE_KG_EXTRACT,
-    "scd2_user_type": ORACLE_SCD2,
     "layout_zorder": _oracle_layout_zorder(),
-    "range_lookup_tiers": ORACLE_RANGE_LOOKUP,
     "cc_star": ORACLE_CC_STAR,
     "cc_canonical_names": ORACLE_CC_NAMES,
     "cc_canonical_dense": ORACLE_CC_NAMES,
@@ -6637,14 +6083,6 @@ ORACLES: dict[str, str] = {
     "slpa_overlap": _oracle_slpa(),
     "tri_copurchase": ORACLE_TRI_COPURCHASE,
     "kcore_copurchase": _oracle_kcore(),
-    "pricing_summary": ORACLE_PRICING,
-    "region_volume": ORACLE_REGION,
-    "window_top_orders": ORACLE_TOP_ORDERS,
-    "semi_join_segments": ORACLE_SEMI,
-    "anti_join_unordered_parts": ORACLE_ANTI,
-    "quantiles_value": ORACLE_QUANTILES,
-    "pivot_hourly": ORACLE_PIVOT,
-    "rollup_pricing": ORACLE_ROLLUP,
     "asof_last_click": ORACLE_ASOF,
     "asof_bucketed": ORACLE_ASOF,
     "interval_prior_clicks": ORACLE_INTERVAL,
@@ -6658,7 +6096,6 @@ ORACLES: dict[str, str] = {
     "gen_vertex_docs": ORACLE_GEN_VERTEX_DOCS,
     "gen_edge_attrs": ORACLE_GEN_EDGE_ATTRS,
     "split_by_customer": _oracle_split_by_customer(),
-    "diff_orders": ORACLE_DIFF_ORDERS,
     "graph_clustering": ORACLE_GRAPH_CLUSTERING,
     "graph_ppr": _oracle_graph_ppr(),
     "graph_ktruss": _oracle_ktruss(),
