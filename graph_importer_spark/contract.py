@@ -41,7 +41,6 @@ from graph_importer_spark.importer.keys import (
     idx_to_vertex,
 )
 from graph_importer_spark.operators import generators as _gen
-from graph_importer_spark.operators import skew as _skew
 from graph_importer_spark.operators import textstats as _ts
 from graph_importer_spark.operators.analytics import (
     effective_closeness,
@@ -105,129 +104,6 @@ SELECT user_id, CAST(SUM(new_s) AS BIGINT) AS n_sessions, COUNT(*) AS n_events F
          THEN 1 ELSE 0 END AS new_s
   FROM events WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
 ) GROUP BY user_id
-"""
-
-
-def q_asof_last_click(spark, sf_dir):
-    """Backward as-of join (operators/joins.asof_join): every error
-    event picks the user's most recent click at-or-before it — the
-    union-tag single-shuffle shape, no join blow-up.  Missing matches
-    are coalesced to -1 so the frame stays integer-typed for the
-    driver's value hash; the operator itself returns NULLs
-    (tests/test_joins_sampling.py covers that)."""
-    from graph_importer_spark.operators.joins import asof_join
-
-    ev = T(spark, sf_dir, "events")
-    errors = ev.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("event_id").alias("click_id")
-    )
-    j = asof_join(errors, clicks, on="user_id", right_payload=["click_id"])
-    return j.select(
-        "event_id",
-        "user_id",
-        F.coalesce("r_click_id", F.lit(-1)).alias("click_id"),
-        F.coalesce(
-            F.unix_timestamp("ts") - F.unix_timestamp("r_ts"), F.lit(-1)
-        ).alias("gap_sec"),
-    )
-
-
-# The oracle replays the identical union-tag window program (DuckDB's
-# native ASOF JOIN leaves equal-timestamp ties unspecified; this pins
-# them the same way the operator does: larger click_id wins).
-ORACLE_ASOF = """
-WITH l AS (
-  SELECT event_id, user_id AS k, ts AS t FROM events WHERE event_type = 'error'),
-r AS (
-  SELECT event_id AS click_id, user_id AS k, ts AS t
-  FROM events WHERE event_type = 'click'),
-u AS (
-  SELECT k, t, 1 AS side, CAST(NULL AS BIGINT) AS click_id,
-         CAST(NULL AS TIMESTAMP) AS rts, event_id FROM l
-  UNION ALL
-  SELECT k, t, 0, click_id, t, NULL FROM r),
-c AS (
-  SELECT k, t, side, event_id,
-    LAST_VALUE(click_id IGNORE NULLS) OVER w AS m_click,
-    LAST_VALUE(rts IGNORE NULLS) OVER w AS m_ts
-  FROM u
-  WINDOW w AS (PARTITION BY k ORDER BY t, side, click_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-SELECT event_id, k AS user_id, COALESCE(m_click, -1) AS click_id,
-  COALESCE(date_diff('second', m_ts, t), -1) AS gap_sec
-FROM c WHERE side = 1
-"""
-
-
-def q_asof_bucketed(spark, sf_dir):
-    """The as-of hot-key escape hatch (bucket_seconds): identical
-    semantics to q_asof_last_click, but the window runs per
-    (user, hour-bucket) with a bucket-level carry, so one pathological
-    user cannot serialize the sort into a single task.  Bit-identical
-    output => same oracle (ORACLE_ASOF)."""
-    from graph_importer_spark.operators.joins import asof_join
-
-    ev = T(spark, sf_dir, "events")
-    errors = ev.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("event_id").alias("click_id")
-    )
-    j = asof_join(
-        errors, clicks, on="user_id", right_payload=["click_id"], bucket_seconds=3600
-    )
-    return j.select(
-        "event_id",
-        "user_id",
-        F.coalesce("r_click_id", F.lit(-1)).alias("click_id"),
-        F.coalesce(
-            F.unix_timestamp("ts") - F.unix_timestamp("r_ts"), F.lit(-1)
-        ).alias("gap_sec"),
-    )
-
-
-def q_interval_prior_clicks(spark, sf_dir):
-    """Interval/range join (operators/joins.interval_join): how many
-    clicks did the user make in the 10 minutes up to each error —
-    the time-bucketed equi-join shape (<=2 bucket probes per row), not
-    an inequality theta join; zeros kept via a left join back."""
-    from graph_importer_spark.operators.joins import interval_join
-
-    ev = T(spark, sf_dir, "events")
-    errors = ev.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("event_id").alias("click_id")
-    )
-    j = interval_join(errors, clicks, on="user_id", lower_s=-600, upper_s=0)
-    counts = j.groupBy("event_id").agg(F.count("*").alias("n_prior_clicks"))
-    return (
-        errors.select("event_id", "user_id")
-        .join(counts, "event_id", "left")
-        .select(
-            "event_id",
-            "user_id",
-            F.coalesce("n_prior_clicks", F.lit(0)).alias("n_prior_clicks"),
-        )
-    )
-
-
-ORACLE_INTERVAL = """
-WITH l AS (
-  SELECT event_id, user_id, CAST(floor(epoch(ts)) AS BIGINT) AS lt
-  FROM events WHERE event_type = 'error'),
-r AS (
-  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS rt
-  FROM events WHERE event_type = 'click')
-SELECT l.event_id, l.user_id, COUNT(r.rt) AS n_prior_clicks
-FROM l LEFT JOIN r
-  ON r.user_id = l.user_id AND r.rt >= l.lt - 600 AND r.rt <= l.lt
-GROUP BY l.event_id, l.user_id
 """
 
 
@@ -1253,63 +1129,6 @@ def q_stream_incremental_triples(spark, sf_dir):
 
 
 # -- skew -------------------------------------------------------------------
-
-def q_skew_salted_count(spark, sf_dir):
-    li = T(spark, sf_dir, "lineitem")
-    return _skew.salted_count(li, "l_suppkey")
-
-
-ORACLE_SALTED_COUNT = """
-SELECT l_suppkey, COUNT(*) AS count FROM lineitem GROUP BY l_suppkey
-"""
-
-
-def q_skew_salted_join(spark, sf_dir):
-    # facts carry a non-key payload column (l_quantity) so the contract
-    # exercises the non-degenerate salted-join path: the row-ordinal salt
-    # must spread a hot p_partkey even though nothing about the row
-    # content distinguishes its duplicates
-    li = T(spark, sf_dir, "lineitem").select(
-        F.col("l_partkey").alias("p_partkey"), "l_quantity"
-    )
-    p = T(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    joined = _skew.salted_join_big_skewed(li, p, "p_partkey", buckets=8)
-    return joined.groupBy("p_brand").agg(
-        F.count("*").alias("n_items"),
-        F.sum("l_quantity").cast("double").alias("sum_qty"),
-    )
-
-
-ORACLE_SALTED_JOIN = """
-SELECT p_brand, COUNT(*) AS n_items,
-  CAST(SUM(l_quantity) AS DOUBLE) AS sum_qty
-FROM lineitem JOIN part ON l_partkey = p_partkey
-GROUP BY p_brand
-"""
-
-
-def q_skew_salted_topk(spark, sf_dir):
-    """Windowed top-k over hot keys WITHOUT the per-key window sort:
-    events has only 5 event_type values, so a plain row_number window
-    funnels ~n/5 rows into each of 5 tasks — the canonical top-k skew
-    trap.  salted_topk's two-phase (per-bucket top-k, then a <=
-    buckets*k candidate merge) keeps every task bounded.  Exact, so the
-    oracle is the plain window."""
-    ev = T(spark, sf_dir, "events")
-    return _skew.salted_topk(
-        ev, "event_type", "value", "event_id", k=5, payload=["user_id"]
-    )
-
-
-ORACLE_SALTED_TOPK = """
-SELECT event_type, value, event_id, user_id
-FROM (
-  SELECT event_type, value, event_id, user_id,
-         ROW_NUMBER() OVER (PARTITION BY event_type
-                            ORDER BY value DESC, event_id) AS rn
-  FROM events)
-WHERE rn <= 5
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -5969,12 +5788,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "stream_dedup": q_stream_dedup,
     "stream_sessions": q_stream_sessions,
     "stream_incremental_triples": q_stream_incremental_triples,
-    "skew_salted_count": q_skew_salted_count,
-    "skew_salted_join": q_skew_salted_join,
-    "skew_salted_topk": q_skew_salted_topk,
-    "asof_bucketed": q_asof_bucketed,
-    "asof_last_click": q_asof_last_click,
-    "interval_prior_clicks": q_interval_prior_clicks,
     "effective_closeness_tree": q_effective_closeness_tree,
     "pagerank_star": q_pagerank_star,
     "sssp_tree": q_sssp_tree,
@@ -6083,9 +5896,6 @@ ORACLES: dict[str, str] = {
     "slpa_overlap": _oracle_slpa(),
     "tri_copurchase": ORACLE_TRI_COPURCHASE,
     "kcore_copurchase": _oracle_kcore(),
-    "asof_last_click": ORACLE_ASOF,
-    "asof_bucketed": ORACLE_ASOF,
-    "interval_prior_clicks": ORACLE_INTERVAL,
     "imp_edge_parse": ORACLE_EDGE_PARSE,
     "imp_smart_keys": ORACLE_SMART_KEYS,
     "imp_unique_insert": ORACLE_UNIQUE_INSERT,
@@ -6117,9 +5927,6 @@ ORACLES: dict[str, str] = {
     "stream_dedup": ORACLE_STREAM_DEDUP,
     "stream_sessions": ORACLE_SESSIONS,
     "stream_incremental_triples": ORACLE_KG_FLAGSHIP,
-    "skew_salted_count": ORACLE_SALTED_COUNT,
-    "skew_salted_join": ORACLE_SALTED_JOIN,
-    "skew_salted_topk": ORACLE_SALTED_TOPK,
     "pack_sequences": ORACLE_PACK_SEQUENCES,
     "kg_incremental_entities": ORACLE_KG_INCREMENTAL,
     # every registered query is oracle-checked: the iterative ones replay
