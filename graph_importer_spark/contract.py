@@ -41,7 +41,6 @@ from graph_importer_spark.importer.keys import (
     idx_to_vertex,
 )
 from graph_importer_spark.operators import generators as _gen
-from graph_importer_spark.operators import textstats as _ts
 from graph_importer_spark.operators.analytics import (
     effective_closeness,
     modularity,
@@ -65,10 +64,6 @@ _A2 = _gen._A2
 
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _dec(col, p=12, s=4):
-    return F.col(col).cast(f"decimal({p},{s})") if isinstance(col, str) else col.cast(f"decimal({p},{s})")
 
 
 # ---------------------------------------------------------------------------
@@ -1138,43 +1133,6 @@ def q_stream_incremental_triples(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def q_pack_sequences(spark, sf_dir):
-    """Next-fit sequence packing into 256-token windows across 16 hash
-    shards (the applyInPandas stateful surface; the oracle replays the
-    packing recurrence as a recursive CTE)."""
-    from graph_importer_spark.operators import packing as _pack
-
-    d = T(spark, sf_dir, "documents").select(
-        "doc_id", _ts.token_count(F.col("text")).alias("n_tokens")
-    )
-    return _pack.pack_next_fit(d, "doc_id", "n_tokens", capacity=256, shards=16)
-
-
-ORACLE_PACK_SEQUENCES = r"""
-WITH RECURSIVE base AS (
-  SELECT doc_id, doc_id % 16 AS shard,
-         CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len(string_split_regex(trim(text), '\s+')) END AS BIGINT)
-           AS n_tokens,
-         ROW_NUMBER() OVER (PARTITION BY doc_id % 16 ORDER BY doc_id) AS rn
-  FROM documents),
-capped AS (SELECT *, least(n_tokens, 256) AS t FROM base),
-st AS (
-  SELECT shard, rn, doc_id, n_tokens, t,
-         CAST(0 AS BIGINT) AS seq, CAST(0 AS BIGINT) AS off, t AS used
-  FROM capped WHERE rn = 1
-  UNION ALL
-  SELECT b.shard, b.rn, b.doc_id, b.n_tokens, b.t,
-         CASE WHEN s.used + b.t > 256 AND s.used > 0 THEN s.seq + 1 ELSE s.seq END,
-         CASE WHEN s.used + b.t > 256 AND s.used > 0 THEN 0 ELSE s.used END,
-         CASE WHEN s.used + b.t > 256 AND s.used > 0 THEN b.t ELSE s.used + b.t END
-  FROM st s JOIN capped b ON b.shard = s.shard AND b.rn = s.rn + 1)
-SELECT doc_id, shard, n_tokens,
-       shard * 1099511627776 + seq AS pack_id, off AS offset
-FROM st
-"""
-
-
 def q_kg_incremental_entities(spark, sf_dir):
     """Incremental canonicalization over a constructed delta whose
     merged components have a CLOSED-FORM answer (the strongest oracle:
@@ -1221,125 +1179,6 @@ SELECT 'y' || j, 'x' || j FROM range(5) t(j)
 # Round-4 additions (session 2): CMS heavy hitters, SCD2 history,
 # Z-order layout, web link graph
 # ---------------------------------------------------------------------------
-
-
-def q_layout_zorder(spark, sf_dir):
-    """Z-order layout measurement on orders over (o_custkey,
-    o_orderdate): quantize both dims to 8 bits against the global
-    min/max (1-row broadcast agg), interleave into the Morton key,
-    range-assign 16 files, report the per-file min/max a parquet pruner
-    would see.  The oracle replays quantization (same IEEE division),
-    interleave, NTILE assignment, and stats."""
-    from graph_importer_spark.operators import layout as _lay
-
-    o = T(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_custkey",
-        F.unix_timestamp("o_orderdate").alias("od"),
-    )
-    b = o.agg(
-        F.min("o_custkey").alias("clo"),
-        F.max("o_custkey").alias("chi"),
-        F.min("od").alias("dlo"),
-        F.max("od").alias("dhi"),
-    )
-    j = o.crossJoin(F.broadcast(b))
-    z = _lay.zorder_key(
-        _lay.quantize(F.col("o_custkey"), F.col("clo"), F.col("chi"), 8),
-        _lay.quantize(F.col("od"), F.col("dlo"), F.col("dhi"), 8),
-        8,
-    )
-    return _lay.file_stats(
-        j.withColumn("z", z),
-        F.col("z"),
-        {"cust": F.col("o_custkey"), "od": F.col("od")},
-        n_files=16,
-        tiebreak=F.col("o_orderkey"),
-    )
-
-
-def _oracle_layout_zorder() -> str:
-    interleave = " + ".join(
-        f"(((qx >> {i}) & 1) << {2 * i}) + (((qy >> {i}) & 1) << {2 * i + 1})"
-        for i in range(8)
-    )
-    return f"""
-WITH o AS (
-  SELECT o_orderkey, o_custkey,
-         CAST(floor(epoch(o_orderdate)) AS BIGINT) AS od
-  FROM orders),
-b AS (SELECT MIN(o_custkey) AS clo, MAX(o_custkey) AS chi,
-             MIN(od) AS dlo, MAX(od) AS dhi FROM o),
-q AS (
-  SELECT o_orderkey, o_custkey, od,
-         CAST(floor((o_custkey - clo) * 256 / (chi - clo + 1)) AS BIGINT) AS qx,
-         CAST(floor((od - dlo) * 256 / (dhi - dlo + 1)) AS BIGINT) AS qy
-  FROM o, b),
-z AS (SELECT o_orderkey, o_custkey, od, {interleave} AS z FROM q),
-f AS (SELECT o_custkey, od,
-             NTILE(16) OVER (ORDER BY z, o_orderkey) AS file_id
-      FROM z)
-SELECT file_id, COUNT(*) AS n_rows,
-       MIN(o_custkey) AS cust_min, MAX(o_custkey) AS cust_max,
-       MIN(od) AS od_min, MAX(od) AS od_max
-FROM f GROUP BY file_id
-"""
-
-
-def q_split_by_customer(spark, sf_dir):
-    """Leakage-free 80/10/10 split of orders GROUPED BY customer: the
-    split label is a pure function of the customer key's md5 coin, so
-    no customer straddles train/holdout.  Per-split row + group counts
-    and exact-decimal revenue."""
-    from graph_importer_spark.operators import sampling as _samp
-
-    o = T(spark, sf_dir, "orders").withColumn(
-        "cust_key", F.col("o_custkey").cast("string")
-    )
-    s = _samp.group_split(
-        o, "cust_key", [("train", 0.8), ("valid", 0.1), ("test", 0.1)], seed=42
-    )
-    return s.groupBy("split").agg(
-        F.count("*").alias("n_orders"),
-        F.countDistinct("o_custkey").alias("n_customers"),
-        F.round(F.sum(_dec("o_totalprice", 14, 2)), 2)
-        .cast("double")
-        .alias("revenue"),
-    )
-
-
-def _oracle_split_by_customer(seed: int = 42) -> str:
-    # replay string_unit: uint32 of the first 8 md5 hex chars (DuckDB
-    # has no conv(); positional polynomial, same idiom as the simhash
-    # oracle) over 2^32, then the cumulative CASE with the identical
-    # float boundaries Python computed (0.8, 0.8+0.1).
-    poly = " + ".join(
-        f"CAST(strpos('0123456789abcdef', substring(h8, {j + 1}, 1)) - 1 AS BIGINT)"
-        f" * {16 ** (7 - j)}"
-        for j in range(8)
-    )
-    b1 = repr(0.8)
-    b2 = repr(0.8 + 0.1)
-    return f"""
-WITH c AS (
-  SELECT o_orderkey, o_custkey, o_totalprice,
-         md5(CAST(o_custkey AS VARCHAR) || '|{seed}') AS m
-  FROM orders),
-coin AS (
-  SELECT o_orderkey, o_custkey, o_totalprice,
-         CAST(({poly}) AS DOUBLE) / 4294967296.0 AS u
-  FROM (SELECT *, substring(m, 1, 8) AS h8 FROM c)),
-lab AS (
-  SELECT o_custkey, o_totalprice,
-         CASE WHEN u < CAST({b1} AS DOUBLE) THEN 'train'
-              WHEN u < CAST({b2} AS DOUBLE) THEN 'valid'
-              ELSE 'test' END AS split
-  FROM coin)
-SELECT split, COUNT(*) AS n_orders,
-       COUNT(DISTINCT o_custkey) AS n_customers,
-       CAST(round(SUM(CAST(o_totalprice AS DECIMAL(14,2))), 2) AS DOUBLE) AS revenue
-FROM lab GROUP BY split
-"""
 
 
 ORACLE_DEDUP_INCREMENTAL = r"""
@@ -1985,32 +1824,6 @@ FROM t
 """
 
 
-def q_shard_rendezvous(spark, sf_dir):
-    """Rendezvous (highest-random-weight) shard assignment of the
-    documents table onto 8 buckets (operators/layout.rendezvous_shard):
-    shard = argmax_s h(doc_id, s) over the congruential hash family —
-    pure int64 codegen, partition-invariant, and minimal-movement under
-    shard-count changes.  The oracle replays the argmax via
-    arg_max(s, h*8 + s) (lexicographic (h, s) order linearized)."""
-    from graph_importer_spark.operators.layout import rendezvous_shard
-
-    d = T(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id", rendezvous_shard(F.col("doc_id"), n_shards=8, seed=42).alias("shard")
-    )
-
-
-ORACLE_SHARD_RENDEZVOUS = f"""
-WITH c AS (
-  SELECT doc_id, ((doc_id % {_M}) + {_M}) % {_M} AS k FROM documents),
-r1 AS (
-  SELECT doc_id, s, ((k + 42 + 131 * s) % {_M} * {_A}) % {_M} AS r
-  FROM c, UNNEST(generate_series(0, 7)) AS u(s)),
-e AS (SELECT doc_id, s, (r * r + r) % {_M} AS h FROM r1)
-SELECT doc_id, arg_max(s, h * 8 + s) AS shard FROM e GROUP BY doc_id
-"""
-
-
 def q_kg_closure(spark, sf_dir):
     """Transitive closure (RDFS subClassOf+-style reasoning) over the
     custkey-residue FOREST i -> i // 2 (depth ~ log2(200), so path
@@ -2465,44 +2278,6 @@ SELECT DISTINCT entity, type FROM (
 # ---------------------------------------------------------------------------
 
 
-def q_pack_fim(spark, sf_dir):
-    """Fill-in-the-middle split (packing.fim_split) over docs < 200:
-    two congruential coins pick the (prefix, middle, suffix) cut
-    points per document; the oracle replays the token slices."""
-    from graph_importer_spark.operators.packing import fim_split
-
-    d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return fim_split(d, "doc_id", "text")
-
-
-ORACLE_PACK_FIM = r"""
-WITH d AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS toks
-  FROM documents WHERE doc_id < 200),
-b AS (
-  SELECT doc_id, toks, len(toks) AS n,
-         CAST((((doc_id + 42) % 1000003) * 2654435761 + 1) % 1000003 AS DOUBLE)
-           / 1000003.0 AS u1,
-         CAST(((((doc_id + 42) * 7919) % 1000003) * 2654435761 + 2) % 1000003
-              AS DOUBLE) / 1000003.0 AS u2
-  FROM d),
-c AS (
-  SELECT doc_id, toks, n, u2,
-         CAST(FLOOR(u1 * (n + 1)) AS INT) AS a
-  FROM b),
-e AS (
-  SELECT doc_id, toks, n, a,
-         a + CAST(FLOOR(u2 * (n - a + 1)) AS INT) AS bp
-  FROM c)
-SELECT doc_id, CAST(n AS INT) AS n_tokens,
-       COALESCE(array_to_string(list_slice(toks, 1, a), ' '), '') AS prefix,
-       COALESCE(array_to_string(list_slice(toks, a + 1, bp), ' '), '') AS middle,
-       COALESCE(array_to_string(list_slice(toks, bp + 1, n), ' '), '') AS suffix
-FROM e
-"""
-
-
 def q_kg_provenance(spark, sf_dir):
     """Per-fact provenance rollup (triples.provenance, k=3): facts are
     (part, supplied_by|handled_by, supp) asserted by order-sources;
@@ -2721,90 +2496,6 @@ LEFT JOIN intra USING (community), m
 """
 
 
-def q_layout_compaction(spark, sf_dir):
-    """Small-file compaction planner (layout.compaction_plan):
-    first-fit-by-sorted-order binning of 800 part 'files' into
-    ~200-byte groups via the two-phase distributed prefix sum; the
-    oracle replays the exclusive running sum and the floor-divide."""
-    from graph_importer_spark.operators.layout import compaction_plan
-
-    files = T(spark, sf_dir, "part").filter(F.col("p_partkey") < 800).select(
-        F.concat(
-            F.lit("f"), F.lpad(F.col("p_partkey").cast("string"), 4, "0")
-        ).alias("path"),
-        F.col("p_size").cast("long").alias("bytes"),
-    )
-    return compaction_plan(
-        files, "path", "bytes", 200, bucket=F.substring("path", 1, 3)
-    )
-
-
-ORACLE_LAYOUT_COMPACTION = r"""
-WITH f AS (
-  SELECT 'f' || lpad(CAST(p_partkey AS VARCHAR), 4, '0') AS path,
-         CAST(p_size AS BIGINT) AS bytes
-  FROM part WHERE p_partkey < 800),
-c AS (
-  SELECT path, bytes,
-         SUM(bytes) OVER (ORDER BY path ROWS UNBOUNDED PRECEDING) - bytes
-           AS strt
-  FROM f)
-SELECT CAST(FLOOR(strt / 200) AS BIGINT) AS group_id,
-       COUNT(*) AS n_files,
-       CAST(SUM(bytes) AS BIGINT) AS total_bytes,
-       MIN(path) AS first_id, MAX(path) AS last_id
-FROM c GROUP BY 1
-"""
-
-
-def q_split_leakage(spark, sf_dir):
-    """Cross-split exact-dup leakage audit (sampling.split_leakage):
-    every 9th doc's text is replaced by one of five planted 'leak'
-    pages, and the split is doc_id % 4 — so some leak fingerprints
-    span train and eval.  The oracle replays the fingerprint rollup."""
-    from graph_importer_spark.operators.sampling import split_leakage
-
-    d = T(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 9 == 0,
-            F.concat(F.lit("leak page "), (F.col("doc_id") % 5).cast("string")),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-        F.when(F.col("doc_id") % 4 == 0, F.lit("eval"))
-        .otherwise(F.lit("train"))
-        .alias("split"),
-    )
-    return split_leakage(d, "doc_id", "text")
-
-
-ORACLE_SPLIT_LEAKAGE = r"""
-WITH d AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 9 = 0
-              THEN 'leak page ' || CAST(doc_id % 5 AS VARCHAR)
-              ELSE text END AS text,
-         CASE WHEN doc_id % 4 = 0 THEN 'eval' ELSE 'train' END AS sp
-  FROM documents),
-f AS (
-  SELECT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))
-           AS fingerprint,
-         sp, doc_id
-  FROM d),
-g AS (
-  SELECT fingerprint,
-         COUNT(DISTINCT sp) AS n_splits,
-         array_to_string(list_sort(list(DISTINCT sp)), ',') AS splits,
-         COUNT(DISTINCT doc_id) AS n_docs,
-         array_to_string(
-           list_slice(list_sort(list(DISTINCT CAST(doc_id AS VARCHAR))), 1, 3),
-           ',') AS sample_ids
-  FROM f GROUP BY fingerprint)
-SELECT * FROM g WHERE n_splits >= 2
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-11: containment join, boilerplate detection, MRR/Hits@k,
 # butterfly counting, WL relabeling, blocking quality metrics
@@ -2934,51 +2625,6 @@ SELECT subj, obj,
        CASE WHEN NOT has_s AND NOT has_d THEN 'both'
             WHEN NOT has_s THEN 'src' ELSE 'dst' END AS missing
 FROM m WHERE NOT has_s OR NOT has_d
-"""
-
-
-def q_schema_match(spark, sf_dir):
-    """Instance-based schema matching (profiling.column_match): the
-    part catalog's (p_name, p_brand, p_type) columns vs a 'scraped'
-    table built from the other half of the catalog with renamed
-    headers — value-overlap Jaccard must pair name<->label and
-    brand<->make and leave type unmatched against both."""
-    from graph_importer_spark.operators.profiling import column_match
-
-    a = T(spark, sf_dir, "part").filter(F.col("p_partkey") < 1000).select(
-        "p_name", "p_brand", "p_type"
-    )
-    b = T(spark, sf_dir, "part").filter(F.col("p_partkey") >= 1000).select(
-        F.col("p_name").alias("label"), F.col("p_brand").alias("make")
-    )
-    return column_match(a, b, ["p_name", "p_brand", "p_type"], ["label", "make"])
-
-
-ORACLE_SCHEMA_MATCH = r"""
-WITH ua AS (
-  SELECT DISTINCT a_col, val FROM (
-    SELECT 'p_name' AS a_col, trim(lower(p_name)) AS val
-    FROM part WHERE p_partkey < 1000
-    UNION ALL
-    SELECT 'p_brand', trim(lower(p_brand)) FROM part WHERE p_partkey < 1000
-    UNION ALL
-    SELECT 'p_type', trim(lower(p_type)) FROM part WHERE p_partkey < 1000)
-  WHERE val IS NOT NULL),
-ub AS (
-  SELECT DISTINCT b_col, val FROM (
-    SELECT 'label' AS b_col, trim(lower(p_name)) AS val
-    FROM part WHERE p_partkey >= 1000
-    UNION ALL
-    SELECT 'make', trim(lower(p_brand)) FROM part WHERE p_partkey >= 1000)
-  WHERE val IS NOT NULL),
-na AS (SELECT a_col, COUNT(*) AS n_a FROM ua GROUP BY a_col),
-nb AS (SELECT b_col, COUNT(*) AS n_b FROM ub GROUP BY b_col),
-c AS (
-  SELECT a_col, b_col, COUNT(*) AS n_common
-  FROM ua JOIN ub USING (val) GROUP BY a_col, b_col)
-SELECT a_col, b_col, n_a, n_b, n_common,
-       round(CAST(n_common AS DOUBLE) / (n_a + n_b - n_common), 6) AS jaccard
-FROM c JOIN na USING (a_col) JOIN nb USING (b_col)
 """
 
 
@@ -3399,10 +3045,6 @@ WINDOW w2 AS (PARTITION BY fact_key ORDER BY t, o_orderkey)
 # quantile normalization
 # ---------------------------------------------------------------------------
 
-# epoch seconds (UTC) for the layout_compare pruning window
-_LC_LO = 865_123_200   # 1997-06-01T00:00:00Z
-_LC_HI = 873_072_000   # 1997-09-01T00:00:00Z
-
 
 def q_kg_snapshot_diff(spark, sf_dir):
     """Per-predicate snapshot churn (triples.snapshot_diff): the 'old'
@@ -3472,52 +3114,6 @@ SELECT pred,
        CAST(SUM(CASE WHEN in_old AND in_new THEN 1 ELSE 0 END) AS BIGINT)
          AS n_unchanged
 FROM j GROUP BY pred
-"""
-
-
-def q_layout_compare(spark, sf_dir):
-    """Layout shoot-out (layout.file_stats + skipping_ratio composed):
-    the same orders table laid out by o_custkey vs by o_orderdate,
-    measured against a 3-month date-range predicate — the date layout
-    must skip most files, the custkey layout almost none.  -> one row
-    per layout (layout, skip_frac)."""
-    from graph_importer_spark.operators import layout as _lay
-
-    o = T(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", F.unix_timestamp("o_orderdate").alias("od")
-    )
-    out = None
-    for name, key in (("by_custkey", F.col("o_custkey")), ("by_date", F.col("od"))):
-        stats = _lay.file_stats(
-            o, key, {"od": F.col("od")}, n_files=16, tiebreak=F.col("o_orderkey")
-        )
-        row = _lay.skipping_ratio(stats, "od", _LC_LO, _LC_HI).select(
-            F.lit(name).alias("layout"), F.round("skip_frac", 6).alias("skip_frac")
-        )
-        out = row if out is None else out.unionByName(row)
-    return out
-
-
-ORACLE_LAYOUT_COMPARE = f"""
-WITH o AS (
-  SELECT o_orderkey, o_custkey,
-         CAST(floor(epoch(o_orderdate)) AS BIGINT) AS od
-  FROM orders),
-f1 AS (SELECT od, NTILE(16) OVER (ORDER BY o_custkey, o_orderkey) AS fid FROM o),
-s1 AS (SELECT fid, MIN(od) AS lo, MAX(od) AS hi FROM f1 GROUP BY fid),
-r1 AS (
-  SELECT 'by_custkey' AS layout,
-         round(SUM(CASE WHEN lo <= {_LC_HI} AND hi >= {_LC_LO}
-                        THEN 0 ELSE 1 END) * 1.0 / COUNT(*), 6) AS skip_frac
-  FROM s1),
-f2 AS (SELECT od, NTILE(16) OVER (ORDER BY od, o_orderkey) AS fid FROM o),
-s2 AS (SELECT fid, MIN(od) AS lo, MAX(od) AS hi FROM f2 GROUP BY fid),
-r2 AS (
-  SELECT 'by_date' AS layout,
-         round(SUM(CASE WHEN lo <= {_LC_HI} AND hi >= {_LC_LO}
-                        THEN 0 ELSE 1 END) * 1.0 / COUNT(*), 6) AS skip_frac
-  FROM s2)
-SELECT * FROM r1 UNION ALL SELECT * FROM r2
 """
 
 
@@ -4861,49 +4457,6 @@ FROM e LEFT JOIN common ON common.a = e.a AND common.b = e.b
 # ---------------------------------------------------------------------------
 
 
-def q_schema_fd(spark, sf_dir):
-    """Functional-dependency audit (profiling.
-    functional_dependencies): one exact FD (orderkey -> custkey), two
-    expected violations; the oracle replays the distinct census and
-    the per-determinant counts."""
-    from graph_importer_spark.operators.profiling import (
-        functional_dependencies,
-    )
-
-    o = T(spark, sf_dir, "orders")
-    return functional_dependencies(
-        o,
-        [
-            ("o_orderkey", "o_custkey"),
-            ("o_custkey", "o_orderstatus"),
-            ("o_orderpriority", "o_orderstatus"),
-        ],
-    )
-
-
-ORACLE_SCHEMA_FD = r"""
-WITH pairs AS (
-  SELECT 'o_orderkey' AS fd, CAST(o_orderkey AS VARCHAR) AS av,
-         'o_custkey' AS dep, CAST(o_custkey AS VARCHAR) AS bv FROM orders
-  UNION ALL
-  SELECT 'o_custkey', CAST(o_custkey AS VARCHAR),
-         'o_orderstatus', o_orderstatus FROM orders
-  UNION ALL
-  SELECT 'o_orderpriority', o_orderpriority,
-         'o_orderstatus', o_orderstatus FROM orders),
-dd AS (SELECT DISTINCT fd, av, dep, bv FROM pairs),
-pk AS (SELECT fd, dep, av, COUNT(*) AS ndep FROM dd GROUP BY fd, dep, av)
-SELECT fd AS determinant, dep AS dependent,
-       COUNT(*) AS n_keys,
-       CAST(SUM(CASE WHEN ndep > 1 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_violating_keys,
-       round(CAST(SUM(CASE WHEN ndep > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-             / COUNT(*), 6) AS violation_rate,
-       SUM(CASE WHEN ndep > 1 THEN 1 ELSE 0 END) = 0 AS holds
-FROM pk GROUP BY fd, dep
-"""
-
-
 # ---------------------------------------------------------------------------
 # Round-4 session-18w: streaming CDC apply
 # ---------------------------------------------------------------------------
@@ -5480,8 +5033,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # sweep, like every out-of-window row.
     "kg_constraints": q_kg_constraints,
     "graph_modularity": q_graph_modularity,
-    "layout_compaction": q_layout_compaction,
-    "split_leakage": q_split_leakage,
     # round-4 session-11 additions (same window rule): containment
     # join, boilerplate detection, MRR/Hits@k, butterfly counting,
     # WL relabeling, blocking quality metrics.  Six more tail-of-window
@@ -5493,7 +5044,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # audit, instance schema matching, web-table lifting, containment
     # keeper, degree-distribution KS, LSH parameter planning.
     "kg_dangling": q_kg_dangling,
-    "schema_match": q_schema_match,
     "kg_webtables": q_kg_webtables,
     "graph_ks": q_graph_ks,
     # round-4 session-13 additions: the composed end-to-end ER
@@ -5508,7 +5058,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # round-4 session-15 additions: event n-grams, snapshot churn,
     # layout shoot-out, per-domain quantile normalization.
     "kg_snapshot_diff": q_kg_snapshot_diff,
-    "layout_compare": q_layout_compare,
     # round-4 session-16 additions: character entropy, numeric
     # outlier audit.
     "kg_numeric_outliers": q_kg_numeric_outliers,
@@ -5583,7 +5132,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "graph_embeddedness": q_graph_embeddedness,
     # round-4 session-18v additions: functional dependencies, signed
     # sentiment.
-    "schema_fd": q_schema_fd,
     # round-4 session-18w addition: streaming CDC apply (oracle = the
     # one-shot batch apply over the whole log).
     "stream_cdc_apply": q_stream_cdc_apply,
@@ -5611,14 +5159,12 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "graph_centralization": q_graph_centralization,
     # round-4 session-2 additions: CMS heavy hitters, SCD2 history,
     # Z-order layout, web link graph
-    "layout_zorder": q_layout_zorder,
     # new or code-touched since the r3 driver ran (ff72a00 + round 4):
     # composed hygiene recipe, PSL domains, de-vacuized oracles,
     # IVF sqrt(n) defaults + hot-list cap, Gopher exact stop set
     # round-4 additions: line-level dedup, duplicated-span stats, bloom
     # membership, mixture sampling, URL blocklist, sequence packing,
     # vocab top-k
-    "pack_sequences": q_pack_sequences,
     "kg_incremental_entities": q_kg_incremental_entities,
     "kg_negative_samples": q_kg_negative_samples,
     "graph_khop": q_graph_khop,
@@ -5646,7 +5192,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "graph_ppr": q_graph_ppr,
     "kg_predicate_stats": q_kg_predicate_stats,
     "kg_nquads": q_kg_nquads,
-    "shard_rendezvous": q_shard_rendezvous,
     "graph_ktruss": q_graph_ktruss,
     # round-4 session-3 additions: BM25 retrieval, grouped
     # train/holdout split, snapshot diff.  New entries take window
@@ -5654,7 +5199,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # (pricing_summary / region_volume / window_top_orders) are
     # r1+r2 driver-green, judge-verified r3, untouched this round,
     # and re-verified locally via scripts/check_contract.py.
-    "split_by_customer": q_split_by_customer,
     # web_meta is the last never-driver-green entry; it takes the
     # final window slot over sim_ann_lsh (r3 driver-green), whose
     # session-3 lsh_band_keys refactor is already driver-covered
@@ -5683,7 +5227,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # all queue at the tail for the r5 window, verified this round by
     # the local full sweep): epoch-weight dataset mixing, FIM split,
     # canonical-URL dedup, per-fact provenance, star BGP + OPTIONAL
-    "pack_fim": q_pack_fim,
     "kg_provenance": q_kg_provenance,
     "kg_star_optional": q_kg_star_optional,
     # - text_bm25 (new r4) waits at the tail head for the r5 window:
@@ -5843,7 +5386,6 @@ ORACLES: dict[str, str] = {
     "kg_motif_cycle": ORACLE_KG_MOTIF_CYCLE,
     "kg_benford": _oracle_kg_benford(),
     "graph_embeddedness": ORACLE_GRAPH_EMBEDDEDNESS,
-    "schema_fd": ORACLE_SCHEMA_FD,
     "stream_cdc_apply": ORACLE_STREAM_CDC_APPLY,
     "kg_temporal": ORACLE_KG_TEMPORAL,
     "graph_katz": _oracle_graph_katz(),
@@ -5852,21 +5394,17 @@ ORACLES: dict[str, str] = {
     "graph_centralization": ORACLE_GRAPH_CENTRALIZATION,
     "kg_numeric_outliers": ORACLE_KG_NUMERIC_OUTLIERS,
     "kg_snapshot_diff": ORACLE_KG_SNAPSHOT_DIFF,
-    "layout_compare": ORACLE_LAYOUT_COMPARE,
     "kg_inverse_preds": ORACLE_KG_INVERSE_PREDS,
     "graph_richclub": ORACLE_GRAPH_RICHCLUB,
     "kg_fact_history": ORACLE_KG_FACT_HISTORY,
     "kg_quality": ORACLE_KG_QUALITY,
     "kg_dangling": ORACLE_KG_DANGLING,
-    "schema_match": ORACLE_SCHEMA_MATCH,
     "kg_webtables": ORACLE_KG_WEBTABLES,
     "graph_ks": ORACLE_GRAPH_KS,
     "graph_butterfly": ORACLE_GRAPH_BUTTERFLY,
     "graph_wl": ORACLE_GRAPH_WL,
     "kg_constraints": ORACLE_KG_CONSTRAINTS,
     "graph_modularity": ORACLE_GRAPH_MODULARITY,
-    "layout_compaction": ORACLE_LAYOUT_COMPACTION,
-    "split_leakage": ORACLE_SPLIT_LEAKAGE,
     "kg_closure": ORACLE_KG_CLOSURE,
     "kg_path_2hop": ORACLE_KG_PATH_2HOP,
     "graph_powerlaw": ORACLE_GRAPH_POWERLAW,
@@ -5877,12 +5415,10 @@ ORACLES: dict[str, str] = {
     "graph_sage_sample": ORACLE_GRAPH_SAGE_SAMPLE,
     "kg_fusion": ORACLE_KG_FUSION,
     "kg_types": ORACLE_KG_TYPES,
-    "pack_fim": ORACLE_PACK_FIM,
     "kg_provenance": ORACLE_KG_PROVENANCE,
     "kg_star_optional": ORACLE_KG_STAR_OPTIONAL,
     "kg_flagship": ORACLE_KG_FLAGSHIP,
     "kg_extract": ORACLE_KG_EXTRACT,
-    "layout_zorder": _oracle_layout_zorder(),
     "cc_star": ORACLE_CC_STAR,
     "cc_canonical_names": ORACLE_CC_NAMES,
     "cc_canonical_dense": ORACLE_CC_NAMES,
@@ -5905,14 +5441,12 @@ ORACLES: dict[str, str] = {
     "gen_cliques_graph": ORACLE_GEN_CLIQUES_GRAPH,
     "gen_vertex_docs": ORACLE_GEN_VERTEX_DOCS,
     "gen_edge_attrs": ORACLE_GEN_EDGE_ATTRS,
-    "split_by_customer": _oracle_split_by_customer(),
     "graph_clustering": ORACLE_GRAPH_CLUSTERING,
     "graph_ppr": _oracle_graph_ppr(),
     "graph_ktruss": _oracle_ktruss(),
     "graph_assortativity": ORACLE_GRAPH_ASSORTATIVITY,
     "kg_predicate_stats": ORACLE_KG_PREDICATE_STATS,
     "kg_nquads": _oracle_kg_nquads(),
-    "shard_rendezvous": ORACLE_SHARD_RENDEZVOUS,
     # the stream accumulates exactly the batch probe's links (batch 0
     # has no priors), so the oracle is shared
     "stream_fuzzy_dedup": ORACLE_DEDUP_INCREMENTAL,
@@ -5927,7 +5461,6 @@ ORACLES: dict[str, str] = {
     "stream_dedup": ORACLE_STREAM_DEDUP,
     "stream_sessions": ORACLE_SESSIONS,
     "stream_incremental_triples": ORACLE_KG_FLAGSHIP,
-    "pack_sequences": ORACLE_PACK_SEQUENCES,
     "kg_incremental_entities": ORACLE_KG_INCREMENTAL,
     # every registered query is oracle-checked: the iterative ones replay
     # as chained/recursive CTEs (pagerank_star, sssp_tree), the hash-based
