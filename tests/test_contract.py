@@ -30,6 +30,16 @@ FAST = [
     "graph_mincut",
 ]
 
+# The registry is the KG system's surface: the pipeline stages and KG
+# analytics, the reference importer/generator rows, streaming, CC and
+# the Pregel-style graph catalog.
+KG_FAMILIES = ("kg_", "imp_", "gen_", "stream_", "graph_", "cc_")
+PREGEL_ROWS = {
+    "pagerank_star", "sssp_tree", "scc_cycles", "lpa_cliques", "hits_star",
+    "linerank_star", "slpa_overlap", "tri_copurchase", "kcore_copurchase",
+    "effective_closeness_tree",
+}
+
 
 def _canon(v):
     if v is None:
@@ -60,6 +70,7 @@ def test_registry_consistency():
     qs, os_ = entrymod.queries(), entrymod.oracle_sql()
     assert set(os_) <= set(qs)
     assert len(qs) >= 30
+    assert all(n.startswith(KG_FAMILIES) or n in PREGEL_ROWS for n in qs)
 
 
 def _oracle_parity(spark, sf_dir, duck, name):
