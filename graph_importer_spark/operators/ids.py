@@ -64,7 +64,10 @@ def sorted_ranks(
     function of the key set — range boundary placement (sampled by
     repartitionByRange) moves rows between partitions but cannot
     change any key's global rank — so SQL oracles replay it with a
-    plain ORDER BY row_number.
+    plain ORDER BY row_number.  That holds only within ONE partitioning:
+    the boundaries are re-sampled by every job that runs the plan, so
+    the partitioned keys are materialized once and both the offset
+    collect and the rank window read that copy.
 
     Use this (not dense_ids) when the CONSUMER depends on rank order —
     e.g. candidate lookup tables indexed by sorted-vocabulary position;
@@ -73,7 +76,9 @@ def sorted_ranks(
     spark = df.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     keys = df.select(col).distinct().repartitionByRange(p, F.col(col))
-    keyed = keys.withColumn("_pid", F.spark_partition_id())
+    keyed = keys.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
+        eager=True
+    )
     counts = keyed.groupBy("_pid").agg(F.count("*").alias("_n")).collect()
     offsets, acc = {}, 0
     for row in sorted(counts, key=lambda r: r["_pid"]):
