@@ -325,10 +325,10 @@ def postings_delta(
     8-byte ids.
 
     Byte counting is ALL-INTEGER (CASE thresholds at 2^7, 2^14, ...,
-    2^63 — the full 10-byte 64-bit varint ladder, since the FIRST
-    list entry encodes the absolute doc id as a gap from 0 and 64-bit
-    id spaces need up to 10 bytes; no float log), so the audit
-    replays exactly.
+    2^56 — the full varint ladder for bigint ids, since the FIRST list
+    entry encodes the absolute doc id as a gap from 0 and any gap up to
+    2^63-1 fits in 9 bytes; no float log), so the audit replays
+    exactly.
 
     -> (term, df, raw_bytes, varint_bytes, ratio) with ratio rounded.
 
@@ -368,8 +368,7 @@ def postings_delta(
         .when(g < 4398046511104, F.lit(6))  # 2^42
         .when(g < 562949953421312, F.lit(7))  # 2^49
         .when(g < 72057594037927936, F.lit(8))  # 2^56
-        .when(g < 9223372036854775807, F.lit(9))  # 2^63
-        .otherwise(F.lit(10)),
+        .otherwise(F.lit(9)),  # every bigint gap is < 2^63
     )
     return per.select(
         "term",

@@ -773,12 +773,16 @@ def test_postings_delta_64bit_id_space(spark):
     from graph_importer_spark.operators.retrieval import postings_delta
 
     big = 1 << 62  # gap from 0 needs ceil(63/7) = 9 varint bytes
+    top = (1 << 63) - 1  # the largest bigint still fits in 9 bytes
     d = spark.createDataFrame(
-        [(big, "omega"), (big + 5, "omega")], "doc_id long, text string"
+        [(big, "omega"), (big + 5, "omega"), (0, "sigma"), (top, "sigma")],
+        "doc_id long, text string",
     )
     out = {r.term: r for r in postings_delta(d, "doc_id", "text").collect()}
     # gaps: 2^62 (9 bytes), 5 (1 byte)
     assert out["omega"].varint_bytes == 10
+    # gaps: 0 (1 byte), 2^63-1 (9 bytes)
+    assert out["sigma"].varint_bytes == 10
 
 
 def test_extractive_summary_prefers_restated_unit(spark):
