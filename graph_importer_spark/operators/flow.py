@@ -40,6 +40,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def st_mincut(
@@ -66,9 +67,24 @@ def st_mincut(
     on every row) = sum of augmenting-path bottlenecks.  By max-flow /
     min-cut duality sum(capacity) == max_flow — asserted here, so a
     truncated run (max_augmentations / max_hops too small) raises
-    instead of returning a plausible-but-wrong cut.  An empty result
+    instead of returning a plausible-but-wrong cut.  A run that needs
+    exactly ``max_augmentations`` paths completes.  An empty result
     means s and t are already disconnected (max_flow 0).
+
+    Capacities must be integers (``cap_col`` of an integral type,
+    ``default_capacity`` an int): flows are summed exactly and the
+    duality check compares them with ``==``.
     """
+    if cap_col and not isinstance(edges.schema[cap_col].dataType, T.IntegralType):
+        raise ValueError(
+            f"st_mincut: capacity column {cap_col!r} has type"
+            f" {edges.schema[cap_col].dataType.simpleString()}; capacities"
+            " must be integral (cast or scale them to a long)"
+        )
+    if not isinstance(default_capacity, int):
+        raise ValueError(
+            f"st_mincut: default_capacity {default_capacity!r} must be an int"
+        )
     cap = (
         F.coalesce(F.col(cap_col), F.lit(default_capacity))
         if cap_col
@@ -130,11 +146,19 @@ def st_mincut(
         return parents, caps
 
     max_flow = 0
-    for _ in range(max_augmentations):
-        # backtrack target -> source through the min-parent map
+    # one BFS more than the augmentation budget: a run whose last
+    # permitted path completes the flow ends on an unreachable target
+    for n_aug in range(max_augmentations + 1):
         pmap, caps = bfs(res)
         if target not in pmap:
             break
+        if n_aug == max_augmentations:
+            raise ValueError(
+                f"st_mincut: still augmenting after {max_augmentations} paths —"
+                " raise max_augmentations (graph larger than the bounded"
+                " envelope)"
+            )
+        # backtrack target -> source through the min-parent map
         path = [target]
         while path[-1] != source:
             path.append(pmap[path[-1]])
@@ -163,17 +187,10 @@ def st_mincut(
             )
             .localCheckpoint(eager=True)
         )
-    else:
-        raise ValueError(
-            f"st_mincut: still augmenting after {max_augmentations} paths —"
-            " raise max_augmentations (graph larger than the bounded"
-            " envelope)"
-        )
 
-    # source side S of the cut = residual reachability from s
-    reach = spark.createDataFrame(
-        [(x,) for x in bfs(res)[0]], f"id {id_t}"
-    )
+    # source side S of the cut = residual reachability from s, i.e.
+    # the final BFS that no longer reached t
+    reach = spark.createDataFrame([(x,) for x in pmap], f"id {id_t}")
     cut = (
         fwd.join(F.broadcast(reach.withColumnRenamed("id", "u")), "u")
         .join(

@@ -85,8 +85,26 @@ def test_default_capacity_and_long_ids(spark):
     assert cut[0].max_flow == 2
 
 
+_TWO_PATHS = [("s", "a", 1), ("a", "t", 1), ("s", "b", 1), ("b", "t", 1)]
+
+
 def test_truncated_run_raises_not_lies(spark):
-    rows = [("s", "a", 1), ("a", "t", 1)]
-    df = spark.createDataFrame(rows, "src string, dst string, cap long")
+    # max flow 2 needs two augmenting paths
     with pytest.raises(ValueError, match="still augmenting"):
-        st_mincut(df, "s", "t", cap_col="cap", max_augmentations=1)
+        _cut(spark, _TWO_PATHS, "s", "t", max_augmentations=1)
+
+
+def test_exact_augmentation_budget_completes(spark):
+    cut = _cut(spark, _TWO_PATHS, "s", "t", max_augmentations=2).collect()
+    assert cut[0].max_flow == 2
+    assert {(r.src, r.dst) for r in cut} == {("s", "a"), ("s", "b")}
+
+
+def test_float_capacities_rejected(spark):
+    df = spark.createDataFrame(
+        [("s", "a", 1.5), ("a", "t", 1.5)], "src string, dst string, cap double"
+    )
+    with pytest.raises(ValueError, match="integral"):
+        st_mincut(df, "s", "t", cap_col="cap")
+    with pytest.raises(ValueError, match="must be an int"):
+        st_mincut(df.drop("cap"), "s", "t", default_capacity=1.5)
