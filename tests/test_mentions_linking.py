@@ -96,6 +96,53 @@ def test_linking_determinism_tiebreak(spark):
     assert len(linked) == 1 and linked[0]["entity"] == "ent_a"
 
 
+def test_linking_is_a_function_of_the_surface(spark):
+    """Every alias names 2-3 entities (even aliases with tied priors,
+    odd ones with distinct priors) and entities share aliases, yet top-1
+    (longest surface, then prior, then smallest entity) never looks past
+    the surface string: across every sentence context, including ones
+    where a two-token alias overlaps a one-token one, each linked
+    surface maps to exactly one entity."""
+    import random
+
+    rng = random.Random(7)
+    n = 12
+    rows = []
+    for i in range(n):
+        ents = [f"e{i}_{k}" for k in range(2 + i % 2)] + [f"e{(i + 1) % n}_0"]
+        priors = [0.5] * len(ents) if i % 2 == 0 else rng.sample([0.2, 0.4, 0.6, 0.8], len(ents))
+        rows += [(f"Al{i}", e, p) for e, p in zip(ents, priors)]
+        if i < 4:  # two-token aliases whose first token is an alias too
+            rows += [(f"Al{i} Corp", f"c{i}_{k}", 0.3 if i % 2 else 0.1 * (k + 1)) for k in range(2)]
+    aliases = spark.createDataFrame(rows, "alias string, entity string, prior double")
+    words = [f"Al{i}" for i in range(n)] + ["Al0 Corp", "Al1 Corp", "Al2 Corp", "Al3 Corp", "the", "of", "Corp"]
+    pages = spark.createDataFrame(
+        [
+            (f"u{p}", " ".join(
+                " ".join(rng.choice(words) for _ in range(rng.randint(3, 8))) + "."
+                for _ in range(rng.randint(1, 3))
+            ))
+            for p in range(80)
+        ],
+        "url string, text string",
+    )
+    linked = link_mentions(detect_mentions(pages, aliases), aliases)
+    by_surface: dict = {}
+    for r in linked.select("surface", "entity").collect():
+        by_surface.setdefault(r["surface"], set()).add(r["entity"])
+    assert {s for s, ents in by_surface.items() if len(ents) > 1} == set()
+    want = {}
+    for a, e, p in rows:
+        if a not in want or (-p, e) < (-want[a][1], want[a][0]):
+            want[a] = (e, p)
+    assert {s: ents.pop() for s, ents in by_surface.items()} == {
+        s: want[s][0] for s in by_surface
+    }
+    # the fixture exercises tied, untied and overlapping surfaces
+    assert {"Al0", "Al1", "Al0 Corp", "Al1 Corp"} <= set(by_surface)
+    assert len(by_surface) == n + 4
+
+
 def test_negative_samples_filtered_and_deterministic(spark):
     from graph_importer_spark.triples import negative_samples
 
