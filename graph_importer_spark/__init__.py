@@ -13,10 +13,13 @@ DataFrame job:
       -> materialize  (vertex/edge tables mirroring the reference's
                        ArangoDB vertex-collection/edge-collection contract)
 
-plus the reference's importer/generator/analytics surface re-expressed
-Spark-first (see graph_importer_spark.importer, .operators.generators,
-.operators.analytics) and large-scale training-data ops (dedup, similarity,
-text analysis, multimodal plumbing) in .operators.
+plus the reference's importer / generator / Pregel-analytics / min-cut
+surface re-expressed Spark-first (graph_importer_spark.importer,
+.operators.generators, .operators.analytics, .operators.flow, .cli).  The
+driver registry (contract.py, behind __spark_entry__.py) covers exactly
+these.  The remaining .operators modules are left from an earlier generic
+analytics registry and are reached only by their unit tests, apart from the
+few helpers the KG path uses.
 
 No code is copied from the reference; reference files are cited by
 file:line in docstrings for behavioral parity only.

@@ -1,2 +1,3 @@
-"""Operator library: generators, analytics, dedup, similarity, text
-analysis, multimodal plumbing, skew tools."""
+"""Operator library: the reference's generators, Pregel analytics and
+min-cut, the id/canonicalization helpers the KG path uses, and the
+operators left from the earlier generic analytics registry."""
