@@ -16,7 +16,7 @@ DataFrame job:
 plus the reference's importer / generator / Pregel-analytics / min-cut
 surface re-expressed Spark-first (graph_importer_spark.importer,
 .operators.generators, .operators.analytics, .operators.flow, .cli).  The
-driver registry (contract.py, behind __spark_entry__.py) covers exactly
+query registry (contract.py, behind __spark_entry__.py) covers exactly
 these.  The remaining .operators modules are left from an earlier generic
 analytics registry and are reached only by their unit tests, apart from the
 few helpers the KG path uses.

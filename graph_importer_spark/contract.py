@@ -4740,8 +4740,8 @@ WHERE eo.cap > 0
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # registration order; _WINDOW_R05 below moves the driver window
-    # rows to the front
+    # registration order; _WINDOW_R05 below moves the correctness
+    # window rows to the front
     "kg_flagship": q_kg_flagship,
     "kg_constraints": q_kg_constraints,
     "graph_modularity": q_graph_modularity,
@@ -4839,12 +4839,11 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "graph_mincut": q_graph_mincut,
 }
 
-# ---- round-5 driver window ----
-# The driver's CORRECTNESS pass checks the first entries of the
-# registry, so the rows that most need its check come first: the
-# flagship, then the KG and graph rows that had never had a driver
-# check before round 5 (riskiest first), then the bounded min-cut.
-# Every row outside the window is covered by the local sweeps
+# ---- round-5 correctness window ----
+# The CORRECTNESS check reads the first entries of the registry, so the
+# rows that most need it come first: the flagship, then the KG and graph
+# rows first checked in round 5 (riskiest first), then the bounded
+# min-cut.  Every row outside the window is covered by the local sweeps
 # (scripts/check_contract.py, scripts/strict_sweep.py).
 _WINDOW_R05 = [
     "kg_flagship",
