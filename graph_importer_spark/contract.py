@@ -971,7 +971,7 @@ def q_stream_windowed_counts(spark, sf_dir):
     """windowed_event_counts executed AS A STREAM (file source over the
     events parquet, availableNow trigger, complete-mode memory sink) and
     drained to a batch DataFrame — verifies the streaming operator's
-    results, not just its batch twin (events_hourly).  Window starts are
+    results, not just its batch twin.  Window starts are
     returned as epoch seconds: engine-neutral, timezone-free."""
     import uuid as _uuid
 
@@ -1487,11 +1487,11 @@ ANTI JOIN t p ON c.subj = p.subj AND c.pred = p.pred AND v.neg_obj = p.obj
 
 
 def q_stream_fuzzy_dedup(spark, sf_dir):
-    """streaming_fuzzy_dedup executed AS A STREAM: the dedup_incremental
-    plant split into two micro-batches (batch 0 = corpus slice, batch 1
-    = byte-identical clones under shifted ids), file-per-trigger.  The
-    accumulated near_dups table must equal the BATCH probe exactly —
-    same oracle as dedup_incremental."""
+    """streaming_fuzzy_dedup executed AS A STREAM: a planted corpus
+    split into two micro-batches (batch 0 = corpus slice, batch 1 =
+    byte-identical clones under shifted ids), file-per-trigger.  The
+    accumulated near_dups table must equal the BATCH probe
+    (dedup.lsh_probe) exactly — ORACLE_DEDUP_INCREMENTAL."""
     import os as _os
     import tempfile as _tmp
 
