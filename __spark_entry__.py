@@ -1,8 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry`` runs the flagship KG query on sf0.001; ``queries`` /
-``oracle_sql`` register every implemented operator from SURVEY.md §2
-(implementation + oracle pairs live in graph_importer_spark/contract.py).
+``oracle_sql`` register the KG system's rows: pipeline stages and KG
+analytics, the reference importer and generators, streaming, connected
+components and the Pregel-style graph catalog (implementation + oracle
+pairs live in graph_importer_spark/contract.py).
 """
 
 from __future__ import annotations
