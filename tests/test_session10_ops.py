@@ -1,8 +1,8 @@
 """Round-4 session-10 operators: KG constraint audit, modularity,
 meta-blocking, exact cosine similarity join, compaction planning,
 split-leakage audit.  Semantic tests (known answers, determinism,
-completeness vs brute force) — oracle parity runs in the contract
-sweep."""
+completeness vs brute force) — the KG and graph operators
+also have oracle rows in the contract sweep."""
 
 from __future__ import annotations
 

@@ -1,7 +1,8 @@
 """Round-4 session-8 operators: GraphSAGE neighbor sampling, mojibake
 repair, knowledge fusion, curriculum ordering, RDFS type inference,
 contrastive chunk pairs.  Semantic tests (bounds, determinism, known
-answers) — oracle parity runs in the contract sweep."""
+answers) — the KG and graph operators
+also have oracle rows in the contract sweep."""
 
 from __future__ import annotations
 

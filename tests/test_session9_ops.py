@@ -1,7 +1,7 @@
 """Round-4 session-9 operators: epoch-weight dataset mixing, FIM
 split, canonical-URL dedup, per-fact provenance, SPARQL star BGP with
-OPTIONAL.  Semantic tests (bounds, determinism, known answers) —
-oracle parity runs in the contract sweep."""
+OPTIONAL.  Semantic tests (bounds, determinism, known answers) — the KG and graph operators
+also have oracle rows in the contract sweep."""
 
 from __future__ import annotations
 
