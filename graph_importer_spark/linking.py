@@ -39,18 +39,34 @@ def link_mentions(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
     entity, score).
 
     One row per mention (best candidate)."""
+    kept = linked_per_sentence(mentions, aliases, ["url", "sent_id"]).select(
+        "url", "sent_id", F.explode("ms").alias("m")
+    )
+    return kept.select(
+        "url",
+        "sent_id",
+        F.col("m.pos").alias("pos"),
+        F.col("m.n_tokens").alias("n_tokens"),
+        F.col("m.surface").alias("surface"),
+        F.col("m.entity").alias("entity"),
+        F.col("m.score").alias("score"),
+    )
+
+
+def linked_per_sentence(
+    mentions: DataFrame, aliases: DataFrame, keys: list[str]
+) -> DataFrame:
+    """mentions(*keys, pos, n_tokens, surface) x aliases(alias, entity,
+    prior) -> (*keys, ms): one row per sentence key, ``ms`` the array of
+    its linked mentions, struct<pos, n_tokens, surface, entity, score>.
+
+    ``keys`` must identify one sentence (they are the shuffle key).  A
+    surface no alias spells drops out at the broadcast inner join, so
+    callers need not pre-filter mentions against the dictionary."""
     alias_dim = aliases.select(
         F.col("alias").alias("surface"), "entity", "prior"
     )
-    cands = mentions.join(F.broadcast(alias_dim), "surface", "inner").select(
-        "url",
-        "sent_id",
-        "pos",
-        "n_tokens",
-        "surface",
-        "entity",
-        F.col("prior").alias("score"),
-    )
+    cands = mentions.join(F.broadcast(alias_dim), "surface", "inner")
     # ONE shuffle for the whole stage: group straight to the sentence
     # key and do top-1-per-position as array logic on the collected
     # candidates.  (A first groupBy(url, sent_id, pos) min_by would be
@@ -59,9 +75,11 @@ def link_mentions(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
     # row through TWO exchanges; candidates per sentence are bounded by
     # sentence length, so the collected array is small and the per-pos
     # reduce is cheap codegen.)
-    per_sent = cands.groupBy("url", "sent_id").agg(
+    per_sent = cands.groupBy(*keys).agg(
         F.collect_list(
-            F.struct("pos", "n_tokens", "surface", "entity", "score")
+            F.struct(
+                "pos", "n_tokens", "surface", "entity", F.col("prior").alias("score")
+            )
         ).alias("cs")
     )
     # best candidate per position: max over (n_tokens, score, -entity)
@@ -83,28 +101,19 @@ def link_mentions(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
                and c.entity < acc.entity then c
           else acc end))"""
     )
-    per_sent = per_sent.select("url", "sent_id", best.alias("ms"))
-    kept = per_sent.select(
-        "url",
-        "sent_id",
-        F.explode(
-            F.filter(
-                "ms",
-                lambda m: ~F.exists(
-                    F.col("ms"),
-                    lambda l: (l["n_tokens"] > 1)
-                    & (m["pos"] > l["pos"])
-                    & (m["pos"] < l["pos"] + l["n_tokens"]),
-                ),
-            )
-        ).alias("m"),
-    )
-    return kept.select(
-        "url",
-        "sent_id",
-        F.col("m.pos").alias("pos"),
-        F.col("m.n_tokens").alias("n_tokens"),
-        F.col("m.surface").alias("surface"),
-        F.col("m.entity").alias("entity"),
-        F.col("m.score").alias("score"),
+    # overlap suppression: drop a best candidate whose position lies
+    # inside a longer best candidate.  Two projections, not one
+    # expression: ``ms`` is read twice, and the optimizer does not
+    # inline a costly expression it would then evaluate twice.
+    return per_sent.select(*keys, best.alias("ms")).select(
+        *keys,
+        F.filter(
+            "ms",
+            lambda m: ~F.exists(
+                F.col("ms"),
+                lambda l: (l["n_tokens"] > 1)
+                & (m["pos"] > l["pos"])
+                & (m["pos"] < l["pos"] + l["n_tokens"]),
+            ),
+        ).alias("ms"),
     )

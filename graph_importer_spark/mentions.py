@@ -37,26 +37,44 @@ from pyspark.sql import functions as F
 _SENT_SPLIT = r"(?<=[.!?])\s+"
 # Token-trailing punctuation stripped before matching.
 _PUNCT = r"[.,;:!?]+$"
+# Longest alias, in tokens, that detection tries by default.
+MAX_ALIAS_TOKENS = 2
 
 
-def split_sentences(pages: DataFrame, text_col: str = "text") -> DataFrame:
-    """pages -> (url, sent_id, sentence). Narrow (no shuffle)."""
+def split_sentences(
+    pages: DataFrame, text_col: str = "text", keys: tuple[str, ...] = ("url",)
+) -> DataFrame:
+    """pages -> (*keys, sent_id, sentence). Narrow (no shuffle)."""
     return pages.select(
-        "url",
+        *keys,
         F.posexplode(F.split(F.col(text_col), _SENT_SPLIT)).alias("sent_id", "sentence"),
     ).filter(F.length("sentence") > 0)
 
 
-def _tokens_col():
+def sentence_tokens():
+    """Tokens of the ``sentence`` column: whitespace-split, trailing
+    punctuation stripped."""
     toks = F.split(F.col("sentence"), r"\s+")
     return F.transform(toks, lambda t: F.regexp_replace(t, _PUNCT, ""))
+
+
+def candidate_surfaces(max_alias_tokens: int = MAX_ALIAS_TOKENS):
+    """Candidate surfaces of 1..K tokens starting at ``pos`` of
+    ``tokens`` (slice is 1-based), one row each once exploded:
+    array<struct<n_tokens int, surface string>>.  A slice past the end
+    of the sentence yields the shorter surface again, tagged with the
+    larger ``n_tokens``."""
+    return F.expr(
+        f"transform(sequence(1, {max_alias_tokens}), "
+        f"k -> struct(k as n_tokens, array_join(slice(tokens, pos + 1, k), ' ') as surface))"
+    )
 
 
 def detect_mentions(
     pages: DataFrame,
     aliases: DataFrame,
     text_col: str = "text",
-    max_alias_tokens: int = 2,
+    max_alias_tokens: int = MAX_ALIAS_TOKENS,
 ) -> DataFrame:
     """Token-join mention detection (the scale path).
 
@@ -68,7 +86,7 @@ def detect_mentions(
     toks = sents.select(
         "url",
         "sent_id",
-        _tokens_col().alias("tokens"),
+        sentence_tokens().alias("tokens"),
     ).select(
         "url",
         "sent_id",
@@ -89,17 +107,11 @@ def detect_mentions(
         ).distinct()
     )
     starts = toks.join(first_dim, "tok", "left_semi")
-    # candidate surfaces of length 1..K starting at pos (slice is 1-based)
     cands = starts.select(
         "url",
         "sent_id",
         "pos",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, {max_alias_tokens}), "
-                f"k -> struct(k as n_tokens, array_join(slice(tokens, pos + 1, k), ' ') as surface))"
-            )
-        ).alias("c"),
+        F.explode(candidate_surfaces(max_alias_tokens)).alias("c"),
     ).select("url", "sent_id", "pos", F.col("c.n_tokens").alias("n_tokens"), F.col("c.surface").alias("surface"))
     surf_dim = F.broadcast(
         aliases.select(F.col("alias").alias("surface")).distinct()

@@ -40,6 +40,16 @@ def detect_predicate(sentence_col, predicates: dict[str, str] | None = None):
     return expr
 
 
+def sentence_predicate(
+    predicates: dict[str, str] | None = None, default_pred: str | None = None
+):
+    """Predicate id of the ``sentence`` column: its first predicate
+    phrase, else ``default_pred``; null means the sentence can emit no
+    triple."""
+    pred = detect_predicate(F.col("sentence"), predicates)
+    return pred if default_pred is None else F.coalesce(pred, F.lit(default_pred))
+
+
 def extract_triples(
     linked: DataFrame,
     sentences: DataFrame,
@@ -60,11 +70,8 @@ def extract_triples(
         F.max_by("entity", "pos").alias("obj"),
         F.count("*").alias("n_mentions"),
     )
-    pred_col = detect_predicate(F.col("sentence"), predicates)
-    if default_pred is not None:
-        pred_col = F.coalesce(pred_col, F.lit(default_pred))
     preds = sentences.select(
-        "url", "sent_id", pred_col.alias("pred")
+        "url", "sent_id", sentence_predicate(predicates, default_pred).alias("pred")
     ).filter(F.col("pred").isNotNull())
     out = (
         ends.filter(F.col("n_mentions") >= 2)
@@ -73,6 +80,22 @@ def extract_triples(
         .select("subj", "pred", "obj", "url", "warc_ts")
     )
     return out
+
+
+def sentence_triples(linked: DataFrame) -> DataFrame:
+    """linked(url, warc_ts, sent_id, pred, ms) -> (subj, pred, obj, url,
+    warc_ts): the ``extract_triples`` pattern on one row per sentence,
+    ``ms`` being its linked mentions (``linking.linked_per_sentence``).
+
+    Positions in ``ms`` are distinct and ``pos`` is its first field, so
+    the smallest and largest struct are the first and last mention."""
+    return linked.filter(F.size("ms") >= 2).select(
+        F.array_min("ms")["entity"].alias("subj"),
+        "pred",
+        F.array_max("ms")["entity"].alias("obj"),
+        "url",
+        "warc_ts",
+    )
 
 
 def negative_samples(
