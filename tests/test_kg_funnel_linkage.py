@@ -1,6 +1,5 @@
 """Unit tests for clustering coefficient, predicate stats, N-Quads
-serialization, funnel analysis, Fellegi-Sunter scoring, and rendezvous
-sharding."""
+serialization, Fellegi-Sunter scoring, and rendezvous sharding."""
 
 import datetime
 import math
@@ -62,38 +61,6 @@ def test_to_nquads_escapes_forbidden_chars(spark):
 
 def _ts(s):
     return datetime.datetime(2026, 1, 1, 0, 0, s)
-
-
-def test_funnel_steps_strict_order(spark):
-    from graph_importer_spark.operators.funnel import (
-        funnel_conversion,
-        funnel_steps,
-    )
-
-    ev = spark.createDataFrame(
-        [
-            # u1 completes the funnel in order
-            (1, "view", _ts(1)), (1, "click", _ts(2)), (1, "purchase", _ts(3)),
-            # u2: purchase BEFORE the first view does not count
-            (2, "purchase", _ts(1)), (2, "view", _ts(2)), (2, "click", _ts(3)),
-            # u3: click before view -> stuck at step 1
-            (3, "click", _ts(1)), (3, "view", _ts(2)),
-            # u4 never views -> absent
-            (4, "purchase", _ts(1)),
-        ],
-        "user_id long, event_type string, ts timestamp",
-    )
-    out = funnel_steps(ev, ["view", "click", "purchase"])
-    got = {r["user_id"]: r for r in out.collect()}
-    assert set(got) == {1, 2, 3}
-    assert got[1]["steps_reached"] == 3
-    assert got[2]["steps_reached"] == 2 and got[2]["step3_ts"] is None
-    assert got[3]["steps_reached"] == 1 and got[3]["step2_ts"] is None
-    conv = {r["step"]: r for r in funnel_conversion(out, 3).collect()}
-    assert conv[1]["n_users"] == 3 and conv[3]["n_users"] == 1
-    assert conv[2]["conversion"] == round(2 / 3, 6)
-    with pytest.raises(ValueError):
-        funnel_steps(ev, [])
 
 
 def test_fs_score_decisions(spark):

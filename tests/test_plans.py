@@ -139,19 +139,6 @@ def test_nquads_serialization_is_narrow(spark):
     assert P.python_eval_count(df) == 0
 
 
-def test_funnel_step_filters_push_down(spark):
-    from graph_importer_spark.operators.funnel import funnel_steps
-
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    df = funnel_steps(ev, ["view", "click", "purchase"])
-    pushed = " ".join(P.pushed_filters(df))
-    # each step's event_type equality reaches a parquet scan
-    for step in ("view", "click", "purchase"):
-        assert step in pushed, pushed
-    schemas = " ".join(P.read_schemas(df))
-    assert "props" not in schemas  # unused wide column pruned
-
-
 def test_rolling_zscore_budgets_one_shuffle(spark):
     from graph_importer_spark.operators.timeseries import rolling_zscore
 
