@@ -559,3 +559,15 @@ def test_harness_vocab_rank_queries_have_no_global_window(spark):
         df = C.QUERIES[name](spark, SF_DIR)
         plan = P.physical_plan(df)
         assert "Exchange SinglePartition" not in plan, name
+
+
+def test_stream_batch_is_one_shuffle_one_extraction(spark):
+    # a micro-batch's keys all lie inside one sentence: the only shuffle
+    # is the sentence group, and the extraction UDF runs once per page
+    from graph_importer_spark import synth
+    from graph_importer_spark.streaming import _batch_triples
+
+    pages, _, aliases = synth.corpus(spark, n_pages=10, n_entities=5)
+    df = _batch_triples(pages, aliases, default_pred="cooccurs_with")
+    assert P.shuffle_exchange_count(df) == 1
+    assert P.physical_plan(df).count("ArrowEvalPython") == 1

@@ -25,12 +25,39 @@ def _write_pages(spark, path, lo, hi, n_entities=20):
     return aliases
 
 
+COOC_URL = "http://edge.test/cooccurs"
+
+
+def _write_edge_pages(spark, path):
+    """Two pages the synth corpus lacks: two mentions with no predicate
+    phrase (a triple only under ``default_pred``), and a null url (no
+    triple at all: the staged build loses it at its join on url)."""
+    import datetime
+
+    from graph_importer_spark.streaming import PAGES_SCHEMA
+
+    ts = datetime.datetime(2026, 2, 1)
+    rows = [
+        (COOC_URL, ts, b"<p>Acme0 met Globex1 Corp in Berlin.</p>", None, "en"),
+        (None, ts, b"<p>Stark3 acquired Wayne4.</p>", None, "en"),
+    ]
+    spark.createDataFrame(rows, PAGES_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(path)
+
+
+def _rows(df):
+    rows = df.select("url", "subj", "pred", "obj", "warc_ts").collect()
+    return sorted(map(tuple, rows), key=repr)
+
+
 def test_incremental_exactly_once_per_file(spark, tmp_path):
     pages_dir = str(tmp_path / "pages")
     ckpt = str(tmp_path / "ckpt")
     cat = GraphCatalog(spark, str(tmp_path / "wh"))
 
     aliases = _write_pages(spark, pages_dir, 0, 30)
+    _write_edge_pages(spark, pages_dir)
     q = incremental_triples(spark, pages_dir, aliases, cat, "triples_s", ckpt)
     q.awaitTermination(120)
     n1 = cat.read("triples_s").count()
@@ -48,17 +75,39 @@ def test_incremental_exactly_once_per_file(spark, tmp_path):
     n2 = cat.read("triples_s").count()
     assert n2 > n1
 
-    # incremental union == one-shot batch over all pages
-    pages, _, _ = synth.corpus(spark, n_pages=60, n_entities=20)
-    from graph_importer_spark.streaming import _batch_triples
+    # incremental union == the staged build's triples_raw on the same pages
+    from graph_importer_spark.pipeline import run_pipeline
 
-    want = sorted(
-        map(tuple, _batch_triples(pages, aliases).select("url", "subj", "pred", "obj").collect())
-    )
-    got = sorted(
-        map(tuple, cat.read("triples_s").select("url", "subj", "pred", "obj").collect())
-    )
+    pages = spark.read.parquet(pages_dir)
+    build = run_pipeline(spark, pages, aliases, str(tmp_path / "build"), lang=None)
+    want = _rows(build.cat.read("triples_raw"))
+    got = _rows(cat.read("triples_s"))
     assert got == want
+    assert None not in {r[0] for r in got} and COOC_URL not in {r[0] for r in got}
+
+    # the stream_incremental_triples contract row's configuration, which
+    # run_pipeline does not expose: compare with the build's own stage
+    # functions, composed as its stages compose them
+    from graph_importer_spark.extract import with_text
+    from graph_importer_spark.linking import link_mentions
+    from graph_importer_spark.mentions import detect_mentions, split_sentences
+    from graph_importer_spark.triples import extract_triples
+
+    cfg = {"default_pred": "cooccurs_with", "max_alias_tokens": 1}
+    q = incremental_triples(
+        spark, pages_dir, aliases, cat, "triples_c", str(tmp_path / "ckpt_c"), **cfg
+    )
+    q.awaitTermination(120)
+    pt = with_text(pages)
+    linked = link_mentions(detect_mentions(pt, aliases, max_alias_tokens=1), aliases)
+    want = _rows(
+        extract_triples(linked, split_sentences(pt), pt, default_pred="cooccurs_with")
+    )
+    got = _rows(cat.read("triples_c"))
+    assert got == want
+    cooc = [r[1:4] for r in got if r[0] == COOC_URL]
+    assert cooc == [("ent_0", "cooccurs_with", "ent_1")]
+    assert None not in {r[0] for r in got}
 
 
 def test_streaming_extract_matches_batch(spark, tmp_path):
