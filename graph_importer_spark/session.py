@@ -68,9 +68,9 @@ def get_spark(
     shuffle_partitions = shuffle_partitions or 2 * cores
     # SPARK_GRAFT_MASTER=spark://host:7077 switches to a (standalone)
     # cluster master — separate executor JVMs with their own heaps, the
-    # geometry of a real N-executor cluster (scripts/spark_cluster.py
-    # starts one on this box for the scaling evidence; `cores` then
-    # means TOTAL cores across executors and only sizes the shuffle
+    # geometry of a real N-executor cluster (start one with Spark's
+    # sbin/start-master.sh and start-worker.sh; `cores` then means
+    # TOTAL cores across executors and only sizes the shuffle
     # default).  Unset -> single-JVM local[cores].
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
     builder = (
