@@ -29,7 +29,7 @@ the engine, never loop on the driver.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -39,8 +39,9 @@ def link_mentions(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
     entity, score).
 
     One row per mention (best candidate)."""
-    kept = linked_per_sentence(mentions, aliases, ["url", "sent_id"]).select(
-        "url", "sent_id", F.explode("ms").alias("m")
+    per_sent = best_per_position(mentions, aliases, ["url", "sent_id"])
+    kept = per_sent.select(
+        "url", "sent_id", F.explode(non_overlapping(F.col("ms"))).alias("m")
     )
     return kept.select(
         "url",
@@ -53,12 +54,14 @@ def link_mentions(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
     )
 
 
-def linked_per_sentence(
+def best_per_position(
     mentions: DataFrame, aliases: DataFrame, keys: list[str]
 ) -> DataFrame:
     """mentions(*keys, pos, n_tokens, surface) x aliases(alias, entity,
     prior) -> (*keys, ms): one row per sentence key, ``ms`` the array of
-    its linked mentions, struct<pos, n_tokens, surface, entity, score>.
+    its best candidate per position, struct<pos, n_tokens, surface,
+    entity, score>.  ``non_overlapping(ms)`` then gives the linked
+    mentions.
 
     ``keys`` must identify one sentence (they are the shuffle key).  A
     surface no alias spells drops out at the broadcast inner join, so
@@ -66,7 +69,14 @@ def linked_per_sentence(
     alias_dim = aliases.select(
         F.col("alias").alias("surface"), "entity", "prior"
     )
-    cands = mentions.join(F.broadcast(alias_dim), "surface", "inner")
+    cands = mentions.join(F.broadcast(alias_dim), "surface", "inner").select(
+        *keys,
+        "pos",
+        "n_tokens",
+        "surface",
+        "entity",
+        F.col("prior").alias("score"),
+    )
     # ONE shuffle for the whole stage: group straight to the sentence
     # key and do top-1-per-position as array logic on the collected
     # candidates.  (A first groupBy(url, sent_id, pos) min_by would be
@@ -77,9 +87,7 @@ def linked_per_sentence(
     # reduce is cheap codegen.)
     per_sent = cands.groupBy(*keys).agg(
         F.collect_list(
-            F.struct(
-                "pos", "n_tokens", "surface", "entity", F.col("prior").alias("score")
-            )
+            F.struct("pos", "n_tokens", "surface", "entity", "score")
         ).alias("cs")
     )
     # best candidate per position: max over (n_tokens, score, -entity)
@@ -101,19 +109,23 @@ def linked_per_sentence(
                and c.entity < acc.entity then c
           else acc end))"""
     )
-    # overlap suppression: drop a best candidate whose position lies
-    # inside a longer best candidate.  Two projections, not one
-    # expression: ``ms`` is read twice, and the optimizer does not
-    # inline a costly expression it would then evaluate twice.
-    return per_sent.select(*keys, best.alias("ms")).select(
-        *keys,
-        F.filter(
-            "ms",
-            lambda m: ~F.exists(
-                F.col("ms"),
-                lambda l: (l["n_tokens"] > 1)
-                & (m["pos"] > l["pos"])
-                & (m["pos"] < l["pos"] + l["n_tokens"]),
-            ),
-        ).alias("ms"),
+    return per_sent.select(*keys, best.alias("ms"))
+
+
+def non_overlapping(ms: Column) -> Column:
+    """Overlap suppression over a ``best_per_position`` array column:
+    keep the mentions whose position lies inside no longer mention.
+
+    Consume it in the expression that needs it, as ``link_mentions``
+    explodes it: a filter over a column bound to it is pushed below that
+    projection with the expression substituted, which evaluates the
+    whole top-1 pass twice."""
+    return F.filter(
+        ms,
+        lambda m: ~F.exists(
+            ms,
+            lambda l: (l["n_tokens"] > 1)
+            & (m["pos"] > l["pos"])
+            & (m["pos"] < l["pos"] + l["n_tokens"]),
+        ),
     )

@@ -151,9 +151,7 @@ def _batch_triples(
         .select(*keys, "pos", F.explode(_mentions.candidate_surfaces(k)).alias("c"))
         .select(*keys, "pos", "c.n_tokens", "c.surface")
     )
-    return _triples.sentence_triples(
-        _linking.linked_per_sentence(cands, aliases, keys)
-    )
+    return _triples.sentence_triples(_linking.best_per_position(cands, aliases, keys))
 
 
 def incremental_triples(
@@ -180,12 +178,13 @@ def incremental_triples(
     without a predicate is dropped before tokenization; its 1..K-token
     candidate surfaces meet the alias dictionary in one broadcast inner
     join; one shuffle, grouped by sentence, feeds linking's top-1 and
-    overlap rule (``linking.linked_per_sentence``); the first and last
-    kept mention give subj and obj.  With one page per url, the output
-    equals the staged build's ``triples_raw`` on the same pages (a page
-    with a null url emits nothing in either).  The build keeps its
-    ``mentions``/``linked``/``triples_raw`` commits instead: they are
-    its resume points, and the benchmark's trace checks each of them.
+    overlap rule (``linking.best_per_position``, ``non_overlapping``);
+    the first and last kept mention give subj and obj.  With one page
+    per url, the output equals the staged build's ``triples_raw`` on the
+    same pages (a page with a null url emits nothing in either).  The
+    build keeps its ``mentions``/``linked``/``triples_raw`` commits
+    instead: they are its resume points, and the benchmark's trace
+    checks each of them.
 
     Returns the StreamingQuery; with ``available_now`` the caller can
     ``awaitTermination()`` for drain-and-stop semantics.

@@ -93,9 +93,15 @@ def test_incremental_exactly_once_per_file(spark, tmp_path):
     from graph_importer_spark.mentions import detect_mentions, split_sentences
     from graph_importer_spark.triples import extract_triples
 
-    cfg = {"default_pred": "cooccurs_with", "max_alias_tokens": 1}
     q = incremental_triples(
-        spark, pages_dir, aliases, cat, "triples_c", str(tmp_path / "ckpt_c"), **cfg
+        spark,
+        pages_dir,
+        aliases,
+        cat,
+        "triples_c",
+        str(tmp_path / "ckpt_c"),
+        default_pred="cooccurs_with",
+        max_alias_tokens=1,
     )
     q.awaitTermination(120)
     pt = with_text(pages)
