@@ -6,6 +6,10 @@ Stage graph (each stage = one Spark job writing one catalog table):
         ──triples──> triples_raw ──canonicalize──> canonical_map, triples
         ──materialize──> <g>_vertices, <g>_edges
 
+canonicalize contracts the surface<->entity graph to its entity side
+(one merge edge per extra entity of a shared surface) and runs CC only
+over those edges; with none, the map is the identity and no CC job runs.
+
 Per north rule: every stage writes per-partition lineage rows
 (_lineage) and stage metrics (_metrics); stage completion is a snapshot
 tag so ``run_pipeline(resume=True)`` skips finished stages — the Spark
@@ -52,7 +56,8 @@ class PipelineConfig:
     lang: str = "en"
     max_cc_iter: int = 30
     url_partitions: int | None = None  # default: spark.sql.shuffle.partitions
-    # above this many distinct (surface, entity) pairs, canonicalization
+    # above this many merge edges (entity pairs joined by a shared
+    # surface — the graph CC actually receives), canonicalization
     # switches from xxhash64 node ids (zero extra shuffles, collision
     # budget n^2/2^65) to the collision-free dense-id dictionary
     # (operators/ids.py) — the 10^12 design point of SCALE.md
@@ -62,13 +67,12 @@ class PipelineConfig:
     # at the 10^12 design point the entity dictionary is 10^8-10^9 rows,
     # far over any broadcast threshold
     broadcast_map_rows: int = 2_000_000
-    # at or below this many (surface, entity) pairs the CC loop runs on
-    # ONE partition: each large/small-star round becomes two single-task
-    # stages instead of fanning a few thousand rows across the full
-    # shuffle width — the per-round scheduling latency dominates small
-    # graphs (same gate as dedup.dup_clusters).  At real scale the gate
-    # never fires; it exists because alias dictionaries, not corpora,
-    # bound this graph's size in many deployments
+    # at or below this many merge edges CC runs in ONE task (union-find
+    # over the whole edge list) instead of the large/small-star loop
+    # fanning a few thousand rows across the full shuffle width — the
+    # per-round scheduling latency dominates small graphs (same gate as
+    # dedup.dup_clusters).  Merge edges come only from surfaces shared
+    # between entities, so alias dictionaries, not corpora, bound them
     small_cc_rows: int = 200_000
 
 
@@ -213,72 +217,89 @@ class Pipeline:
         self._flush_observability()
 
     def _canonical_map(self, linked: DataFrame) -> DataFrame:
-        """CC over the surface<->entity bipartite graph: alias variants
-        that (transitively) link to the same entity collapse into one
-        component; canonical id = min entity id in the component.
+        """Components of the surface<->entity bipartite graph, contracted
+        to its entity side: alias variants that (transitively) link to
+        the same entity collapse into one component; canonical id = min
+        entity id in the component.
 
         Returns (entity, canonical). This is the reference's
         'connectedcomponents'/'wcc' Pregel surface (arguments.py:182-184)
         run natively as the canonicalization stage.
 
-        Node-id strategy is size-gated: xxhash64 string ids (zero extra
-        shuffles) up to cfg.dense_id_threshold pairs, the collision-free
-        dense-id dictionary (operators/ids.connected_components_dense)
-        above it — at 10^12 documents the entity vocabulary makes the
-        n^2/2^65 collision budget real, and one silent hash collision
-        merges two unrelated entities forever.
+        Two entities share a bipartite component iff a chain of shared
+        surfaces joins them, so linking every entity of a surface to
+        that surface's smallest entity (a "merge edge") keeps exactly
+        the same entity components. CC runs over the merge edges only:
+        a surface with one entity — every surface of a functional
+        linker, however many aliases a hub entity has — adds no edge.
+        With no merge edge every component is a singleton and CC is
+        not called.
+
+        Node-id strategy is size-gated on the merge-edge count:
+        xxhash64 entity ids (zero extra shuffles) up to
+        cfg.dense_id_threshold, the collision-free dense-id dictionary
+        (operators/ids.connected_components_dense) above it — at 10^12
+        documents the entity vocabulary makes the n^2/2^65 collision
+        budget real, and one silent hash collision merges two unrelated
+        entities forever.
         """
         from pyspark.sql import Observation
 
         obs = Observation()
-        pairs = (
-            linked.select("surface", "entity")
-            .distinct()
-            .observe(obs, F.count(F.lit(1)).alias("n"))
+        groups = (
+            linked.groupBy("surface")
+            .agg(F.collect_set("entity").alias("es"))
+            .observe(
+                obs,
+                F.sum(F.size("es")).alias("pairs"),
+                F.sum(F.size("es") - 1).alias("merge_edges"),
+            )
             .localCheckpoint(eager=True)
         )
-        n_pairs = int(obs.get["n"])  # rides the checkpoint job — no count job
+        # both counts ride the checkpoint job — no count job
+        n_pairs = int(obs.get["pairs"] or 0)
+        n_edges = int(obs.get["merge_edges"] or 0)
+        ents = groups.select(F.explode("es").alias("entity")).distinct()
         it_metrics: list[tuple[int, int]] = []
         hook = lambda i, n: it_metrics.append((i, n))  # noqa: E731
-        use_dense = n_pairs > self.cfg.dense_id_threshold
-        if use_dense:
-            edges = pairs.select(
-                F.concat(F.lit("s:"), "surface").alias("src"),
-                F.concat(F.lit("e:"), "entity").alias("dst"),
-            )
-            named = _ids.connected_components_dense(
-                edges, max_iter=self.cfg.max_cc_iter, on_iteration=hook
-            )
-            # component canonical = min member name; 'e:' < 's:' and every
-            # component contains >=1 entity, so the canonical name is
-            # always the min ENTITY — strip the tag to get the map
-            out = named.filter(F.col("name").startswith("e:")).select(
-                F.substring("name", 3, 2**31 - 1).alias("entity"),
-                F.substring("canonical", 3, 2**31 - 1).alias("canonical"),
-            )
+        use_dense = n_edges > self.cfg.dense_id_threshold
+        if n_edges == 0:
+            out = ents.select("entity", F.col("entity").alias("canonical"))
         else:
-            edges = pairs.select(
-                F.xxhash64(F.concat(F.lit("s:"), "surface")).alias("src"),
-                F.xxhash64(F.concat(F.lit("e:"), "entity")).alias("dst"),
+            edges = (
+                groups.filter(F.size("es") > 1)
+                .select(F.array_min("es").alias("src"), F.explode("es").alias("dst"))
+                .filter(F.col("src") != F.col("dst"))
             )
-            labels = _cc.connected_components(
-                edges,
-                max_iter=self.cfg.max_cc_iter,
-                on_iteration=hook,
-                single_task=n_pairs <= self.cfg.small_cc_rows,
+            if use_dense:
+                named = _ids.connected_components_dense(
+                    edges, max_iter=self.cfg.max_cc_iter, on_iteration=hook
+                ).select(F.col("name").alias("entity"), "canonical")
+            else:
+                labels = _cc.connected_components(
+                    edges.select(
+                        F.xxhash64("src").alias("src"), F.xxhash64("dst").alias("dst")
+                    ),
+                    max_iter=self.cfg.max_cc_iter,
+                    on_iteration=hook,
+                    single_task=n_edges <= self.cfg.small_cc_rows,
+                )
+                ent_labels = ents.join(
+                    labels, F.xxhash64(ents.entity) == labels.id
+                ).select("entity", "component")
+                canon = ent_labels.groupBy("component").agg(
+                    F.min("entity").alias("canonical")
+                )
+                named = ent_labels.join(canon, "component").select("entity", "canonical")
+            # entities on no merge edge are their own component
+            out = ents.join(named, "entity", "left").select(
+                "entity", F.coalesce("canonical", "entity").alias("canonical")
             )
-            ents = pairs.select("entity").distinct().select(
-                "entity", F.xxhash64(F.concat(F.lit("e:"), "entity")).alias("id")
-            )
-            ent_labels = ents.join(labels, "id").select("entity", "component")
-            canon = ent_labels.groupBy("component").agg(
-                F.min("entity").alias("canonical")
-            )
-            out = ent_labels.join(canon, "component").select("entity", "canonical")
         for i, n in it_metrics:
             self._metric("canonicalize", f"cc_iter_{i}_edges", n)
         self._metric("canonicalize", "cc_iterations", len(it_metrics))
         self._metric("canonicalize", "cc_pairs", n_pairs)
+        self._metric("canonicalize", "cc_merge_edges", n_edges)
         self._metric("canonicalize", "cc_dense_ids", int(use_dense))
         return out
 

@@ -4,8 +4,10 @@ invariant, lineage/metrics contract, and resume idempotency
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from graph_importer_spark import cc as _cc
 from graph_importer_spark import synth
 from graph_importer_spark.pipeline import Pipeline, PipelineConfig, run_pipeline
 from graph_importer_spark.materialize import GraphSpec
@@ -38,9 +40,11 @@ def test_end_to_end_pr_gate_heavy_pages(spark, warehouse):
 
 
 def test_end_to_end_dense_ids_path(spark, warehouse):
-    """Force the collision-free dense-id canonicalization (the 10^12
-    design point) through run_pipeline and hold the same P/R gate — the
-    two node-id strategies must be observably equivalent."""
+    """Drop both size gates to zero through run_pipeline (the 10^12
+    design point: dense-id gate, plain-join rewrite) and hold the same
+    P/R gate.  Synth linking is a function of the surface, so the
+    contracted graph has no merge edge and CC is never called; dense CC
+    itself is checked in test_canonical_map_merges_shared_surfaces."""
     pages, gt, aliases = synth.corpus(spark, n_pages=120, n_entities=40)
     p = run_pipeline(
         spark, pages, aliases, warehouse, dense_id_threshold=0, broadcast_map_rows=0
@@ -49,10 +53,55 @@ def test_end_to_end_dense_ids_path(spark, warehouse):
         (r["metric"]): r["value"]
         for r in p.cat.read("_metrics").filter(F.col("stage") == "canonicalize").collect()
     }
-    assert m["cc_dense_ids"] == 1.0
+    assert m["cc_merge_edges"] == 0.0
     precision, recall = _pr(p.triples(), gt)
     assert precision >= 0.95, precision
     assert recall >= 0.95, recall
+
+
+@pytest.mark.parametrize(
+    "gates",
+    [{}, {"small_cc_rows": 0}, {"dense_id_threshold": 0}],
+    ids=["default", "iterative", "dense"],
+)
+def test_canonical_map_merges_shared_surfaces(spark, warehouse, gates):
+    """Canonicalization on a linked table where surfaces are shared
+    between entities, so it changes the output: chains of shared
+    surfaces merge, a hub entity with several aliases and singletons
+    stay themselves, duplicate rows change nothing.  Reference: CC over
+    the full surface<->entity bipartite graph, keeping the entities."""
+    rows = [
+        ("u1", "s1", "B"), ("u1", "s1", "A"), ("u2", "s1", "A"),  # duplicate
+        ("u2", "s2", "B"), ("u2", "s2", "C"),
+        ("u3", "s3", "D"),
+        ("u3", "s4", "E"), ("u4", "s5", "E"),  # one entity, two aliases
+        # F..I: the chain's last surface does not hold the component min
+        ("u4", "s6", "G"), ("u4", "s6", "F"), ("u5", "s7", "F"),
+        ("u5", "s7", "H"), ("u6", "s8", "I"), ("u6", "s8", "H"),
+    ]
+    linked = spark.createDataFrame(rows * 2, "url string, surface string, entity string")
+    p = Pipeline(spark, PipelineConfig(warehouse=warehouse, **gates))
+    got = {(r["entity"], r["canonical"]) for r in p._canonical_map(linked).collect()}
+
+    bipartite = linked.select(
+        F.concat(F.lit("s:"), "surface").alias("src"),
+        F.concat(F.lit("e:"), "entity").alias("dst"),
+    )
+    want = {
+        (r["name"][2:], r["canonical"][2:])
+        for r in _cc.connected_components_str(bipartite).collect()
+        if r["name"].startswith("e:")
+    }
+    assert want == {
+        ("A", "A"), ("B", "A"), ("C", "A"), ("D", "D"), ("E", "E"),
+        ("F", "F"), ("G", "F"), ("H", "F"), ("I", "F"),
+    }
+    assert got == want
+    m = {name: v for stage, name, v in p._metric_buf if stage == "canonicalize"}
+    assert m["cc_pairs"] == 13 and m["cc_merge_edges"] == 5
+    assert m["cc_dense_ids"] == (1 if "dense_id_threshold" in gates else 0)
+    # only the default gate takes the single-task union-find (no rounds)
+    assert (m["cc_iterations"] == 0) == (not gates)
 
 
 def test_byte_identical_text_stage(spark, warehouse):

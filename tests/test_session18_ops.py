@@ -454,30 +454,6 @@ def test_semantic_overlap_finds_planted_leaks(spark):
     assert sorted(r.id for r in out2) == sorted(out)
 
 
-def test_pair_rules_counts_and_lift(spark):
-    from graph_importer_spark.operators.itemsets import pair_rules
-
-    rows = [
-        (1, "a"), (1, "b"), (1, "c"),
-        (2, "a"), (2, "b"),
-        (3, "a"), (3, "c"),
-        (4, "b"), (4, "c"), (4, "b"),  # dup item in basket ignored
-    ]
-    b = spark.createDataFrame(rows, "basket long, item string")
-    out = {
-        (r.a, r.b): r for r in pair_rules(b, "basket", "item", min_support=2).collect()
-    }
-    ab = out[("a", "b")]
-    assert ab.n_ab == 2 and ab.n_a == 3 and ab.n_b == 3 and ab.n_baskets == 4
-    assert ab.support == pytest.approx(0.5)
-    assert ab.conf_a_b == pytest.approx(2 / 3, abs=1e-6)
-    assert ab.lift == pytest.approx(2 * 4 / 9, abs=1e-6)
-    assert ("b", "c") in out and ("a", "c") in out
-    # ubiquity guard drops the hot item entirely
-    capped = pair_rules(b, "basket", "item", min_support=2, max_item_freq=2).collect()
-    assert all("a" not in (r.a, r.b) and "b" not in (r.a, r.b) for r in capped)
-
-
 def test_fs_em_step_matches_hand_em(spark):
     from graph_importer_spark.operators.linkage import fs_em_step
 
