@@ -967,47 +967,6 @@ SELECT src, dst FROM intra UNION ALL SELECT src, dst FROM inter
 # ---------------------------------------------------------------------------
 
 
-def q_stream_windowed_counts(spark, sf_dir):
-    """windowed_event_counts executed AS A STREAM (file source over the
-    events parquet, availableNow trigger, complete-mode memory sink) and
-    drained to a batch DataFrame — verifies the streaming operator's
-    results, not just its batch twin.  Window starts are
-    returned as epoch seconds: engine-neutral, timezone-free."""
-    import uuid as _uuid
-
-    from graph_importer_spark import streaming as _stream
-
-    # the file stream source needs a DIRECTORY basePath; pathGlobFilter
-    # narrows it to the events table without copying anything
-    ev = (
-        spark.readStream.schema(T(spark, sf_dir, "events").schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    name = "swc_" + _uuid.uuid4().hex[:8]
-    q = (
-        _stream.windowed_event_counts(ev)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
-        F.unix_timestamp("window_start").alias("win_start_s"),
-        "event_type",
-        "n_events",
-    )
-
-
-ORACLE_STREAM_WINDOWED = """
-SELECT CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT) AS win_start_s,
-       event_type, COUNT(*) AS n_events
-FROM events GROUP BY 1, 2
-"""
-
-
 def q_stream_dedup(spark, sf_dir):
     """streaming_dedup executed AS A STREAM (file source over the
     documents parquet, availableNow trigger, append-mode memory sink):
@@ -4822,7 +4781,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "gen_clique": q_gen_clique,
     "gen_edge_attrs": q_gen_edge_attrs,
     "gen_cliques_graph": q_gen_cliques_graph,
-    "stream_windowed_counts": q_stream_windowed_counts,
     "stream_dedup": q_stream_dedup,
     "stream_sessions": q_stream_sessions,
     "stream_incremental_triples": q_stream_incremental_triples,
@@ -4950,7 +4908,6 @@ ORACLES: dict[str, str] = {
     "graph_skipgram": _oracle_graph_skipgram(),
     "graph_ppmi": _oracle_graph_ppmi(),
     "kg_triple_confidence": ORACLE_KG_TRIPLE_CONFIDENCE,
-    "stream_windowed_counts": ORACLE_STREAM_WINDOWED,
     "stream_dedup": ORACLE_STREAM_DEDUP,
     "stream_sessions": ORACLE_SESSIONS,
     "stream_incremental_triples": ORACLE_KG_FLAGSHIP,

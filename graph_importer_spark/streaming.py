@@ -9,8 +9,6 @@ snapshot-based resume for batch AND adds a true streaming path for the
   of page parquet files (each new file = one micro-batch of pages);
 * ``extract_stream`` — the SAME Arrow UDF extraction stage, applied to
   the streaming frame (narrow, no state);
-* ``windowed_event_counts`` — watermarked tumbling-window aggregation
-  (late rows beyond the watermark dropped by the engine);
 * ``streaming_dedup`` — exact content dedup with watermark-bounded
   state (dropDuplicatesWithinWatermark over the batch fingerprint
   normal form);
@@ -71,27 +69,6 @@ def extract_stream(pages: DataFrame) -> DataFrame:
     """Stateless extraction on a streaming frame — identical semantics
     to the batch stage (same pinned UDF => byte-identical text)."""
     return _extract.with_text(pages)
-
-
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Watermarked tumbling-window counts per event_type (the streaming
-    form of contract.q_events_hourly)."""
-    return (
-        events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        .withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("win"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            "event_type",
-            "n_events",
-        )
-    )
 
 
 def streaming_dedup(

@@ -1,5 +1,5 @@
 """Structured Streaming: incremental triples (exactly-once per file),
-streaming extraction parity, watermarked windowed aggregation."""
+streaming extraction parity."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ from graph_importer_spark import synth
 from graph_importer_spark.streaming import (
     incremental_triples,
     read_pages_stream,
-    windowed_event_counts,
 )
 from graph_importer_spark.tables import GraphCatalog
 
@@ -140,49 +139,6 @@ def test_streaming_extract_matches_batch(spark, tmp_path):
         for r in with_text(spark.read.parquet(pages_dir)).select("url", "text").collect()
     }
     assert got == want
-
-
-def test_windowed_event_counts(spark, tmp_path):
-    rows = [
-        ("2026-01-01 10:05:00", "click"),
-        ("2026-01-01 10:55:00", "click"),
-        ("2026-01-01 11:05:00", "view"),
-    ]
-    src = str(tmp_path / "events")
-    spark.createDataFrame(rows, "ts string, event_type string").withColumn(
-        "ts", F.to_timestamp("ts")
-    ).coalesce(1).write.parquet(src)
-    stream = (
-        spark.readStream.schema("ts timestamp, event_type string").parquet(src)
-    )
-    agg = windowed_event_counts(stream, window="1 hour", watermark="2 hours")
-    out = str(tmp_path / "agg_out")
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ck3"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # append mode only emits windows the watermark has closed; with a
-    # single availableNow drain nothing may finalize — re-check with a
-    # complete-mode in-memory sink instead for value assertions
-    q2 = (
-        agg.writeStream.format("memory")
-        .queryName("winagg")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    got = {
-        (str(r["window_start"]), r["event_type"]): r["n_events"]
-        for r in spark.sql("SELECT * FROM winagg").collect()
-    }
-    assert got[("2026-01-01 10:00:00", "click")] == 2
-    assert got[("2026-01-01 11:00:00", "view")] == 1
 
 
 def test_streaming_dedup_watermark_bounded(spark, tmp_path):
