@@ -967,43 +967,6 @@ SELECT src, dst FROM intra UNION ALL SELECT src, dst FROM inter
 # ---------------------------------------------------------------------------
 
 
-def q_stream_dedup(spark, sf_dir):
-    """streaming_dedup executed AS A STREAM (file source over the
-    documents parquet, availableNow trigger, append-mode memory sink):
-    exact content dedup whose state store is watermark-bounded.
-    Arrival time is synthesized deterministically from doc_id so the
-    watermark has an event-time column to bound state with."""
-    import uuid as _uuid
-
-    from graph_importer_spark import streaming as _stream
-
-    docs = (
-        spark.readStream.schema(T(spark, sf_dir, "documents").schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-        # base epoch 2026-01-01: a row at exactly epoch 0 would equal the
-        # engine's INITIAL watermark (0 ms) and be dropped as late
-        .withColumn("ts", F.timestamp_seconds(F.lit(1767225600) + F.col("doc_id")))
-    )
-    name = "sdq_" + _uuid.uuid4().hex[:8]
-    q = (
-        _stream.streaming_dedup(docs)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
-
-
-ORACLE_STREAM_DEDUP = r"""
-SELECT DISTINCT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-FROM documents
-"""
-
-
 def q_stream_sessions(spark, sf_dir):
     """stateful_sessions executed AS A STREAM (applyInPandasWithState
     keyed state, file source over the events parquet, availableNow,
@@ -4781,7 +4744,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "gen_clique": q_gen_clique,
     "gen_edge_attrs": q_gen_edge_attrs,
     "gen_cliques_graph": q_gen_cliques_graph,
-    "stream_dedup": q_stream_dedup,
     "stream_sessions": q_stream_sessions,
     "stream_incremental_triples": q_stream_incremental_triples,
     "effective_closeness_tree": q_effective_closeness_tree,
@@ -4908,7 +4870,6 @@ ORACLES: dict[str, str] = {
     "graph_skipgram": _oracle_graph_skipgram(),
     "graph_ppmi": _oracle_graph_ppmi(),
     "kg_triple_confidence": ORACLE_KG_TRIPLE_CONFIDENCE,
-    "stream_dedup": ORACLE_STREAM_DEDUP,
     "stream_sessions": ORACLE_SESSIONS,
     "stream_incremental_triples": ORACLE_KG_FLAGSHIP,
     "kg_incremental_entities": ORACLE_KG_INCREMENTAL,

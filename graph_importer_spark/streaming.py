@@ -9,9 +9,6 @@ snapshot-based resume for batch AND adds a true streaming path for the
   of page parquet files (each new file = one micro-batch of pages);
 * ``extract_stream`` — the SAME Arrow UDF extraction stage, applied to
   the streaming frame (narrow, no state);
-* ``streaming_dedup`` — exact content dedup with watermark-bounded
-  state (dropDuplicatesWithinWatermark over the batch fingerprint
-  normal form);
 * ``incremental_triples`` — foreachBatch driver: runs extract->
   mentions->link->triples on each micro-batch as ONE per-sentence plan
   and appends to the catalog; the stream checkpoint gives exactly-once
@@ -69,36 +66,6 @@ def extract_stream(pages: DataFrame) -> DataFrame:
     """Stateless extraction on a streaming frame — identical semantics
     to the batch stage (same pinned UDF => byte-identical text)."""
     return _extract.with_text(pages)
-
-
-def streaming_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup of incoming documents by content
-    fingerprint with WATERMARK-BOUNDED state.
-
-    ``dropDuplicatesWithinWatermark`` keeps one row per fingerprint and
-    — the part that matters at 10^12 documents — EVICTS a fingerprint
-    from the state store once the watermark passes it, so state is
-    bounded by the dedup horizon (arrival-time duplicate window) instead
-    of growing with the full corpus like plain streaming
-    ``dropDuplicates``.  The fingerprint is the batch dedup normal form
-    ([[fingerprint]]: md5 of lower/ws-collapsed text) — one definition
-    of "duplicate" across the batch and streaming paths.
-
-    Output is restricted to (fp, event time): WHICH duplicate row
-    survives is a first-arrival race under parallelism, so only the
-    deterministic columns leave the operator.
-    """
-    from graph_importer_spark.operators.textstats import fingerprint as _fp
-
-    keyed = docs.select(
-        _fp(F.col(text_col)).alias("fp"), F.col(ts_col).cast("timestamp")
-    ).withWatermark(ts_col, watermark)
-    return keyed.dropDuplicatesWithinWatermark(["fp"]).select("fp")
 
 
 def _batch_triples(

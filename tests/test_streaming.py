@@ -141,39 +141,6 @@ def test_streaming_extract_matches_batch(spark, tmp_path):
     assert got == want
 
 
-def test_streaming_dedup_watermark_bounded(spark, tmp_path):
-    from graph_importer_spark.streaming import streaming_dedup
-
-    rows = [
-        (0, "2026-01-01 10:00:00", "the quick brown fox"),
-        (1, "2026-01-01 10:01:00", "The  quick BROWN fox"),   # normal-form dup of 0
-        (2, "2026-01-01 10:02:00", "something else entirely"),
-        (3, "2026-01-01 10:03:00", "the quick brown fox"),    # exact dup of 0
-    ]
-    src = str(tmp_path / "docs")
-    spark.createDataFrame(rows, "doc_id long, ts string, text string").withColumn(
-        "ts", F.to_timestamp("ts")
-    ).coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(
-        "doc_id long, ts timestamp, text string"
-    ).parquet(src)
-    q = (
-        streaming_dedup(stream, text_col="text", ts_col="ts", watermark="1 hour")
-        .writeStream.format("memory")
-        .queryName("sdedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    fps = [r["fp"] for r in spark.sql("SELECT fp FROM sdedup").collect()]
-    # docs 0/1/3 collapse to one fingerprint; doc 2 stays
-    assert len(fps) == 2 and len(set(fps)) == 2
-    import hashlib
-
-    assert hashlib.md5(b"the quick brown fox").hexdigest() in fps
-
-
 def test_stateful_sessions_stream_matches_batch(spark, tmp_path, sf_dir):
     """applyInPandasWithState sessionization, fed the events table in 2
     time-ordered files (maxFilesPerTrigger=1 -> state genuinely carries
