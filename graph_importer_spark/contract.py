@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graph_importer_spark import extract as _extract
@@ -67,41 +67,6 @@ _A2 = _gen._A2
 
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-# ---------------------------------------------------------------------------
-# Batch sessionization: the semantics the stream_sessions row must equal
-# ---------------------------------------------------------------------------
-
-
-def q_events_sessions(spark, sf_dir, gap_us: int = 1800 * 1_000_000):
-    """Gap-based sessionization via lag window (streaming session-window
-    analogue computed in batch)."""
-    e = T(spark, sf_dir, "events").select(
-        "user_id", "event_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("us")
-    )
-    w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    flagged = e.withColumn(
-        "new_s",
-        F.when(
-            F.lag("us").over(w).isNull() | ((F.col("us") - F.lag("us").over(w)) > gap_us),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-    return flagged.groupBy("user_id").agg(
-        F.sum("new_s").alias("n_sessions"), F.count("*").alias("n_events")
-    )
-
-
-ORACLE_SESSIONS = """
-SELECT user_id, CAST(SUM(new_s) AS BIGINT) AS n_sessions, COUNT(*) AS n_events FROM (
-  SELECT user_id,
-    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-         THEN 1 ELSE 0 END AS new_s
-  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-) GROUP BY user_id
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -965,41 +930,6 @@ SELECT src, dst FROM intra UNION ALL SELECT src, dst FROM inter
 # Structured Streaming rows (SURVEY §2.7), each checked against its batch
 # equivalent
 # ---------------------------------------------------------------------------
-
-
-def q_stream_sessions(spark, sf_dir):
-    """stateful_sessions executed AS A STREAM (applyInPandasWithState
-    keyed state, file source over the events parquet, availableNow,
-    update-mode memory sink).  Emissions are cumulative and monotone,
-    so max per user = final totals; oracle = ORACLE_SESSIONS (the batch
-    lag-window sessionization)."""
-    import uuid as _uuid
-
-    from graph_importer_spark import streaming as _stream
-
-    ev = (
-        spark.readStream.schema(T(spark, sf_dir, "events").schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    name = "ssq_" + _uuid.uuid4().hex[:8]
-    q = (
-        _stream.stateful_sessions(ev)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(
-            F.max("n_sessions").alias("n_sessions"),
-            F.max("n_events").alias("n_events"),
-        )
-    )
 
 
 def q_stream_incremental_triples(spark, sf_dir):
@@ -4744,7 +4674,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "gen_clique": q_gen_clique,
     "gen_edge_attrs": q_gen_edge_attrs,
     "gen_cliques_graph": q_gen_cliques_graph,
-    "stream_sessions": q_stream_sessions,
     "stream_incremental_triples": q_stream_incremental_triples,
     "effective_closeness_tree": q_effective_closeness_tree,
     "pagerank_star": q_pagerank_star,
@@ -4870,7 +4799,6 @@ ORACLES: dict[str, str] = {
     "graph_skipgram": _oracle_graph_skipgram(),
     "graph_ppmi": _oracle_graph_ppmi(),
     "kg_triple_confidence": ORACLE_KG_TRIPLE_CONFIDENCE,
-    "stream_sessions": ORACLE_SESSIONS,
     "stream_incremental_triples": ORACLE_KG_FLAGSHIP,
     "kg_incremental_entities": ORACLE_KG_INCREMENTAL,
     "graph_mincut": _oracle_graph_mincut(),

@@ -161,56 +161,6 @@ def incremental_triples(
     return writer.start()
 
 
-def stateful_sessions(
-    events: DataFrame, gap_us: int = 1800 * 1_000_000, ts_col: str = "ts"
-) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState —
-    SURVEY §2.7): gap-based sessionization with per-user state carried
-    across micro-batches.  Emits the user's CUMULATIVE
-    (n_sessions, n_events) each time a batch touches them (update
-    mode); both counters are monotone, so the final value per user is
-    the row with the largest counts — and it equals the batch
-    sessionization (contract.q_events_sessions) when batches arrive in
-    time order (the file-source contract here; late data would need the
-    watermark + timeout variant).
-
-    State is 3 int64s per user (last event time, session count, event
-    count); the per-batch work inside the pandas function is numpy
-    (sort + diff > gap), no per-row Python.  At 10^9 users this is a
-    keyed state store partitioned by user hash — the exact shape
-    Structured Streaming shards state by.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    sentinel = -(2**62)
-
-    def update(key, pdfs, state: GroupState):
-        chunks = [pdf["us"].to_numpy(dtype="int64") for pdf in pdfs]
-        us = np.sort(np.concatenate(chunks)) if chunks else np.array([], dtype="int64")
-        last, ns, ne = state.get if state.exists else (sentinel, 0, 0)
-        if len(us):
-            prev = np.concatenate(([last], us[:-1]))
-            ns += int(((us - prev) > gap_us).sum())
-            ne += len(us)
-            state.update((int(us[-1]), ns, ne))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_sessions": [ns], "n_events": [ne]}
-        )
-
-    prepared = events.select(
-        "user_id", F.unix_micros(F.col(ts_col).cast("timestamp")).alias("us")
-    )
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id long, n_sessions long, n_events long",
-        stateStructType="last_us long, n_sessions long, n_events long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def incremental_canonical_stream(
     spark: SparkSession,
     pages_path: str,

@@ -141,63 +141,6 @@ def test_streaming_extract_matches_batch(spark, tmp_path):
     assert got == want
 
 
-def test_stateful_sessions_stream_matches_batch(spark, tmp_path, sf_dir):
-    """applyInPandasWithState sessionization, fed the events table in 2
-    time-ordered files (maxFilesPerTrigger=1 -> state genuinely carries
-    across micro-batches), equals the batch lag-window sessionization."""
-    import os
-    import uuid
-
-    from graph_importer_spark import contract as C
-    from graph_importer_spark.streaming import stateful_sessions
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    cut = ev.agg(
-        F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY unix_micros(CAST(ts AS TIMESTAMP)))")
-    ).first()[0]
-    d = str(tmp_path / "ev")
-    ev.filter(F.unix_micros(F.col("ts").cast("timestamp")) <= cut).coalesce(1).write.mode("append").parquet(d)
-    ev.filter(F.unix_micros(F.col("ts").cast("timestamp")) > cut).coalesce(1).write.mode("append").parquet(d)
-    parts = sorted(
-        (p for p in os.listdir(d) if p.endswith(".parquet")),
-        key=lambda p: os.path.getmtime(os.path.join(d, p)),
-    )
-    assert len(parts) == 2
-    # guarantee strict mtime order for the file-source's oldest-first pick
-    base = os.path.getmtime(os.path.join(d, parts[0]))
-    os.utime(os.path.join(d, parts[1]), (base + 10, base + 10))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(d)
-    )
-    name = "ss_" + uuid.uuid4().hex[:8]
-    q = (
-        stateful_sessions(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # update-mode emissions are cumulative and monotone: final = max
-    got = {
-        r["user_id"]: (r["n_sessions"], r["n_events"])
-        for r in spark.table(name)
-        .groupBy("user_id")
-        .agg(F.max("n_sessions").alias("n_sessions"), F.max("n_events").alias("n_events"))
-        .collect()
-    }
-    want = {
-        r["user_id"]: (r["n_sessions"], r["n_events"])
-        for r in C.q_events_sessions(spark, sf_dir).collect()
-    }
-    assert got == want
-
-
 def test_incremental_canonical_stream_stable_ids(spark, tmp_path):
     from graph_importer_spark.streaming import (
         canonical_entities,
