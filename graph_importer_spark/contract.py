@@ -1017,42 +1017,6 @@ SELECT 'y' || j, 'x' || j FROM range(5) t(j)
 """
 
 
-ORACLE_DEDUP_INCREMENTAL = r"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents WHERE doc_id < 300),
-batch AS (
-  SELECT doc_id + 500000 AS doc_id, text FROM corpus WHERE doc_id % 9 = 0),
-allkeys AS (
-  SELECT doc_id, CAST(seed // 2 AS INT) AS band,
-         md5(string_agg(minhash, '|' ORDER BY seed)) AS bkey,
-         doc_id >= 500000 AS is_new
-  FROM (
-    SELECT doc_id, seed, MIN(md5(seed || '|' || shingle)) AS minhash
-    FROM (
-      SELECT DISTINCT doc_id,
-        CASE WHEN len(t) >= 3 THEN array_to_string(t[i:i+2], ' ')
-             ELSE array_to_string(t, ' ') END AS shingle
-      FROM (
-        SELECT doc_id,
-               string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS t
-        FROM (SELECT * FROM corpus UNION ALL SELECT * FROM batch)),
-      UNNEST(generate_series(1, greatest(len(t) - 2, 1))) AS u(i)),
-    UNNEST(generate_series(0, 7)) AS s(seed)
-    GROUP BY doc_id, seed)
-  GROUP BY 1, 2, 4),
-idx AS (
-  SELECT a.*, cnt.bucket_n FROM allkeys a
-  JOIN (SELECT band, bkey, COUNT(*) AS bucket_n
-        FROM allkeys WHERE NOT is_new GROUP BY 1, 2) cnt
-    USING (band, bkey)
-  WHERE NOT a.is_new)
-SELECT DISTINCT n.doc_id AS new_id, i.doc_id AS corpus_id
-FROM (SELECT * FROM allkeys WHERE is_new) n
-JOIN idx i ON n.band = i.band AND n.bkey = i.bkey
-WHERE i.bucket_n <= 1000 AND n.doc_id <> i.doc_id
-"""
-
-
 def q_graph_khop(spark, sf_dir):
     """3-hop BFS neighborhood (min hops per node) over the
     customer->order->customer-residue graph, sources = custkeys < 5;
@@ -1336,49 +1300,6 @@ SELECT c.subj, c.pred, c.obj, v.neg_obj, c.j
 FROM cand c JOIN v USING (r)
 ANTI JOIN t p ON c.subj = p.subj AND c.pred = p.pred AND v.neg_obj = p.obj
 """
-
-
-def q_stream_fuzzy_dedup(spark, sf_dir):
-    """streaming_fuzzy_dedup executed AS A STREAM: a planted corpus
-    split into two micro-batches (batch 0 = corpus slice, batch 1 =
-    byte-identical clones under shifted ids), file-per-trigger.  The
-    accumulated near_dups table must equal the BATCH probe
-    (dedup.lsh_probe) exactly — ORACLE_DEDUP_INCREMENTAL."""
-    import os as _os
-    import tempfile as _tmp
-
-    from graph_importer_spark import streaming as _stream
-    from graph_importer_spark.tables import GraphCatalog
-
-    d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 300).select(
-        "doc_id", "text"
-    )
-    clones = d.filter(F.col("doc_id") % 9 == 0).select(
-        (F.col("doc_id") + 500000).alias("doc_id"), "text"
-    )
-    root = _tmp.mkdtemp(prefix="sfz_")
-    docs_dir = _os.path.join(root, "docs")
-    _os.makedirs(docs_dir)
-    for i, batch in enumerate((d, clones)):
-        pdf = batch.toPandas()
-        path = _os.path.join(docs_dir, f"{i:04d}.parquet")
-        pdf.to_parquet(path, index=False)
-        # FileStreamSource orders by modification time: pin it ascending
-        _os.utime(path, (1700000000 + i, 1700000000 + i))
-    cat = GraphCatalog(spark, _os.path.join(root, "wh"))
-    q = _stream.streaming_fuzzy_dedup(
-        spark,
-        docs_dir,
-        cat,
-        _os.path.join(root, "ckpt"),
-        d.schema,
-        k=3,
-        n_hashes=8,
-        bands=4,
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination()
-    return cat.read("near_dups")
 
 
 def q_graph_ktruss(spark, sf_dir):
@@ -4657,7 +4578,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_types": q_kg_types,
     "kg_provenance": q_kg_provenance,
     "kg_star_optional": q_kg_star_optional,
-    "stream_fuzzy_dedup": q_stream_fuzzy_dedup,
     "graph_walks": q_graph_walks,
     "graph_skipgram": q_graph_skipgram,
     "graph_assortativity": q_graph_assortativity,
@@ -4789,9 +4709,6 @@ ORACLES: dict[str, str] = {
     "graph_assortativity": ORACLE_GRAPH_ASSORTATIVITY,
     "kg_predicate_stats": ORACLE_KG_PREDICATE_STATS,
     "kg_nquads": _oracle_kg_nquads(),
-    # the stream accumulates exactly the batch probe's links (batch 0
-    # has no priors), so the oracle is shared
-    "stream_fuzzy_dedup": ORACLE_DEDUP_INCREMENTAL,
     "kg_negative_samples": _oracle_kg_negative_samples(),
     "graph_khop": ORACLE_GRAPH_KHOP,
     "graph_walks": _oracle_graph_walks(),

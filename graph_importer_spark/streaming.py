@@ -233,114 +233,6 @@ def canonical_entities(map_df: DataFrame) -> DataFrame:
     )
 
 
-def streaming_fuzzy_dedup(
-    spark: SparkSession,
-    docs_path: str,
-    catalog: GraphCatalog,
-    checkpoint_dir: str,
-    schema,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    index_table: str = "lsh_index",
-    counts_table: str = "lsh_counts",
-    dups_table: str = "near_dups",
-    k: int = 3,
-    n_hashes: int = 12,
-    bands: int = 4,
-    max_bucket: int = 1000,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming incremental near-dup detection: each micro-batch of
-    documents PROBES the stored LSH band index (``dedup.lsh_probe``
-    semantics — links against all PRIOR documents), appends its links
-    to ``dups_table``, then folds its own band keys into the index —
-    the streaming regime of the batch ``lsh_band_index``/``lsh_probe``
-    pair, with the same first-arrival-keeps contract as
-    ``streaming_dedup``.
-
-    State lives in catalog tables, not the state store: the band index
-    grows with the corpus by design (fuzzy dedup has no watermark-
-    bounded analogue — a near-dup may arrive years later), and a
-    catalog table is exactly the storage that scales there; the
-    hot-bucket counts are maintained incrementally (old counts merged
-    with the batch's key counts — the index is never recounted).
-    Within-batch duplicates are NOT linked to each other (run
-    ``lsh_candidate_pairs`` on a batch if intra-batch links matter);
-    replay safety via per-batch tags, same as the canonical-map stream.
-
-    Returns the StreamingQuery.  Hash/band parameters are part of the
-    index contract (see ``lsh_probe``).
-    """
-    from graph_importer_spark.operators.dedup import lsh_band_keys
-
-    stream = spark.readStream.schema(schema).parquet(docs_path)
-    if max_files_per_trigger is not None:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(docs_path)
-        )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        tag = f"fuzzy_batch_{batch_id}"
-        if catalog.exists(dups_table) and catalog.has_tag(dups_table, tag):
-            return
-        bk = lsh_band_keys(
-            batch_df, id_col, text_col, k, n_hashes, bands
-        ).localCheckpoint(eager=True)
-        if catalog.exists(index_table):
-            keys = catalog.read(index_table)
-            counts = catalog.read(counts_table)
-            ok = counts.filter(F.col("bucket_n") <= max_bucket).select(
-                "band", "bkey"
-            )
-            links = (
-                bk.select(F.col(id_col).alias("new_id"), "band", "bkey")
-                .join(keys.join(ok, ["band", "bkey"]), ["band", "bkey"])
-                .filter(F.col("new_id") != F.col(id_col))
-                .select("new_id", F.col(id_col).alias("corpus_id"))
-                .distinct()
-            )
-            new_counts = (
-                counts.unionByName(
-                    bk.groupBy("band", "bkey").agg(
-                        F.count("*").alias("bucket_n")
-                    )
-                )
-                .groupBy("band", "bkey")
-                .agg(F.sum("bucket_n").alias("bucket_n"))
-            )
-        else:
-            # type-correct empty links for any id type
-            links = bk.select(
-                F.col(id_col).alias("new_id"),
-                F.col(id_col).alias("corpus_id"),
-            ).limit(0)
-            new_counts = bk.groupBy("band", "bkey").agg(
-                F.count("*").alias("bucket_n")
-            )
-        # materialize BEFORE the writes below rewrite their inputs
-        links = links.localCheckpoint(eager=True)
-        new_counts = new_counts.localCheckpoint(eager=True)
-        if catalog.exists(index_table):
-            catalog.append(index_table, bk)
-        else:
-            catalog.create_or_replace(index_table, bk)
-        catalog.create_or_replace(counts_table, new_counts)
-        if catalog.exists(dups_table):
-            catalog.append(dups_table, links, tag=tag)
-        else:
-            catalog.create_or_replace(dups_table, links, tag=tag)
-
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def stream_interval_join(
     left: DataFrame,
     right: DataFrame,

@@ -196,44 +196,3 @@ def test_incremental_canonical_stream_stable_ids(spark, tmp_path):
     )
 
 
-def test_streaming_fuzzy_dedup_links_new_batches_to_prior_docs(spark, tmp_path):
-    from graph_importer_spark.streaming import streaming_fuzzy_dedup
-
-    docs_dir = str(tmp_path / "docs_f")
-    ckpt = str(tmp_path / "ckpt_f")
-    cat = GraphCatalog(spark, str(tmp_path / "wh_f"))
-    base = " ".join(f"w{i}" for i in range(25))
-    b0 = spark.createDataFrame(
-        [(i, base + f" tail{i}") if i % 2 else (i, f"very different doc {i} " * 4)
-         for i in range(6)],
-        ["doc_id", "text"],
-    )
-    b0.coalesce(1).write.mode("overwrite").parquet(docs_dir)
-    schema = b0.schema
-
-    run = lambda: streaming_fuzzy_dedup(  # noqa: E731
-        spark, docs_dir, cat, ckpt, schema, k=3, n_hashes=8, bands=4
-    ).awaitTermination(120)
-    run()
-    assert cat.read("near_dups").count() == 0  # first batch has no priors
-    n_index_1 = cat.read("lsh_index").count()
-    assert n_index_1 == 6 * 4  # one key per (doc, band)
-
-    # batch 2: clone of doc 1 + an unrelated doc -> exactly the clone links
-    b1 = spark.createDataFrame(
-        [(101, base + " tail1"), (102, "nothing shared with anything here")],
-        ["doc_id", "text"],
-    )
-    b1.coalesce(1).write.mode("append").parquet(docs_dir)
-    run()
-    links = {(r["new_id"], r["corpus_id"]) for r in cat.read("near_dups").collect()}
-    assert (101, 1) in links
-    assert not any(n == 102 for n, _ in links)
-    # index and counts folded the new batch in
-    assert cat.read("lsh_index").count() == n_index_1 + 2 * 4
-    total = sum(r["bucket_n"] for r in cat.read("lsh_counts").collect())
-    assert total == 8 * 4
-
-    # restart with no new files: nothing changes (checkpoint + tags)
-    run()
-    assert {(r["new_id"], r["corpus_id"]) for r in cat.read("near_dups").collect()} == links
