@@ -1665,58 +1665,6 @@ FROM d WHERE deg >= 1
 """
 
 
-def q_stream_join(spark, sf_dir):
-    """stream_interval_join executed AS A STREAM: view->click
-    attribution within 1 h on the same user, both sides file streams
-    over the events parquet (availableNow, append-mode memory sink).
-    Watermark is set past the corpus's 30-day span so no row is
-    late-dropped under multi-batch replay; the oracle is the batch
-    self-join with the identical range predicate."""
-    import uuid as _uuid
-
-    from graph_importer_spark import streaming as _stream
-
-    schema = T(spark, sf_dir, "events").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    views = src.filter(F.col("event_type") == "view")
-    clicks = src.filter(F.col("event_type") == "click")
-    out = _stream.stream_interval_join(
-        views,
-        clicks,
-        key="user_id",
-        left_ts="ts",
-        right_ts="ts",
-        left_id="event_id",
-        right_id="event_id",
-        horizon_seconds=3600,
-        watermark="35 days",
-    )
-    name = "sj_" + _uuid.uuid4().hex[:8]
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
-
-
-ORACLE_STREAM_JOIN = """
-SELECT a.user_id, a.event_id AS left_id, b.event_id AS right_id,
-       CAST(floor(epoch(b.ts)) - floor(epoch(a.ts)) AS BIGINT) AS lag_s
-FROM events a JOIN events b
-  ON a.user_id = b.user_id
- AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL 3600 SECONDS
-WHERE a.event_type = 'view' AND b.event_type = 'click'
-"""
-
-
 def q_kg_entity_summary(spark, sf_dir):
     """Entity-card top-3 facts per subject ranked by predicate rarity
     (triples.entity_summary; ranking routes through the two-phase
@@ -4569,7 +4517,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_closure": q_kg_closure,
     "kg_path_2hop": q_kg_path_2hop,
     "graph_powerlaw": q_graph_powerlaw,
-    "stream_interval_join": q_stream_join,
     "kg_entity_summary": q_kg_entity_summary,
     "graph_anf": q_graph_anf,
     "graph_bipartite": q_graph_bipartite,
@@ -4670,7 +4617,6 @@ ORACLES: dict[str, str] = {
     "kg_closure": ORACLE_KG_CLOSURE,
     "kg_path_2hop": ORACLE_KG_PATH_2HOP,
     "graph_powerlaw": ORACLE_GRAPH_POWERLAW,
-    "stream_interval_join": ORACLE_STREAM_JOIN,
     "kg_entity_summary": ORACLE_KG_ENTITY_SUMMARY,
     "graph_anf": ORACLE_GRAPH_ANF,
     "graph_bipartite": ORACLE_GRAPH_BIPARTITE,

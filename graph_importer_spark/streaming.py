@@ -233,70 +233,6 @@ def canonical_entities(map_df: DataFrame) -> DataFrame:
     )
 
 
-def stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    left_id: str,
-    right_id: str,
-    horizon_seconds: int = 600,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Watermarked STREAM-STREAM interval join — the attribution shape
-    (impression joined to every click by the same key within
-    ``horizon_seconds`` after it) as a true Structured Streaming join,
-    not a batch twin.
-
-    -> (key, left_id, right_id, lag_s) with
-    0 <= right.ts - left.ts <= horizon.
-
-    State-bound mechanics (the part that matters on an unbounded
-    stream): BOTH sides carry a watermark and the join condition is a
-    closed time range on the two event times, so Spark derives state
-    eviction for each side — a buffered left row is dropped once the
-    right watermark passes left_ts + horizon, and vice versa; state is
-    O(traffic within watermark + horizon), never the full history.
-    Without the range condition the state store grows without bound —
-    that misconfiguration is exactly what this operator exists to
-    encapsulate.  Join keys are user-grained (uniform-ish); a Zipf-hot
-    key (bot traffic) is AQE territory in batch but in streaming must
-    be rate-limited upstream — documented, not hidden.
-
-    Equality on ``key`` plus the range predicate makes this a
-    hash-partitioned stream join (both sides shuffle on key once); the
-    lag is computed post-join in codegen.
-    """
-    l = left.select(
-        F.col(key).alias("k"),
-        F.col(left_ts).cast("timestamp").alias("l_ts"),
-        F.col(left_id).alias("left_id"),
-    ).withWatermark("l_ts", watermark)
-    r = right.select(
-        F.col(key).alias("rk"),
-        F.col(right_ts).cast("timestamp").alias("r_ts"),
-        F.col(right_id).alias("right_id"),
-    ).withWatermark("r_ts", watermark)
-    joined = l.join(
-        r,
-        (F.col("k") == F.col("rk"))
-        & (F.col("r_ts") >= F.col("l_ts"))
-        & (
-            F.col("r_ts")
-            <= F.col("l_ts") + F.expr(f"INTERVAL {horizon_seconds} SECONDS")
-        ),
-    )
-    return joined.select(
-        F.col("k").alias(key),
-        "left_id",
-        "right_id",
-        (
-            F.unix_timestamp("r_ts") - F.unix_timestamp("l_ts")
-        ).alias("lag_s"),
-    )
-
-
 def streaming_cdc_apply(
     spark: SparkSession,
     changes_path: str,

@@ -1,14 +1,8 @@
-"""BPE vocabulary learning, stream-stream interval join, entity summary."""
+"""BPE vocabulary learning, entity summary."""
 
 from __future__ import annotations
 
-import datetime as dt
-import uuid
-
-from pyspark.sql import functions as F
-
 from graph_importer_spark.operators.bpe import bpe_learn, bpe_segment
-from graph_importer_spark.streaming import stream_interval_join
 from graph_importer_spark.triples import entity_summary
 
 
@@ -55,66 +49,6 @@ def test_bpe_segment_greedy_left_to_right(spark):
     docs = spark.createDataFrame([(1, "aaa")], "id long, text string")
     r = bpe_segment(docs, "id", "text", [("a", "a")]).collect()[0]
     assert r.bpe_tokens == ["aa", "a"]
-
-
-# -- stream-stream interval join ----------------------------------------------
-
-def _ts(minute: int) -> dt.datetime:
-    return dt.datetime(2024, 1, 1, 0, minute, 0)
-
-
-def test_interval_join_batch_semantics(spark):
-    # the same plan applied to batch frames: inclusive bounds + horizon
-    left = spark.createDataFrame(
-        [(1, _ts(0), 100), (1, _ts(20), 101), (2, _ts(0), 102)],
-        "user_id long, ts timestamp, event_id long",
-    )
-    right = spark.createDataFrame(
-        [(1, _ts(0), 200), (1, _ts(10), 201), (1, _ts(31), 202), (2, _ts(11), 203)],
-        "user_id long, ts timestamp, event_id long",
-    )
-    got = {
-        (r.left_id, r.right_id): r.lag_s
-        for r in stream_interval_join(
-            left, right, key="user_id", left_ts="ts", right_ts="ts",
-            left_id="event_id", right_id="event_id", horizon_seconds=600,
-        ).collect()
-    }
-    # imp 100 @0: clicks at 0 (lag 0) and 10 (600s, inclusive); 31' is out
-    # imp 101 @20: click at 31' (660s) out of horizon... 31-20=11min > 10min
-    # imp 102 @0 user 2: click at 11' out (660s)
-    assert got == {(100, 200): 0, (100, 201): 600}
-
-
-def test_interval_join_streaming_matches_batch(spark, tmp_path):
-    rows = [
-        (i, dt.datetime(2024, 1, 1, 0, i % 60, 0), i % 5,
-         "view" if i % 2 == 0 else "click")
-        for i in range(200)
-    ]
-    df = spark.createDataFrame(rows, "event_id long, ts timestamp, user_id long, event_type string")
-    d = str(tmp_path / "ev")
-    df.coalesce(1).write.parquet(d)
-
-    def run(src):
-        return stream_interval_join(
-            src.filter(F.col("event_type") == "view"),
-            src.filter(F.col("event_type") == "click"),
-            key="user_id", left_ts="ts", right_ts="ts",
-            left_id="event_id", right_id="event_id",
-            horizon_seconds=300, watermark="2 hours",
-        )
-
-    batch = {tuple(r) for r in run(spark.read.parquet(d)).collect()}
-    name = "sjt_" + uuid.uuid4().hex[:8]
-    q = (
-        run(spark.readStream.schema(df.schema).parquet(d))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    stream = {tuple(r) for r in spark.table(name).collect()}
-    assert stream == batch and len(batch) > 0
 
 
 # -- entity summary -----------------------------------------------------------
