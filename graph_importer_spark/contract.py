@@ -3973,75 +3973,6 @@ FROM e LEFT JOIN common ON common.a = e.a AND common.b = e.b
 """
 
 
-def q_stream_cdc_apply(spark, sf_dir):
-    """streaming_cdc_apply executed AS A STREAM: the change log split
-    into two version-ordered micro-batch files (inserts, then
-    updates + deletes), file-per-trigger; the folded snapshot must
-    equal the one-shot batch apply over the whole log — which is the
-    oracle."""
-    import os as _os
-    import tempfile as _tmp
-
-    from graph_importer_spark import streaming as _stream
-    from graph_importer_spark.tables import GraphCatalog
-
-    o = T(spark, sf_dir, "orders")
-    c1 = o.filter(F.col("o_orderkey") < 1500).select(
-        (F.col("o_orderkey") % 800).alias("k"),
-        F.col("o_orderkey").alias("version"),
-        F.lit("I").alias("op"),
-        F.concat(F.lit("v"), F.col("o_orderkey").cast("string")).alias("val"),
-    )
-    c2 = o.filter(
-        (F.col("o_orderkey") >= 1500) & (F.col("o_orderkey") < 3000)
-    ).select(
-        (F.col("o_orderkey") % 800).alias("k"),
-        F.col("o_orderkey").alias("version"),
-        F.when(F.col("o_orderkey") % 5 == 0, F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-        F.concat(F.lit("w"), F.col("o_orderkey").cast("string")).alias("val"),
-    )
-    root = _tmp.mkdtemp(prefix="graft_cdc_stream_")
-    ch_dir = _os.path.join(root, "changes")
-    _os.makedirs(ch_dir)
-    for i, batch in enumerate((c1, c2)):
-        pdf = batch.toPandas()
-        path = _os.path.join(ch_dir, f"{i:04d}.parquet")
-        pdf.to_parquet(path, index=False)
-        _os.utime(path, (1700000000 + i, 1700000000 + i))
-    cat = GraphCatalog(spark, _os.path.join(root, "wh"))
-    q = _stream.streaming_cdc_apply(
-        spark,
-        ch_dir,
-        cat,
-        _os.path.join(root, "ckpt"),
-        c1.schema,
-        key="k",
-        data_cols=["val"],
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination()
-    return cat.read("current")
-
-
-ORACLE_STREAM_CDC_APPLY = r"""
-WITH ch AS (
-  SELECT o_orderkey % 800 AS k, o_orderkey AS version, 'I' AS op,
-         'v' || CAST(o_orderkey AS VARCHAR) AS val
-  FROM orders WHERE o_orderkey < 1500
-  UNION ALL
-  SELECT o_orderkey % 800, o_orderkey,
-         CASE WHEN o_orderkey % 5 = 0 THEN 'D' ELSE 'U' END,
-         'w' || CAST(o_orderkey AS VARCHAR)
-  FROM orders WHERE o_orderkey >= 1500 AND o_orderkey < 3000),
-w AS (
-  SELECT k, arg_max(op, version) AS op, arg_max(val, version) AS val
-  FROM ch GROUP BY k)
-SELECT k, val FROM w WHERE op <> 'D'
-"""
-
-
 def q_kg_temporal(spark, sf_dir):
     """Temporal ordering audit (triples.temporal_consistency):
     placed-day vs shipped-day facts per order with every 50th order's
@@ -4497,7 +4428,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kg_motif_cycle": q_kg_motif_cycle,
     "kg_benford": q_kg_benford,
     "graph_embeddedness": q_graph_embeddedness,
-    "stream_cdc_apply": q_stream_cdc_apply,
     "kg_temporal": q_kg_temporal,
     "graph_katz": q_graph_katz,
     "kg_range_types": q_kg_range_types,
@@ -4595,7 +4525,6 @@ ORACLES: dict[str, str] = {
     "kg_motif_cycle": ORACLE_KG_MOTIF_CYCLE,
     "kg_benford": _oracle_kg_benford(),
     "graph_embeddedness": ORACLE_GRAPH_EMBEDDEDNESS,
-    "stream_cdc_apply": ORACLE_STREAM_CDC_APPLY,
     "kg_temporal": ORACLE_KG_TEMPORAL,
     "graph_katz": _oracle_graph_katz(),
     "kg_range_types": ORACLE_KG_RANGE_TYPES,

@@ -233,65 +233,3 @@ def canonical_entities(map_df: DataFrame) -> DataFrame:
     )
 
 
-def streaming_cdc_apply(
-    spark: SparkSession,
-    changes_path: str,
-    catalog: GraphCatalog,
-    checkpoint_dir: str,
-    schema,
-    key: str,
-    data_cols: list[str],
-    version_col: str = "version",
-    op_col: str = "op",
-    snapshot_table: str = "current",
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """Streaming lakehouse MERGE: each micro-batch of CDC rows
-    (op in {'I','U','D'}, strictly ordered ``version``) folds into a
-    catalog-backed ``current`` snapshot via ``scd2.apply_cdc`` —
-    the continuously-maintained serving table over a change stream.
-
-    Cross-batch contract: the log must arrive version-ordered ACROSS
-    micro-batches (the per-key-ordered reality of a CDC source);
-    within a batch any order — apply_cdc's max_by picks the winner.
-    Under that contract the sequentially-folded snapshot equals the
-    one-shot batch apply over the whole log, which is exactly what
-    the driver oracle checks.
-
-    State is the snapshot itself (catalog table, replay-tagged) —
-    per-batch work is one key-keyed max_by over the BATCH plus one
-    key join against the snapshot; the change history is never
-    re-read.
-    """
-    from graph_importer_spark.operators.scd2 import apply_cdc
-
-    stream = spark.readStream.schema(schema).parquet(changes_path)
-    if max_files_per_trigger is not None:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(changes_path)
-        )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        tag = f"cdc_batch_{batch_id}"
-        if catalog.exists(snapshot_table) and catalog.has_tag(
-            snapshot_table, tag
-        ):
-            return
-        if catalog.exists(snapshot_table):
-            cur = catalog.read(snapshot_table)
-        else:
-            cur = batch_df.select(key, *data_cols).limit(0)
-        new = apply_cdc(
-            cur, batch_df, key, version_col, op_col
-        ).localCheckpoint(eager=True)
-        catalog.create_or_replace(snapshot_table, new, tag=tag)
-
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1534,37 +1534,6 @@ def test_sentiment_score_signs(spark):
     assert out[4].n_pos == 1  # 'goodness' is not a hit
 
 
-def test_streaming_cdc_apply_folds_batches(spark, tmp_path):
-    import os
-
-    from graph_importer_spark import streaming as _stream
-    from graph_importer_spark.tables import GraphCatalog
-
-    c1 = spark.createDataFrame(
-        [(1, 1, "I", "a"), (2, 2, "I", "b"), (3, 3, "I", "c")],
-        "k long, version long, op string, val string",
-    )
-    c2 = spark.createDataFrame(
-        [(2, 4, "U", "b2"), (3, 5, "D", "x"), (4, 6, "I", "d")],
-        "k long, version long, op string, val string",
-    )
-    ch = str(tmp_path / "ch")
-    os.makedirs(ch)
-    for i, b in enumerate((c1, c2)):
-        p = os.path.join(ch, f"{i:04d}.parquet")
-        b.toPandas().to_parquet(p, index=False)
-        os.utime(p, (1700000000 + i, 1700000000 + i))
-    cat = GraphCatalog(spark, str(tmp_path / "wh"))
-    q = _stream.streaming_cdc_apply(
-        spark, ch, cat, str(tmp_path / "ckpt"), c1.schema,
-        key="k", data_cols=["val"], max_files_per_trigger=1,
-    )
-    q.awaitTermination()
-    out = {r.k: r.val for r in cat.read("current").collect()}
-    # 1 kept, 2 updated, 3 deleted, 4 inserted in batch 2
-    assert out == {1: "a", 2: "b2", 4: "d"}
-
-
 def test_knn_label_agreement_flags_planted_mislabel(spark):
     from graph_importer_spark.operators.similarity import knn_label_agreement
 
