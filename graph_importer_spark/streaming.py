@@ -161,75 +161,3 @@ def incremental_triples(
     return writer.start()
 
 
-def incremental_canonical_stream(
-    spark: SparkSession,
-    pages_path: str,
-    aliases: DataFrame,
-    catalog: GraphCatalog,
-    map_table: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """foreachBatch maintenance of the entity canonical map: each
-    micro-batch of new pages runs extract->mentions->link, turns the
-    (surface, entity) pairs into delta edges, and folds them into the
-    stored map with operators.incremental.incremental_canonicalize —
-    previously assigned entity ids stay stable across batches, merges
-    resolve to the smaller OLD id, and per-batch work is proportional
-    to the DELTA (the streaming analogue of the batch pipeline's
-    canonicalize stage; SCALE.md "incremental canonicalization").
-
-    Replay safety: foreachBatch is at-least-once; re-folding a batch's
-    edges into a map that already contains them is a NO-OP by
-    construction (every component already carries its anchor, so the
-    stable-id choice is unchanged) — the operator is idempotent under
-    replay, with the snapshot tag as a fast-path skip where the catalog
-    retains tag history.
-
-    Returns the StreamingQuery (``available_now`` for drain-and-stop).
-    """
-    from graph_importer_spark.operators.incremental import incremental_canonicalize
-
-    stream = read_pages_stream(spark, pages_path, max_files_per_trigger)
-    empty_map = spark.createDataFrame([], "name string, canonical string")
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        tag = f"stream_batch_{batch_id}"
-        if catalog.exists(map_table) and catalog.has_tag(map_table, tag):
-            return
-        pt = _extract.with_text(batch_df)
-        m = _mentions.detect_mentions(pt, aliases)
-        linked = _linking.link_mentions(m, aliases)
-        edges = (
-            linked.select("surface", "entity")
-            .distinct()
-            .select(
-                F.concat(F.lit("s:"), "surface").alias("src"),
-                F.concat(F.lit("e:"), "entity").alias("dst"),
-            )
-        )
-        existing = catalog.read(map_table) if catalog.exists(map_table) else empty_map
-        # localCheckpoint: the update must not lazily re-read map_table
-        # while create_or_replace rewrites it underneath the plan.
-        updated = incremental_canonicalize(existing, edges).localCheckpoint(eager=True)
-        catalog.create_or_replace(map_table, updated, tag=tag)
-
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def canonical_entities(map_df: DataFrame) -> DataFrame:
-    """(entity, canonical) view of a tagged canonical map (strip the
-    's:'/'e:' vertex tags; every component's canonical is an entity
-    because 'e:' < 's:' — same convention as Pipeline._canonical_map)."""
-    return map_df.filter(F.col("name").startswith("e:")).select(
-        F.substring("name", 3, 2**31 - 1).alias("entity"),
-        F.substring("canonical", 3, 2**31 - 1).alias("canonical"),
-    )
-
-

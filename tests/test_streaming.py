@@ -141,58 +141,3 @@ def test_streaming_extract_matches_batch(spark, tmp_path):
     assert got == want
 
 
-def test_incremental_canonical_stream_stable_ids(spark, tmp_path):
-    from graph_importer_spark.streaming import (
-        canonical_entities,
-        incremental_canonical_stream,
-    )
-
-    pages_dir = str(tmp_path / "pages_c")
-    ckpt = str(tmp_path / "ckpt_c")
-    cat = GraphCatalog(spark, str(tmp_path / "wh_c"))
-
-    aliases = _write_pages(spark, pages_dir, 0, 30)
-    q = incremental_canonical_stream(spark, pages_dir, aliases, cat, "cmap", ckpt)
-    q.awaitTermination(120)
-    m1 = {r["entity"]: r["canonical"] for r in canonical_entities(cat.read("cmap")).collect()}
-    assert m1  # non-empty map after the first batch
-
-    # new pages arrive: previously assigned ids must not churn
-    _write_pages(spark, pages_dir, 30, 60)
-    q = incremental_canonical_stream(spark, pages_dir, aliases, cat, "cmap", ckpt)
-    q.awaitTermination(120)
-    m2 = {r["entity"]: r["canonical"] for r in canonical_entities(cat.read("cmap")).collect()}
-    assert set(m1) <= set(m2)
-    churned = {e for e in m1 if m2[e] != m1[e]}
-    # ids may only change by merging to a SMALLER old id, never to a new one
-    for e in churned:
-        assert m2[e] in m1.values() and m2[e] < m1[e]
-
-    # restart with NO new files: map unchanged (checkpoint + idempotence)
-    q = incremental_canonical_stream(spark, pages_dir, aliases, cat, "cmap", ckpt)
-    q.awaitTermination(120)
-    m3 = {r["entity"]: r["canonical"] for r in canonical_entities(cat.read("cmap")).collect()}
-    assert m3 == m2
-
-    # component structure equals the one-shot batch CC over all pages
-    # (id CHOICE may differ: incremental keeps first-batch ids)
-    from graph_importer_spark.pipeline import run_pipeline
-    import tempfile
-
-    pages, _, _ = synth.corpus(spark, n_pages=60, n_entities=20)
-    p = run_pipeline(spark, pages, aliases, tempfile.mkdtemp())
-    bm = {
-        r["entity"]: r["canonical"]
-        for r in p.cat.read("canonical_map").collect()
-    }
-    assert set(bm) == set(m2)
-    groups_inc = {}
-    groups_bat = {}
-    for e in bm:
-        groups_inc.setdefault(m2[e], set()).add(e)
-        groups_bat.setdefault(bm[e], set()).add(e)
-    assert sorted(map(sorted, groups_inc.values())) == sorted(
-        map(sorted, groups_bat.values())
-    )
-
-
