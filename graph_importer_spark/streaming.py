@@ -1,26 +1,26 @@
-"""Structured Streaming surface: incremental KG ingestion.
+"""Incremental KG ingestion: new page files become appended triples.
 
-The reference is batch-only (files -> DB; SURVEY §2.7 '—absent—'); its
-incremental story is exists-then-skip resume. The graft keeps that
-snapshot-based resume for batch AND adds a true streaming path for the
-'new WARC slices keep arriving' shape of a Common-Crawl pipeline:
+The reference is batch-only (files -> DB); its only incremental
+behaviour is exists-then-skip resume, which the staged build keeps as
+per-stage snapshot resume (pipeline.py).  This module is the one
+streaming path the KG needs, for the 'new WARC slices keep arriving'
+shape of a Common-Crawl pipeline:
 
 * ``read_pages_stream`` — file-source ``readStream`` over a directory
-  of page parquet files (each new file = one micro-batch of pages);
-* ``extract_stream`` — the SAME Arrow UDF extraction stage, applied to
-  the streaming frame (narrow, no state);
+  of page parquet files (each new file feeds a micro-batch of pages);
 * ``incremental_triples`` — foreachBatch driver: runs extract->
   mentions->link->triples on each micro-batch as ONE per-sentence plan
-  and appends to the catalog; the stream checkpoint gives exactly-once
-  per input file, so this is the streaming analogue of the pipeline's
-  per-stage snapshot resume.
+  (``_batch_triples``) and appends to the catalog; the stream
+  checkpoint plus a per-batch snapshot tag give exactly-once per input
+  file.
 
-All transformations reuse the batch operators — one definition of the
-semantics, two execution modes.  The micro-batch composes them
-differently from the staged build: every key it groups or joins on
-lies inside one sentence, so it needs one extraction pass and one
-shuffle where the build commits four intermediate tables.  The build
-keeps its stage commits because they are its resume points.
+Extraction is stateless, so ``extract.with_text`` applies to a
+streaming frame unchanged.  The batch reuses the build's operators —
+one definition of the semantics, two execution modes — but composes
+them differently: every key it groups or joins on lies inside one
+sentence, so it needs one extraction pass and one shuffle where the
+build commits four intermediate tables.  The build keeps its stage
+commits because they are its resume points.
 """
 
 from __future__ import annotations
@@ -60,12 +60,6 @@ def read_pages_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)
-
-
-def extract_stream(pages: DataFrame) -> DataFrame:
-    """Stateless extraction on a streaming frame — identical semantics
-    to the batch stage (same pinned UDF => byte-identical text)."""
-    return _extract.with_text(pages)
 
 
 def _batch_triples(

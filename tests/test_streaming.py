@@ -1,5 +1,6 @@
-"""Structured Streaming: incremental triples (exactly-once per file),
-streaming extraction parity."""
+"""Incremental KG ingestion: ``incremental_triples`` appends each new
+page file's triples exactly once and equals the staged build on the
+same pages; extraction on a streaming frame equals batch extraction."""
 
 from __future__ import annotations
 
@@ -119,9 +120,8 @@ def test_streaming_extract_matches_batch(spark, tmp_path):
     pages_dir = str(tmp_path / "pages")
     _write_pages(spark, pages_dir, 0, 25)
     from graph_importer_spark.extract import with_text
-    from graph_importer_spark.streaming import extract_stream
 
-    stream = extract_stream(read_pages_stream(spark, pages_dir))
+    stream = with_text(read_pages_stream(spark, pages_dir))
     assert stream.isStreaming
     out_dir = str(tmp_path / "out")
     q = (
