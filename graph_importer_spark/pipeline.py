@@ -1,6 +1,8 @@
 """End-to-end staged KG-construction pipeline with lineage + resume.
 
-Stage graph (each stage = one Spark job writing one catalog table):
+Stage graph (seven stages; each commits one catalog table, materialize
+two, and may run several Spark jobs: a traced ``build_entity_dense``
+build runs 35 jobs in all):
 
   pages ──extract──> pages_text ──mentions──> mentions ──link──> linked
         ──triples──> triples_raw ──canonicalize──> canonical_map, triples
@@ -42,7 +44,13 @@ from graph_importer_spark import extract as _extract
 from graph_importer_spark import linking as _linking
 from graph_importer_spark import mentions as _mentions
 from graph_importer_spark import triples as _triples
-from graph_importer_spark.materialize import GraphSpec, materialize_graph, triples_to_graph
+from graph_importer_spark.materialize import (
+    GraphSpec,
+    edge_table_name,
+    materialize_graph,
+    triples_to_graph,
+    vertex_table_name,
+)
 from graph_importer_spark.tables import GraphCatalog
 
 LINEAGE_TABLE = "_lineage"
@@ -207,8 +215,11 @@ class Pipeline:
 
         self._run_stage("triples", "triples", s_triples, resume)
 
-        vt = f"{cfg.graph.name}_{cfg.graph.vertices_coll}"
-        if not (resume and cat.exists(vt) and cat.has_tag(vt, "complete")):
+        # materialize commits vertices, then edges: a kill between the two
+        # commits leaves complete vertices and no edges, so resume checks both
+        vt, et = vertex_table_name(cfg.graph), edge_table_name(cfg.graph)
+        done = all(cat.exists(t) and cat.has_tag(t, "complete") for t in (vt, et))
+        if not (resume and done):
             t0 = time.monotonic()
             verts, edges = triples_to_graph(cat.read("triples"), cfg.graph)
             materialize_graph(cat, cfg.graph, verts, edges)

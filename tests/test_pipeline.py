@@ -138,6 +138,7 @@ def test_resume_skips_and_is_idempotent(spark, warehouse):
     p = Pipeline(spark, cfg)
     p.run(pages, aliases)
     first = sorted(map(tuple, p.triples().select("subj", "pred", "obj", "url").collect()))
+    first_edges = sorted(map(tuple, p.cat.read("kg_edges").collect()), key=repr)
     snaps_before = len(p.cat.snapshots("pages_text"))
 
     # resume over a complete run: every stage skipped (no new snapshots)
@@ -154,6 +155,15 @@ def test_resume_skips_and_is_idempotent(spark, warehouse):
     assert len(p3.cat.snapshots("pages_text")) == snaps_before  # untouched
     third = sorted(map(tuple, p3.triples().select("subj", "pred", "obj", "url").collect()))
     assert first == third
+
+    # a kill between materialize's vertex and edge commits: resume must
+    # write the edges, not skip on the complete vertex table
+    p3.cat.drop("kg_edges")
+    p4 = Pipeline(spark, cfg)
+    p4.run(pages, aliases, resume=True)
+    assert len(p4.cat.snapshots("pages_text")) == snaps_before
+    assert p4.cat.exists("kg_edges")
+    assert sorted(map(tuple, p4.cat.read("kg_edges").collect()), key=repr) == first_edges
 
 
 def test_mined_anchor_aliases_drive_the_pipeline(spark, warehouse):
