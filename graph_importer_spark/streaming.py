@@ -25,6 +25,9 @@ commits because they are its resume points.
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -109,7 +112,8 @@ def incremental_triples(
     ``table``. The stream checkpoint records consumed files, so
     restarts never reprocess a file (exactly-once per file — the
     streaming analogue of the reference's exists-then-skip,
-    graphalytics_importer.py:168-175).
+    graphalytics_importer.py:168-175).  Several streams, each with its
+    own checkpoint, may append to the same ``table``.
 
     A batch is one plan over sentences: extraction runs once per page;
     each sentence carries its url, warc_ts and predicate, and one
@@ -128,18 +132,22 @@ def incremental_triples(
     ``awaitTermination()`` for drain-and-stop semantics.
     """
     stream = read_pages_stream(spark, pages_path, max_files_per_trigger)
+    # batch ids restart at 0 for every checkpoint, so the tag names the
+    # checkpoint too: another stream's batch 0 is not this one's replay
+    where = checkpoint_dir if "://" in checkpoint_dir else os.path.abspath(checkpoint_dir)
+    ckpt_id = hashlib.sha1(where.rstrip("/").encode()).hexdigest()[:12]
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         # foreachBatch is at-least-once: a crash after the catalog append
         # commits but before the stream checkpoint commits replays the
         # batch on restart.  The per-batch snapshot tag makes the body
-        # idempotent — a replayed batch_id is skipped.  This relies on
+        # idempotent — a replayed (checkpoint, batch_id) is skipped.  This relies on
         # the catalog's append being ATOMIC (tables.GraphCatalog.append:
         # data visibility and the tag land in one meta swap — a crash
         # mid-append leaves an invisible orphan dir, never untagged
         # visible rows), so the exactly-once-per-file claim holds end
         # to end.
-        tag = f"stream_batch_{batch_id}"
+        tag = f"stream_batch_{ckpt_id}_{batch_id}"
         if catalog.exists(table) and catalog.has_tag(table, tag):
             return
         out = _batch_triples(batch_df, aliases, default_pred, max_alias_tokens).withColumn(

@@ -116,6 +116,28 @@ def test_incremental_exactly_once_per_file(spark, tmp_path):
     assert None not in {r[0] for r in got}
 
 
+def test_two_checkpoints_append_to_one_table(spark, tmp_path):
+    """Batch ids restart at 0 for every checkpoint: a second stream
+    appending to the same table is not a replay of the first."""
+    cat = GraphCatalog(spark, str(tmp_path / "wh"))
+    src1, src2 = str(tmp_path / "pages1"), str(tmp_path / "pages2")
+    aliases = _write_pages(spark, src1, 0, 30)
+    _write_pages(spark, src2, 30, 60)
+
+    def drain(src, table, ckpt):
+        q = incremental_triples(spark, src, aliases, cat, table, str(tmp_path / ckpt))
+        q.awaitTermination(120)
+        return _rows(cat.read(table))
+
+    first = drain(src1, "triples_u", "ckpt1")
+    second = drain(src2, "triples_2", "ckpt2_alone")
+    assert first and second
+    union = drain(src2, "triples_u", "ckpt2")
+    assert union == sorted(first + second, key=repr)
+    # a restart from the second checkpoint still adds nothing
+    assert drain(src2, "triples_u", "ckpt2") == union
+
+
 def test_streaming_extract_matches_batch(spark, tmp_path):
     pages_dir = str(tmp_path / "pages")
     _write_pages(spark, pages_dir, 0, 25)
