@@ -2,7 +2,7 @@
 
 One entry per row of the KG system's surface: pipeline stages and KG
 analytics (``kg_``), the reference importer (``imp_``) and generators
-(``gen_``), Structured Streaming (``stream_``), connected components
+(``gen_``), incremental KG ingestion (``stream_``), connected components
 (``cc_``) and the Pregel-style graph catalog (``graph_`` plus ten named
 rows such as ``pagerank_star``).  Each is expressed twice with identical
 semantics:
@@ -927,8 +927,8 @@ SELECT src, dst FROM intra UNION ALL SELECT src, dst FROM inter
 
 
 # ---------------------------------------------------------------------------
-# Structured Streaming rows (SURVEY §2.7), each checked against its batch
-# equivalent
+# Structured Streaming row: incremental KG ingestion, checked against the
+# batch flagship oracle
 # ---------------------------------------------------------------------------
 
 

@@ -4,8 +4,6 @@ same pages; extraction on a streaming frame equals batch extraction."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from graph_importer_spark import synth
