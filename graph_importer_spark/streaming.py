@@ -141,12 +141,12 @@ def incremental_triples(
         # foreachBatch is at-least-once: a crash after the catalog append
         # commits but before the stream checkpoint commits replays the
         # batch on restart.  The per-batch snapshot tag makes the body
-        # idempotent — a replayed (checkpoint, batch_id) is skipped.  This relies on
-        # the catalog's append being ATOMIC (tables.GraphCatalog.append:
-        # data visibility and the tag land in one meta swap — a crash
-        # mid-append leaves an invisible orphan dir, never untagged
-        # visible rows), so the exactly-once-per-file claim holds end
-        # to end.
+        # idempotent — a replayed (checkpoint, batch_id) is skipped.
+        # This relies on the catalog's append being ATOMIC
+        # (tables.GraphCatalog.append: data visibility and the tag land
+        # in one meta swap — a crash mid-append leaves an invisible
+        # orphan dir, never untagged visible rows), so the
+        # exactly-once-per-file claim holds end to end.
         tag = f"stream_batch_{ckpt_id}_{batch_id}"
         if catalog.exists(table) and catalog.has_tag(table, tag):
             return
