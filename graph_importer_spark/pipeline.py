@@ -218,8 +218,7 @@ class Pipeline:
         # materialize commits vertices, then edges: a kill between the two
         # commits leaves complete vertices and no edges, so resume checks both
         vt, et = vertex_table_name(cfg.graph), edge_table_name(cfg.graph)
-        done = all(cat.exists(t) and cat.has_tag(t, "complete") for t in (vt, et))
-        if not (resume and done):
+        if not (resume and all(cat.exists(t) and cat.has_tag(t, "complete") for t in (vt, et))):
             t0 = time.monotonic()
             verts, edges = triples_to_graph(cat.read("triples"), cfg.graph)
             materialize_graph(cat, cfg.graph, verts, edges)
