@@ -9,9 +9,9 @@ why the reference's hand-rolled balanced-partitioning trick
 (clique_generator.py:216-229) has no analogue on this join.
 
 Disambiguation (top-1 per mention: longest surface wins, then highest
-prior, then lexicographically smallest entity) and overlap suppression
-(a token interior to an accepted longer mention must not also link)
-share ONE hash shuffle keyed on (url, sent_id): candidates are
+prior, a null prior lowest, then lexicographically smallest entity) and
+overlap suppression (a token interior to an accepted longer mention must
+not also link) share ONE hash shuffle keyed on (url, sent_id): candidates are
 collected per sentence and both the per-position argmax and the overlap
 EXISTS run as higher-order array expressions inside codegen.  The
 alternatives each cost a second exchange of every mention row — a
@@ -22,6 +22,12 @@ Group keys are fine-grained and uniform — no salting needed HERE; skew
 handling matters downstream where keys are entities (see cc.py /
 operators/skew.py).
 
+The stream links without any exchange: ``compile_surfaces`` reduces
+the dictionary to one row per surface with its top-1 entity, and
+``kept_mentions`` applies the same rules (longest match per position,
+the overlap rule) to a batch of token lists as one vectorized Arrow /
+numpy pass with a hash probe per candidate length.
+
 Mirrors the query surface the reference delegates to ArangoDB's AQL
 anti-join (vertices_generator.py:123-146) in spirit: push the lookup to
 the engine, never loop on the driver.
@@ -29,6 +35,10 @@ the engine, never loop on the driver.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -91,9 +101,11 @@ def best_per_position(
         ).alias("cs")
     )
     # best candidate per position: max over (n_tokens, score, -entity)
-    # == (longest, then best-scored, then smallest entity id) — a strict
-    # total order (same pos + same n_tokens => same surface), so the
-    # fold's winner is independent of collect_list order.
+    # == (longest, then best-scored, then smallest entity id), where a
+    # null score ranks below every score — a strict total order (same
+    # pos + same n_tokens => same surface), so the fold's winner is
+    # independent of collect_list order.  ``compile_surfaces`` ranks by
+    # the same order.
     null_c = (
         "cast(null as struct<pos:int,n_tokens:int,surface:string,"
         "entity:string,score:double>)"
@@ -105,7 +117,9 @@ def best_per_position(
           when acc is null then c
           when c.n_tokens > acc.n_tokens then c
           when c.n_tokens = acc.n_tokens and c.score > acc.score then c
-          when c.n_tokens = acc.n_tokens and c.score = acc.score
+          when c.n_tokens = acc.n_tokens and c.score is not null
+               and acc.score is null then c
+          when c.n_tokens = acc.n_tokens and c.score <=> acc.score
                and c.entity < acc.entity then c
           else acc end))"""
     )
@@ -129,3 +143,99 @@ def non_overlapping(ms: Column) -> Column:
             & (m["pos"] < l["pos"] + l["n_tokens"]),
         ),
     )
+
+
+# --- compiled dictionary + vectorized Arrow kernel --------------------------
+#
+# Top-1 depends only on the surface (longest wins per position, and within
+# one surface the order is prior, then entity), so the alias dictionary
+# compiles to one row per surface and linking a sentence becomes a hash
+# probe per candidate surface: no join, no shuffle.
+
+
+def compile_surfaces(aliases: DataFrame) -> tuple[pd.Index, pa.Array]:
+    """aliases(alias, entity, prior) -> (surfaces, entities): one
+    position per distinct alias, ``entities[i]`` the top-1 entity of
+    ``surfaces[i]`` in ``best_per_position``'s order (prior descending, a
+    null prior below every prior and NaN above, then the smallest
+    entity).  A null alias spells no surface and is dropped.
+
+    Collects the dictionary to the driver: it is the small side of the
+    build's broadcast join."""
+    t = aliases.select("alias", "entity", "prior").filter(F.col("alias").isNotNull()).toArrow()
+    prior = t.column("prior").cast(pa.float64())
+    t = t.append_column("has_prior", pc.is_valid(prior)).append_column(
+        "is_nan", pc.fill_null(pc.is_nan(prior), False)
+    )
+    t = t.take(
+        pc.sort_indices(
+            t,
+            sort_keys=[
+                ("has_prior", "descending"),
+                ("is_nan", "descending"),
+                ("prior", "descending"),
+                ("entity", "ascending"),
+            ],
+        )
+    )
+    # rows are in rank order, so an alias's first row is its top-1
+    surfaces, first = np.unique(t.column("alias").to_numpy(), return_index=True)
+    return pd.Index(surfaces, dtype=object), t.column("entity").take(first).combine_chunks()
+
+
+def kept_mentions(
+    tokens: pa.ListArray, surfaces: pd.Index, max_alias_tokens: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """The mentions ``link_mentions`` keeps in each sentence of
+    ``tokens``, as (row, pos, n_tokens, hit) arrays in token order:
+    ``hit`` indexes ``surfaces``, i.e. the ``compile_surfaces`` entity.
+
+    Vectorized over all tokens of the batch; the only loops are over
+    the 1..K surface lengths.  Candidate surfaces are built like
+    ``mentions.candidate_surfaces``: the k-token surface at ``pos``
+    joins the tokens of the sentence from ``pos`` on, so a slice past
+    the sentence end is the shorter surface again, tagged ``k``."""
+    flat = tokens.flatten()
+    n = len(flat)
+    row = pc.list_parent_indices(tokens).to_numpy()
+    lengths = pc.list_value_length(tokens).to_numpy(zero_copy_only=False)
+    start = np.zeros(len(tokens), dtype=np.int64)
+    np.cumsum(lengths[:-1], out=start[1:])
+    pos = np.arange(n) - start[row]
+    room = lengths[row] - pos  # tokens from pos to the sentence end
+    surface = flat
+    best_n = np.zeros(n, dtype=np.int64)
+    hit = np.full(n, -1, dtype=np.int64)
+    for k in range(1, max_alias_tokens + 1):
+        if k > 1:
+            nxt = np.arange(n) + (k - 1)
+            inside = room >= k
+            shifted = flat.take(pa.array(np.where(inside, nxt, 0), mask=~inside))
+            surface = pc.binary_join_element_wise(surface, shifted, " ", null_handling="skip")
+        got = surfaces.get_indexer(surface.to_numpy(zero_copy_only=False))
+        found = got >= 0
+        hit = np.where(found, got, hit)
+        best_n = np.where(found, k, best_n)
+    # non_overlapping: a position inside a longer best mention that
+    # starts d tokens earlier in the same sentence does not link
+    covered = np.zeros(n, dtype=bool)
+    for d in range(1, max_alias_tokens):
+        covered[d:] |= (pos[d:] >= d) & (best_n[:-d] > d)
+    kept = np.flatnonzero((best_n > 0) & ~covered)
+    return row[kept], pos[kept], best_n[kept], hit[kept]
+
+
+def sentence_ends(
+    tokens: pa.ListArray, surfaces: pd.Index, entities: pa.Array, max_alias_tokens: int
+) -> tuple[np.ndarray, pa.Array, pa.Array]:
+    """(rows, subj, obj): the sentences of ``tokens`` with two or more
+    kept mentions, and the entities of their first and last one — the
+    ``triples.extract_triples`` pattern."""
+    row, _, _, hit = kept_mentions(tokens, surfaces, max_alias_tokens)
+    if len(row) == 0:
+        empty = pa.array([], pa.string())
+        return row, empty, empty
+    first = np.flatnonzero(np.r_[True, row[1:] != row[:-1]])
+    last = np.r_[first[1:], len(row)] - 1
+    two = last > first
+    return row[first[two]], entities.take(hit[first[two]]), entities.take(hit[last[two]])

@@ -5,7 +5,8 @@ Contract being mirrored (SURVEY.md §1.2):
 * graph = (<g>_vertices, <g>_edges) + metadata — creation payload
   general.py:70-104 (numberOfShards, replicationFactor, smart options);
 * overwrite => drop-then-create; exists-and-not-overwrite => skip the
-  whole materialization (graphalytics_importer.py:168-175);
+  whole materialization (graphalytics_importer.py:168-175), where the
+  graph exists once both collections committed;
 * smart key format '<smartValue>:<key>' (vertices_generator.py:153-157,
   graphalytics_importer.py:87); plain key = '<key>';
 * ``_id`` / ``_from`` / ``_to`` format '<collection>/<key>'
@@ -70,13 +71,18 @@ def materialize_graph(
 
     Returns True if written, False if skipped (graph existed and
     overwrite not set — the reference prints 'Graph ... already exists,
-    skipping' and returns, graphalytics_importer.py:168-172).
+    skipping' and returns, graphalytics_importer.py:168-172).  The graph
+    exists only when both collections carry the ``complete`` tag: the
+    vertices commit first, so a kill between the two commits leaves a
+    graph that is rewritten, not skipped.
 
     ``vertices`` must carry ``_key`` (+ smart attr column when smart);
     ``edges`` must carry ``_from``/``_to`` (+ attribute columns).
     """
     vt, et = vertex_table_name(spec), edge_table_name(spec)
-    if (cat.exists(vt) or cat.exists(et)) and not spec.overwrite:
+    if not spec.overwrite and all(
+        cat.exists(t) and cat.has_tag(t, "complete") for t in (vt, et)
+    ):
         return False
     props = {
         "numberOfShards": spec.num_shards,

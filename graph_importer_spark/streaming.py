@@ -8,19 +8,20 @@ shape of a Common-Crawl pipeline:
 
 * ``read_pages_stream`` — file-source ``readStream`` over a directory
   of page parquet files (each new file feeds a micro-batch of pages);
-* ``incremental_triples`` — foreachBatch driver: runs extract->
-  mentions->link->triples on each micro-batch as ONE per-sentence plan
-  (``_batch_triples``) and appends to the catalog; the stream
-  checkpoint plus a per-batch snapshot tag give exactly-once per input
-  file.
+* ``incremental_triples`` — applies the extract->mentions->link->
+  triples plan (``_batch_triples``) to the streaming frame once, and
+  its foreachBatch body appends each micro-batch's rows to the catalog;
+  the stream checkpoint plus a per-batch snapshot tag give exactly-once
+  per input file.
 
 Extraction is stateless, so ``extract.with_text`` applies to a
-streaming frame unchanged.  The batch reuses the build's operators —
-one definition of the semantics, two execution modes — but composes
-them differently: every key it groups or joins on lies inside one
-sentence, so it needs one extraction pass and one shuffle where the
-build commits four intermediate tables.  The build keeps its stage
-commits because they are its resume points.
+streaming frame unchanged.  The plan is narrow: sentence splitting,
+tokenization and the predicate are the build's Spark expressions, and
+linking is one vectorized Arrow pass per partition that probes the
+dictionary compiled to one row per surface
+(``linking.compile_surfaces``), so a batch has no broadcast join, no
+shuffle and one Spark job, its write.  The build reaches the same
+triples through four intermediate commits, which are its resume points.
 """
 
 from __future__ import annotations
@@ -28,6 +29,7 @@ from __future__ import annotations
 import hashlib
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -65,6 +67,9 @@ def read_pages_stream(
     return reader.parquet(path)
 
 
+TRIPLES_SCHEMA = "subj string, pred string, obj string, url string, warc_ts timestamp"
+
+
 def _batch_triples(
     pages: DataFrame,
     aliases: DataFrame,
@@ -72,7 +77,6 @@ def _batch_triples(
     max_alias_tokens: int | None = None,
 ) -> DataFrame:
     k = _mentions.MAX_ALIAS_TOKENS if max_alias_tokens is None else max_alias_tokens
-    keys = ["url", "warc_ts", "sent_id", "pred"]
     # the staged build drops a null url at its join on url; so must this
     pt = _extract.with_text(pages.filter(F.col("url").isNotNull()))
     sents = (
@@ -80,19 +84,30 @@ def _batch_triples(
         .select(
             "url",
             "warc_ts",
-            "sent_id",
             _triples.sentence_predicate(default_pred=default_pred).alias("pred"),
             _mentions.sentence_tokens().alias("tokens"),
         )
         # a sentence without a predicate never emits a triple
         .filter(F.col("pred").isNotNull())
     )
-    cands = (
-        sents.select(*keys, "tokens", F.posexplode("tokens").alias("pos", "tok"))
-        .select(*keys, "pos", F.explode(_mentions.candidate_surfaces(k)).alias("c"))
-        .select(*keys, "pos", "c.n_tokens", "c.surface")
-    )
-    return _triples.sentence_triples(_linking.best_per_position(cands, aliases, keys))
+    # compiled once per plan and shipped once per Python worker: the
+    # worker caches a broadcast's value, and with it the Index's hash
+    # table, across tasks and batches
+    dictionary = pages.sparkSession.sparkContext.broadcast(_linking.compile_surfaces(aliases))
+
+    def link(batches):
+        surfaces, entities = dictionary.value
+        for b in batches:
+            rows, subj, obj = _linking.sentence_ends(b.column("tokens"), surfaces, entities, k)
+            b = b.take(pa.array(rows, pa.int64()))
+            yield pa.RecordBatch.from_arrays(
+                [subj, b.column("pred"), obj, b.column("url"), b.column("warc_ts")],
+                ["subj", "pred", "obj", "url", "warc_ts"],
+            )
+
+    # a map over Arrow batches emits only the sentences with a triple; a
+    # filter on a UDF's output would be pushed below it and run it twice
+    return sents.mapInArrow(link, TRIPLES_SCHEMA)
 
 
 def incremental_triples(
@@ -115,23 +130,29 @@ def incremental_triples(
     graphalytics_importer.py:168-175).  Several streams, each with its
     own checkpoint, may append to the same ``table``.
 
-    A batch is one plan over sentences: extraction runs once per page;
-    each sentence carries its url, warc_ts and predicate, and one
-    without a predicate is dropped before tokenization; its 1..K-token
-    candidate surfaces meet the alias dictionary in one broadcast inner
-    join; one shuffle, grouped by sentence, feeds linking's top-1 and
-    overlap rule (``linking.best_per_position``, ``non_overlapping``);
-    the first and last kept mention give subj and obj.  With one page
-    per url, the output equals the staged build's ``triples_raw`` on the
-    same pages (a page with a null url emits nothing in either).  The
-    build keeps its ``mentions``/``linked``/``triples_raw`` commits
-    instead: they are its resume points, and the benchmark's trace
-    checks each of them.
+    The plan is built once, over the stream, and has no exchange:
+    extraction runs once per page; each sentence carries its url,
+    warc_ts and predicate, and one without a predicate is dropped before
+    tokenization; one ``mapInArrow`` pass links its tokens against the
+    dictionary, compiled once per call and broadcast once
+    (``linking.kept_mentions``: longest match per position, top-1 by
+    prior then entity, the overlap rule), and emits the first and last
+    kept mention as subj and obj (``linking.sentence_ends``).  A batch's
+    only job is its append.  The output is a function of each page row
+    alone: a page that arrives twice emits its triples twice, in the
+    same batch or a later one.  With one page per url it equals the
+    staged build's ``triples_raw`` on the same pages (a page with a null
+    url emits nothing in either).
 
     Returns the StreamingQuery; with ``available_now`` the caller can
     ``awaitTermination()`` for drain-and-stop semantics.
     """
-    stream = read_pages_stream(spark, pages_path, max_files_per_trigger)
+    stream = _batch_triples(
+        read_pages_stream(spark, pages_path, max_files_per_trigger),
+        aliases,
+        default_pred,
+        max_alias_tokens,
+    )
     # batch ids restart at 0 for every checkpoint, so the tag names the
     # checkpoint too: another stream's batch 0 is not this one's replay
     where = checkpoint_dir if "://" in checkpoint_dir else os.path.abspath(checkpoint_dir)
@@ -150,10 +171,7 @@ def incremental_triples(
         tag = f"stream_batch_{ckpt_id}_{batch_id}"
         if catalog.exists(table) and catalog.has_tag(table, tag):
             return
-        out = _batch_triples(batch_df, aliases, default_pred, max_alias_tokens).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
-        catalog.append(table, out, tag=tag)
+        catalog.append(table, batch_df.withColumn("batch_id", F.lit(batch_id)), tag=tag)
 
     writer = stream.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint_dir

@@ -22,7 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_importer_spark import linking as _linking
 from graph_importer_spark.synth import PREDICATES
 
 
@@ -81,31 +80,6 @@ def extract_triples(
         .select("subj", "pred", "obj", "url", "warc_ts")
     )
     return out
-
-
-def sentence_triples(per_sent: DataFrame) -> DataFrame:
-    """per_sent(url, warc_ts, sent_id, pred, ms) -> (subj, pred, obj,
-    url, warc_ts): the ``extract_triples`` pattern on one row per
-    sentence, ``ms`` being its best candidate per position
-    (``linking.best_per_position``).
-
-    Positions in ``ms`` are distinct and ``pos`` is its first field, so
-    the smallest and largest kept struct are the first and last
-    mention."""
-    kept = per_sent.select(
-        "url", "warc_ts", "pred", _linking.non_overlapping(F.col("ms")).alias("ms")
-    )
-    t = F.struct(
-        F.array_min("ms")["entity"].alias("subj"),
-        "pred",
-        F.array_max("ms")["entity"].alias("obj"),
-        "url",
-        "warc_ts",
-    )
-    # the >= 2 test rides the explode instead of a filter, which the
-    # optimizer would push below ``kept`` and so evaluate linking twice
-    pair = F.when(F.size("ms") >= 2, F.array(t))
-    return kept.select(F.explode(pair).alias("t")).select("t.*")
 
 
 def negative_samples(

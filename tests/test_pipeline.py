@@ -165,6 +165,15 @@ def test_resume_skips_and_is_idempotent(spark, warehouse):
     assert p4.cat.exists("kg_edges")
     assert sorted(map(tuple, p4.cat.read("kg_edges").collect()), key=repr) == first_edges
 
+    # the same kill without overwrite: the graph exists only once both
+    # collections committed, so the edges are still written
+    p4.cat.drop("kg_edges")
+    keep = PipelineConfig(warehouse=warehouse, graph=GraphSpec(name="kg", overwrite=False))
+    p5 = Pipeline(spark, keep)
+    p5.run(pages, aliases, resume=True)
+    assert p5.cat.exists("kg_edges")
+    assert sorted(map(tuple, p5.cat.read("kg_edges").collect()), key=repr) == first_edges
+
 
 def test_mined_anchor_aliases_drive_the_pipeline(spark, warehouse):
     """Close the gazetteer loop: mine the alias dictionary from anchor

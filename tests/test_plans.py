@@ -561,13 +561,20 @@ def test_harness_vocab_rank_queries_have_no_global_window(spark):
         assert "Exchange SinglePartition" not in plan, name
 
 
-def test_stream_batch_is_one_shuffle_one_extraction(spark):
-    # a micro-batch's keys all lie inside one sentence: the only shuffle
-    # is the sentence group, and the extraction UDF runs once per page
+def test_stream_batch_is_narrow(spark):
+    # a micro-batch never regroups: sentences stay in their page's
+    # partition and the dictionary is probed inside the Arrow map, so the
+    # plan has no exchange of any kind; extraction and linking each run
+    # once (a filter on a UDF's output pushed below it would run it twice)
     from graph_importer_spark import synth
     from graph_importer_spark.streaming import _batch_triples
 
     pages, _, aliases = synth.corpus(spark, n_pages=10, n_entities=5)
     df = _batch_triples(pages, aliases, default_pred="cooccurs_with")
-    assert P.shuffle_exchange_count(df) == 1
-    assert P.physical_plan(df).count("ArrowEvalPython") == 1
+    plan = P.physical_plan(df)
+    assert P.shuffle_exchange_count(df) == 0
+    assert "BroadcastExchange" not in plan
+    assert P.exchange_count(df) == 0
+    assert plan.count("ArrowEvalPython") == 1
+    assert plan.count("extract_text_udf(") == 1
+    assert plan.count("MapInArrow") == 1
