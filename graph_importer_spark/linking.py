@@ -115,12 +115,10 @@ def best_per_position(
       aggregate(filter(cs, c -> c.pos = p), {null_c},
         (acc, c) -> case
           when acc is null then c
-          when c.n_tokens > acc.n_tokens then c
-          when c.n_tokens = acc.n_tokens and c.score > acc.score then c
-          when c.n_tokens = acc.n_tokens and c.score is not null
-               and acc.score is null then c
-          when c.n_tokens = acc.n_tokens and c.score <=> acc.score
-               and c.entity < acc.entity then c
+          when c.n_tokens <> acc.n_tokens then
+            if(c.n_tokens > acc.n_tokens, c, acc)
+          when c.score <=> acc.score then if(c.entity < acc.entity, c, acc)
+          when acc.score is null or c.score > acc.score then c
           else acc end))"""
     )
     return per_sent.select(*keys, best.alias("ms"))
