@@ -158,8 +158,8 @@ def compile_surfaces(aliases: DataFrame) -> tuple[pd.Index, pa.Array]:
     null prior below every prior and NaN above, then the smallest
     entity).  A null alias spells no surface and is dropped.
 
-    Collects the dictionary to the driver: it is the small side of the
-    build's broadcast join."""
+    Collects the dictionary into this process with one Spark job: it is
+    the small side of the build's broadcast join."""
     t = aliases.select("alias", "entity", "prior").filter(F.col("alias").isNotNull()).toArrow()
     prior = t.column("prior").cast(pa.float64())
     t = t.append_column("has_prior", pc.is_valid(prior)).append_column(
