@@ -53,6 +53,24 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+
+def _nullable(schema_json):
+    """A ``jsonValue`` schema with every field, element and value nullable."""
+    if isinstance(schema_json, dict):
+        return {
+            k: True if k in ("nullable", "containsNull", "valueContainsNull") else _nullable(v)
+            for k, v in schema_json.items()
+        }
+    if isinstance(schema_json, list):
+        return [_nullable(v) for v in schema_json]
+    return schema_json
+
+
+def _columns(schema: StructType) -> dict[str, str]:
+    """Column name -> type, nullability aside (``simpleString`` omits it)."""
+    return {f.name: f.dataType.simpleString() for f in schema.fields}
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -251,12 +269,21 @@ class GraphCatalog:
             if tag:
                 self._ice_tag(name, tag)
             return
+        meta = self._read_meta(name)
+        # reads trust the committed schema, so an append must match it by
+        # column name and type (nullability aside), as an Iceberg append does
+        want = _columns(StructType.fromJson(meta["schema"]))
+        got = _columns(df.schema)
+        if got != want:
+            raise ValueError(
+                f"append to {name!r}: columns {sorted(got.items())} do not "
+                f"match the table's {sorted(want.items())}"
+            )
         token = uuid.uuid4().hex[:8]
         stage = os.path.join(self._dir(name), ".stage-" + token)
         final = os.path.join(self._dir(name), "append-" + token)
         df.write.mode("overwrite").parquet(stage)
         os.rename(stage, final)
-        meta = self._read_meta(name)
         meta.setdefault("dirs", ["data"]).append("append-" + token)
         meta["snapshots"].append(self._snap("append", tag))
         self._write_meta(name, meta)
@@ -273,8 +300,19 @@ class GraphCatalog:
         if self.use_iceberg:
             return self.spark.read.table(self._ident(name))
         # union exactly the dirs the meta lists — uncommitted appends
-        # (orphan stage/append dirs from a crashed writer) are invisible
-        return self.spark.read.parquet(*self._data_dirs(name))
+        # (orphan stage/append dirs from a crashed writer) are invisible.
+        # The schema comes from the meta, as Iceberg's does, not from the
+        # data files: no inference job, and partition values keep their
+        # committed type.  A parquet scan returns partition columns last
+        # and every field nullable, so the committed schema is read so too.
+        meta = self._read_meta(name)
+        fields = StructType.fromJson(_nullable(meta["schema"])).fields
+        parts = set(meta.get("partition_by") or [])
+        schema = StructType(
+            [f for f in fields if f.name not in parts]
+            + [f for f in fields if f.name in parts]
+        )
+        return self.spark.read.schema(schema).parquet(*self._data_dirs(name))
 
     def file_row_counts(self, name: str) -> list[tuple[str, int]]:
         """Per-file row counts — driver-side metadata only, no Spark job

@@ -1,13 +1,16 @@
 """Local-backend GraphCatalog commit protocol: appends become visible
 only at the atomic meta swap, so a crashed append can never duplicate
 rows on replay (the property the streaming layer's exactly-once claim
-rests on)."""
+rests on); reads take the schema the meta committed, and an append must
+match it."""
 
 from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from graph_importer_spark.tables import GraphCatalog
 
@@ -44,3 +47,82 @@ def test_append_snapshots_accumulate_in_order(spark, tmp_path):
     assert [s["op"] for s in snaps] == ["create_or_replace", "append", "append"]
     assert [s["tag"] for s in snaps] == ["s0", "s1", None]
     assert cat.read("t").count() == 9
+
+
+def _frame(spark):
+    return spark.range(20).select(
+        "id",
+        (F.col("id") * 2).cast("int").alias("x"),
+        F.array(F.lit("a")).alias("arr"),
+        F.struct(F.lit(1).alias("a"), F.col("id").alias("b")).alias("st"),
+        F.current_timestamp().alias("ts"),
+    )
+
+
+_FRAME_DDL = "id bigint, x int, arr array<string>, st struct<a: int, b: bigint>, ts timestamp"
+
+
+def _plain(cat, spark):
+    cat.create_or_replace("t", _frame(spark))
+
+
+def _bucketed(cat, spark):
+    cat.create_or_replace("t", _frame(spark), bucket_by=(4, "id"))
+
+
+def _appended(cat, spark):
+    cat.create_or_replace("t", _frame(spark))
+    cat.append("t", _frame(spark))
+
+
+def _partitioned(cat, spark):
+    # Spark infers a partition value's type from the path: "007" would
+    # read back as the int 7
+    df = spark.range(3).select("id", F.lit("007").alias("shard"))
+    cat.create_or_replace("t", df, partition_by=["shard"])
+
+
+@pytest.mark.parametrize(
+    "make, ddl, shard",
+    [
+        (_plain, _FRAME_DDL, None),
+        (_bucketed, _FRAME_DDL, None),
+        (_appended, _FRAME_DDL, None),
+        (_partitioned, "id bigint, shard string", "007"),
+    ],
+    ids=["plain", "bucket_by", "appended", "partition_by"],
+)
+def test_read_uses_the_committed_schema_without_a_job(spark, tmp_path, make, ddl, shard):
+    """A read takes its schema from the table's meta: it launches no
+    Spark job, and returns what a parquet scan infers (every field
+    nullable, partition columns last) except that a partition value
+    keeps its committed type."""
+    cat = GraphCatalog(spark, str(tmp_path / "wh"))
+    make(cat, spark)
+    sc = spark.sparkContext
+    group = f"read-{tmp_path.name}"
+    sc.setJobGroup(group, "catalog read")
+    try:
+        df = cat.read("t")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert df.schema == StructType.fromDDL(ddl)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    if shard is not None:
+        assert {r["shard"] for r in df.collect()} == {shard}
+
+
+def test_append_rejects_a_schema_mismatch_before_writing(spark, tmp_path):
+    cat = GraphCatalog(spark, str(tmp_path / "wh"))
+    cat.create_or_replace("t", spark.range(5), tag="init")
+    table_dir = os.path.join(str(tmp_path / "wh"), "t")
+    listing = sorted(os.listdir(table_dir))
+    snaps = cat.snapshots("t")
+    with pytest.raises(ValueError, match="columns"):
+        cat.append("t", spark.range(5).select(F.col("id").cast("string").alias("id")))
+    assert sorted(os.listdir(table_dir)) == listing
+    assert cat.snapshots("t") == snaps
+    assert sorted(r["id"] for r in cat.read("t").collect()) == list(range(5))
+    # nullability aside, a matching frame appends
+    cat.append("t", spark.range(5, 7).select(F.when(F.col("id") > 0, F.col("id")).alias("id")))
+    assert cat.read("t").count() == 7
