@@ -35,6 +35,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -55,6 +56,12 @@ from graph_importer_spark.tables import GraphCatalog
 
 LINEAGE_TABLE = "_lineage"
 METRICS_TABLE = "_metrics"
+_METRICS_SCHEMA = pa.schema(
+    [("stage", pa.string()), ("metric", pa.string()), ("value", pa.float64())]
+)
+_LINEAGE_SCHEMA = pa.schema(
+    [("stage", pa.string()), ("partition_id", pa.int32()), ("rows", pa.int64())]
+)
 
 
 @dataclass
@@ -63,7 +70,6 @@ class PipelineConfig:
     graph: GraphSpec = field(default_factory=lambda: GraphSpec(name="kg", overwrite=True))
     lang: str = "en"
     max_cc_iter: int = 30
-    url_partitions: int | None = None  # default: spark.sql.shuffle.partitions
     # above this many merge edges (entity pairs joined by a shared
     # surface — the graph CC actually receives), canonicalization
     # switches from xxhash64 node ids (zero extra shuffles, collision
@@ -111,18 +117,19 @@ class Pipeline:
         self._metric_buf.append((stage, name, float(value)))
 
     def _flush_observability(self) -> None:
-        if self._metric_buf:
-            rows = self.spark.createDataFrame(
-                self._metric_buf, "stage string, metric string, value double"
-            ).withColumn("ts", F.current_timestamp())
-            self.cat.append(METRICS_TABLE, rows)
-            self._metric_buf = []
-        if self._lineage_buf:
-            rows = self.spark.createDataFrame(
-                self._lineage_buf, "stage string, partition_id int, rows long"
-            ).withColumn("ts", F.current_timestamp())
-            self.cat.append(LINEAGE_TABLE, rows)
-            self._lineage_buf = []
+        # rows cross to the JVM as one Arrow table, not pickled one by one
+        for table, buf, schema in (
+            (METRICS_TABLE, self._metric_buf, _METRICS_SCHEMA),
+            (LINEAGE_TABLE, self._lineage_buf, _LINEAGE_SCHEMA),
+        ):
+            if buf:
+                cols = [pa.array(c, t) for c, t in zip(zip(*buf), schema.types)]
+                rows = pa.Table.from_arrays(cols, schema=schema)
+                self.cat.append(
+                    table,
+                    self.spark.createDataFrame(rows).withColumn("ts", F.current_timestamp()),
+                )
+        self._metric_buf, self._lineage_buf = [], []
 
     def _run_stage(self, stage: str, table: str, fn, resume: bool, **write_kw) -> None:
         if resume and self.cat.exists(table) and self.cat.has_tag(table, "complete"):
@@ -136,15 +143,9 @@ class Pipeline:
     # -- stages ------------------------------------------------------------
     def run(self, pages: DataFrame, aliases: DataFrame, resume: bool = False) -> None:
         cfg, cat = self.cfg, self.cat
-        # default url-partition count: >= 64 regardless of core count, so
-        # the SAME corpus produces the SAME file layout (and therefore
-        # identical downstream scan splits) at N and 4N parallelism —
-        # 2x-cores here would bake the cluster size into the data layout
-        # and break plan identity across scaling levels.  At real scale
-        # set cfg.url_partitions so partitions are ~128-256 MB of text.
-        nparts = cfg.url_partitions or max(
-            64, int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        )
+        # the session sizes its shuffle width to the cluster; each url-hash
+        # partition is one pages_text file and one write task
+        nparts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
 
         def s_extract():
             # Extraction runs on the INPUT SPLITS (narrow — parquet is

@@ -124,6 +124,15 @@ def test_lineage_metrics_and_graph_output(spark, warehouse):
     assert {"extract", "mentions", "link", "triples_raw", "canonicalize", "triples", "materialize"} <= stages
     metrics = {r["metric"] for r in p.cat.read("_metrics").select("metric").distinct().collect()}
     assert "wall_sec" in metrics and "cc_iterations" in metrics
+    # pages_text is one url-hash file per shuffle partition at most
+    n_extract = p.cat.read("_lineage").filter(F.col("stage") == "extract").count()
+    assert 0 < n_extract <= int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert p.cat.read("_metrics").schema.simpleString() == (
+        "struct<stage:string,metric:string,value:double,ts:timestamp>"
+    )
+    assert p.cat.read("_lineage").schema.simpleString() == (
+        "struct<stage:string,partition_id:int,rows:bigint,ts:timestamp>"
+    )
     # materialized graph mirrors the vertex/edge contract
     verts = p.cat.read("kg_vertices")
     edges = p.cat.read("kg_edges")
