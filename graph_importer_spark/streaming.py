@@ -28,8 +28,11 @@ from __future__ import annotations
 
 import hashlib
 import os
+import threading
 
 import pyarrow as pa
+from pyspark.broadcast import Broadcast
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -72,10 +75,12 @@ TRIPLES_SCHEMA = "subj string, pred string, obj string, url string, warc_ts time
 
 def _batch_triples(
     pages: DataFrame,
-    aliases: DataFrame,
+    dictionary: Broadcast,
     default_pred: str | None = None,
     max_alias_tokens: int | None = None,
 ) -> DataFrame:
+    """The triples plan over ``pages``; ``dictionary`` is the broadcast
+    ``linking.compile_surfaces`` of the aliases."""
     k = _mentions.MAX_ALIAS_TOKENS if max_alias_tokens is None else max_alias_tokens
     # the staged build drops a null url at its join on url; so must this
     pt = _extract.with_text(pages.filter(F.col("url").isNotNull()))
@@ -90,10 +95,6 @@ def _batch_triples(
         # a sentence without a predicate never emits a triple
         .filter(F.col("pred").isNotNull())
     )
-    # compiled once per plan and shipped once per Python worker: the
-    # worker caches a broadcast's value, and with it the Index's hash
-    # table, across tasks and batches
-    dictionary = pages.sparkSession.sparkContext.broadcast(_linking.compile_surfaces(aliases))
 
     def link(batches):
         surfaces, entities = dictionary.value
@@ -134,10 +135,11 @@ def incremental_triples(
     extraction runs once per page; each sentence carries its url,
     warc_ts and predicate, and one without a predicate is dropped before
     tokenization; one ``mapInArrow`` pass links its tokens against the
-    dictionary, compiled once per call and broadcast once
-    (``linking.kept_mentions``: longest match per position, top-1 by
-    prior then entity, the overlap rule), and emits the first and last
-    kept mention as subj and obj (``linking.sentence_ends``).  A batch's
+    dictionary, compiled once per call, broadcast once and destroyed when
+    the query terminates (``linking.kept_mentions``: longest match per
+    position, top-1 by prior then entity, the overlap rule), and emits
+    the first and last kept mention as subj and obj
+    (``linking.sentence_ends``).  A batch's
     only job is its append.  The output is a function of each page row
     alone: a page that arrives twice emits its triples twice, in the
     same batch or a later one.  With one page per url it equals the
@@ -147,9 +149,13 @@ def incremental_triples(
     Returns the StreamingQuery; with ``available_now`` the caller can
     ``awaitTermination()`` for drain-and-stop semantics.
     """
+    # compiled once per call and shipped once per Python worker: the
+    # worker caches a broadcast's value, and with it the Index's hash
+    # table, across tasks and batches
+    dictionary = spark.sparkContext.broadcast(_linking.compile_surfaces(aliases))
     stream = _batch_triples(
         read_pages_stream(spark, pages_path, max_files_per_trigger),
-        aliases,
+        dictionary,
         default_pred,
         max_alias_tokens,
     )
@@ -178,6 +184,22 @@ def incremental_triples(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    query = writer.start()
+    _release_on_termination(query, dictionary)
+    return query
 
 
+def _release_on_termination(query, dictionary: Broadcast) -> None:
+    """Destroy ``dictionary`` (its JVM blocks and the driver's pickled
+    file) once ``query`` terminates, from a daemon thread that waits on
+    the query: the batches pay nothing for it."""
+
+    def wait() -> None:
+        try:
+            query.awaitTermination()
+        except StreamingQueryException:
+            pass  # the caller sees the failure through its own handle
+        finally:
+            dictionary.destroy()
+
+    threading.Thread(target=wait, name=f"release-{query.id}", daemon=True).start()

@@ -165,6 +165,7 @@ def test_null_prior_links_independently_of_alias_order(spark):
     compiled dictionary and the stream's batch plan all pick ``e1``,
     whichever order the alias rows come in."""
     from graph_importer_spark.extract import with_text
+    from graph_importer_spark.linking import compile_surfaces
     from graph_importer_spark.streaming import PAGES_SCHEMA, _batch_triples
     from graph_importer_spark.triples import extract_triples
 
@@ -184,11 +185,11 @@ def test_null_prior_links_independently_of_alias_order(spark):
             ("Y", "y"),
         }
         build = extract_triples(linked, split_sentences(pt), pt, default_pred="cooccurs_with")
-        stream = _batch_triples(pages, aliases, default_pred="cooccurs_with")
+        dictionary = spark.sparkContext.broadcast(compile_surfaces(aliases))
+        stream = _batch_triples(pages, dictionary, default_pred="cooccurs_with")
         for df in (build, stream):
             assert [tuple(r) for r in df.select("subj", "obj").collect()] == [("e1", "y")]
-    from graph_importer_spark.linking import compile_surfaces
-
+        dictionary.destroy()
     for aliases in orders:
         surfaces, entities = compile_surfaces(aliases)
         assert dict(zip(surfaces, entities.to_pylist())) == {"X": "e1", "Y": "y"}

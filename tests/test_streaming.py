@@ -158,3 +158,51 @@ def test_streaming_extract_matches_batch(spark, tmp_path):
     assert got == want
 
 
+
+
+def test_finished_streams_release_their_dictionary(spark, tmp_path):
+    """Each call broadcasts its compiled dictionary, whose pickled copy
+    is a file in the driver's temp dir; a terminated query's broadcast
+    is destroyed, and a stream still running keeps linking."""
+    import gc
+    import os
+    import time
+
+    temp_dir = spark.sparkContext._temp_dir
+    before = set(os.listdir(temp_dir))
+
+    def new_files(n):
+        deadline = time.monotonic() + 60
+        while True:
+            gc.collect()
+            left = set(os.listdir(temp_dir)) - before
+            if len(left) <= n or time.monotonic() > deadline:
+                return left
+            time.sleep(0.2)
+
+    cat = GraphCatalog(spark, str(tmp_path / "wh"))
+    src, live_src = str(tmp_path / "pages"), str(tmp_path / "live")
+    aliases = _write_pages(spark, src, 0, 30)
+    _write_pages(spark, live_src, 30, 45)
+    live = incremental_triples(
+        spark, live_src, aliases, cat, "triples_live", str(tmp_path / "ckpt_live"),
+        available_now=False,
+    )
+    try:
+        live.processAllAvailable()
+        for i in range(3):
+            q = incremental_triples(
+                spark, src, aliases, cat, f"triples_{i}", str(tmp_path / f"ckpt{i}")
+            )
+            q.awaitTermination(120)
+        assert len(new_files(1)) == 1  # the running stream's dictionary
+        _write_pages(spark, live_src, 45, 60)
+        live.processAllAvailable()
+    finally:
+        live.stop()
+    assert new_files(0) == set()
+    q = incremental_triples(spark, live_src, aliases, cat, "triples_check", str(tmp_path / "ck"))
+    q.awaitTermination(120)
+    got = _rows(cat.read("triples_live"))
+    assert got and got == _rows(cat.read("triples_check"))
+    assert _rows(cat.read("triples_0")) == _rows(cat.read("triples_2"))
