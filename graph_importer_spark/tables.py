@@ -56,18 +56,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
-def _nullable(schema_json):
-    """A ``jsonValue`` schema with every field, element and value nullable."""
-    if isinstance(schema_json, dict):
-        return {
-            k: True if k in ("nullable", "containsNull", "valueContainsNull") else _nullable(v)
-            for k, v in schema_json.items()
-        }
-    if isinstance(schema_json, list):
-        return [_nullable(v) for v in schema_json]
-    return schema_json
-
-
 def _columns(schema: StructType) -> dict[str, str]:
     """Column name -> type, nullability aside (``simpleString`` omits it)."""
     return {f.name: f.dataType.simpleString() for f in schema.fields}
@@ -302,16 +290,10 @@ class GraphCatalog:
         # union exactly the dirs the meta lists — uncommitted appends
         # (orphan stage/append dirs from a crashed writer) are invisible.
         # The schema comes from the meta, as Iceberg's does, not from the
-        # data files: no inference job, and partition values keep their
-        # committed type.  A parquet scan returns partition columns last
-        # and every field nullable, so the committed schema is read so too.
-        meta = self._read_meta(name)
-        fields = StructType.fromJson(_nullable(meta["schema"])).fields
-        parts = set(meta.get("partition_by") or [])
-        schema = StructType(
-            [f for f in fields if f.name not in parts]
-            + [f for f in fields if f.name in parts]
-        )
+        # data files: no inference job, and a partition value keeps its
+        # committed type.  The scan still returns every field nullable and
+        # partition columns last, as an inferred read does.
+        schema = StructType.fromJson(self._read_meta(name)["schema"])
         return self.spark.read.schema(schema).parquet(*self._data_dirs(name))
 
     def file_row_counts(self, name: str) -> list[tuple[str, int]]:

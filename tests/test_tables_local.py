@@ -77,8 +77,8 @@ def _appended(cat, spark):
 
 def _partitioned(cat, spark):
     # Spark infers a partition value's type from the path: "007" would
-    # read back as the int 7
-    df = spark.range(3).select("id", F.lit("007").alias("shard"))
+    # read back as the int 7; the partition column reads back last
+    df = spark.range(3).select(F.lit("007").alias("shard"), "id")
     cat.create_or_replace("t", df, partition_by=["shard"])
 
 
