@@ -2,7 +2,7 @@
 
 Stage graph (seven stages; each commits one catalog table, materialize
 two, and may run several Spark jobs: a traced ``build_entity_dense``
-build runs 35 jobs in all):
+build runs 27 jobs in all):
 
   pages ──extract──> pages_text ──mentions──> mentions ──link──> linked
         ──triples──> triples_raw ──canonicalize──> canonical_map, triples

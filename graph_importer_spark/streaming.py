@@ -139,12 +139,11 @@ def incremental_triples(
     the query terminates (``linking.kept_mentions``: longest match per
     position, top-1 by prior then entity, the overlap rule), and emits
     the first and last kept mention as subj and obj
-    (``linking.sentence_ends``).  A batch's
-    only job is its append.  The output is a function of each page row
-    alone: a page that arrives twice emits its triples twice, in the
-    same batch or a later one.  With one page per url it equals the
-    staged build's ``triples_raw`` on the same pages (a page with a null
-    url emits nothing in either).
+    (``linking.sentence_ends``).  A batch's only job is its append.  The
+    output is a function of each page row alone: a page that arrives
+    twice emits its triples twice, in the same batch or a later one.
+    With one page per url it equals the staged build's ``triples_raw``
+    on the same pages (a page with a null url emits nothing in either).
 
     Returns the StreamingQuery; with ``available_now`` the caller can
     ``awaitTermination()`` for drain-and-stop semantics.
@@ -184,7 +183,11 @@ def incremental_triples(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    query = writer.start()
+    try:
+        query = writer.start()
+    except BaseException:
+        dictionary.destroy()
+        raise
     _release_on_termination(query, dictionary)
     return query
 
