@@ -158,8 +158,6 @@ def test_streaming_extract_matches_batch(spark, tmp_path):
     assert got == want
 
 
-
-
 def test_finished_streams_release_their_dictionary(spark, tmp_path):
     """Each call broadcasts its compiled dictionary, whose pickled copy
     is a file in the driver's temp dir; a terminated query's broadcast

@@ -105,7 +105,8 @@ def test_read_uses_the_committed_schema_without_a_job(spark, tmp_path, make, ddl
     try:
         df = cat.read("t")
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
     assert df.schema == StructType.fromDDL(ddl)
     assert sc.statusTracker().getJobIdsForGroup(group) == []
     if shard is not None:
