@@ -193,7 +193,7 @@ def incremental_triples(
 
 
 def _release_on_termination(query, dictionary: Broadcast) -> None:
-    """Destroy ``dictionary`` (its JVM blocks and the driver's pickled
+    """Destroy ``dictionary`` (its JVM blocks and the Spark driver's pickled
     file) once ``query`` terminates, from a daemon thread that waits on
     the query: the batches pay nothing for it."""
 

@@ -567,10 +567,12 @@ def test_stream_batch_is_narrow(spark):
     # plan has no exchange of any kind; extraction and linking each run
     # once (a filter on a UDF's output pushed below it would run it twice)
     from graph_importer_spark import synth
+    from graph_importer_spark.linking import compile_surfaces
     from graph_importer_spark.streaming import _batch_triples
 
     pages, _, aliases = synth.corpus(spark, n_pages=10, n_entities=5)
-    df = _batch_triples(pages, aliases, default_pred="cooccurs_with")
+    dictionary = spark.sparkContext.broadcast(compile_surfaces(aliases))
+    df = _batch_triples(pages, dictionary, default_pred="cooccurs_with")
     plan = P.physical_plan(df)
     assert P.shuffle_exchange_count(df) == 0
     assert "BroadcastExchange" not in plan
@@ -578,3 +580,4 @@ def test_stream_batch_is_narrow(spark):
     assert plan.count("ArrowEvalPython") == 1
     assert plan.count("extract_text_udf(") == 1
     assert plan.count("MapInArrow") == 1
+    dictionary.destroy()

@@ -160,7 +160,7 @@ def test_streaming_extract_matches_batch(spark, tmp_path):
 
 def test_finished_streams_release_their_dictionary(spark, tmp_path):
     """Each call broadcasts its compiled dictionary, whose pickled copy
-    is a file in the driver's temp dir; a terminated query's broadcast
+    is a file in the Spark driver's temp dir; a terminated query's broadcast
     is destroyed, and a stream still running keeps linking."""
     import gc
     import os
