@@ -38,7 +38,6 @@ from graph_importer_spark.importer.keys import (
 from graph_importer_spark.materialize import GraphSpec, materialize_graph
 from graph_importer_spark.tables import GraphCatalog
 
-COMMENT_PREFIXES = ("#", "/", "%")
 _COMMENT_RE = r"^[#/%]"
 
 

@@ -1,35 +1,26 @@
 """Gazetteer mention detection over extracted page text.
 
-Two implementations with identical output semantics:
-
-* ``detect_mentions`` (default) — pure-DataFrame token join.  Sentences
-  and token positions come from ``split``/``posexplode`` (JVM-side,
-  whole-stage codegen); candidate surfaces of 1..K tokens are built with
-  array ``slice``/``array_join`` and equi-joined against the broadcast
-  alias dictionary.  This is the 100 TB path: no giant regex, no Python
-  in the hot loop, the join is a broadcast hash join (alias dict is a
-  classic small dimension), and it is ANSI-SQL-expressible so the DuckDB
-  oracle can mirror it exactly.
-
-* ``detect_mentions_trie`` — Arrow-batched pandas UDF with a combined
-  regex (longest-alternative-first) compiled ONCE PER EXECUTOR via a
-  module-level cache keyed by the broadcast id (SURVEY.md §7 hard
-  part 4: never rebuild the trie per batch).  Useful when the gazetteer
-  is small and alias shapes are not token-aligned.
+``detect_mentions`` is the build's token join.  Sentences and token
+positions come from ``split``/``posexplode`` (JVM-side, whole-stage
+codegen); candidate surfaces of 1..K tokens are built with array
+``slice``/``array_join`` and equi-joined against the broadcast alias
+dictionary.  No giant regex, no Python in the hot loop, the join is a
+broadcast hash join (the alias dictionary is a classic small dimension),
+and it is ANSI-SQL-expressible so the DuckDB oracle can mirror it
+exactly.  The stream detects and links in one pass instead: it probes
+the compiled dictionary with the candidate surfaces of the same sentence
+and token expressions (``linking.kept_mentions``).
 
 The reference has no mention stage; this replaces its per-line
 ``line.split(' ', 2)`` parse loop (graphalytics_importer.py:117-123)
 with columnar tokenization.
 
-Output schema (both paths):
+Output schema:
   url string, sent_id int, pos int, n_tokens int, surface string
 """
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -118,96 +109,4 @@ def detect_mentions(
     )
     return cands.join(surf_dim, "surface", "left_semi").select(
         "url", "sent_id", "pos", "n_tokens", "surface"
-    )
-
-
-# --- trie/regex path (per-executor compiled pattern cache) -----------------
-
-_PATTERN_CACHE: dict[int, re.Pattern] = {}
-
-
-def _compiled(alias_list: tuple[str, ...]) -> re.Pattern:
-    key = hash(alias_list)
-    pat = _PATTERN_CACHE.get(key)
-    if pat is None:
-        alts = sorted(alias_list, key=len, reverse=True)
-        pat = re.compile(
-            r"(?<![\w])(" + "|".join(re.escape(a) for a in alts) + r")(?![\w])"
-        )
-        _PATTERN_CACHE[key] = pat
-    return pat
-
-
-def detect_mentions_trie(
-    pages: DataFrame,
-    aliases: DataFrame,
-    text_col: str = "text",
-) -> DataFrame:
-    """Regex-trie mention detection (Arrow UDF; small gazetteers).
-
-    The alias list rides to executors inside the UDF closure (Spark
-    broadcasts closures once per task set); the compiled pattern is
-    cached per executor process in _PATTERN_CACHE.
-    """
-    alias_list = tuple(sorted(r[0] for r in aliases.select("alias").distinct().collect()))
-    spark = pages.sparkSession
-
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    out_t = ArrayType(
-        StructType(
-            [
-                StructField("sent_id", IntegerType()),
-                StructField("pos", IntegerType()),
-                StructField("n_tokens", IntegerType()),
-                StructField("surface", StringType()),
-            ]
-        )
-    )
-    sent_re = re.compile(_SENT_SPLIT)
-    punct_re = re.compile(_PUNCT)
-
-    @pandas_udf(out_t)
-    def find(texts: pd.Series) -> pd.Series:
-        pat = _compiled(alias_list)
-        out = []
-        for t in texts:
-            if t is None:
-                out.append([])
-                continue
-            hits = []
-            for sid, sent in enumerate(sent_re.split(t)):
-                toks = sent.split()
-                # char offset -> token position map
-                starts = []
-                off = 0
-                for tok in toks:
-                    idx = sent.find(tok, off)
-                    starts.append(idx)
-                    off = idx + len(tok)
-                for m in pat.finditer(sent):
-                    pos = max(i for i, s in enumerate(starts) if s <= m.start()) if starts else 0
-                    surf = punct_re.sub("", m.group(1))
-                    hits.append((sid, pos, len(surf.split()), surf))
-            out.append(hits)
-        return pd.Series(out)
-
-    _ = spark  # session unused; kept for API symmetry
-    return (
-        pages.select("url", find(F.col(text_col)).alias("ms"))
-        .select("url", F.explode("ms").alias("m"))
-        .select(
-            "url",
-            F.col("m.sent_id").alias("sent_id"),
-            F.col("m.pos").alias("pos"),
-            F.col("m.n_tokens").alias("n_tokens"),
-            F.col("m.surface").alias("surface"),
-        )
     )

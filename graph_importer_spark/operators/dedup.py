@@ -56,8 +56,8 @@ def shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame
     normalize+split expression evaluates once per document instead of
     once per shingle position — the interpreted-HOF CollapseProject
     trap documented at winnow_fingerprints (O(len^2) regexp per doc
-    otherwise; this path feeds MinHash, Jaccard, decontamination, and
-    the hygiene recipe, so the fix compounds)."""
+    otherwise; this path feeds MinHash and Jaccard, so the fix
+    compounds)."""
     from graph_importer_spark.operators.textstats import let_bind
 
     sh = let_bind(

@@ -507,7 +507,7 @@ def c4_line_columns(
 
     Boilerplate removal at the LINE level is the step between html
     extraction (extract.py) and document-level quality gates
-    (gopher_columns) in the corpus-hygiene recipe; the reference has
+    (gopher_columns) in a corpus filter; the reference has
     no text surface at all (it imports pre-built graphs), so this is
     §2.11 extension territory.
     """

@@ -45,6 +45,7 @@ Two backends behind one API:
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -59,6 +60,25 @@ from pyspark.sql.types import StructType
 def _columns(schema: StructType) -> dict[str, str]:
     """Column name -> type, nullability aside (``simpleString`` omits it)."""
     return {f.name: f.dataType.simpleString() for f in schema.fields}
+
+
+def _write_parquet(
+    df: DataFrame,
+    path: str,
+    partition_by: list[str] | None,
+    bucket_by: tuple[int, str] | list | None,
+) -> None:
+    """Write ``df`` under ``path`` in a local table's layout: hash-clustered
+    into n files (per partition) for ``bucket_by=(n, col)``, one directory
+    per value of the ``partition_by`` columns.  A table with neither is
+    one plain write, no exchange."""
+    if bucket_by is not None:
+        n, col = bucket_by
+        df = df.repartition(n, F.xxhash64(F.col(col)))
+    w = df.write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.parquet(path)
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -201,14 +221,7 @@ class GraphCatalog:
             return
         d = self._dir(name)
         tmp = d + ".tmp-" + uuid.uuid4().hex[:8]
-        writer_df = df
-        if bucket_by is not None:
-            n, col = bucket_by
-            writer_df = df.repartition(n, F.xxhash64(F.col(col)))
-        w = writer_df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(os.path.join(tmp, "data"))
+        _write_parquet(df, os.path.join(tmp, "data"), partition_by, bucket_by)
         meta = {
             "name": name,
             "schema": df.schema.jsonValue(),
@@ -270,7 +283,7 @@ class GraphCatalog:
         token = uuid.uuid4().hex[:8]
         stage = os.path.join(self._dir(name), ".stage-" + token)
         final = os.path.join(self._dir(name), "append-" + token)
-        df.write.mode("overwrite").parquet(stage)
+        _write_parquet(df, stage, meta.get("partition_by"), meta.get("bucket_by"))
         os.rename(stage, final)
         meta.setdefault("dirs", ["data"]).append("append-" + token)
         meta["snapshots"].append(self._snap("append", tag))
@@ -293,8 +306,14 @@ class GraphCatalog:
         # data files: no inference job, and a partition value keeps its
         # committed type.  The scan still returns every field nullable and
         # partition columns last, as an inferred read does.
-        schema = StructType.fromJson(self._read_meta(name)["schema"])
-        return self.spark.read.schema(schema).parquet(*self._data_dirs(name))
+        meta = self._read_meta(name)
+        scan = self.spark.read.schema(StructType.fromJson(meta["schema"])).parquet
+        dirs = self._data_dirs(name)
+        if not meta.get("partition_by"):
+            return scan(*dirs)
+        # Spark discovers partition directories under one root per scan,
+        # so each committed dir of a partitioned table is its own scan
+        return functools.reduce(DataFrame.union, [scan(d) for d in dirs])
 
     def file_row_counts(self, name: str) -> list[tuple[str, int]]:
         """Per-file row counts — driver-side metadata only, no Spark job

@@ -1,16 +1,11 @@
-"""Mention detection (both paths) + entity linking semantics."""
+"""Mention detection + entity linking semantics."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from graph_importer_spark import synth
 from graph_importer_spark.linking import link_mentions
-from graph_importer_spark.mentions import (
-    detect_mentions,
-    detect_mentions_trie,
-    split_sentences,
-)
+from graph_importer_spark.mentions import detect_mentions, split_sentences
 
 
 def _tiny(spark):
@@ -48,27 +43,6 @@ def test_token_join_detection(spark):
     assert ("u1", 0, 2, "Globex2") in surfaces
     assert ("u1", 0, 2, "Globex2 Corp") in surfaces  # 2-token candidate
     assert not any(r["url"] == "u3" for r in m)
-
-
-def test_trie_path_agrees_with_token_join(spark):
-    """The two detection strategies differ on raw candidates (token-join
-    emits every 1..K-token candidate, the regex trie only the longest
-    match) but must agree on the LINKED mention set — the semantic
-    output after top-1 + overlap resolution."""
-    pages, _, aliases = synth.corpus(spark, n_pages=40, n_entities=15)
-    from graph_importer_spark.extract import with_text
-
-    pt = with_text(pages)
-    a = {
-        (r["url"], r["sent_id"], r["pos"], r["surface"], r["entity"])
-        for r in link_mentions(detect_mentions(pt, aliases), aliases).collect()
-    }
-    b = {
-        (r["url"], r["sent_id"], r["pos"], r["surface"], r["entity"])
-        for r in link_mentions(detect_mentions_trie(pt, aliases), aliases).collect()
-    }
-    assert a == b
-    assert len(a) > 0
 
 
 def test_linking_top1_and_overlap(spark):

@@ -8,7 +8,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from graph_importer_spark.operators import decontam, dedup, similarity, skew, textstats
+from graph_importer_spark.operators import dedup, similarity, skew, textstats
 from graph_importer_spark.operators.multimodal import (
     byte_histogram,
     byte_stats,
@@ -238,31 +238,6 @@ def test_repetition_stats(spark):
     assert out[1]["dup_line_frac"] == 0.4
     assert out[2]["top_2gram_frac"] == 0.0 and out[2]["distinct_word_frac"] == 1.0
     assert out[3]["n_words"] == 0 and out[3]["top_2gram_frac"] == 0.0
-
-
-def test_contamination_flags(spark):
-    # 5-gram overlap: doc 1 quotes the benchmark verbatim mid-text, doc 2
-    # shares words but never 5 in a row, doc 3 is short (<k fallback).
-    bench = spark.createDataFrame(
-        [(0, "the capital of france is paris since forever")],
-        "bid long, text string",
-    )
-    docs = spark.createDataFrame(
-        [
-            (1, "trivia time: the capital of france is paris as everyone knows"),
-            (2, "paris is the france of capitals, the forever city"),
-            (3, "tiny doc"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {
-        r["doc_id"]: r
-        for r in decontam.contamination(docs, bench, "doc_id", "text", k=5).collect()
-    }
-    assert out[1]["contaminated"] and out[1]["n_gram_hits"] == 2
-    assert not out[2]["contaminated"] and out[2]["n_gram_hits"] == 0
-    assert not out[3]["contaminated"]
-    assert len(out) == 3  # zero-hit docs still get a row
 
 
 def test_dup_clusters_transitive(spark):
@@ -544,24 +519,6 @@ def test_fm_distinct_partition_invariant_and_mergeable(spark):
     assert a == c
 
 
-def test_pii_flags_and_redaction(spark):
-    from graph_importer_spark.operators import pii
-
-    rows = [
-        (1, "mail a.b+c@ex-1.co.uk or x@y.io, host 192.168.0.1, call +44 (20) 7946-0958"),
-        (2, "no pii, just 3.14 and a price of +99 dollars"),
-        (3, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in pii.pii_flags(df, "doc_id", "text").collect()}
-    assert (out[1]["n_emails"], out[1]["n_ipv4"], out[1]["n_phones"]) == (2, 1, 1)
-    assert out[1]["has_pii"]
-    assert not out[2]["has_pii"] and out[2]["n_phones"] == 0
-    assert not out[3]["has_pii"] and out[3]["redacted_len"] is None
-    red = df.filter("doc_id = 1").select(pii.redact("text").alias("r")).first()["r"]
-    assert red == "mail <EMAIL> or <EMAIL>, host <IP>, call <PHONE>"
-
-
 def test_url_normalize_and_domain(spark):
     from graph_importer_spark.operators import urls
 
@@ -614,30 +571,6 @@ def test_semantic_dedup_finds_planted_clones(spark):
             assert rows[i]["keeper"] == i and not rows[i]["is_dup"]
     # nothing else got flagged
     assert len(rows) == 2 * len(clones)
-
-
-def test_dsir_weights_prefer_target_like_docs(spark):
-    from graph_importer_spark.operators import importance
-
-    target = spark.createDataFrame(
-        [(100 + i, "the quick brown fox jumps over the lazy dog") for i in range(5)],
-        "doc_id long, text string",
-    )
-    raw = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps again and again"),
-            (2, "stock prices fell sharply amid market turmoil today"),
-        ],
-        "doc_id long, text string",
-    )
-    w = {
-        r["doc_id"]: r["dsir_logweight"]
-        for r in importance.importance_weights(
-            raw, target, "doc_id", "text", buckets=512
-        ).collect()
-    }
-    assert len(w) == 2
-    assert w[1] > w[2]  # fox doc is more target-like than finance doc
 
 
 def test_similarity_recall_function(spark):
@@ -931,62 +864,6 @@ def test_pack_next_fit_capacity_and_determinism(spark):
         .collect()
     )
     assert all(r["tok"] <= 256 for r in per_pack)
-
-
-def test_perplexity_scores_rank_target_like_docs_lower(spark):
-    from graph_importer_spark.operators import perplexity
-
-    target = spark.createDataFrame(
-        [(100 + i, "the model of the data and the table") for i in range(5)],
-        "doc_id long, text string",
-    )
-    corpus = spark.createDataFrame(
-        [
-            (0, "the model of the data and the table"),       # in-distribution
-            (1, "zq xv qqj kklm vvw zzt ppo uuv"),             # out-of-distribution
-        ],
-        "doc_id long, text string",
-    )
-    s = {
-        r["doc_id"]: r["avg_neglogp"]
-        for r in perplexity.perplexity_scores(
-            corpus, target, "doc_id", "text", buckets=512
-        ).collect()
-    }
-    assert s[0] < s[1]
-
-
-def test_perplexity_buckets_tertiles(spark):
-    from graph_importer_spark.operators import perplexity
-
-    scores = spark.createDataFrame(
-        [(i, float(i)) for i in range(9)], "doc_id long, avg_neglogp double"
-    )
-    out = {r["doc_id"]: r["ppl_bucket"] for r in perplexity.perplexity_buckets(scores).collect()}
-    assert [out[i] for i in range(9)] == (
-        ["head"] * 3 + ["middle"] * 3 + ["tail"] * 3
-    )
-
-
-def test_classifier_pareto_keep(spark):
-    from graph_importer_spark.operators.classifier import pareto_keep
-
-    prose = "the cat sat on the mat and the dog ran to the park with a ball"
-    soup = "$$$ ### @@@ %%% ^^^ &&& *** !!! ??? ;;; ::: ~~~"
-    rows = [(i, prose) for i in range(200)] + [(200 + i, soup) for i in range(200)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = pareto_keep(df, "doc_id", "text").collect()
-    by = {r["doc_id"]: r for r in out}
-    # prose scores higher than symbol soup
-    assert by[0]["quality_score"] > by[200]["quality_score"]
-    # the Pareto threshold keeps most high-quality docs, few low-quality
-    kept_hi = sum(by[i]["kept"] for i in range(200))
-    kept_lo = sum(by[200 + i]["kept"] for i in range(200))
-    assert kept_hi > kept_lo
-    assert kept_lo > 0  # the noisy threshold samples SOME of the tail
-    # deterministic under repartition
-    out2 = pareto_keep(df.repartition(7), "doc_id", "text").collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, out2))
 
 
 def test_chunk_text_stride_and_overlap(spark):

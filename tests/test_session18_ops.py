@@ -419,41 +419,6 @@ def test_luby_mis_is_maximal_independent(spark):
     assert sorted(map(tuple, out)) == sorted(map(tuple, out2))
 
 
-def test_semantic_overlap_finds_planted_leaks(spark):
-    from graph_importer_spark.operators.decontam import semantic_overlap
-
-    import math
-
-    def vec(i):
-        return [math.cos(i * 0.7), math.sin(i * 0.7), float(i % 3)]
-
-    corpus = spark.createDataFrame(
-        [(i, vec(i)) for i in range(40)],
-        "vec_id long, embedding array<double>",
-    )
-    # benchmark: scaled clones of corpus 0,10,20,30 + unrelated items
-    bench = spark.createDataFrame(
-        [(1000 + i, [x * 0.5 for x in vec(i)]) for i in (0, 10, 20, 30)]
-        + [(2000, [9.0, -9.0, 9.0])],
-        "vec_id long, embedding array<double>",
-    )
-    out = {
-        r.id: r
-        for r in semantic_overlap(
-            corpus, bench, threshold=0.999, n_centroids=8
-        ).collect()
-    }
-    # every planted clone found, attributed to its bench copy
-    for i in (0, 10, 20, 30):
-        assert i in out and out[i].bench_id == 1000 + i
-        assert out[i].max_cosine == pytest.approx(1.0, abs=1e-5)
-    # partition invariance
-    out2 = semantic_overlap(
-        corpus.repartition(5), bench, threshold=0.999, n_centroids=8
-    ).collect()
-    assert sorted(r.id for r in out2) == sorted(out)
-
-
 def test_fs_em_step_matches_hand_em(spark):
     from graph_importer_spark.operators.linkage import fs_em_step
 

@@ -75,24 +75,35 @@ def _appended(cat, spark):
     cat.append("t", _frame(spark))
 
 
+def _shard_rows(spark, lo, hi):
+    return spark.range(lo, hi).select(F.lit("007").alias("shard"), "id")
+
+
 def _partitioned(cat, spark):
     # Spark infers a partition value's type from the path: "007" would
     # read back as the int 7; the partition column reads back last
-    df = spark.range(3).select(F.lit("007").alias("shard"), "id")
-    cat.create_or_replace("t", df, partition_by=["shard"])
+    cat.create_or_replace("t", _shard_rows(spark, 0, 3), partition_by=["shard"])
+
+
+def _partitioned_appended(cat, spark):
+    # the append is written in the table's layout, so both dirs read
+    # as one partitioned table
+    _partitioned(cat, spark)
+    cat.append("t", _shard_rows(spark, 3, 6))
 
 
 @pytest.mark.parametrize(
-    "make, ddl, shard",
+    "make, ddl, shard, n_rows",
     [
-        (_plain, _FRAME_DDL, None),
-        (_bucketed, _FRAME_DDL, None),
-        (_appended, _FRAME_DDL, None),
-        (_partitioned, "id bigint, shard string", "007"),
+        (_plain, _FRAME_DDL, None, 20),
+        (_bucketed, _FRAME_DDL, None, 20),
+        (_appended, _FRAME_DDL, None, 40),
+        (_partitioned, "id bigint, shard string", "007", 3),
+        (_partitioned_appended, "id bigint, shard string", "007", 6),
     ],
-    ids=["plain", "bucket_by", "appended", "partition_by"],
+    ids=["plain", "bucket_by", "appended", "partition_by", "partition_by_appended"],
 )
-def test_read_uses_the_committed_schema_without_a_job(spark, tmp_path, make, ddl, shard):
+def test_read_uses_the_committed_schema_without_a_job(spark, tmp_path, make, ddl, shard, n_rows):
     """A read takes its schema from the table's meta: it launches no
     Spark job, and returns what a parquet scan infers (every field
     nullable, partition columns last) except that a partition value
@@ -109,8 +120,11 @@ def test_read_uses_the_committed_schema_without_a_job(spark, tmp_path, make, ddl
             sc.setLocalProperty(prop, None)
     assert df.schema == StructType.fromDDL(ddl)
     assert sc.statusTracker().getJobIdsForGroup(group) == []
+    rows = df.collect()
+    assert len(rows) == n_rows
     if shard is not None:
-        assert {r["shard"] for r in df.collect()} == {shard}
+        assert sorted(r["id"] for r in rows) == list(range(n_rows))
+        assert {r["shard"] for r in rows} == {shard}
 
 
 def test_append_rejects_a_schema_mismatch_before_writing(spark, tmp_path):
