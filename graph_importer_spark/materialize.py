@@ -109,8 +109,11 @@ def triples_to_graph(
 
     Vertex _key = canonical entity id; smart attribute = entity stem
     (routing hint). Edge attribute = predicate (string), provenance kept.
+    Edge ends are vertex ``_id``s: '<coll>/<smart>:<key>' in a smart
+    graph, as the importers' ``idx_to_smart_vertex`` builds them.
     """
     vcoll = spec.vertices_coll
+    key = (lambda c: smart_key(c, c)) if spec.smart else (lambda c: c)
     verts = (
         triples.select(F.col("subj").alias("_key"))
         .unionByName(triples.select(F.col("obj").alias("_key")))
@@ -122,8 +125,8 @@ def triples_to_graph(
             "_key", smart_key(F.col(spec.smart_attribute), F.col("_key"))
         )
     edges = triples.select(
-        doc_id(vcoll, F.col("subj")).alias("_from"),
-        doc_id(vcoll, F.col("obj")).alias("_to"),
+        doc_id(vcoll, key(F.col("subj"))).alias("_from"),
+        doc_id(vcoll, key(F.col("obj"))).alias("_to"),
         F.col("pred").cast("string").alias("pred"),
         "url",
         "warc_ts",

@@ -331,15 +331,19 @@ class GraphCatalog:
 
         out = []
         for data in self._data_dirs(name):
-            sub = os.path.basename(data)
-            for fn in sorted(os.listdir(data)):
-                if fn.endswith(".parquet"):
-                    out.append(
-                        (
-                            os.path.join(sub, fn),
-                            pq.read_metadata(os.path.join(data, fn)).num_rows,
+            # a partition_by table's files sit under '<col>=<v>/' dirs;
+            # a scan skips '_'/'.' dirs, and so does this walk
+            for root, dirs, files in os.walk(data):
+                dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+                for fn in sorted(files):
+                    if fn.endswith(".parquet"):
+                        path = os.path.join(root, fn)
+                        out.append(
+                            (
+                                os.path.relpath(path, os.path.dirname(data)),
+                                pq.read_metadata(path).num_rows,
+                            )
                         )
-                    )
         return out
 
     def has_tag(self, name: str, tag: str) -> bool:

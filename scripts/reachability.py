@@ -18,7 +18,8 @@ KG system's surface:
 Prints, per module, the definition lines that the tests under ``tests/``
 reach and no root does, then the total, then every definition that
 neither reaches (nothing references it).  A name bound twice counts the
-lines of both statements.
+lines of both statements.  Exits 1, naming it, if a root does not
+resolve: a renamed root would otherwise count its subtree as test-only.
 
     python scripts/reachability.py [REPO_DIR]
 """
@@ -157,6 +158,15 @@ def main() -> int:
     def whole(m: str) -> set[tuple[str, str]]:
         return references(mods[m].tree, mods[m], mods)
 
+    def resolves(m: str, n: str) -> bool:
+        mod = mods.get(f"{PKG}.{m}")
+        return mod is not None and (n in mod.defs or n in mod.names)
+
+    unresolved = [f"{PKG}.{m}.{n}" for m, n in ROOT_DEFS if not resolves(m, n)]
+    unresolved += [f"{PKG}.{m}" for m in WHOLE_PKG_MODULES if f"{PKG}.{m}" not in mods]
+    if unresolved:
+        print(f"unresolved root: {', '.join(unresolved)}", file=sys.stderr)
+        return 1
     roots = {(f"{PKG}.{m}", n) for m, n in ROOT_DEFS}
     roots |= {(m, n) for m in pkg for n in mods[m].defs if n.startswith("__") and n.endswith("__")}
     for m in [module_name(repo, p) for p in root_files] + [f"{PKG}.{m}" for m in WHOLE_PKG_MODULES]:

@@ -1,5 +1,4 @@
-"""Training-data operators: dedup, text stats, similarity, multimodal,
-skew helpers."""
+"""Training-data operators: dedup, text stats, similarity, skew helpers."""
 
 from __future__ import annotations
 
@@ -9,13 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from graph_importer_spark.operators import dedup, similarity, skew, textstats
-from graph_importer_spark.operators.multimodal import (
-    byte_histogram,
-    byte_stats,
-    entropy_of_hist,
-    fake_decode,
-    synth_media,
-)
 
 
 @pytest.fixture(scope="module")
@@ -329,20 +321,6 @@ def test_embedding_near_dup(spark):
     assert [(r["id1"], r["id2"]) for r in pairs] == [(0, 1)]
 
 
-def test_multimodal_stats_and_histogram(spark):
-    media = synth_media(spark, n=32)
-    stats = byte_stats(media).collect()
-    assert len(stats) == 32 and all(r["n_bytes"] > 0 for r in stats)
-    hist = byte_histogram(media, bins=16)
-    rows = hist.collect()
-    assert all(abs(sum(r["hist"]) - 1.0) < 1e-3 for r in rows)
-    ent = hist.select(entropy_of_hist(F.col("hist")).alias("e")).collect()
-    assert all(0.0 <= r["e"] <= 4.0 + 1e-9 for r in ent)  # log2(16) max
-    assert fake_decode(b"") == (0, 0)
-    w, h = fake_decode(bytes([5, 200]))
-    assert 1 <= w <= 64 and 1 <= h <= 64
-
-
 def test_salted_count_equals_plain(spark):
     df = spark.range(10000).select(F.pmod("id", F.lit(7)).alias("k"))
     plain = {r["k"]: r["c"] for r in df.groupBy("k").agg(F.count("*").alias("c")).collect()}
@@ -432,42 +410,6 @@ def test_salted_collect_set(spark):
     )
     got = {r["k"]: sorted(r["values"]) for r in skew.salted_collect_set(df, "k", "v", buckets=4).collect()}
     assert got == {"a": [1, 2], "b": [3]}
-
-
-def test_frame_sample_fanout_and_reassembly(spark):
-    from graph_importer_spark.operators import multimodal as mm
-
-    media = mm.synth_media(spark, n=12)
-    frames = mm.frame_sample(media, n_frames=4).collect()
-    by_id = {}
-    for r in sorted(frames, key=lambda r: (r["media_id"], r["frame_idx"])):
-        by_id.setdefault(r["media_id"], []).append(bytes(r["frame"]))
-    payloads = {r["media_id"]: bytes(r["payload"]) for r in media.collect()}
-    assert set(by_id) == set(payloads)
-    for mid, chunks in by_id.items():
-        assert len(chunks) == 4  # payloads are ~72 bytes, always 4 frames
-        assert b"".join(chunks) == payloads[mid]  # lossless partition
-
-
-def test_frame_sample_short_payload_single_frame(spark):
-    from graph_importer_spark.operators import multimodal as mm
-
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(b"ab"), "f", 1, 1)], mm.MEDIA_SCHEMA
-    )
-    rows = mm.frame_sample(media, n_frames=4).collect()
-    assert len(rows) == 1 and bytes(rows[0]["frame"]) == b"ab"
-
-
-def test_resize_media_fake_codec(spark):
-    from graph_importer_spark.operators import multimodal as mm
-
-    media = mm.synth_media(spark, n=6)
-    out = mm.resize_media(media, width=4, height=3).collect()
-    assert {r["media_id"] for r in out} == set(range(6))
-    for r in out:
-        assert r["meta_width"] == 4 and r["meta_height"] == 3
-        assert len(bytes(r["payload"])) <= 12
 
 
 def test_fm_distinct_tracks_true_cardinality(spark):

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from graph_importer_spark import cc as _cc
 from graph_importer_spark import synth
 from graph_importer_spark.pipeline import Pipeline, PipelineConfig, run_pipeline
-from graph_importer_spark.materialize import GraphSpec
+from graph_importer_spark.materialize import GraphSpec, triples_to_graph
 
 
 def _pr(got, gt):
@@ -139,6 +139,21 @@ def test_lineage_metrics_and_graph_output(spark, warehouse):
     assert "_key" in verts.columns
     assert {"_from", "_to", "pred"} <= set(edges.columns)
     assert edges.filter(~F.col("_from").startswith("vertices/")).count() == 0
+
+
+@pytest.mark.parametrize("smart", [False, True], ids=["plain", "smart"])
+def test_graph_edges_point_at_vertices(spark, smart):
+    """Every edge end is the ``_id`` ('<coll>/<_key>') of some vertex,
+    with smart keys ('<smart>:<key>') as with plain ones."""
+    triples = spark.createDataFrame(
+        [("u1", "ent_1", "p", "ent_2", 1), ("u2", "ent_2", "q", "ent_3", 2)],
+        "url string, subj string, pred string, obj string, warc_ts long",
+    )
+    spec = GraphSpec(smart=smart)
+    verts, edges = triples_to_graph(triples, spec)
+    ids = {f"{spec.vertices_coll}/{r['_key']}" for r in verts.collect()}
+    ends = {r[c] for r in edges.collect() for c in ("_from", "_to")}
+    assert len(ids) == 3 and ends == ids
 
 
 def test_resume_skips_and_is_idempotent(spark, warehouse):

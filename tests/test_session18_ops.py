@@ -332,68 +332,6 @@ def test_transductive_split_demotes_unseen_entities(spark):
     assert sorted(map(tuple, out)) == sorted(map(tuple, out2))
 
 
-def test_phash64_bits_and_short_payloads(spark):
-    from graph_importer_spark.operators.multimodal import phash64
-
-    rows = [
-        (1, bytes(range(128))),          # ascending bytes: top cells set
-        (2, b"\x00" * 128),              # constant: no cell exceeds mean
-        (3, b"ab"),                      # < 64 bytes -> zero hash
-        (4, None),
-    ]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = {r.media_id: r for r in phash64(df).collect()}
-    assert out[3].hi == 0 and out[3].lo == 0 and out[3].n_bytes == 2
-    assert out[4].hi == 0 and out[4].n_bytes == 0
-    assert out[2].hi == 0 and out[2].lo == 0
-    # ascending stream: exactly the upper half of cells above the mean
-    assert out[1].hi == 0 and out[1].lo == (1 << 32) - 1
-    assert 0 <= out[1].hi < 1 << 32 and 0 <= out[1].lo < 1 << 32
-
-
-def test_phash_pairs_complete_vs_brute(spark):
-    from graph_importer_spark.operators.multimodal import (
-        phash64,
-        phash_near_dup_pairs,
-    )
-
-    # clones with tiny perturbations + unrelated payloads
-    import random
-
-    rng = random.Random(7)
-    base = bytes(rng.randrange(256) for _ in range(640))
-    rows = [(0, base)]
-    for i in range(1, 4):  # mutate i bytes
-        b = bytearray(base)
-        for j in range(i):
-            b[j * 64] = (b[j * 64] + 128) % 256
-        rows.append((i, bytes(b)))
-    rows += [
-        (10 + i, bytes(rng.randrange(256) for _ in range(640)))
-        for i in range(6)
-    ]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    h = phash64(df)
-    got = {
-        (r.id1, r.id2): r.hamming
-        for r in phash_near_dup_pairs(h, max_hamming=8).collect()
-    }
-    # brute force reference
-    hs = {r.media_id: (r.hi, r.lo) for r in h.collect()}
-    ids = sorted(hs)
-    want = {}
-    for i in range(len(ids)):
-        for j in range(i + 1, len(ids)):
-            a, b = ids[i], ids[j]
-            d = bin(hs[a][0] ^ hs[b][0]).count("1") + bin(
-                hs[a][1] ^ hs[b][1]
-            ).count("1")
-            if d <= 8:
-                want[(a, b)] = d
-    assert got == want
-    assert (0, 1) in got  # the 1-byte mutation stays within 8 bits
-
-
 def test_luby_mis_is_maximal_independent(spark):
     from graph_importer_spark.operators.analytics import luby_mis
 
@@ -1528,19 +1466,6 @@ def test_woe_iv_directions(spark):
     assert out["safe"].woe > 0 and out["risky"].woe < 0
     assert out["safe"].iv_contrib > 0 and out["risky"].iv_contrib > 0
     assert out["safe"].n_good == 90 and out["risky"].n_bad == 70
-
-
-def test_frame_energy_exact_sums(spark):
-    from graph_importer_spark.operators.multimodal import frame_energy
-
-    rows = [(1, bytes([1, 2, 3, 4, 5, 6, 7, 8, 9])), (2, b"ab")]
-    m = spark.createDataFrame(rows, "media_id long, payload binary")
-    out = {(r.media_id, r.frame_idx): r for r in frame_energy(m, n_frames=4).collect()}
-    # 9 bytes / 4 frames: sizes 2,2,2,3 (remainder to last)
-    assert out[(1, 0)].sum_b == 3 and out[(1, 0)].sumsq_b == 5
-    assert out[(1, 3)].n_bytes == 3 and out[(1, 3)].sum_b == 7 + 8 + 9
-    # short payload: single frame 0
-    assert out[(2, 0)].n_bytes == 2 and out[(2, 0)].sum_b == ord("a") + ord("b")
 
 
 def test_qlm_ranks_term_rich_docs_first(spark):

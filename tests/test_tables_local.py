@@ -107,7 +107,8 @@ def test_read_uses_the_committed_schema_without_a_job(spark, tmp_path, make, ddl
     """A read takes its schema from the table's meta: it launches no
     Spark job, and returns what a parquet scan infers (every field
     nullable, partition columns last) except that a partition value
-    keeps its committed type."""
+    keeps its committed type.  The per-file lineage counts the same
+    rows, partition dirs included."""
     cat = GraphCatalog(spark, str(tmp_path / "wh"))
     make(cat, spark)
     sc = spark.sparkContext
@@ -122,9 +123,12 @@ def test_read_uses_the_committed_schema_without_a_job(spark, tmp_path, make, ddl
     assert sc.statusTracker().getJobIdsForGroup(group) == []
     rows = df.collect()
     assert len(rows) == n_rows
+    counts = cat.file_row_counts("t")
+    assert sum(n for _, n in counts) == n_rows
     if shard is not None:
         assert sorted(r["id"] for r in rows) == list(range(n_rows))
         assert {r["shard"] for r in rows} == {shard}
+        assert all(f"shard={shard}" in name for name, _ in counts)
 
 
 def test_append_rejects_a_schema_mismatch_before_writing(spark, tmp_path):
