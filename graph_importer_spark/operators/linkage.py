@@ -69,8 +69,8 @@ def golden_record(
     ``rules`` maps column -> one of:
       * ``latest``  — value of the member with the greatest ``ts_col``
         among non-null values (requires ts_col; ties -> greater value);
-      * ``mode``    — most frequent non-null value (ties -> greater
-        value string, same convention as profiling.profile_table);
+      * ``mode``    — most frequent non-null value, compared as its
+        string cast (ties -> the greater string);
       * ``min`` / ``max`` — plain extrema.
 
     -> one row per cluster: (cluster, n_members, <ruled columns>).
@@ -80,7 +80,7 @@ def golden_record(
     million-member cluster never collects its rows anywhere).  The
     mode columns share ONE extra unpivot -> (cluster, col, value)
     count -> max_by pass (two bounded shuffles TOTAL regardless of how
-    many columns use mode — the profiling shape), pivoted back by
+    many columns use mode), pivoted back by
     conditional aggregation, broadcast-joined onto the base (one row
     per cluster on both sides).
     """

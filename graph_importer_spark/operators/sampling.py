@@ -457,8 +457,8 @@ def stratified_kfold(
     uniform per stratum by construction; contrast plain key-mod
     folds, which correlate with any key-aligned structure).
 
-    -> the input plus a ``fold`` int column.  Feed the per-(stratum,
-    fold) counts to ``table_checks``-style balance assertions.
+    -> the input plus a ``fold`` int column; balance is checked on the
+    per-(stratum, fold) counts.
 
     Scale shape: zero shuffle — the fold label is a scalar expression
     and works as a write partition column (the group_split

@@ -40,11 +40,14 @@ Two backends behind one API:
     duplicating rows, which is what makes the streaming layer's
     tag-idempotent foreachBatch exactly-once end to end.
 
-  Adequate for single-writer pipelines (which the reference is too).
+  Concurrent appends to one table (several streams' foreachBatch
+  threads) are serialized by a ``flock`` held from the existence check
+  through the meta swap, so each commits; other writes take no lock.
 """
 
 from __future__ import annotations
 
+import fcntl
 import functools
 import json
 import os
@@ -260,34 +263,43 @@ class GraphCatalog:
         become visible ONLY when the meta rewrite lands (the atomic
         commit point); a crash before it leaves an orphan
         ``append-*``/``.stage-*`` dir that no reader ever unions in, so
-        a replay cannot duplicate rows.
+        a replay cannot duplicate rows.  All of it runs under an exclusive
+        per-table lock, so concurrent appends each commit.
         """
-        if not self.exists(name):
-            self.create_or_replace(name, df, tag=tag)
-            return
         if self.use_iceberg:
+            if not self.exists(name):
+                self.create_or_replace(name, df, tag=tag)
+                return
             df.writeTo(self._ident(name)).append()
             if tag:
                 self._ice_tag(name, tag)
             return
-        meta = self._read_meta(name)
-        # reads trust the committed schema, so an append must match it by
-        # column name and type (nullability aside), as an Iceberg append does
-        want = _columns(StructType.fromJson(meta["schema"]))
-        got = _columns(df.schema)
-        if got != want:
-            raise ValueError(
-                f"append to {name!r}: columns {sorted(got.items())} do not "
-                f"match the table's {sorted(want.items())}"
-            )
-        token = uuid.uuid4().hex[:8]
-        stage = os.path.join(self._dir(name), ".stage-" + token)
-        final = os.path.join(self._dir(name), "append-" + token)
-        _write_parquet(df, stage, meta.get("partition_by"), meta.get("bucket_by"))
-        os.rename(stage, final)
-        meta.setdefault("dirs", ["data"]).append("append-" + token)
-        meta["snapshots"].append(self._snap("append", tag))
-        self._write_meta(name, meta)
+        # flock excludes threads and processes alike (each open() is its own
+        # file description) and is released when the file closes; the lock
+        # file sits beside the table dir, which create_or_replace replaces
+        with open(self._dir(name) + ".lock", "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            if not self.exists(name):
+                self.create_or_replace(name, df, tag=tag)
+                return
+            meta = self._read_meta(name)
+            # reads trust the committed schema, so an append must match it by
+            # column name and type (nullability aside), as an Iceberg append does
+            want = _columns(StructType.fromJson(meta["schema"]))
+            got = _columns(df.schema)
+            if got != want:
+                raise ValueError(
+                    f"append to {name!r}: columns {sorted(got.items())} do not "
+                    f"match the table's {sorted(want.items())}"
+                )
+            token = uuid.uuid4().hex[:8]
+            stage = os.path.join(self._dir(name), ".stage-" + token)
+            final = os.path.join(self._dir(name), "append-" + token)
+            _write_parquet(df, stage, meta.get("partition_by"), meta.get("bucket_by"))
+            os.rename(stage, final)
+            meta.setdefault("dirs", ["data"]).append("append-" + token)
+            meta["snapshots"].append(self._snap("append", tag))
+            self._write_meta(name, meta)
 
     def drop(self, name: str) -> None:
         if self.use_iceberg:

@@ -1,5 +1,5 @@
 """Transitive closure, SPARQL chain patterns, power-law MLE, C4 line
-filter, column profiling, inverted-index postings."""
+filter, inverted-index postings."""
 
 from __future__ import annotations
 
@@ -13,7 +13,6 @@ from graph_importer_spark.operators.analytics import (
     degree_powerlaw,
     transitive_closure,
 )
-from graph_importer_spark.operators.profiling import profile_table
 from graph_importer_spark.operators.retrieval import build_postings
 from graph_importer_spark.operators.textstats import c4_line_filter
 from graph_importer_spark.triples import chain_pattern
@@ -122,28 +121,6 @@ def test_c4_page_rules(spark):
     df = spark.createDataFrame(rows, "id long, text string")
     got = {r.id: r.c4_keep for r in c4_line_filter(df, "id", "text").collect()}
     assert got == {1: True, 2: False, 3: False, 4: False}
-
-
-# -- profiling ---------------------------------------------------------------
-
-def test_profile_table(spark):
-    rows = [(1, "x"), (2, "y"), (3, None), (4, "y"), (5, "x"), (6, "z")]
-    df = spark.createDataFrame(rows, "k long, v string")
-    got = {r["column"]: r for r in profile_table(df).collect()}
-    v = got["v"]
-    assert v.n_rows == 6 and v.n_null == 1 and v.n_distinct == 3
-    assert v.null_frac == round(1 / 6, 6)
-    assert v.min_value == "x" and v.max_value == "z"
-    # tie x(2) vs y(2): larger value string wins
-    assert v.top_value == "y" and v.top_count == 2
-    k = got["k"]
-    assert k.n_null == 0 and k.n_distinct == 6 and k.top_count == 1
-    assert k.top_value == "6"  # all counts tie -> largest string
-
-
-def test_profile_column_subset(spark):
-    df = spark.createDataFrame([(1, "x")], "k long, v string")
-    assert profile_table(df, columns=["v"]).count() == 1
 
 
 # -- postings ----------------------------------------------------------------

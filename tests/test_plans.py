@@ -184,22 +184,6 @@ def test_chain_pattern_pred_filters_push_down(spark):
     assert P.python_eval_count(df) == 0
 
 
-def test_profile_table_two_shuffles_any_width(spark):
-    # the unpivot shape: exchanges stay at 2 whether 2 or 5 columns
-    from graph_importer_spark.operators.profiling import profile_table
-
-    o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    narrow = profile_table(o, ["o_orderstatus", "o_custkey"])
-    wide = profile_table(
-        o,
-        ["o_orderstatus", "o_custkey", "o_orderpriority", "o_orderkey",
-         "o_totalprice"],
-    )
-    assert P.shuffle_exchange_count(narrow) == 2
-    assert P.shuffle_exchange_count(wide) == 2
-    assert P.python_eval_count(wide) == 0
-
-
 def test_postings_builder_budget(spark):
     from graph_importer_spark.operators.retrieval import build_postings
 

@@ -1,6 +1,6 @@
-"""Round-4 session-12 operators: dangling-edge audit, instance-based
-schema matching, web-table triple lifting, containment keeper,
-degree-distribution KS, LSH parameter planning."""
+"""Round-4 session-12 operators: dangling-edge audit, web-table triple
+lifting, containment keeper, degree-distribution KS, LSH parameter
+planning."""
 
 from __future__ import annotations
 
@@ -13,7 +13,6 @@ from graph_importer_spark.operators.dedup import (
     keep_superset,
     lsh_plan,
 )
-from graph_importer_spark.operators.profiling import column_match
 from graph_importer_spark.operators.webtables import (
     elect_subject_columns,
     lift_tables,
@@ -32,24 +31,6 @@ def test_dangling_edges_flags_missing_endpoints(spark):
     verts = spark.createDataFrame([("a",), ("b",)], "id string")
     out = {(r.subj, r.obj): r.missing for r in dangling_edges(edges, verts).collect()}
     assert out == {("a", "ghost"): "dst", ("phantom", "b"): "src", ("x", "y"): "both"}
-
-
-# ---------- column_match ----------
-
-
-def test_column_match_known_overlap(spark):
-    a = spark.createDataFrame(
-        [("US", "alpha"), ("DE", "beta"), ("FR", "gamma")], "country string, code string"
-    )
-    b = spark.createDataFrame(
-        [("us", 1), ("de", 2), ("jp", 3), ("br", 4)], "iso string, n int"
-    )
-    out = {(r.a_col, r.b_col): r for r in
-           column_match(a, b, ["country", "code"], ["iso"]).collect()}
-    r = out[("country", "iso")]
-    assert (r.n_a, r.n_b, r.n_common) == (3, 4, 2)  # us, de (case-folded)
-    assert r.jaccard == pytest.approx(2 / 5, abs=1e-6)
-    assert ("code", "iso") not in out  # no shared values -> no row
 
 
 # ---------- webtables ----------

@@ -577,22 +577,6 @@ def test_quarantine_accounts_for_every_line(spark):
     assert by["a b"]._from is None and by["a b"].weight is None
 
 
-def test_psi_detects_planted_shift(spark):
-    from graph_importer_spark.operators.profiling import psi_drift
-
-    ref = spark.createDataFrame([(float(i % 100),) for i in range(1000)], "v double")
-    same = psi_drift(ref, ref, "v", lo=0.0, hi=100.0, n_bins=10).collect()
-    assert sum(r.contrib for r in same) == pytest.approx(0.0, abs=1e-9)
-    shifted = spark.createDataFrame(
-        [(float(i % 100) + 30.0,) for i in range(1000)], "v double"
-    )
-    drift = psi_drift(ref, shifted, "v", lo=0.0, hi=100.0, n_bins=10).collect()
-    assert sum(r.contrib for r in drift) > 0.25  # "act" threshold
-    assert len(drift) == 10
-    # clamped: out-of-range values land in the edge bin, rows conserved
-    assert sum(r.n_cur for r in drift) == 1000
-
-
 def test_cohort_ltv_cumulative(spark):
     from graph_importer_spark.operators.timeseries import cohort_ltv
 
@@ -708,25 +692,6 @@ def test_churn_labels_point_in_time(spark):
     assert out[1].days_since_last == 10
     assert out[2].total_value == 3.0  # post-cutoff value never leaks
     assert out[4].n_events == 1
-
-
-def test_json_schema_profile_types(spark):
-    from graph_importer_spark.operators.profiling import json_schema_profile
-
-    rows = [
-        ('{"a": 1, "b": "x", "c": true}',),
-        ('{"a": 2.5, "b": "y"}',),
-        ('{"a": "oops", "d": null}',),
-        ('{"c": false}',),
-    ]
-    d = spark.createDataFrame(rows, "payload string")
-    out = {r.key: r for r in json_schema_profile(d, "payload").collect()}
-    assert out["a"].n_present == 3 and out["a"].n_number == 2
-    assert out["a"].inferred_type == "number" and out["a"].n_string == 1
-    assert out["b"].inferred_type == "string"
-    assert out["c"].n_bool == 2 and out["c"].inferred_type == "boolean"
-    assert out["d"].n_null == 1 and out["d"].inferred_type == "null"
-    assert out["c"].presence == pytest.approx(0.5)
 
 
 def test_quotient_graph_counts(spark):
@@ -937,53 +902,6 @@ def test_ab_test_summary_z(spark):
     pp = 80 / 200
     se = math.sqrt(pp * (1 - pp) * (1 / 100 + 1 / 100))
     assert r.z == pytest.approx(0.2 / se, abs=1e-5)
-
-
-def test_table_checks_detects_planted_violations(spark):
-    from graph_importer_spark.operators.profiling import table_checks
-
-    d = spark.createDataFrame(
-        [(1, "x", "O"), (1, "y", "O"), (2, None, "F"), (3, "z", "Q")],
-        "k long, v string, s string",
-    )
-    dim = spark.createDataFrame([("x",), ("y",)], "dv string")
-    out = {
-        (r.check, r.column): r
-        for r in table_checks(
-            d,
-            unique_cols=["k"],
-            not_null_cols=["v"],
-            accepted_values={"s": ["O", "F"]},
-            fk=[("v", dim, "dv")],
-        ).collect()
-    }
-    assert out[("unique", "k")].n_violations == 1
-    assert out[("not_null", "v")].n_violations == 1
-    assert out[("accepted_values", "s")].n_violations == 1
-    assert out[("foreign_key", "v")].n_violations == 1  # 'z' dangles
-    assert not any(r.passed for r in out.values())
-
-
-def test_table_checks_accepted_values_ignores_nulls(spark):
-    """dbt semantics (ADVICE r04): accepted_values ignores NULLs —
-    not_null is the separate check, so a nullable column must not
-    double-fail."""
-    from graph_importer_spark.operators.profiling import table_checks
-
-    d = spark.createDataFrame(
-        [(1, "O"), (2, None), (3, "F")], "k long, s string"
-    )
-    out = {
-        (r.check, r.column): r
-        for r in table_checks(
-            d,
-            not_null_cols=["s"],
-            accepted_values={"s": ["O", "F"]},
-        ).collect()
-    }
-    assert out[("accepted_values", "s")].n_violations == 0
-    assert out[("accepted_values", "s")].passed
-    assert out[("not_null", "s")].n_violations == 1
 
 
 def test_feature_hash_deterministic_and_signed(spark):
@@ -1205,47 +1123,6 @@ def test_kaplan_meier_with_censoring(spark):
     assert out[3].n_risk == 1 and out[3].survival == 0.0
 
 
-def test_concentration_curve_8020(spark):
-    from graph_importer_spark.operators.profiling import concentration_curve
-
-    # one whale holds 80, nine minnows 20/9 each -> 0.5 and 0.8 need 1 key
-    rows = [(0, 80.0)] + [(i, 20.0 / 9) for i in range(1, 10)]
-    d = spark.createDataFrame(rows, "k long, v double")
-    out = {r.frac: r for r in concentration_curve(d, "k", "v").collect()}
-    assert out[0.5].n_keys == 1 and out[0.8].n_keys == 1
-    assert out[0.8].value_share == pytest.approx(0.8, abs=1e-3)
-    assert out[0.9].n_keys > 1
-    assert out[0.5].key_share == pytest.approx(0.1)
-
-
-def test_grouped_ols_exact_line(spark):
-    from graph_importer_spark.operators.profiling import grouped_ols
-
-    # y = 3x + 2 exactly; plus a zero-variance-x group
-    rows = [("a", float(x), 3.0 * x + 2.0) for x in range(10)] + [
-        ("b", 5.0, 1.0), ("b", 5.0, 9.0)
-    ]
-    d = spark.createDataFrame(rows, "g string, x double, y double")
-    out = {r.grp: r for r in grouped_ols(d, "g", "x", "y").collect()}
-    assert out["a"].slope == pytest.approx(3.0, abs=1e-6)
-    assert out["a"].intercept == pytest.approx(2.0, abs=1e-6)
-    assert out["a"].r2 == pytest.approx(1.0, abs=1e-6)
-    assert out["b"].slope is None and out["b"].r2 is None
-
-
-def test_join_cardinality_audit_uniform(spark):
-    from graph_importer_spark.operators.profiling import (
-        join_cardinality_audit,
-    )
-
-    a = spark.createDataFrame([(i % 5,) for i in range(50)], "k long")
-    b = spark.createDataFrame([(i % 5,) for i in range(20)], "k long")
-    r = join_cardinality_audit(a, b, "k", "k").collect()[0]
-    # uniform keys: estimate is exact -> ratio 1.0
-    assert r.ndv_a == 5 and r.est == pytest.approx(200.0)
-    assert r.actual == 200 and r.ratio == pytest.approx(1.0)
-
-
 def test_truncation_recall_full_dims_is_one(spark):
     from graph_importer_spark.operators.similarity import truncation_recall
 
@@ -1264,19 +1141,6 @@ def test_truncation_recall_full_dims_is_one(spark):
     t1 = truncation_recall(corpus, q, trunc_dims=2, k=5).collect()
     assert all(0.0 <= r.recall <= 1.0 for r in t1)
     assert {r.query_id for r in t1} == {0, 1, 2}
-
-
-def test_information_gain_perfect_and_null_feature(spark):
-    from graph_importer_spark.operators.profiling import information_gain
-
-    # f1 determines y perfectly; f2 is constant (IG 0)
-    rows = [(("A" if i % 2 == 0 else "B"), f"v{i % 2}", "c") for i in range(40)]
-    d = spark.createDataFrame(rows, "y string, f1 string, f2 string")
-    out = {r.feature: r for r in information_gain(d, "y", ["f1", "f2"]).collect()}
-    assert out["f1"].h_label == pytest.approx(1.0, abs=1e-6)
-    assert out["f1"].info_gain == pytest.approx(1.0, abs=1e-6)
-    assert out["f2"].info_gain == pytest.approx(0.0, abs=1e-6)
-    assert out["f1"].n_values == 2 and out["f2"].n_values == 1
 
 
 def test_cusum_finds_level_shift(spark):
@@ -1390,29 +1254,6 @@ def test_chunk_share_survives_insertion(spark):
     assert (1, 3) not in pairs and (2, 3) not in pairs
 
 
-def test_functional_dependencies_holds_and_violates(spark):
-    from graph_importer_spark.operators.profiling import (
-        functional_dependencies,
-    )
-
-    d = spark.createDataFrame(
-        [(1, "a", "x"), (2, "a", "y"), (3, "b", "x"), (1, "a", "x")],
-        "k long, g string, v string",
-    )
-    out = {
-        (r.determinant, r.dependent): r
-        for r in functional_dependencies(
-            d, [("k", "g"), ("g", "v"), ("k", "v")]
-        ).collect()
-    }
-    assert out[("k", "g")].holds  # each k maps to one g
-    assert out[("k", "v")].holds
-    # g 'a' maps to both x and y -> violation
-    gv = out[("g", "v")]
-    assert not gv.holds and gv.n_violating_keys == 1
-    assert gv.violation_rate == 0.5
-
-
 def test_sentiment_score_signs(spark):
     from graph_importer_spark.operators.textstats import sentiment_score
 
@@ -1453,19 +1294,6 @@ def test_knn_label_agreement_flags_planted_mislabel(spark):
     assert out[500].is_suspect and out[500].agreement == 0.0
     clean = [r for i, r in out.items() if i != 500 and i < 100]
     assert all(r.agreement >= 0.8 for r in clean)
-
-
-def test_woe_iv_directions(spark):
-    from graph_importer_spark.operators.profiling import woe_iv
-
-    rows = [("safe", 0)] * 90 + [("safe", 1)] * 10 + [("risky", 0)] * 30 + [
-        ("risky", 1)
-    ] * 70
-    d = spark.createDataFrame(rows, "v string, y int")
-    out = {r.value: r for r in woe_iv(d, "v", "y").collect()}
-    assert out["safe"].woe > 0 and out["risky"].woe < 0
-    assert out["safe"].iv_contrib > 0 and out["risky"].iv_contrib > 0
-    assert out["safe"].n_good == 90 and out["risky"].n_bad == 70
 
 
 def test_qlm_ranks_term_rich_docs_first(spark):
@@ -1677,35 +1505,6 @@ def test_lexical_diversity_known_values(spark):
     assert out[1].simpson == 0.5
     assert out[2].ttr == 1.0 and out[2].simpson == 1.0
     assert out[3].simpson is None  # < 2 tokens: undefined
-
-
-def test_correlation_matrix_signs(spark):
-    from graph_importer_spark.operators.profiling import correlation_matrix
-
-    rows = [(float(i), float(2 * i + 1), float(-i), 7.0) for i in range(50)]
-    d = spark.createDataFrame(rows, "a double, b double, c double, k double")
-    out = {(r.col_a, r.col_b): r for r in correlation_matrix(d, ["a", "b", "c", "k"]).collect()}
-    assert out[("a", "b")].r == pytest.approx(1.0, abs=1e-6)
-    assert out[("a", "c")].r == pytest.approx(-1.0, abs=1e-6)
-    assert out[("a", "k")].r is None  # constant column
-    assert len(out) == 6 and all(r.n == 50 for r in out.values())
-
-
-def test_gini_known_distributions(spark):
-    from graph_importer_spark.operators.profiling import gini_coefficient
-
-    equal = spark.createDataFrame(
-        [(i, 10.0) for i in range(10)], "k long, v double"
-    )
-    r = gini_coefficient(equal, "k", "v").collect()[0]
-    assert r.gini == pytest.approx(0.0, abs=1e-9)
-    # one key holds everything: G -> (n-1)/n
-    whale = spark.createDataFrame(
-        [(0, 100.0)] + [(i, 0.0) for i in range(1, 10)], "k long, v double"
-    )
-    r2 = gini_coefficient(whale, "k", "v").collect()[0]
-    assert r2.gini == pytest.approx(0.9, abs=1e-6)
-    assert r2.n_keys == 10 and r2.total == 100.0
 
 
 def test_stationary_two_state_chain(spark):

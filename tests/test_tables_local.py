@@ -7,6 +7,7 @@ match it."""
 from __future__ import annotations
 
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -145,3 +146,32 @@ def test_append_rejects_a_schema_mismatch_before_writing(spark, tmp_path):
     # nullability aside, a matching frame appends
     cat.append("t", spark.range(5, 7).select(F.when(F.col("id") > 0, F.col("id")).alias("id")))
     assert cat.read("t").count() == 7
+
+
+def test_concurrent_appends_keep_every_commit(spark, tmp_path):
+    """Two writers (as two streams' foreachBatch threads are) append to
+    one table that does not exist yet: every append commits, none
+    overwrites another's meta or replaces the table another created."""
+    cat = GraphCatalog(spark, str(tmp_path / "wh"))
+    n, rows = 6, 3
+    errors = []
+
+    def writer(w):
+        try:
+            for i in range(n):
+                lo = (w * n + i) * rows
+                cat.append("t", spark.range(lo, lo + rows), tag=f"w{w}-{i}")
+        except Exception as e:  # surfaced below, not lost in the thread
+            errors.append(e)
+
+    threads = [threading.Thread(target=writer, args=(w,)) for w in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    total = 2 * n * rows
+    assert sorted(r["id"] for r in cat.read("t").collect()) == list(range(total))
+    assert all(cat.has_tag("t", f"w{w}-{i}") for w in range(2) for i in range(n))
+    assert sum(k for _, k in cat.file_row_counts("t")) == total
